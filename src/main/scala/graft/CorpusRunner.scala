@@ -1,6 +1,7 @@
 package graft
 
 import graft.config.{ConfigValidator, CorpusConf, CorpusStepConf, GraftConf}
+import graft.functions.GraftFunctions.textDedupKey
 import graft.io.{Savepoints, SourceReader}
 import graft.text.{RegexReplacer, TextQuality}
 import org.apache.spark.internal.Logging
@@ -157,7 +158,7 @@ object CorpusRunner extends Logging {
         // keep-list = min id per hash (partial agg on the uniform 128-bit
         // key), then a semi-join on the unique id — never a window sort
         val keep = df
-          .groupBy(md5(lower(trim(col(text)))).as("__h"))
+          .groupBy(textDedupKey(col(text)).as("__h"))
           .agg(min(col(id)).as(id))
           .select(id)
         df.join(keep, Seq(id), "left_semi")
@@ -188,7 +189,7 @@ object CorpusRunner extends Logging {
         // trainer's sampler consumes it), and the mix steps below switch
         // to effective mass when they see it. Same single shuffle on the
         // uniform md5 key as dedup_exact — nothing beyond that cost.
-        df.withColumn("__h", md5(lower(trim(col(text)))))
+        df.withColumn("__h", textDedupKey(col(text)))
           .withColumn(cc.weightColumn,
             round(lit(1.0) / count(lit(1)).over(
               org.apache.spark.sql.expressions.Window.partitionBy("__h")), 6))

@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Plan-evidence dump: writes the FORMATTED physical plan of each
   * headline query to bench/PLANS.md so the plan-shape claims (pushdown,
   * pruning, broadcast choice, keyed windows, no cartesian products) are
   * reviewable as a committed artifact and diffable between rounds — a
   * silently-acquired exchange or a lost PushedFilters shows up in the
-  * diff before it shows up in the bench.
+  * diff before it shows up in the bench. Named queries instead print
+  * their plans to stdout, for a before/after diff of one change.
   *
-  * Run: sbt "runMain graft.PlanDump" (optional arg: sf dir)
+  * Run: sbt "runMain graft.PlanDump [sfDir] [query ...]"
   */
 object PlanDump {
   private val Headline = Seq(
@@ -61,8 +64,8 @@ object PlanDump {
     "soft_dedup_weights",  // dedup-shuffle reuse + keyed weight join
     "ann_mmr",             // bounded candidate table + greedy argmax rounds
     "media_neardup",       // codegen ByteFold features + broadcast pair join
-    "jpeg_codec",          // row-local DCT codec (scan-bound map)
-    "gif_codec",           // row-local LZW codec (scan-bound generator)
+    "jpeg_codec",          // row-local ImageIO codec (scan-bound map)
+    "gif_codec",           // row-local ImageIO codec (scan-bound generator)
     "webp_codec",          // row-local VP8L codec (scan-bound generator)
     "flac_codec",          // row-local Rice/predictor codec (scan-bound)
     "jpeg_exif_meta",      // row-local segment walk + strip (scan-bound)
@@ -73,27 +76,34 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val named = args.drop(1)
     // keep plans LAZY: the rank/LM family eagerly localCheckpoints its
     // small outputs (graft.plans.Eager) to release internal caches, which
     // would collapse the dumped plan to a checkpoint scan — the whole
     // point of this artifact is the FULL operator plan
     System.setProperty("graft.plans.lazy", "true")
     val spark = GraftSession.local(8, "graft-plan-dump")
+    if (named.nonEmpty) named.foreach(name => println(plan(spark, sfDir, name)))
+    else writeHeadline(spark, sfDir)
+    spark.stop()
+  }
+
+  private def plan(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+
+  private def writeHeadline(spark: SparkSession, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# Headline query plans (generated by graft.PlanDump — do not edit)\n\n")
     sb.append(s"Source: `$sfDir`; mode: formatted physical plan.\n")
     val dumped = Headline.filter(SparkEntry.queries.contains)
     dumped.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n").append(plan.trim).append("\n```\n")
+      sb.append(s"\n## $name\n\n```\n").append(plan(spark, sfDir, name).trim).append("\n```\n")
     }
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "/root/repo/bench/PLANS.md"))
     Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.writeString(out, sb.toString)
     println(s"[plans] wrote ${dumped.size} plans to $out")
-    spark.stop()
   }
 }

@@ -53,9 +53,9 @@ object ScalingBench {
     "kmv_est_err",        // bottom-k distinct sketch (WindowGroupLimit)
     "bloom_filter",       // broadcast membership bit set
     "weighted_percentiles_interp", // collapsed knot CDF interpolation
-    "png_codec",          // row-local deflate codec (CPU/scan-bound)
-    "jpeg_codec",         // row-local DCT codec (CPU/scan-bound)
-    "gif_codec",          // row-local LZW codec (CPU/scan-bound)
+    "png_codec",          // row-local ImageIO codec (CPU/scan-bound)
+    "jpeg_codec",         // row-local ImageIO codec (CPU/scan-bound)
+    "gif_codec",          // row-local ImageIO codec (CPU/scan-bound)
     "webp_codec",         // row-local VP8L codec (CPU/scan-bound)
     "flac_codec",         // row-local Rice/predictor codec (CPU/scan-bound)
     "mp4_meta",           // row-local box walk (scan-bound)
@@ -63,7 +63,7 @@ object ScalingBench {
     "unigram_lm_train",   // EM over the Heaps-bounded vocab table
     "embed_corr",         // one-pass array-valued co-moment aggregate
     "embed_rp",           // row-local JL projection (scan-bound)
-    "jpeg_progressive",   // row-local multi-scan codec (CPU/scan-bound)
+    "jpeg_progressive",   // row-local ImageIO multi-scan codec (CPU/scan-bound)
     "webp_meta",          // row-local RIFF chunk walk (scan-bound)
     "audio_dedup_content", // decode + fingerprint, ONE keyed shuffle
     "audio_dedup_robust",  // gain-invariant sign-delta fingerprint shuffle

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.functions.{call_function, conv, lit, md5, substring}
+import org.apache.spark.sql.functions.{call_function, conv, lit, lower, md5, substring, trim}
 
 /** Registration of the graft native expressions as SQL functions through
   * the public `SparkSessionExtensions` hook (wired by `GraftSession` via
@@ -84,4 +84,10 @@ object GraftFunctions {
   def md5CoinPct(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 8), 16, 10)
       .cast("double") * 100.0 / 4294967296.0
+
+  /** Exact-duplicate key of a text column: `md5(lower(trim(text)))`. ONE
+    * definition shared by the batch dedup steps and the streaming dedup,
+    * so the two can never disagree on what a duplicate is. DuckDB twin:
+    * the same expression. */
+  def textDedupKey(text: Column): Column = md5(lower(trim(text)))
 }

@@ -1,18 +1,23 @@
 package graft.multimodal
 
-/** REAL pure-JVM media codecs for the formats that need no external
-  * library: binary PPM (P6) images, PNG (8-bit truecolor — zlib inflate
-  * ships in the JDK), and RIFF/WAVE 16-bit PCM audio. These replace
-  * [[Multimodal.decodeStub]] on the formats they cover — the stub remains
-  * only for formats whose decoders genuinely aren't in this environment
-  * (jpeg/mp4).
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.{IIOImage, ImageIO, ImageWriteParam, ImageWriter}
+import javax.imageio.metadata.IIOMetadata
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+
+/** Pure-JVM media codecs: binary PPM (P6) images and RIFF/WAVE 16-bit PCM
+  * audio written here, PNG coded by the JDK's ImageIO, plus the ImageIO
+  * plumbing the PNG, [[Jpeg]] and [[Gif]] codecs share. These replace
+  * [[Multimodal.decodeStub]] on the formats they cover.
   *
-  * Everything here is byte-exact and allocation-bounded: decoders walk the
+  * Decoders fail LOUDLY on malformed input rather than returning garbage
+  * — a corrupt blob in a 100 TB lake should surface in the task error,
+  * not silently skew features. The PPM and WAV decoders walk the
   * container structure (PPM header tokens incl. comments; RIFF chunk list
-  * incl. unknown chunks) and fail LOUDLY on malformed input rather than
-  * returning garbage — a corrupt blob in a 100 TB lake should surface in
-  * the task error, not silently skew features. All functions are
-  * row-local (called from typed maps / mapPartitions); nothing here
+  * incl. unknown chunks); the ImageIO-backed ones turn ImageIO's read
+  * warnings and exceptions into IllegalArgumentException. All functions
+  * are row-local (called from typed maps / mapPartitions); nothing here
   * touches Spark.
   */
 object Codecs {
@@ -158,190 +163,114 @@ object Codecs {
   def isPng(bytes: Array[Byte]): Boolean =
     bytes.length >= 8 && (0 until 8).forall(i => bytes(i) == PngSig(i))
 
-  /** Encode an interleaved-RGB pixel buffer as a standard PNG (8-bit
-    * truecolor, non-interlaced): signature + IHDR + one zlib-deflated
-    * IDAT + IEND, CRC32 per chunk. `filterOf(row)` picks the scanline
-    * filter (0..4 — None/Sub/Up/Average/Paeth); the default cycles
-    * through all five so a roundtrip exercises every unfilter path. Any
-    * PNG reader decodes the output; filters only change the compressed
-    * representation, never the pixels. */
-  def encodePng(w: Int, h: Int, rgb: Array[Byte],
-                filterOf: Int => Int = _ % 5): Array[Byte] = {
-    require(w > 0 && h > 0, s"png: bad dimensions ${w}x$h")
-    // the filtered buffer is h*(1+3w) bytes — one filter byte per row on
-    // top of the pixels — so bound that, not just w*h*3 (w=1, h≈7e8
-    // passes the pixel bound but overflows the row-prefixed one)
-    require(h.toLong * (1 + 3L * w) <= Int.MaxValue,
-      s"png: bad dimensions ${w}x$h")
-    require(rgb.length == w.toLong * h * 3,
-      s"png: need ${w.toLong * h * 3} bytes for ${w}x$h, got ${rgb.length}")
-    val bpp = 3
-    val stride = w * bpp
-    // filter scanlines: each output row = filter byte + transformed bytes
-    val raw = new Array[Byte](h * (1 + stride))
-    var r = 0
-    while (r < h) {
-      val ft = filterOf(r)
-      require(ft >= 0 && ft <= 4, s"png: bad filter type $ft for row $r")
-      raw(r * (1 + stride)) = ft.toByte
-      var i = 0
-      while (i < stride) {
-        val x = rgb(r * stride + i) & 0xff
-        val a = if (i >= bpp) rgb(r * stride + i - bpp) & 0xff else 0 // left
-        val b = if (r > 0) rgb((r - 1) * stride + i) & 0xff else 0   // up
-        val c = if (i >= bpp && r > 0)
-          rgb((r - 1) * stride + i - bpp) & 0xff else 0              // up-left
-        val pred = ft match {
-          case 0 => 0
-          case 1 => a
-          case 2 => b
-          case 3 => (a + b) / 2
-          case 4 => paeth(a, b, c)
-        }
-        raw(r * (1 + stride) + 1 + i) = ((x - pred) & 0xff).toByte
-        i += 1
-      }
-      r += 1
-    }
-    // zlib-deflate the filtered stream (Deflater default = zlib wrapper)
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw); deflater.finish()
-    val buf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-    val tmp = new Array[Byte](8192)
-    while (!deflater.finished()) buf.write(tmp, 0, deflater.deflate(tmp))
-    deflater.end()
-    val idat = buf.toByteArray
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(w).putInt(h)
-      .put(8.toByte)  // bit depth
-      .put(2.toByte)  // color type: truecolor RGB
-      .put(0.toByte)  // compression: deflate
-      .put(0.toByte)  // filter method: adaptive (types 0-4)
-      .put(0.toByte)  // interlace: none
-      .array()
-    val out = new java.io.ByteArrayOutputStream(
-      8 + 25 + 12 + idat.length + 12)
-    out.write(PngSig, 0, 8)
-    writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "IDAT", idat)
-    writeChunk(out, "IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
+  /** Encode an interleaved-RGB pixel buffer as a standard 8-bit
+    * truecolor PNG through the JDK's ImageIO writer (which picks the
+    * scanline filters itself). */
+  def encodePng(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] =
+    writeImage(ImageIO.getImageWritersByFormatName("png").next(),
+      imageOf(w, h, rgb, "png"), null, null)
 
-  /** The Paeth predictor (PNG spec §9, Paeth 1991): the neighbor closest
-    * to the linear estimate a + b − c, ties left > up > up-left. */
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  private def writeChunk(out: java.io.ByteArrayOutputStream, typ: String,
-                         data: Array[Byte]): Unit = {
-    val len = java.nio.ByteBuffer.allocate(4).putInt(data.length).array()
-    out.write(len, 0, 4)
-    val tb = typ.getBytes("US-ASCII")
-    val crc = new java.util.zip.CRC32()
-    crc.update(tb); crc.update(data)
-    out.write(tb, 0, 4)
-    out.write(data, 0, data.length)
-    out.write(java.nio.ByteBuffer.allocate(4)
-      .putInt(crc.getValue.toInt).array(), 0, 4)
-  }
-
-  /** Decode an 8-bit truecolor (color type 2) non-interlaced PNG by
-    * WALKING THE CHUNK LIST — real PNGs carry tEXt/pHYs/gAMA chunks, so
-    * ancillary chunks are skipped (with their CRCs verified), every IDAT
-    * is concatenated into one zlib stream, and all five scanline filters
-    * are reversed. Unsupported shapes (palette, alpha, 16-bit,
-    * interlaced) and corrupt structure (bad CRC, truncated inflate) fail
-    * LOUDLY. Returns (width, height, interleaved RGB). */
+  /** Decode a PNG to (width, height, interleaved RGB) through ImageIO.
+    * Every chunk CRC is verified first — ImageIO does not check them, and
+    * a corrupt blob must fail its task, not skew features. Gray, palette
+    * and alpha images decode to their RGB values. */
   def decodePng(bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
     require(isPng(bytes), "png: bad signature")
     val bb = java.nio.ByteBuffer.wrap(bytes, 8, bytes.length - 8)
-    var w = -1; var h = -1
-    var seenIhdr = false; var seenIend = false
-    val idat = new java.io.ByteArrayOutputStream()
-    while (!seenIend) {
+    var typ = ""
+    while (typ != "IEND") {
       require(bb.remaining() >= 12, "png: truncated chunk list")
       val len = bb.getInt
       require(len >= 0 && len <= bb.remaining() - 8,
         s"png: chunk overruns file (len $len, have ${bb.remaining() - 8})")
-      val tb = new Array[Byte](4); bb.get(tb)
-      val typ = new String(tb, "US-ASCII")
-      val data = new Array[Byte](len); bb.get(data)
+      typ = new String(bytes, bb.position(), 4, "US-ASCII")
       val crc = new java.util.zip.CRC32()
-      crc.update(tb); crc.update(data)
-      val want = bb.getInt
-      require(crc.getValue.toInt == want, s"png: bad CRC on chunk '$typ'")
-      typ match {
-        case "IHDR" =>
-          require(!seenIhdr, "png: duplicate IHDR")
-          require(len == 13, s"png: IHDR length $len")
-          val hb = java.nio.ByteBuffer.wrap(data)
-          w = hb.getInt; h = hb.getInt
-          require(w > 0 && h > 0 && w.toLong * h * 3 <= Int.MaxValue - 16 &&
-            h.toLong * (1 + 3L * w) <= Int.MaxValue, // filtered buf: +1B/row
-            s"png: bad dimensions ${w}x$h")
-          val (depth, color, comp, filt, inter) =
-            (hb.get(), hb.get(), hb.get(), hb.get(), hb.get())
-          require(depth == 8, s"png: only 8-bit supported, got $depth")
-          require(color == 2, s"png: only truecolor RGB supported, got $color")
-          require(comp == 0 && filt == 0, "png: bad compression/filter method")
-          require(inter == 0, "png: interlaced not supported")
-          seenIhdr = true
-        case "IDAT" =>
-          require(seenIhdr, "png: IDAT before IHDR")
-          idat.write(data, 0, len)
-        case "IEND" => seenIend = true
-        case _ => // tEXt/pHYs/gAMA/...: ancillary, skip (CRC checked above)
-      }
+      crc.update(bytes, bb.position(), 4 + len)
+      bb.position(bb.position() + 4 + len)
+      require(crc.getValue.toInt == bb.getInt, s"png: bad CRC on chunk '$typ'")
     }
-    require(seenIhdr, "png: no IHDR chunk")
-    val stride = w * 3
-    val raw = new Array[Byte](h * (1 + stride))
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(idat.toByteArray)
-    var off = 0
-    while (off < raw.length && !inflater.finished()) {
-      val n = inflater.inflate(raw, off, raw.length - off)
-      // FDICT streams return n=0 with needsInput=false forever — fail
-      // loudly rather than spin the task
-      require(!inflater.needsDictionary,
-        "png: preset dictionary (FDICT) not supported")
-      require(n > 0 || !inflater.needsInput, "png: truncated IDAT stream")
-      off += n
+    val img = readImage(bytes, "png")
+    (img.getWidth, img.getHeight, rgbOf(img))
+  }
+
+  // ------------------------------------------------------ ImageIO plumbing
+  // Shared by the PNG, JPEG and GIF codecs. Streams are in-memory per
+  // call: ImageIO.read(InputStream) would otherwise cache to temp files.
+
+  /** ImageIO's JPEG reader drops an unreadable embedded ICC profile with
+    * this warning and decodes the pixels unchanged: damaged metadata, not
+    * damaged pixels (the `jpeg_exif_meta` blobs carry such a profile). */
+  private val IgnoredIccWarning = "Embedded color profile is invalid; ignored"
+
+  /** Read the first image of `bytes` with ImageIO's `format` reader.
+    * ImageIO is lenient where a lake must be loud: a truncated stream
+    * decodes with only read WARNINGS, so every warning but
+    * [[IgnoredIccWarning]] fails here, and ImageIO's exceptions for
+    * corrupt streams become IllegalArgumentException. */
+  private[multimodal] def readImage(bytes: Array[Byte],
+                                    format: String): BufferedImage = {
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    val reader = ImageIO.getImageReadersByFormatName(format).next()
+    val warnings = scala.collection.mutable.ArrayBuffer.empty[String]
+    reader.addIIOReadWarningListener((_, w) => { warnings += w })
+    try {
+      reader.setInput(in, true, true)
+      val img = reader.read(0)
+      val damage = warnings.filterNot(_ == IgnoredIccWarning)
+      require(damage.isEmpty, s"$format: ${damage.mkString("; ")}")
+      img
+    } catch { // IndexOutOfBounds: a stream with no image frame
+      case e @ (_: java.io.IOException | _: IndexOutOfBoundsException) =>
+        throw new IllegalArgumentException(s"$format: ${e.getMessage}", e)
+    } finally {
+      reader.dispose(); in.close()
     }
-    inflater.end()
-    require(off == raw.length,
-      s"png: pixel data truncated (need ${raw.length}, got $off)")
-    // reverse the per-scanline filters in place into the output buffer
-    val bpp = 3
-    val px = new Array[Byte](h * stride)
-    var r = 0
-    while (r < h) {
-      val ft = raw(r * (1 + stride)) & 0xff
-      require(ft <= 4, s"png: bad filter type $ft on row $r")
-      var i = 0
-      while (i < stride) {
-        val v = raw(r * (1 + stride) + 1 + i) & 0xff
-        val a = if (i >= bpp) px(r * stride + i - bpp) & 0xff else 0
-        val b = if (r > 0) px((r - 1) * stride + i) & 0xff else 0
-        val c = if (i >= bpp && r > 0)
-          px((r - 1) * stride + i - bpp) & 0xff else 0
-        val pred = ft match {
-          case 0 => 0
-          case 1 => a
-          case 2 => b
-          case 3 => (a + b) / 2
-          case 4 => paeth(a, b, c)
-        }
-        px(r * stride + i) = ((v + pred) & 0xff).toByte
-        i += 1
-      }
-      r += 1
+  }
+
+  /** Write `img` with `writer` (disposed here) into a fresh byte array. */
+  private[multimodal] def writeImage(writer: ImageWriter, img: BufferedImage,
+                                     param: ImageWriteParam,
+                                     meta: IIOMetadata): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(img, null, meta), param)
+    } finally {
+      writer.dispose(); out.close() // close flushes the cache into `bytes`
     }
-    (w, h, px)
+    bytes.toByteArray
+  }
+
+  /** Interleaved RGB as an 8-bit three-band image. */
+  private[multimodal] def imageOf(w: Int, h: Int, rgb: Array[Byte],
+                                  format: String): BufferedImage = {
+    require(w > 0 && h > 0 && w <= 65535 && h <= 65535,
+      s"$format: bad dimensions ${w}x$h")
+    require(rgb.length == w.toLong * h * 3,
+      s"$format: need ${w.toLong * h * 3} bytes for ${w}x$h, got ${rgb.length}")
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
+    img.getRaster.setPixels(0, 0, w, h, rgb.map(_ & 0xff))
+    img
+  }
+
+  /** A decoded image as interleaved RGB. Gray replicates its one sample
+    * (getRGB would run it through a linear-to-sRGB conversion). */
+  private[multimodal] def rgbOf(img: BufferedImage): Array[Byte] = {
+    val w = img.getWidth; val h = img.getHeight
+    val out = new Array[Byte](w * h * 3)
+    val gray = img.getType == BufferedImage.TYPE_BYTE_GRAY
+    val px =
+      if (gray) img.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int])
+      else img.getRGB(0, 0, w, h, null, 0, w)
+    var i = 0
+    while (i < px.length) {
+      out(3 * i) = (if (gray) px(i) else px(i) >> 16).toByte
+      out(3 * i + 1) = (if (gray) px(i) else px(i) >> 8).toByte
+      out(3 * i + 2) = px(i).toByte
+      i += 1
+    }
+    out
   }
 
   // ---------------------------------------------------------------- WAV

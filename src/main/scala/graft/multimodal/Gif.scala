@@ -1,25 +1,24 @@
 package graft.multimodal
 
-/** GIF87a/89a codec written against the public GIF specification
-  * (CompuServe 1987/89; LZW per the spec's variable-width code scheme):
-  * the third major crawl image container next to PNG and JPEG. GIF is
+import java.awt.image.{BufferedImage, IndexColorModel}
+import javax.imageio.{ImageIO, ImageWriteParam}
+
+/** GIF87a/89a, the third major crawl image container next to PNG and
+  * JPEG, coded by the JDK's ImageIO (LZW, sub-blocks, interlace). GIF is
   * LOSSLESS over a palette, so unlike JPEG the roundtrip contract is
   * byte-exact pixels.
   *
-  * Encoder: GIF89a, one full-frame image, 256-entry global color table,
-  * dynamic LZW with dictionary reset at 4096 entries. Decoder: first
-  * image frame, global or local color table, interlaced or sequential
-  * row order, extension blocks skipped (sub-block grammar honored),
-  * loud failures on truncated streams, bad LZW codes, or a missing
-  * color table. */
+  * Encoder: GIF89a, one full-frame non-interlaced image, the given
+  * 256-entry color table. Decoder: the first image frame with its
+  * color table (global or local); truncated streams and streams with no
+  * frame fail loudly (see [[Codecs.readImage]]). The index-space resize
+  * is written here: it is what keeps a GIF lossless through resize. */
 object Gif {
 
   def isGif(bytes: Array[Byte]): Boolean =
     bytes.length >= 6 && bytes(0) == 'G' && bytes(1) == 'I' &&
       bytes(2) == 'F' && bytes(3) == '8' &&
       (bytes(4) == '7' || bytes(4) == '9') && bytes(5) == 'a'
-
-  // ------------------------------------------------------------ encoder
 
   /** Encode palette-indexed pixels as a single-frame GIF89a. `palette`
     * is 256 RGB triples (768 bytes); `idx` one palette index per pixel. */
@@ -31,72 +30,17 @@ object Gif {
       s"gif: need ${w * h} indices for ${w}x$h, got ${idx.length}")
     require(palette.length == 768,
       s"gif: palette must be 256 RGB triples (768 bytes), got ${palette.length}")
-    val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write("GIF89a".getBytes("US-ASCII"))
-    u16(w); u16(h)
-    out.write(0xf7) // GCT present, 8-bit color res, 256 entries
-    out.write(0); out.write(0) // background index, aspect
-    out.write(palette)
-    out.write(0x2c) // image descriptor
-    u16(0); u16(0); u16(w); u16(h)
-    out.write(0x00) // no LCT, not interlaced
-    val minCode = 8
-    out.write(minCode)
-    // LZW with LSB-first variable-width codes, dictionary reset at 4096
-    val data = new java.io.ByteArrayOutputStream()
-    var acc = 0L; var nBits = 0
-    def put(code: Int, width: Int): Unit = {
-      acc |= code.toLong << nBits; nBits += width
-      while (nBits >= 8) { data.write((acc & 0xff).toInt); acc >>= 8; nBits -= 8 }
-    }
-    val clear = 1 << minCode; val eoi = clear + 1
-    var dict = scala.collection.mutable.HashMap.empty[List[Int], Int]
-    var next = eoi + 1
-    var width = minCode + 1
-    put(clear, width)
-    var cur: List[Int] = Nil // reversed pixel run
-    var i = 0
-    while (i < idx.length) {
-      val p = idx(i) & 0xff
-      val cand = p :: cur
-      if (cur.isEmpty || dict.contains(cand)) cur = cand
-      else {
-        val code = if (cur.tail.isEmpty) cur.head else dict(cur)
-        put(code, width)
-        dict(cand) = next
-        next += 1
-        if (next > (1 << width) && width < 12) width += 1
-        if (next == 4096) { // reset the dictionary before it overflows
-          put(clear, width)
-          dict = scala.collection.mutable.HashMap.empty
-          next = eoi + 1; width = minCode + 1
-        }
-        cur = List(p)
-      }
-      i += 1
-    }
-    if (cur.nonEmpty)
-      put(if (cur.tail.isEmpty) cur.head else dict(cur), width)
-    put(eoi, width)
-    if (nBits > 0) data.write((acc & 0xff).toInt)
-    // wrap in <= 255-byte sub-blocks
-    val bytes = data.toByteArray
-    var off = 0
-    while (off < bytes.length) {
-      val n = math.min(255, bytes.length - off)
-      out.write(n); out.write(bytes, off, n)
-      off += n
-    }
-    out.write(0x00) // block terminator
-    out.write(0x3b) // trailer
-    out.toByteArray
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED,
+      new IndexColorModel(8, 256, palette, 0, false))
+    img.getRaster.setDataElements(0, 0, w, h, idx)
+    val writer = ImageIO.getImageWritersByFormatName("gif").next()
+    val param = writer.getDefaultWriteParam
+    param.setProgressiveMode(ImageWriteParam.MODE_DISABLED) // not interlaced
+    Codecs.writeImage(writer, img, param, null)
   }
 
-  // ------------------------------------------------------------ decoder
-
   /** Decode the FIRST image frame to (w, h, interleaved RGB) through its
-    * color table. Extensions are skipped; interlaced frames de-woven. */
+    * color table. */
   def decode(bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
     val (w, h, idx, table) = decodeIndexed(bytes)
     val rgb = new Array[Byte](w * h * 3)
@@ -137,136 +81,26 @@ object Gif {
   def decodeIndexed(bytes: Array[Byte])
       : (Int, Int, Array[Byte], Array[Byte]) = {
     require(isGif(bytes), "gif: missing GIF8xa signature")
-    var p = 6
-    def u8(): Int = {
-      require(p < bytes.length, s"gif: truncated at offset $p")
-      val v = bytes(p) & 0xff; p += 1; v
+    val img = Codecs.readImage(bytes, "gif")
+    val cm = img.getColorModel match {
+      case cm: IndexColorModel => cm
+      case other => throw new IllegalArgumentException(
+        s"gif: frame decoded without a color table ($other)")
     }
-    def u16le(): Int = { val a = u8(); a | (u8() << 8) }
-    u16le(); u16le() // logical screen w/h (frame carries its own)
-    val packed = u8()
-    u8(); u8() // background, aspect
-    val gct: Array[Byte] =
-      if ((packed & 0x80) != 0) {
-        val n = 2 << (packed & 7)
-        val t = java.util.Arrays.copyOfRange(bytes, p, p + n * 3)
-        require(p + n * 3 <= bytes.length, "gif: truncated color table")
-        p += n * 3; t
-      } else null
-    while (true) {
-      u8() match {
-        case 0x3b => // trailer before any image
-          throw new IllegalArgumentException("gif: no image frame found")
-        case 0x21 => // extension: label + sub-blocks
-          u8()
-          var n = u8()
-          while (n != 0) { p += n; n = u8() }
-        case 0x2c =>
-          u16le(); u16le() // frame left/top (composited at origin here)
-          val w = u16le(); val h = u16le()
-          require(w > 0 && h > 0, s"gif: bad frame dimensions ${w}x$h")
-          val fp = u8()
-          val interlaced = (fp & 0x40) != 0
-          val table: Array[Byte] =
-            if ((fp & 0x80) != 0) {
-              val n = 2 << (fp & 7)
-              require(p + n * 3 <= bytes.length, "gif: truncated color table")
-              val t = java.util.Arrays.copyOfRange(bytes, p, p + n * 3)
-              p += n * 3; t
-            } else gct
-          require(table != null, "gif: frame has no color table")
-          val minCode = u8()
-          require(minCode >= 2 && minCode <= 8, s"gif: bad LZW root $minCode")
-          // concatenate the data sub-blocks
-          val data = new java.io.ByteArrayOutputStream()
-          var n = u8()
-          while (n != 0) {
-            require(p + n <= bytes.length, "gif: truncated image data")
-            data.write(bytes, p, n); p += n; n = u8()
-          }
-          val px = lzwDecode(data.toByteArray, minCode, w * h)
-          val idx = new Array[Byte](w * h)
-          var i = 0
-          while (i < w * h) {
-            idx(i) = px(if (interlaced) deinterlace(i, w, h) else i)
-            i += 1
-          }
-          return (w, h, idx, table)
-        case other =>
-          throw new IllegalArgumentException(
-            f"gif: unexpected block 0x$other%02x at offset ${p - 1}")
-      }
+    val w = img.getWidth; val h = img.getHeight
+    // getSamples, not the data buffer: small tables decode bit-packed
+    val idx = img.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int])
+      .map(_.toByte)
+    val n = cm.getMapSize
+    val table = new Array[Byte](n * 3)
+    var c = 0
+    while (c < n) {
+      val rgb = cm.getRGB(c)
+      table(3 * c) = (rgb >> 16).toByte
+      table(3 * c + 1) = (rgb >> 8).toByte
+      table(3 * c + 2) = rgb.toByte
+      c += 1
     }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** natural pixel position `i` → position in the 4-pass interlaced
-    * stream order. */
-  private def deinterlace(i: Int, w: Int, h: Int): Int = {
-    val row = i / w
-    // rows arrive in passes: 0,8,16… then 4,12… then 2,6… then 1,3,5…
-    val p1 = (h + 7) / 8
-    val p2 = (h + 3) / 8
-    val p3 = (h + 1) / 4
-    val streamRow =
-      if (row % 8 == 0) row / 8
-      else if (row % 8 == 4) p1 + row / 8
-      else if (row % 4 == 2) p1 + p2 + row / 4
-      else p1 + p2 + p3 + row / 2
-    streamRow * w + i % w
-  }
-
-  /** variable-width LSB-first LZW decode, clear/EOI codes, KwKwK case. */
-  private def lzwDecode(data: Array[Byte], minCode: Int,
-                        nPixels: Int): Array[Byte] = {
-    val clear = 1 << minCode; val eoi = clear + 1
-    val out = new Array[Byte](nPixels)
-    var outAt = 0
-    // dictionary as (prefix code, appended byte); roots are implicit
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    var next = eoi + 1
-    var width = minCode + 1
-    var acc = 0L; var nBits = 0; var at = 0
-    def read(): Int = {
-      while (nBits < width) {
-        require(at < data.length, "gif: truncated LZW stream")
-        acc |= (data(at) & 0xffL) << nBits; at += 1; nBits += 8
-      }
-      val c = (acc & ((1 << width) - 1)).toInt
-      acc >>= width; nBits -= width
-      c
-    }
-    def expand(code: Int): Array[Byte] = { // code → its byte string
-      var c = code
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-      while (c >= clear + 2) { buf += suffix(c); c = prefix(c) }
-      buf += c.toByte
-      buf.reverseIterator.toArray
-    }
-    var prev = -1
-    while (outAt < nPixels) {
-      val code = read()
-      if (code == clear) { next = eoi + 1; width = minCode + 1; prev = -1 }
-      else if (code == eoi)
-        throw new IllegalArgumentException(
-          s"gif: EOI with only $outAt of $nPixels pixels")
-      else {
-        require(code < next || (code == next && prev >= 0),
-          s"gif: LZW code $code out of range (next $next)")
-        val s =
-          if (code < next) expand(code)
-          else { val ps = expand(prev); ps :+ ps(0) } // KwKwK
-        require(outAt + s.length <= nPixels, "gif: LZW output overruns frame")
-        System.arraycopy(s, 0, out, outAt, s.length); outAt += s.length
-        if (prev >= 0 && next < 4096) {
-          prefix(next) = prev; suffix(next) = s(0)
-          next += 1
-          if (next == (1 << width) && width < 12) width += 1
-        }
-        prev = code
-      }
-    }
-    out
+    (w, h, idx, table)
   }
 }

@@ -1,27 +1,24 @@
 package graft.multimodal
 
-/** JFIF/JPEG codec written against the public ITU-T T.81 spec
-  * (+ JFIF 1.02 container): the web's dominant photographic format, so a
-  * media lake's decode dispatch must speak it natively.
+import javax.imageio.{ImageIO, ImageTypeSpecifier, ImageWriteParam}
+import javax.imageio.metadata.IIOMetadataNode
+
+/** JFIF/JPEG: the web's dominant photographic format. The JDK's ImageIO
+  * codes the pixels — baseline and progressive (SOF2) encode, and decode
+  * of every stream its reader takes (baseline, progressive, any chroma
+  * subsampling, grayscale). What stays hand-written is the header work a
+  * media lake does without decoding: the EXIF/ICC triage walker, the
+  * staging segment writer and the metadata strip.
   *
-  * Encoder: baseline sequential DCT, 8-bit, 4:4:4 (no subsampling), the
-  * Annex K quantization tables scaled by the IJG quality formula and the
-  * Annex K "typical" Huffman tables — the fixed-table baseline every
-  * reader decodes. Decoder: baseline sequential (SOF0/1) AND progressive
-  * (SOF2 — T.81 Annex G spectral selection + successive approximation,
-  * the multi-scan form most real crawl JPEGs use; coefficients accumulate
-  * across scans, EOB runs and refinement correction bits per G.1.2).
-  * Arithmetic / hierarchical / 12-bit fail LOUDLY, never silently. 1-3
-  * components, sampling factors 1-2 with pixel-replication chroma
-  * upsampling (covers 4:4:4, 4:2:2, 4:2:0 and grayscale — what real
-  * crawl media actually uses), restart markers honored in both paths.
-  *
-  * JPEG is LOSSY: the roundtrip contract is exact metadata (dimensions,
-  * marker grammar) plus a PSNR bound on pixels — JpegSpec additionally
-  * cross-validates both directions against the JDK's independent ImageIO
-  * codec. Reference behavior anchor: the reference pipeline treats media
-  * as opaque binary + typed metadata (SURVEY §2 multimodal columns);
-  * decode here feeds the same 4x4 grid-luminance features as PPM/PNG.
+  * The encoder pins 4:4:4 sampling: ImageIO's default 4:2:0 chroma
+  * costs the `jpeg_codec` PSNR floor most of its margin. JPEG is LOSSY:
+  * the roundtrip contract is exact metadata (dimensions, marker grammar)
+  * plus a PSNR bound on pixels. Decode is loud where ImageIO is lenient:
+  * a truncated stream, which ImageIO decodes with only read warnings,
+  * fails (see [[Codecs.readImage]]). Reference behavior anchor: the
+  * reference pipeline treats media as opaque binary + typed metadata
+  * (SURVEY §2 multimodal columns); decode here feeds the same 4x4
+  * grid-luminance features as PPM/PNG.
   */
 object Jpeg {
 
@@ -30,1010 +27,51 @@ object Jpeg {
     bytes.length >= 3 && (bytes(0) & 0xff) == 0xff &&
       (bytes(1) & 0xff) == 0xd8 && (bytes(2) & 0xff) == 0xff
 
-  // ------------------------------------------------------------ tables
-  // Zigzag scan: position k in the entropy stream → natural 8x8 index.
-  private val ZigZag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63)
+  private val MetaFormat = "javax_imageio_jpeg_image_1.0"
 
-  // T.81 Annex K.1 quantization tables (natural order).
-  private val QLumBase: Array[Int] = Array(
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99)
-  private val QChromBase: Array[Int] = Array(
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99)
+  /** Encode interleaved RGB as baseline 4:4:4 JFIF. `quality` (clamped
+    * to 1..100) scales the Annex K tables by the IJG formula. */
+  def encode(w: Int, h: Int, rgb: Array[Byte], quality: Int = 50): Array[Byte] =
+    write(w, h, rgb, quality, progressive = false)
 
-  // T.81 Annex K.3 "typical" Huffman tables: (bits per code length 1..16,
-  // symbol values in code order).
-  private val DcLumBits = Array(0, 0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private val DcLumVals = (0 to 11).map(_.toByte).toArray
-  private val DcChromBits = Array(0, 0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0)
-  private val DcChromVals = (0 to 11).map(_.toByte).toArray
-  private val AcLumBits = Array(0, 0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d)
-  private val AcLumVals: Array[Byte] = Array(
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-    0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-    0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xa1, 0x08,
-    0x23, 0x42, 0xb1, 0xc1, 0x15, 0x52, 0xd1, 0xf0,
-    0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0a, 0x16,
-    0x17, 0x18, 0x19, 0x1a, 0x25, 0x26, 0x27, 0x28,
-    0x29, 0x2a, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-    0x3a, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-    0x4a, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-    0x5a, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-    0x6a, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-    0x7a, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-    0x8a, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-    0x99, 0x9a, 0xa2, 0xa3, 0xa4, 0xa5, 0xa6, 0xa7,
-    0xa8, 0xa9, 0xaa, 0xb2, 0xb3, 0xb4, 0xb5, 0xb6,
-    0xb7, 0xb8, 0xb9, 0xba, 0xc2, 0xc3, 0xc4, 0xc5,
-    0xc6, 0xc7, 0xc8, 0xc9, 0xca, 0xd2, 0xd3, 0xd4,
-    0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda, 0xe1, 0xe2,
-    0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea,
-    0xf1, 0xf2, 0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8,
-    0xf9, 0xfa).map(_.toByte)
-  private val AcChromBits = Array(0, 0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77)
-  private val AcChromVals: Array[Byte] = Array(
-    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-    0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-    0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-    0xa1, 0xb1, 0xc1, 0x09, 0x23, 0x33, 0x52, 0xf0,
-    0x15, 0x62, 0x72, 0xd1, 0x0a, 0x16, 0x24, 0x34,
-    0xe1, 0x25, 0xf1, 0x17, 0x18, 0x19, 0x1a, 0x26,
-    0x27, 0x28, 0x29, 0x2a, 0x35, 0x36, 0x37, 0x38,
-    0x39, 0x3a, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-    0x49, 0x4a, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-    0x59, 0x5a, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-    0x69, 0x6a, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-    0x79, 0x7a, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-    0x88, 0x89, 0x8a, 0x92, 0x93, 0x94, 0x95, 0x96,
-    0x97, 0x98, 0x99, 0x9a, 0xa2, 0xa3, 0xa4, 0xa5,
-    0xa6, 0xa7, 0xa8, 0xa9, 0xaa, 0xb2, 0xb3, 0xb4,
-    0xb5, 0xb6, 0xb7, 0xb8, 0xb9, 0xba, 0xc2, 0xc3,
-    0xc4, 0xc5, 0xc6, 0xc7, 0xc8, 0xc9, 0xca, 0xd2,
-    0xd3, 0xd4, 0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda,
-    0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9,
-    0xea, 0xf2, 0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8,
-    0xf9, 0xfa).map(_.toByte)
-
-  /** IJG quality scaling of a base table (public libjpeg formula). */
-  private def scaledQuant(base: Array[Int], quality: Int): Array[Int] = {
-    val q = math.max(1, math.min(100, quality))
-    val scale = if (q < 50) 5000 / q else 200 - 2 * q
-    base.map { v =>
-      math.max(1, math.min(255, (v * scale + 50) / 100))
-    }
-  }
-
-  // separable DCT basis: cosTab(x)(u) = cos((2x+1)·u·π/16)
-  private val cosTab: Array[Array[Double]] =
-    Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16))
-  private def cu(u: Int): Double = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
-
-  /** forward DCT of one level-shifted 8x8 block (natural order). */
-  private def fdct(in: Array[Double]): Array[Double] = {
-    val tmp = new Array[Double](64) // tmp(u + 8y) = Σx in(x + 8y)·c(x,u)
-    var y = 0
-    while (y < 8) {
-      var u = 0
-      while (u < 8) {
-        var s = 0.0; var x = 0
-        while (x < 8) { s += in(x + 8 * y) * cosTab(x)(u); x += 1 }
-        tmp(u + 8 * y) = s; u += 1
-      }
-      y += 1
-    }
-    val out = new Array[Double](64)
-    var v = 0
-    while (v < 8) {
-      var u = 0
-      while (u < 8) {
-        var s = 0.0; var yy = 0
-        while (yy < 8) { s += tmp(u + 8 * yy) * cosTab(yy)(v); yy += 1 }
-        out(u + 8 * v) = 0.25 * cu(u) * cu(v) * s; u += 1
-      }
-      v += 1
-    }
-    out
-  }
-
-  /** inverse DCT of one dequantized 8x8 block (natural order). */
-  private def idct(in: Array[Double]): Array[Double] = {
-    val tmp = new Array[Double](64) // tmp(x + 8v) = Σu C(u)·in(u + 8v)·c(x,u)
-    var v = 0
-    while (v < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0; var u = 0
-        while (u < 8) { s += cu(u) * in(u + 8 * v) * cosTab(x)(u); u += 1 }
-        tmp(x + 8 * v) = s; x += 1
-      }
-      v += 1
-    }
-    val out = new Array[Double](64)
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0; var vv = 0
-        while (vv < 8) { s += cu(vv) * tmp(x + 8 * vv) * cosTab(y)(vv); vv += 1 }
-        out(x + 8 * y) = 0.25 * s; x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  // ------------------------------------------------------------ encoder
-
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var acc = 0
-    private var n = 0
-    def put(bits: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((bits >>> i) & 1)
-        n += 1
-        if (n == 8) {
-          out.write(acc)
-          if (acc == 0xff) out.write(0x00) // byte stuffing
-          acc = 0; n = 0
-        }
-        i -= 1
-      }
-    }
-    def flush(): Unit = if (n > 0) { // pad with 1s per T.81
-      acc = (acc << (8 - n)) | ((1 << (8 - n)) - 1)
-      out.write(acc)
-      if (acc == 0xff) out.write(0x00)
-      acc = 0; n = 0
-    }
-  }
-
-  /** canonical (code, length) per symbol from a (bits, vals) table spec. */
-  private def huffCodes(bits: Array[Int], vals: Array[Byte]): Array[Array[Int]] = {
-    val codes = Array.fill(256)(null: Array[Int])
-    var code = 0
-    var k = 0
-    var len = 1
-    while (len <= 16) {
-      var i = 0
-      while (i < bits(len)) {
-        codes(vals(k) & 0xff) = Array(code, len)
-        code += 1; k += 1; i += 1
-      }
-      code <<= 1
-      len += 1
-    }
-    codes
-  }
-
-  private def category(v: Int): Int = {
-    var a = math.abs(v); var c = 0
-    while (a != 0) { a >>= 1; c += 1 }
-    c
-  }
-
-  /** Shared encoder preamble for [[encode]] and [[encodeProgressive]]:
-    * emits SOI → APP0/JFIF → DQT×2 → SOF(`sof`) → DHT×4 into `out` and
-    * runs the full sample→fdct→quantize pass, returning per-component
-    * quantized coefficients in zigzag order for every 8×8 block (raster
-    * block order — the same order both the baseline MCU walk and the
-    * progressive scans serialize). The two entry points differ ONLY in
-    * the SOF marker and how scans serialize these coefficients, so a
-    * future table or colorspace change lands in one place. */
-  private def emitHeaderAndQuantize(w: Int, h: Int, rgb: Array[Byte],
-      quality: Int, sof: Int,
-      out: java.io.ByteArrayOutputStream): Array[Array[Int]] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535,
-      s"jpeg: bad dimensions ${w}x$h")
-    require(rgb.length == w.toLong * h * 3,
-      s"jpeg: need ${w.toLong * h * 3} bytes for ${w}x$h, got ${rgb.length}")
-    val qLum = scaledQuant(QLumBase, quality)
-    val qChrom = scaledQuant(QChromBase, quality)
-    def m(b: Int): Unit = { out.write(0xff); out.write(b) }
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    m(0xd8) // SOI
-    m(0xe0); u16(16) // APP0 / JFIF 1.02, no thumbnail
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(2); out.write(0) // version, aspect units
-    u16(1); u16(1); out.write(0); out.write(0)
-    def dqt(id: Int, t: Array[Int]): Unit = {
-      m(0xdb); u16(67); out.write(id) // Pq=0 (8-bit) | Tq
-      var k = 0
-      while (k < 64) { out.write(t(ZigZag(k))); k += 1 } // zigzag order
-    }
-    dqt(0, qLum); dqt(1, qChrom)
-    m(sof); u16(17) // SOF0 baseline / SOF2 progressive, 3 comps, 1x1
-    out.write(8); u16(h); u16(w); out.write(3)
-    out.write(1); out.write(0x11); out.write(0) // Y  → qtable 0
-    out.write(2); out.write(0x11); out.write(1) // Cb → qtable 1
-    out.write(3); out.write(0x11); out.write(1) // Cr → qtable 1
-    def dht(cls: Int, id: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      m(0xc4); u16(19 + vals.length); out.write((cls << 4) | id)
-      var l = 1
-      while (l <= 16) { out.write(bits(l)); l += 1 }
-      out.write(vals)
-    }
-    dht(0, 0, DcLumBits, DcLumVals); dht(1, 0, AcLumBits, AcLumVals)
-    dht(0, 1, DcChromBits, DcChromVals); dht(1, 1, AcChromBits, AcChromVals)
-
-    // per-component planes (4:4:4) from RGB, edge-replicated to 8-multiples
-    def sample(x: Int, y: Int, c: Int): Double = {
-      val xx = math.min(x, w - 1); val yy = math.min(y, h - 1)
-      val r = rgb(3 * (yy * w + xx)) & 0xff
-      val g = rgb(3 * (yy * w + xx) + 1) & 0xff
-      val b = rgb(3 * (yy * w + xx) + 2) & 0xff
-      c match {
-        case 0 => 0.299 * r + 0.587 * g + 0.114 * b
-        case 1 => -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        case _ => 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-      }
-    }
-    val blocksX = (w + 7) / 8; val blocksY = (h + 7) / 8
-    val nBlocks = blocksX * blocksY
-    val zz = Array.ofDim[Int](3, nBlocks * 64)
-    val block = new Array[Double](64)
-    var b = 0
-    while (b < nBlocks) {
-      val bx = b % blocksX; val by = b / blocksX
-      var comp = 0
-      while (comp < 3) {
-        var i = 0
-        while (i < 64) {
-          block(i) = sample(bx * 8 + i % 8, by * 8 + i / 8, comp) - 128.0
-          i += 1
-        }
-        val coef = fdct(block)
-        val q = if (comp == 0) qLum else qChrom
-        i = 0
-        while (i < 64) {
-          zz(comp)(b * 64 + i) = math.round(coef(ZigZag(i)) / q(ZigZag(i))).toInt
-          i += 1
-        }
-        comp += 1
-      }
-      b += 1
-    }
-    zz
-  }
-
-  /** DC coefficient: category code + amplitude bits. */
-  private def writeDc(bw: BitWriter, dcT: Array[Array[Int]], diff: Int): Unit = {
-    val s = category(diff)
-    bw.put(dcT(s)(0), dcT(s)(1))
-    if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-  }
-
-  /** AC band 1..63 of one block: run/size symbols, ZRL for runs > 15,
-    * EOB on a trailing zero run — shared by the baseline MCU walk and
-    * the progressive per-component AC scans. */
-  private def writeAcBand(bw: BitWriter, acT: Array[Array[Int]],
-                          zzc: Array[Int], off: Int): Unit = {
-    var run = 0
-    var k = 1
-    while (k < 64) {
-      val v = zzc(off + k)
-      if (v == 0) run += 1
-      else {
-        while (run > 15) { bw.put(acT(0xf0)(0), acT(0xf0)(1)); run -= 16 }
-        val sz = category(v)
-        val sym = (run << 4) | sz
-        bw.put(acT(sym)(0), acT(sym)(1))
-        bw.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
-        run = 0
-      }
-      k += 1
-    }
-    if (run > 0) bw.put(acT(0x00)(0), acT(0x00)(1)) // EOB
-  }
-
-  /** Encode interleaved RGB as baseline 4:4:4 JFIF. Every standard reader
-    * decodes the output; `quality` drives the IJG table scaling. */
-  def encode(w: Int, h: Int, rgb: Array[Byte], quality: Int = 50): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val zz = emitHeaderAndQuantize(w, h, rgb, quality, 0xc0, out)
-    val nBlocks = zz(0).length / 64
-    def m(b: Int): Unit = { out.write(0xff); out.write(b) }
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    m(0xda); u16(12); out.write(3) // SOS
-    out.write(1); out.write(0x00) // Y  → DC0/AC0
-    out.write(2); out.write(0x11) // Cb → DC1/AC1
-    out.write(3); out.write(0x11)
-    out.write(0); out.write(63); out.write(0) // Ss/Se/AhAl (baseline)
-
-    val dcLum = huffCodes(DcLumBits, DcLumVals)
-    val acLum = huffCodes(AcLumBits, AcLumVals)
-    val dcChrom = huffCodes(DcChromBits, DcChromVals)
-    val acChrom = huffCodes(AcChromBits, AcChromVals)
-    val bw = new BitWriter(out)
-    val dcPred = new Array[Int](3)
-    var b = 0
-    while (b < nBlocks) { // interleaved 4:4:4 MCU = one block per comp
-      var comp = 0
-      while (comp < 3) {
-        val (dcT, acT) = if (comp == 0) (dcLum, acLum) else (dcChrom, acChrom)
-        val dc = zz(comp)(b * 64)
-        writeDc(bw, dcT, dc - dcPred(comp))
-        dcPred(comp) = dc
-        writeAcBand(bw, acT, zz(comp), b * 64)
-        comp += 1
-      }
-      b += 1
-    }
-    bw.flush()
-    m(0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** Encode interleaved RGB as PROGRESSIVE 4:4:4 JFIF (SOF2) with the
-    * simplest conforming scan script — spectral selection only, no
-    * successive approximation: one interleaved DC scan, then the full
-    * 1..63 AC band per component (Y, Cb, Cr), per-block EOB. The
-    * quantized coefficients are identical to [[encode]]'s at the same
-    * quality, so decode(encodeProgressive(x)) == decode(encode(x))
-    * pixel-for-pixel — the contract `jpeg_progressive` asserts. */
+  /** Encode interleaved RGB as PROGRESSIVE 4:4:4 JFIF (SOF2, ImageIO's
+    * default scan script). Progression only reorders the quantized
+    * coefficients, which equal [[encode]]'s at the same quality, so
+    * decode(encodeProgressive(x)) == decode(encode(x)) pixel-for-pixel —
+    * the contract `jpeg_progressive` asserts. */
   def encodeProgressive(w: Int, h: Int, rgb: Array[Byte],
-                        quality: Int = 50): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val zz = emitHeaderAndQuantize(w, h, rgb, quality, 0xc2, out)
-    val nBlocks = zz(0).length / 64
-    def m(b: Int): Unit = { out.write(0xff); out.write(b) }
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
+                        quality: Int = 50): Array[Byte] =
+    write(w, h, rgb, quality, progressive = true)
 
-    val dcLum = huffCodes(DcLumBits, DcLumVals)
-    val acLum = huffCodes(AcLumBits, AcLumVals)
-    val dcChrom = huffCodes(DcChromBits, DcChromVals)
-    val acChrom = huffCodes(AcChromBits, AcChromVals)
-
-    // scan 1: interleaved DC, Ss=Se=0, Ah=Al=0
-    m(0xda); u16(12); out.write(3)
-    out.write(1); out.write(0x00)
-    out.write(2); out.write(0x10)
-    out.write(3); out.write(0x10)
-    out.write(0); out.write(0); out.write(0)
-    val bw1 = new BitWriter(out)
-    val dcPred = new Array[Int](3)
-    var b = 0
-    while (b < nBlocks) {
-      var comp = 0
-      while (comp < 3) {
-        val dc = zz(comp)(b * 64)
-        writeDc(bw1, if (comp == 0) dcLum else dcChrom, dc - dcPred(comp))
-        dcPred(comp) = dc
-        comp += 1
-      }
-      b += 1
+  private def write(w: Int, h: Int, rgb: Array[Byte], quality: Int,
+                    progressive: Boolean): Array[Byte] = {
+    val img = Codecs.imageOf(w, h, rgb, "jpeg")
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val param = writer.getDefaultWriteParam
+    param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+    param.setCompressionQuality(math.max(1, math.min(100, quality)) / 100f)
+    if (progressive) param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+    val meta = writer.getDefaultImageMetadata(
+      ImageTypeSpecifier.createFromRenderedImage(img), param)
+    val tree = meta.getAsTree(MetaFormat).asInstanceOf[IIOMetadataNode]
+    val comps = tree.getElementsByTagName("componentSpec")
+    for (i <- 0 until comps.getLength) {
+      val c = comps.item(i).asInstanceOf[IIOMetadataNode]
+      c.setAttribute("HsamplingFactor", "1")
+      c.setAttribute("VsamplingFactor", "1")
     }
-    bw1.flush()
-
-    // scans 2-4: full AC band per component, per-block EOB
-    var comp = 0
-    while (comp < 3) {
-      m(0xda); u16(8); out.write(1)
-      out.write(comp + 1); out.write(if (comp == 0) 0x00 else 0x01)
-      out.write(1); out.write(63); out.write(0) // Ss=1 Se=63 Ah=Al=0
-      val acT = if (comp == 0) acLum else acChrom
-      val bw = new BitWriter(out)
-      b = 0
-      while (b < nBlocks) {
-        writeAcBand(bw, acT, zz(comp), b * 64)
-        b += 1
-      }
-      bw.flush()
-      comp += 1
-    }
-    m(0xd9) // EOI
-    out.toByteArray
+    meta.setFromTree(MetaFormat, tree)
+    Codecs.writeImage(writer, img, param, meta)
   }
 
-  // ------------------------------------------------------------ decoder
-
-  private final class HuffTable(bits: Array[Int], vals: Array[Byte]) {
-    val minCode = new Array[Int](17)
-    val maxCode = Array.fill(17)(-1)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0; var k = 0; var l = 1
-      while (l <= 16) {
-        if (bits(l) > 0) {
-          valPtr(l) = k
-          minCode(l) = code
-          code += bits(l); k += bits(l)
-          maxCode(l) = code - 1
-        }
-        code <<= 1
-        l += 1
-      }
-    }
-    def value(len: Int, code: Int): Int =
-      vals(valPtr(len) + code - minCode(len)) & 0xff
-    def inRange(len: Int, code: Int): Boolean = code <= maxCode(len)
-  }
-
-  private final class BitReader(data: Array[Byte], var pos: Int) {
-    private var acc = 0
-    private var n = 0
-    /** next entropy-coded bit; FF00 unstuffed; markers are a loud error
-      * here (restarts are consumed at MCU boundaries via expectRst). */
-    def bit(): Int = {
-      if (n == 0) {
-        require(pos < data.length, "jpeg: truncated entropy stream")
-        var b = data(pos) & 0xff; pos += 1
-        if (b == 0xff) {
-          require(pos < data.length, "jpeg: truncated entropy stream")
-          val b2 = data(pos) & 0xff; pos += 1
-          if (b2 != 0x00)
-            throw new IllegalArgumentException(
-              f"jpeg: unexpected marker 0xff$b2%02x inside entropy stream")
-          b = 0xff
-        }
-        acc = b; n = 8
-      }
-      n -= 1
-      (acc >>> n) & 1
-    }
-    def bits(len: Int): Int = {
-      var v = 0; var i = 0
-      while (i < len) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    /** byte-align and consume the expected RSTn marker. */
-    def expectRst(idx: Int): Unit = {
-      n = 0
-      require(pos + 1 < data.length, "jpeg: truncated at restart marker")
-      val a = data(pos) & 0xff; val b = data(pos + 1) & 0xff
-      require(a == 0xff && b == 0xd0 + (idx % 8),
-        f"jpeg: expected RST${idx % 8} marker, got 0x$a%02x$b%02x")
-      pos += 2
-    }
-  }
-
-  private def decodeHuff(br: BitReader, t: HuffTable): Int = {
-    var code = 0; var len = 0
-    while (len < 16) {
-      code = (code << 1) | br.bit()
-      len += 1
-      if (t.inRange(len, code)) return t.value(len, code)
-    }
-    throw new IllegalArgumentException("jpeg: invalid Huffman code")
-  }
-
-  private def extend(v: Int, size: Int): Int =
-    if (size == 0) 0
-    else if (v < (1 << (size - 1))) v - (1 << size) + 1
-    else v
-
-  /** Decode a JFIF/JPEG blob to (w, h, interleaved RGB) — baseline
-    * sequential (SOF0/1) and progressive (SOF2, T.81 Annex G spectral
-    * selection + successive approximation) streams. Grayscale decodes to
-    * replicated-channel RGB. Arithmetic-coded, hierarchical, 12-bit and
-    * >2x sampling streams fail loudly, never silently. */
+  /** Decode a JFIF/JPEG blob to (w, h, interleaved RGB) — baseline or
+    * progressive, any sampling; grayscale decodes to replicated-channel
+    * RGB. Truncated, stripped or otherwise corrupt streams throw
+    * IllegalArgumentException, never a gray-filled image. */
   def decode(bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
     require(isJpeg(bytes), "jpeg: missing SOI signature")
-    var p = 2
-    def u16(at: Int): Int = ((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)
-    val quant = Array.fill(4)(null: Array[Int])
-    val dcTabs = Array.fill(4)(null: HuffTable)
-    val acTabs = Array.fill(4)(null: HuffTable)
-    var w = 0; var h = 0
-    // per component: id, hSamp, vSamp, quant id, dc tab, ac tab
-    var compId: Array[Int] = null
-    var compH: Array[Int] = null
-    var compV: Array[Int] = null
-    var compQ: Array[Int] = null
-    var compDc: Array[Int] = null
-    var compAc: Array[Int] = null
-    var restartInterval = 0
-    var sofSeen = false
-    var progressive = false
-    // progressive state: per-component DCT coefficients accumulated
-    // across scans (natural order, 64 per block, MCU-padded block grid)
-    var coefs: Array[Array[Int]] = null
-    var scansSeen = 0 // a SOF2 + EOI with no SOS must stay a loud error
-    var mcusX = 0; var mcusY = 0; var hMax = 1; var vMax = 1
-    var blocksW: Array[Int] = null; var blocksH: Array[Int] = null
-    var ceilBW: Array[Int] = null; var ceilBH: Array[Int] = null
-
-    while (p + 1 < bytes.length) {
-      require((bytes(p) & 0xff) == 0xff,
-        f"jpeg: expected marker at offset $p, got 0x${bytes(p) & 0xff}%02x")
-      val marker = bytes(p + 1) & 0xff
-      p += 2
-      marker match {
-        case 0xd9 => // EOI
-          if (progressive && coefs != null && scansSeen > 0)
-            return reconstructProgressive(w, h, compId.length, compH, compV,
-              hMax, vMax, blocksW, blocksH, compQ, quant, coefs)
-          throw new IllegalArgumentException("jpeg: EOI before scan data")
-        case 0x01 => // TEM, standalone
-        case mk if mk >= 0xd0 && mk <= 0xd7 => // stray RST, standalone
-        case 0xc0 | 0xc1 | 0xc2 => // SOF0/1 baseline, SOF2 progressive
-          val len = u16(p)
-          require((bytes(p + 2) & 0xff) == 8, "jpeg: only 8-bit supported")
-          h = u16(p + 3); w = u16(p + 5)
-          require(w > 0 && h > 0, s"jpeg: bad dimensions ${w}x$h")
-          val nc = bytes(p + 7) & 0xff
-          require(nc == 1 || nc == 3, s"jpeg: $nc components unsupported")
-          compId = new Array(nc); compH = new Array(nc); compV = new Array(nc)
-          compQ = new Array(nc); compDc = new Array(nc); compAc = new Array(nc)
-          var c = 0
-          while (c < nc) {
-            compId(c) = bytes(p + 8 + 3 * c) & 0xff
-            val hv = bytes(p + 9 + 3 * c) & 0xff
-            compH(c) = hv >> 4; compV(c) = hv & 0x0f
-            require(compH(c) >= 1 && compH(c) <= 2 &&
-              compV(c) >= 1 && compV(c) <= 2,
-              s"jpeg: sampling ${compH(c)}x${compV(c)} unsupported")
-            compQ(c) = bytes(p + 10 + 3 * c) & 0xff
-            c += 1
-          }
-          progressive = marker == 0xc2
-          if (progressive) {
-            require(w.toLong * h * 3 <= Int.MaxValue - 16,
-              s"jpeg: bad dimensions ${w}x$h")
-            c = 0
-            while (c < nc) {
-              hMax = math.max(hMax, compH(c)); vMax = math.max(vMax, compV(c))
-              c += 1
-            }
-            mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-            mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-            blocksW = Array.tabulate(nc)(c => mcusX * compH(c))
-            blocksH = Array.tabulate(nc)(c => mcusY * compV(c))
-            // non-interleaved scans iterate the component's OWN ceil
-            // grid, which can be smaller than the MCU-padded grid
-            ceilBW = Array.tabulate(nc)(c =>
-              ((w * compH(c) + hMax - 1) / hMax + 7) / 8)
-            ceilBH = Array.tabulate(nc)(c =>
-              ((h * compV(c) + vMax - 1) / vMax + 7) / 8)
-            coefs = Array.tabulate(nc)(c =>
-              new Array[Int](blocksW(c) * blocksH(c) * 64))
-          }
-          sofSeen = true
-          p += len
-        case mk if (mk >= 0xc3 && mk <= 0xcf) && mk != 0xc4 &&
-            mk != 0xc8 && mk != 0xcc => // C4=DHT, C8=reserved, CC=DAC
-          throw new IllegalArgumentException(
-            f"jpeg: SOF 0x$mk%02x (non-baseline coding) not supported")
-        case 0xdb => // DQT (possibly several tables)
-          val len = u16(p)
-          var q = p + 2
-          while (q < p + len) {
-            val pq = (bytes(q) & 0xff) >> 4
-            val tq = bytes(q) & 0x0f
-            require(pq == 0, "jpeg: 16-bit quant tables not supported")
-            val t = new Array[Int](64)
-            var k = 0
-            while (k < 64) { t(ZigZag(k)) = bytes(q + 1 + k) & 0xff; k += 1 }
-            quant(tq) = t
-            q += 65
-          }
-          p += len
-        case 0xc4 => // DHT (possibly several tables)
-          val len = u16(p)
-          var q = p + 2
-          while (q < p + len) {
-            val cls = (bytes(q) & 0xff) >> 4
-            val id = bytes(q) & 0x0f
-            val bits = new Array[Int](17)
-            var tot = 0
-            var l = 1
-            while (l <= 16) { bits(l) = bytes(q + l) & 0xff; tot += bits(l); l += 1 }
-            val vals = java.util.Arrays.copyOfRange(bytes, q + 17, q + 17 + tot)
-            if (cls == 0) dcTabs(id) = new HuffTable(bits, vals)
-            else acTabs(id) = new HuffTable(bits, vals)
-            q += 17 + tot
-          }
-          p += len
-        case 0xdd => // DRI
-          restartInterval = u16(p + 2)
-          p += u16(p)
-        case 0xda => // SOS → entropy-coded data follows
-          require(sofSeen, "jpeg: SOS before SOF")
-          val len = u16(p)
-          val ns = bytes(p + 2) & 0xff
-          require(progressive || ns == compId.length,
-            "jpeg: partial scans not supported in a sequential frame")
-          val scanComps = new Array[Int](ns)
-          var c = 0
-          while (c < ns) {
-            val id = bytes(p + 3 + 2 * c) & 0xff
-            val ci = compId.indexOf(id)
-            require(ci >= 0, s"jpeg: scan references unknown component $id")
-            compDc(ci) = (bytes(p + 4 + 2 * c) & 0xff) >> 4
-            compAc(ci) = bytes(p + 4 + 2 * c) & 0x0f
-            scanComps(c) = ci
-            c += 1
-          }
-          if (!progressive)
-            return decodeScan(bytes, p + len, w, h, compId.length,
-              compH, compV, compQ, compDc, compAc, quant, dcTabs, acTabs,
-              restartInterval)
-          // progressive: one spectral/approximation scan into `coefs`,
-          // then keep walking markers (DHT/DRI/SOS repeat until EOI)
-          val ss = bytes(p + 3 + 2 * ns) & 0xff
-          val se = bytes(p + 4 + 2 * ns) & 0xff
-          val ahal = bytes(p + 5 + 2 * ns) & 0xff
-          scansSeen += 1
-          val end = decodeProgScan(bytes, p + len, scanComps,
-            ss, se, ahal >> 4, ahal & 0x0f, compH, compV,
-            mcusX, mcusY, blocksW, blocksH, ceilBW, ceilBH,
-            compDc, compAc, dcTabs, acTabs, coefs, restartInterval)
-          // skip optional 0xff fill bytes up to the next marker
-          var np = end
-          while (np + 1 < bytes.length && (bytes(np) & 0xff) == 0xff &&
-            (bytes(np + 1) & 0xff) == 0xff) np += 1
-          require(np + 1 < bytes.length && (bytes(np) & 0xff) == 0xff,
-            "jpeg: expected a marker after progressive scan data")
-          p = np
-        case _ => // APPn, COM, anything else with a length: skip
-          p += u16(p)
-      }
-    }
-    throw new IllegalArgumentException("jpeg: no SOS scan found")
-  }
-
-  private def decodeScan(bytes: Array[Byte], start: Int, w: Int, h: Int,
-      nc: Int, compH: Array[Int], compV: Array[Int], compQ: Array[Int],
-      compDc: Array[Int], compAc: Array[Int], quant: Array[Array[Int]],
-      dcTabs: Array[HuffTable], acTabs: Array[HuffTable],
-      restartInterval: Int): (Int, Int, Array[Byte]) = {
-    require(w.toLong * h * 3 <= Int.MaxValue - 16, s"jpeg: bad dimensions ${w}x$h")
-    var hMax = 1; var vMax = 1
-    var c = 0
-    while (c < nc) {
-      hMax = math.max(hMax, compH(c)); vMax = math.max(vMax, compV(c))
-      require(quant(compQ(c)) != null, "jpeg: scan before its quant table")
-      require(dcTabs(compDc(c)) != null && acTabs(compAc(c)) != null,
-        "jpeg: scan before its Huffman tables")
-      c += 1
-    }
-    val mcuW = 8 * hMax; val mcuH = 8 * vMax
-    val mcusX = (w + mcuW - 1) / mcuW; val mcusY = (h + mcuH - 1) / mcuH
-    // component planes at their own sampling resolution
-    val planeW = Array.tabulate(nc)(c => mcusX * 8 * compH(c))
-    val planeH = Array.tabulate(nc)(c => mcusY * 8 * compV(c))
-    val planes = Array.tabulate(nc)(c => new Array[Byte](planeW(c) * planeH(c)))
-    val br = new BitReader(bytes, start)
-    val dcPred = new Array[Int](nc)
-    val coef = new Array[Double](64)
-    var rstCount = 0
-    var mcusSinceRst = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && mcusSinceRst == restartInterval) {
-          br.expectRst(rstCount)
-          rstCount += 1; mcusSinceRst = 0
-          java.util.Arrays.fill(dcPred, 0)
-        }
-        c = 0
-        while (c < nc) {
-          val q = quant(compQ(c))
-          val dcT = dcTabs(compDc(c)); val acT = acTabs(compAc(c))
-          var byi = 0
-          while (byi < compV(c)) {
-            var bxi = 0
-            while (bxi < compH(c)) {
-              java.util.Arrays.fill(coef, 0.0)
-              val s = decodeHuff(br, dcT)
-              require(s <= 11, "jpeg: DC category out of range")
-              dcPred(c) += extend(br.bits(s), s)
-              coef(0) = dcPred(c).toDouble * q(0)
-              var k = 1
-              while (k < 64) {
-                val rs = decodeHuff(br, acT)
-                val run = rs >> 4; val sz = rs & 0x0f
-                if (sz == 0) {
-                  if (run == 15) k += 16 // ZRL
-                  else k = 64 // EOB
-                } else {
-                  k += run
-                  require(k < 64, "jpeg: AC index overrun")
-                  val nat = ZigZag(k)
-                  coef(nat) = extend(br.bits(sz), sz).toDouble * q(nat)
-                  k += 1
-                }
-              }
-              val px = idct(coef)
-              val x0 = (mx * compH(c) + bxi) * 8
-              val y0 = (my * compV(c) + byi) * 8
-              var i = 0
-              while (i < 64) {
-                val v = math.round(px(i) + 128.0).toInt
-                planes(c)((y0 + i / 8) * planeW(c) + x0 + i % 8) =
-                  math.max(0, math.min(255, v)).toByte
-                i += 1
-              }
-              bxi += 1
-            }
-            byi += 1
-          }
-          c += 1
-        }
-        mcusSinceRst += 1
-        mx += 1
-      }
-      my += 1
-    }
-    (w, h, planesToRgb(w, h, nc, compH, compV, hMax, vMax, planeW, planes))
-  }
-
-  /** YCbCr planes → interleaved RGB with replication upsampling of
-    * subsampled planes (shared by the sequential and progressive paths). */
-  private def planesToRgb(w: Int, h: Int, nc: Int,
-      compH: Array[Int], compV: Array[Int], hMax: Int, vMax: Int,
-      planeW: Array[Int], planes: Array[Array[Byte]]): Array[Byte] = {
-    val rgb = new Array[Byte](w * h * 3)
-    def planeAt(c: Int, x: Int, y: Int): Int =
-      planes(c)((y * compV(c) / vMax) * planeW(c) + x * compH(c) / hMax) & 0xff
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val o = 3 * (y * w + x)
-        if (nc == 1) {
-          val g = planeAt(0, x, y).toByte
-          rgb(o) = g; rgb(o + 1) = g; rgb(o + 2) = g
-        } else {
-          val yy = planeAt(0, x, y).toDouble
-          val cb = planeAt(1, x, y) - 128.0
-          val cr = planeAt(2, x, y) - 128.0
-          def clamp(v: Double): Byte =
-            math.max(0, math.min(255, math.round(v).toInt)).toByte
-          rgb(o) = clamp(yy + 1.402 * cr)
-          rgb(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-          rgb(o + 2) = clamp(yy + 1.772 * cb)
-        }
-        x += 1
-      }
-      y += 1
-    }
-    rgb
-  }
-
-  /** One progressive scan (T.81 Annex G): the spectral band [ss, se] of
-    * the named components at successive-approximation precision ah → al.
-    * DC scans (ss = 0) may interleave all components in MCU order; AC
-    * scans carry exactly one component in its own block-raster order over
-    * the component's ceil grid. Coefficients accumulate into `coefs`
-    * across scans (natural order). Returns the byte offset just past the
-    * scan's entropy-coded data. */
-  private def decodeProgScan(bytes: Array[Byte], start: Int,
-      scanComps: Array[Int], ss: Int, se: Int, ah: Int, al: Int,
-      compH: Array[Int], compV: Array[Int],
-      mcusX: Int, mcusY: Int, blocksW: Array[Int], blocksH: Array[Int],
-      ceilBW: Array[Int], ceilBH: Array[Int],
-      compDc: Array[Int], compAc: Array[Int],
-      dcTabs: Array[HuffTable], acTabs: Array[HuffTable],
-      coefs: Array[Array[Int]], restartInterval: Int): Int = {
-    require(ss >= 0 && se <= 63 && ss <= se, s"jpeg: bad spectral band $ss..$se")
-    require(al >= 0 && al <= 13 && (ah == 0 || ah == al + 1),
-      s"jpeg: bad successive approximation $ah -> $al")
-    if (ss == 0)
-      require(se == 0, "jpeg: DC scan must have Se = 0")
-    else
-      require(scanComps.length == 1,
-        "jpeg: progressive AC scan must be single-component")
-    val br = new BitReader(bytes, start)
-    val dcPred = new Array[Int](compH.length)
-    var eobrun = 0
-    var rstCount = 0
-    var unitsSinceRst = 0
-    def maybeRestart(): Unit =
-      if (restartInterval > 0 && unitsSinceRst == restartInterval) {
-        br.expectRst(rstCount)
-        rstCount += 1; unitsSinceRst = 0
-        java.util.Arrays.fill(dcPred, 0); eobrun = 0
-      }
-
-    def dcFirst(c: Int, blk: Int): Unit = {
-      val t = dcTabs(compDc(c))
-      require(t != null, "jpeg: DC scan before its Huffman table")
-      val s = decodeHuff(br, t)
-      require(s <= 11, "jpeg: DC category out of range")
-      dcPred(c) += extend(br.bits(s), s)
-      coefs(c)(blk * 64) = dcPred(c) << al
-    }
-    def dcRefine(c: Int, blk: Int): Unit =
-      if (br.bit() == 1) coefs(c)(blk * 64) |= (1 << al)
-
-    def acFirst(c: Int, blk: Int): Unit = {
-      if (eobrun > 0) { eobrun -= 1; return }
-      val co = coefs(c); val base = blk * 64
-      val t = acTabs(compAc(c))
-      require(t != null, "jpeg: AC scan before its Huffman table")
-      var k = ss
-      while (k <= se) {
-        val rs = decodeHuff(br, t)
-        val r = rs >> 4; val s = rs & 0x0f
-        if (s != 0) {
-          k += r
-          require(k <= se, "jpeg: AC index overrun")
-          co(base + ZigZag(k)) = extend(br.bits(s), s) << al
-          k += 1
-        } else if (r == 15) k += 16 // ZRL
-        else {
-          eobrun = (1 << r) - 1
-          if (r > 0) eobrun += br.bits(r)
-          k = 64 // EOB: rest of band is zero
-        }
-      }
-    }
-
-    /** AC successive-approximation refinement (T.81 G.1.2.3): each
-      * already-nonzero coefficient in the band consumes one correction
-      * bit; newly nonzero coefficients arrive as ±1·2^al. */
-    def acRefine(c: Int, blk: Int): Unit = {
-      val co = coefs(c); val base = blk * 64
-      val p1 = 1 << al; val m1 = -1 << al
-      def correct(z: Int): Unit =
-        if (br.bit() == 1 && (co(z) & p1) == 0)
-          co(z) += (if (co(z) >= 0) p1 else m1)
-      var k = ss
-      if (eobrun == 0) {
-        val t = acTabs(compAc(c))
-        require(t != null, "jpeg: AC scan before its Huffman table")
-        var atEob = false
-        while (!atEob && k <= se) {
-          val rs = decodeHuff(br, t)
-          var r = rs >> 4
-          val s = rs & 0x0f
-          var sVal = 0
-          if (s != 0) {
-            require(s == 1, "jpeg: AC refinement magnitude must be 1")
-            sVal = if (br.bit() == 1) p1 else m1
-          } else if (r != 15) { // EOB: band tail handled below, k stays
-            eobrun = 1 << r
-            if (r > 0) eobrun += br.bits(r)
-            atEob = true
-          }
-          if (!atEob) {
-            // advance over r zero-HISTORY coefficients (plus the target
-            // slot), appending correction bits to nonzeros passed over
-            var advancing = true
-            while (advancing) {
-              val z = base + ZigZag(k)
-              if (co(z) != 0) {
-                correct(z)
-                k += 1
-                advancing = k <= se
-              } else if (r > 0) {
-                r -= 1
-                k += 1
-                advancing = k <= se
-              } else advancing = false // k is the target zero slot
-            }
-            if (sVal != 0) {
-              require(k <= se, "jpeg: AC refinement index overrun")
-              co(base + ZigZag(k)) = sVal
-            }
-            k += 1
-          }
-        }
-      }
-      if (eobrun > 0) {
-        // inside an EOB run every remaining nonzero coefficient of the
-        // band still consumes one correction bit
-        while (k <= se) {
-          val z = base + ZigZag(k)
-          if (co(z) != 0) correct(z)
-          k += 1
-        }
-        eobrun -= 1
-      }
-    }
-
-    def unit(c: Int, blk: Int): Unit =
-      if (ss == 0) { if (ah == 0) dcFirst(c, blk) else dcRefine(c, blk) }
-      else { if (ah == 0) acFirst(c, blk) else acRefine(c, blk) }
-
-    if (ss == 0 && scanComps.length > 1) {
-      // interleaved DC scan: MCU order, restart interval counts MCUs
-      var my = 0
-      while (my < mcusY) {
-        var mx = 0
-        while (mx < mcusX) {
-          maybeRestart()
-          var i = 0
-          while (i < scanComps.length) {
-            val c = scanComps(i)
-            var byi = 0
-            while (byi < compV(c)) {
-              var bxi = 0
-              while (bxi < compH(c)) {
-                unit(c, (my * compV(c) + byi) * blocksW(c) +
-                  mx * compH(c) + bxi)
-                bxi += 1
-              }
-              byi += 1
-            }
-            i += 1
-          }
-          unitsSinceRst += 1
-          mx += 1
-        }
-        my += 1
-      }
-    } else {
-      // single-component scan: the component's own ceil block grid,
-      // restart interval counts blocks
-      val c = scanComps(0)
-      var by = 0
-      while (by < ceilBH(c)) {
-        var bx = 0
-        while (bx < ceilBW(c)) {
-          maybeRestart()
-          unit(c, by * blocksW(c) + bx)
-          unitsSinceRst += 1
-          bx += 1
-        }
-        by += 1
-      }
-    }
-    br.pos
-  }
-
-  /** Dequantize + IDCT the accumulated progressive coefficients and
-    * color-convert — the one-shot tail the sequential path runs per MCU. */
-  private def reconstructProgressive(w: Int, h: Int, nc: Int,
-      compH: Array[Int], compV: Array[Int], hMax: Int, vMax: Int,
-      blocksW: Array[Int], blocksH: Array[Int], compQ: Array[Int],
-      quant: Array[Array[Int]],
-      coefs: Array[Array[Int]]): (Int, Int, Array[Byte]) = {
-    val planeW = Array.tabulate(nc)(c => blocksW(c) * 8)
-    val planes = Array.tabulate(nc)(c =>
-      new Array[Byte](planeW(c) * blocksH(c) * 8))
-    val coef = new Array[Double](64)
-    var c = 0
-    while (c < nc) {
-      val q = quant(compQ(c))
-      require(q != null, s"jpeg: no quant table for component $c")
-      val co = coefs(c)
-      var by = 0
-      while (by < blocksH(c)) {
-        var bx = 0
-        while (bx < blocksW(c)) {
-          val base = (by * blocksW(c) + bx) * 64
-          var i = 0
-          while (i < 64) { coef(i) = co(base + i).toDouble * q(i); i += 1 }
-          val px = idct(coef)
-          val x0 = bx * 8; val y0 = by * 8
-          i = 0
-          while (i < 64) {
-            val v = math.round(px(i) + 128.0).toInt
-            planes(c)((y0 + i / 8) * planeW(c) + x0 + i % 8) =
-              math.max(0, math.min(255, v)).toByte
-            i += 1
-          }
-          bx += 1
-        }
-        by += 1
-      }
-      c += 1
-    }
-    (w, h, planesToRgb(w, h, nc, compH, compV, hMax, vMax, planeW, planes))
+    val img = Codecs.readImage(bytes, "jpeg")
+    (img.getWidth, img.getHeight, Codecs.rgbOf(img))
   }
 
   // -------------------------------------------------- EXIF / ICC triage

@@ -24,8 +24,8 @@ final case class Frame(media_id: Long, frame_idx: Int, content: Array[Byte])
   * processing, even partitioning by media id so one hot partition doesn't
   * serialize the decode — and so are the codecs for every major crawl
   * container: PPM and RIFF/WAVE through the REAL parsers in [[Codecs]],
-  * PNG (chunk-walking zlib decode), baseline [[Jpeg]] (DCT + Huffman),
-  * [[Gif]] (LZW, interlace, index-space exact resize), lossless WebP
+  * PNG, baseline and progressive [[Jpeg]] and [[Gif]] (index-space exact
+  * resize) through the JDK's ImageIO, lossless WebP
   * through the full [[Vp8l]] bitstream decoder, [[Flac]] (fixed/LPC
   * prediction + Rice residuals, CRC/MD5 verified), plus the
   * metadata-triage walkers [[Mp4]] (BMFF boxes), [[Mp3]] (frame
@@ -47,12 +47,12 @@ object Multimodal {
   /** THE DECODE BOUNDARY, stated as data so MultimodalSpec can pin it
     * and the stub can never read as accidental:
     *
-    *  - [[SampleDecodeFormats]] decode to REAL pixels/samples through
-    *    hand-written spec-complete codecs, and those samples feed the
-    *    features: PPM, PNG (zlib+filters), baseline+progressive JPEG,
-    *    GIF (LZW), RIFF/WAVE PCM, FLAC (fixed/LPC prediction + Rice
-    *    residuals, CRC- and MD5-verified), and lossless WebP (the full
-    *    VP8L bitstream).
+    *  - [[SampleDecodeFormats]] decode to REAL pixels/samples, and those
+    *    samples feed the features: PNG, baseline+progressive JPEG and
+    *    GIF through the JDK's ImageIO; PPM, RIFF/WAVE PCM, FLAC
+    *    (fixed/LPC prediction + Rice residuals, CRC- and MD5-verified)
+    *    and lossless WebP (the full VP8L bitstream) through hand-written
+    *    codecs.
     *  - [[TriageOnlyFormats]] get structural metadata parsing with loud
     *    validation (box/frame/chunk walkers — dims, durations, sample
     *    tables, content fingerprints through stsz/stco), but their
@@ -90,7 +90,7 @@ object Multimodal {
     * (what a real lake trusts over user-supplied `meta.format`), so PPM
     * (`P6` + header char), PNG (full 8-byte signature), JPEG (SOI +
     * marker), GIF (`GIF8xa`) and WAV (`RIFF....WAVE`) route to the REAL
-    * codecs; WebP (`RIFF....WEBP`) routes through [[Webp.parseMeta]]
+    * codecs — ImageIO decodes the PNG, JPEG and GIF pixels; WebP (`RIFF....WEBP`) routes through [[Webp.parseMeta]]
     * container triage before its (documented) stub features — a blob
     * that matches a full magic but fails to parse is a loud task error,
     * never a silent stub fallback — and only genuinely undecodable
@@ -228,10 +228,12 @@ object Multimodal {
   }
 
   /** Resize: new blob + updated meta, format-sniffed like [[decode]].
-    * PPM and PNG blobs get a REAL nearest-neighbor resample re-encoded in
-    * their own container at the new dimensions; opaque formats keep the
-    * deterministic truncate/pad stand-in. Meta tracks the new geometry
-    * either way. */
+    * PPM, PNG, JPEG and lossless-WebP blobs get a REAL nearest-neighbor
+    * resample re-encoded in their own container at the new dimensions
+    * (ImageIO codes the PNG and JPEG ones); GIF resamples in index space
+    * and re-encodes through ImageIO against its own palette; opaque
+    * formats keep the deterministic truncate/pad stand-in. Meta tracks
+    * the new geometry either way. */
   def resize(media: Dataset[MediaFile], w: Int, h: Int): Dataset[MediaFile] = {
     import media.sparkSession.implicits._
     media.map { m =>

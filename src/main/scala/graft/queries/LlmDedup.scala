@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.{vecDot, vecNorm, vecSig}
+import graft.functions.GraftFunctions.{textDedupKey, vecDot, vecNorm, vecSig}
 
 /** Deduplication family: exact/normalized/canonical dedup, MinHash-LSH
   * banding + verify, SimHash, containment/fuzzy pairs, connected
@@ -16,7 +16,7 @@ trait LlmDedupOps extends LlmCore {
     * One shuffle on the 128-bit hash — uniform keys, no skew at any scale. */
   def dedupExact(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .groupBy(md5(lower(trim(col("text")))).as("text_hash"))
+      .groupBy(textDedupKey(col("text")).as("text_hash"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .select("keep_id", "n_copies", "text_hash")
       .orderBy("keep_id")
@@ -34,7 +34,7 @@ trait LlmDedupOps extends LlmCore {
   def softDedupWeights(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("n_chars"),
-        md5(lower(trim(col("text")))).as("h"))
+        textDedupKey(col("text")).as("h"))
     val grp = d.groupBy("h").agg(count(lit(1)).as("n_copies"))
     d.join(grp, "h")
       .groupBy("source")
@@ -658,7 +658,7 @@ trait LlmDedupOps extends LlmCore {
     * one documents table so the oracle sees identical data. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val hashed = Tables.documents(s, dir)
-      .withColumn("text_hash", md5(lower(trim(col("text")))))
+      .withColumn("text_hash", textDedupKey(col("text")))
     val base = hashed.filter(col("doc_id") < 250).select("text_hash").distinct()
     hashed.filter(col("doc_id") >= 250)
       .join(base, Seq("text_hash"), "left_anti")

@@ -383,13 +383,12 @@ object MultimodalPack extends QueryPack {
   /** PNG codec ROUNDTRIP proof, cross-engine: the [[ppmCodec]] contract
     * run through the REAL PNG container (signature + IHDR + zlib IDAT +
     * CRC-checked chunks) — stage 16x16 RGB images with pixel bytes cycled
-    * from the doc text, encode as 8-bit truecolor PNG with the scanline
-    * filter CYCLING None/Sub/Up/Average/Paeth (so every unfilter path
-    * runs on every image), decode through the chunk walker + inflate +
-    * unfilter, resize, and emit integer grid-luminance masses from the
+    * from the doc text, encode as 8-bit truecolor PNG and decode it
+    * again (ImageIO codes both directions, after a CRC walk over the
+    * chunks), resize, and emit integer grid-luminance masses from the
     * DECODED pixels. The oracle computes expected sums from text and
     * never sees a PNG byte: hash parity proves decode(encode(x)) == x
-    * through deflate round-trip, filter reversal included. Also routes
+    * through the deflate and scanline-filter round trip. Also routes
     * each blob through [[graft.multimodal.Multimodal.decode]]'s magic
     * dispatch (the feature path a real lake runs) and checks the PNG
     * branch fired by re-deriving one grid cell from it. */
@@ -402,7 +401,7 @@ object MultimodalPack extends QueryPack {
       .flatMap { case (id, text) =>
         val txt = payloadBytes(text) // ASCII; "." sentinel if empty
         val rgb = Array.tabulate[Byte](W * H * 3)(k => txt(k % txt.length))
-        val blob = Codecs.encodePng(W, H, rgb) // real encode (filters cycle)
+        val blob = Codecs.encodePng(W, H, rgb) // real encode...
         val (w, h, px) = Codecs.decodePng(blob) // ...and real decode
         val full = Codecs.gridLuminance(w, h, px, 4, 4)
         val small = Codecs.resizeNearest(w, h, px, 8, 8)
@@ -554,8 +553,8 @@ object MultimodalPack extends QueryPack {
     * through the REAL GIF container — GIF is palette-LOSSLESS, so unlike
     * JPEG the oracle checks exact pixel mass. Stage 16x16 frames whose
     * palette INDICES cycle from the doc text over a grayscale identity
-    * palette, encode through the real LZW writer, decode through the
-    * sub-block walk + variable-width LZW reader, nearest-neighbor resize
+    * palette, encode and decode through ImageIO's LZW writer and reader,
+    * nearest-neighbor resize
     * in INDEX space, and emit integer grid-luminance masses from the
     * DECODED pixels (gray pixel b contributes 3·b). The DuckDB oracle
     * computes expected sums straight from `documents.text` and never
@@ -734,12 +733,11 @@ object MultimodalPack extends QueryPack {
   }
 
   /** JPEG codec contract, cross-engine: stage 16x16 RGB images with pixel
-    * bytes cycled from the doc text, push them through the REAL baseline
-    * JFIF encoder AND decoder ([[graft.multimodal.Jpeg]]), and emit
+    * bytes cycled from the doc text, push them through the baseline 4:4:4
+    * JFIF encoder AND decoder ([[graft.multimodal.Jpeg]], ImageIO), and emit
     * CLAIMS the DuckDB oracle replays as constants — JPEG is lossy, so
     * the roundtrip contract is exact metadata plus bounded error, not
-    * byte identity (JpegSpec carries the PSNR calibration and the
-    * ImageIO cross-validation):
+    * byte identity (JpegSpec carries the PSNR calibration):
     *   - width/height: decoded dimensions, byte-exact (16, 16);
     *   - lum_ok: the decoded image's total luminance mass within 2/255
     *     per sample of the source's (the DC coefficients survive
@@ -791,10 +789,10 @@ object MultimodalPack extends QueryPack {
   }
 
   /** Progressive-JPEG (SOF2) contract, cross-engine: the staged image is
-    * encoded TWICE — baseline SOF0 and progressive SOF2 (spectral
-    * selection, same quantized coefficients) — and both streams decoded
-    * by the real multi-scan decoder ([[graft.multimodal.Jpeg]], T.81
-    * Annex G). Because the coefficients are identical, the two decodes
+    * encoded TWICE — baseline SOF0 and progressive SOF2 (same quantized
+    * coefficients) — and both streams decoded through
+    * [[graft.multimodal.Jpeg]] (ImageIO). Because the coefficients are
+    * identical, the two decodes
     * must agree pixel-for-pixel (`prog_exact`), the SOF2 marker must
     * actually be present (`sof2_ok` — or the test silently degrades to
     * the sequential path), and the progressive stream must route through

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GraftFunctions.textDedupKey
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -972,7 +973,7 @@ object StreamOps {
   def dedupByContent(docs: DataFrame, textCol: String,
                      eventTimeCol: Option[String] = None,
                      watermark: String = "1 hour"): DataFrame = {
-    val hashed = docs.withColumn("text_hash", md5(lower(trim(col(textCol)))))
+    val hashed = docs.withColumn("text_hash", textDedupKey(col(textCol)))
     eventTimeCol match {
       case Some(tc) => hashed.withWatermark(tc, watermark)
         .dropDuplicates("text_hash", tc)
@@ -1014,7 +1015,7 @@ object StreamOps {
   def dedupWithinWatermark(docs: DataFrame, textCol: String,
                            eventTimeCol: String,
                            watermark: String = "1 hour"): DataFrame =
-    docs.withColumn("text_hash", md5(lower(trim(col(textCol)))))
+    docs.withColumn("text_hash", textDedupKey(col(textCol)))
       .withWatermark(eventTimeCol, watermark)
       .dropDuplicatesWithinWatermark("text_hash")
 
@@ -1031,7 +1032,7 @@ object StreamOps {
   def softDedupWeights(docs: DataFrame, textCol: String)
       : Dataset[SoftDedupWeight] = {
     import docs.sparkSession.implicits._
-    docs.select(md5(lower(trim(col(textCol)))).as("text_hash"))
+    docs.select(textDedupKey(col(textCol)).as("text_hash"))
       .as[String]
       .groupByKey(identity)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {

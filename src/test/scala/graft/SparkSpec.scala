@@ -12,17 +12,7 @@ trait SparkSpec extends AnyFlatSpec with Matchers {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The production session configuration (Kryo, broadcast threshold,
+    * timestamp inference, graft functions) on 4 local cores. */
+  lazy val session: SparkSession = GraftSession.local(4, "graft-test")
 }
