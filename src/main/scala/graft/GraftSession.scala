@@ -19,8 +19,15 @@ object GraftSession {
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors.min(8),
             appName: String = "graft"): SparkSession =
-    configure(SparkSession.builder().master(s"local[$cores]").appName(appName),
+    configure(SparkSession.builder().master(s"local[$cores]").appName(appName)
+      // the only executor lives in the driver's JVM: expiring it after a
+      // long stall (default 120 s without a heartbeat) cannot help and
+      // stops the context for every later job
+      .config("spark.storage.blockManagerHeartbeatTimeoutMs", LocalHeartbeatTimeout),
       shufflePartitions = cores)
+
+  /** Executor heartbeat timeout of [[local]] sessions. */
+  val LocalHeartbeatTimeout = "7d"
 
   /** Cluster entry: no master set — spark-submit / the cluster manager
     * decides. Shuffle partitions stay at Spark's default (AQE coalesces);

@@ -28,7 +28,12 @@ import org.apache.spark.sql.functions._
   *  - per-page models are independent → pages parallelize trivially on a
   *    cluster (driver-side loop, executor-side fits);
   *  - caching: the vectorized train set is persisted for the (possibly
-  *    iterative) fit, unpersisted right after (PipelineSteps.scala:138-158).
+  *    iterative) fit, unpersisted right after (PipelineSteps.scala:138-158);
+  *  - metrics: per dataset, one cached projection feeds one ranked pass
+  *    (AUROC + best F2) and one confusion count collected to the driver
+  *    (O(labels²) rows) that gives the weighted metrics and, for the test
+  *    split, the confusion text; the projection and the sort are
+  *    released before the next dataset.
   */
 object PipelineRunner extends Logging {
 
@@ -142,18 +147,15 @@ object PipelineRunner extends Logging {
     }
 
     // 7. metrics (ref: PipelineSteps.scala:247-272)
-    val metrics = evaluate(conf, pageResults)
+    val (metrics, counts) = evaluate(conf, pageResults)
     if (savepointing) {
       sp.saveMetrics(metrics)
       // per-page confusion-matrix text, from the test split when present
-      // (ref: StandardMetricsEvaluator.scala:222-229)
+      // (ref: StandardMetricsEvaluator.scala:222-229) — the counts the
+      // metrics already collected, so no job runs here
       pageResults.foreach { pr =>
-        val df = pr.scored.getOrElse("test", pr.scored.head._2)
-        val predCol =
-          if (df.columns.contains("modelPrediction")) "modelPrediction"
-          else "prediction"
-        sp.saveConfusionText(
-          StandardMetrics.confusionText(df, "label", predCol), pr.page)
+        val ds = if (pr.scored.contains("test")) "test" else pr.scored.head._1
+        sp.saveConfusionText(counts((pr.page, ds)).text, pr.page)
       }
     }
     RunResult(metrics, pageResults, sp, input)
@@ -198,6 +200,11 @@ object PipelineRunner extends Logging {
       if (df.columns.contains("modelProbability")) "modelProbability"
       else if (df.columns.contains("probability")) "probability"
       else "rawPrediction")), 2)
+
+  /** Predicted-class column, by the same base-model rule as [[scoreCol]]:
+    * uplift frames carry the base model's prediction as `modelPrediction`. */
+  private def predCol(df: DataFrame): String =
+    if (df.columns.contains("modelPrediction")) "modelPrediction" else "prediction"
 
   /** Publish the combined serving pipeline of every page to the project's
     * savepoint tree (`publish/page<k>/pipeline`) — the artifact
@@ -246,47 +253,55 @@ object PipelineRunner extends Logging {
     out
   }
 
-  private def evaluate(conf: GraftConf, pages: Seq[PageResult]): Map[String, Double] = {
+  /** Every page's and dataset's metrics, plus the confusion counts they
+    * were computed from, keyed by (page, dataset). */
+  private def evaluate(conf: GraftConf, pages: Seq[PageResult])
+      : (Map[String, Double], Map[(Int, String), StandardMetrics.ConfusionCounts]) = {
     val m = Map.newBuilder[String, Double]
-    pages.foreach { pr =>
-      pr.scored.foreach { case (name, df) =>
-        val suffix = if (pages.length > 1) s"_page${pr.page}" else ""
-        evaluateOne(conf, name, suffix, df, m)
-      }
+    val counts = for {
+      pr <- pages
+      (name, df) <- pr.scored
+    } yield {
+      val suffix = if (pages.length > 1) s"_page${pr.page}" else ""
+      (pr.page, name) -> evaluateOne(conf, name, suffix, df, m)
     }
-    m.result()
+    (m.result(), counts.toMap)
   }
 
+  /** One dataset's metrics. A binary run caches one projection (label,
+    * prediction, label as int, score) and reads it twice: one ranked pass
+    * for AUROC and the best F2 row ([[StandardMetrics.binarySummary]]) and
+    * one collected confusion count for the weighted precision/recall the
+    * reference also reports for binary runs (StandardMetricsEvaluator
+    * computes both). A multiclass run needs only the collected count, so
+    * nothing is cached. Driver state is O(labels²). Returns the counts. */
   private def evaluateOne(conf: GraftConf, name: String, suffix: String,
                           df: DataFrame,
-                          m: scala.collection.mutable.Builder[(String, Double), Map[String, Double]]): Unit = {
-        if (conf.training.buildType == "binary") {
-          val scored = df.select(col("label").cast("int").as("y"),
-            scoreCol(df).as("score")).cache()
-          val a = StandardMetrics.auroc(scored, "y", "score").head().getDouble(0)
-          m += s"auroc_$name$suffix" -> a
-          // best F2 threshold feeds the hotlead rule
-          // (ref: WebCustomMetricsEvaluator.scala:38-65)
-          val best = StandardMetrics.bestThreshold(scored, "y", "score", 2.0).head()
-          m += s"f2_$name$suffix" -> best.getAs[Double]("fbeta")
-          m += s"f2_threshold_$name$suffix" -> best.getAs[Double]("thresh")
-          scored.unpersist()
-          // the reference also reports multiclass-style precision/recall
-          // for binary runs (StandardMetricsEvaluator computes both);
-          // uplift frames carry the base model's prediction as
-          // modelPrediction — same base-model rule as scoreCol
-          val predCol =
-            if (df.columns.contains("modelPrediction")) "modelPrediction"
-            else "prediction"
-          val row = StandardMetrics.weightedSummary(df, "label", predCol).head()
-          m += s"weightedPrecision_$name$suffix" -> row.getDouble(1)
-          m += s"weightedRecall_$name$suffix" -> row.getDouble(2)
-        } else {
-          val row = StandardMetrics.weightedSummary(df, "label", "prediction").head()
-          m += s"accuracy_$name$suffix" -> row.getDouble(0)
-          m += s"weightedPrecision_$name$suffix" -> row.getDouble(1)
-          m += s"weightedRecall_$name$suffix" -> row.getDouble(2)
-          m += s"weightedF1_$name$suffix" -> row.getDouble(3)
-        }
-  }
+                          m: scala.collection.mutable.Builder[(String, Double), Map[String, Double]])
+      : StandardMetrics.ConfusionCounts =
+    if (conf.training.buildType == "binary") {
+      val proj = df.select(col("label"), col(predCol(df)).as("pred"),
+        col("label").cast("int").as("y"), scoreCol(df).as("score")).cache()
+      try {
+        // best F2 threshold feeds the hotlead rule
+        // (ref: WebCustomMetricsEvaluator.scala:38-65)
+        val s = StandardMetrics.binarySummary(proj, "y", "score", 2.0)
+        val counts = StandardMetrics.confusionCounts(proj, "label", "pred")
+        val w = counts.weighted
+        m += s"auroc_$name$suffix" -> s.auroc
+        m += s"f2_$name$suffix" -> s.fbeta
+        m += s"f2_threshold_$name$suffix" -> s.thresh
+        m += s"weightedPrecision_$name$suffix" -> w.getDouble(1)
+        m += s"weightedRecall_$name$suffix" -> w.getDouble(2)
+        counts
+      } finally proj.unpersist()
+    } else {
+      val counts = StandardMetrics.confusionCounts(df, "label", predCol(df))
+      val w = counts.weighted
+      m += s"accuracy_$name$suffix" -> w.getDouble(0)
+      m += s"weightedPrecision_$name$suffix" -> w.getDouble(1)
+      m += s"weightedRecall_$name$suffix" -> w.getDouble(2)
+      m += s"weightedF1_$name$suffix" -> w.getDouble(3)
+      counts
+    }
 }

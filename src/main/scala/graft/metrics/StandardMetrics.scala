@@ -1,22 +1,37 @@
 package graft.metrics
 
-import graft.plans.GlobalRank
-import org.apache.spark.sql.DataFrame
+import graft.plans.{Eager, GlobalRank}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-/** Standard classification metrics as pure DataFrame aggregations
-  * (ref: core/metrics/StandardMetricsEvaluator.scala:66-309, which uses
-  * mllib's RDD-based BinaryClassificationMetrics / MulticlassMetrics).
+import scala.jdk.CollectionConverters._
+
+/** Standard classification metrics (ref:
+  * core/metrics/StandardMetricsEvaluator.scala:66-309, which builds one
+  * mllib BinaryClassificationMetrics and one MulticlassMetrics per
+  * dataset). One mechanism per metric family:
   *
-  * Re-expressed Spark-first: every metric is a declarative plan over hash
-  * aggregates — partial aggregation, codegen, no RDD round-trips, no
-  * `.collect()`. Rank statistics (AUROC, F-measure-by-threshold) first
-  * group by the SCORE VALUE, so the cumulative pass runs over distinct
-  * scores — cardinality ≪ rows (bounded by rounding, e.g. probabilities
-  * have ≤ ~1e7 distinct doubles in practice; bucket scores first if not) —
-  * never over the full fact table; and even that pass is partition-parallel
-  * ([[graft.plans.GlobalRank.withRunningSums]] range-partition prefix sums,
-  * not an unpartitioned `Window.orderBy` that serializes into one task).
+  *  - Rank statistics (AUROC, F-measure-by-threshold, the best F_β row)
+  *    read ONE ranked pass. The frame is grouped by the SCORE VALUE, so
+  *    the pass runs over distinct scores — cardinality ≪ rows (bounded by
+  *    rounding, e.g. probabilities have ≤ ~1e7 distinct doubles in
+  *    practice; bucket scores first if not) — never over the full fact
+  *    table. Those are range-sorted ascending with running sums of the
+  *    count `c` and the positives `pos`
+  *    ([[graft.plans.GlobalRank.withRunningSumsPersisted]]: partition-
+  *    parallel prefix sums, not an unpartitioned `Window.orderBy` that
+  *    serializes into one task). A threshold's descending counts are
+  *    total − ascending + own, exact because every count is an
+  *    integer-valued double. Every call releases the sort it made.
+  *  - Label statistics (accuracy, weighted precision/recall/F1, the
+  *    confusion text) come from the (label, prediction, n) counts
+  *    collected ONCE to the driver: O(labels²) rows, the state mllib's
+  *    MulticlassMetrics keeps ([[ConfusionCounts]]). [[perLabel]] and
+  *    [[weightedSummary]] return them as local frames.
+  *
+  * A pipeline run's per-dataset evaluation is [[binarySummary]] plus
+  * [[confusionCounts]]: one ranked pass and one collected count.
   */
 object StandardMetrics {
 
@@ -24,55 +39,87 @@ object StandardMetrics {
   def confusion(df: DataFrame, labelCol: String, predCol: String): DataFrame =
     df.groupBy(col(labelCol), col(predCol)).agg(count(lit(1)).as("n"))
 
-  /** Per-label precision/recall/F1 + support (one row per actual label).
-    * Predicted-only classes contribute to false positives via the predicted
-    * totals but don't get their own row — matching MulticlassMetrics. */
+  /** Per-label precision/recall/F1 + support (one row per actual label, in
+    * label order): [[ConfusionCounts.byLabel]] as a local frame, `class`
+    * typed like `labelCol`. Predicted-only classes contribute to false
+    * positives via the predicted totals but don't get their own row —
+    * matching MulticlassMetrics. */
   def perLabel(df: DataFrame, labelCol: String, predCol: String): DataFrame = {
-    val cnt = confusion(df, labelCol, predCol).cache()
-    val actual = cnt.groupBy(col(labelCol).as("class")).agg(sum("n").as("support"))
-    val predicted = cnt.groupBy(col(predCol).as("class")).agg(sum("n").as("predTotal"))
-    val tp = cnt.filter(col(labelCol) === col(predCol))
-      .select(col(labelCol).as("class"), col("n").as("tp"))
-    val joined = actual
-      .join(tp, Seq("class"), "left")
-      .join(predicted, Seq("class"), "left")
-      .na.fill(0L, Seq("tp", "predTotal"))
-    val p = col("tp") / col("predTotal")
-    val r = col("tp") / col("support")
-    joined.select(
-      col("class"), col("support"), col("tp"), col("predTotal"),
-      coalesce(when(col("predTotal") > 0, p), lit(0.0)).as("precision"),
-      (col("tp") / col("support")).as("recall"),
-      coalesce(when(col("tp") > 0, lit(2.0) * p * r / (p + r)), lit(0.0)).as("f1"))
+    val schema = StructType(
+      StructField("class", df.select(col(labelCol)).schema.head.dataType) +:
+        (Seq("support", "tp", "predTotal").map(StructField(_, LongType)) ++
+          Seq("precision", "recall", "f1").map(StructField(_, DoubleType))))
+    val rows = confusionCounts(df, labelCol, predCol).byLabel.map { s =>
+      Row(s.label, s.support, s.tp, s.predTotal, s.precision, s.recall, s.f1)
+    }
+    df.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
-  /** The reference's confusion-matrix text block: a tab-separated
-    * Intent/TP/FP/Precision/Recall table, one line per actual label
-    * (ref: StandardMetricsEvaluator.scala:210-229, which builds exactly
-    * this header + rows and writes them via a 1-partition text write; its
-    * `.toInt` truncation of precision/recall discards the value, so they
-    * are emitted at 4 dp here). Driver state is O(labels). */
-  def confusionText(df: DataFrame, labelCol: String, predCol: String): Seq[String] = {
-    val rows = perLabel(df, labelCol, predCol)
-      .withColumn("fp", col("predTotal") - col("tp"))
-      .orderBy("class").collect()
-    "Intent\t\tTrue Positive\t\tFalse Positive\t\tPrecision\t\tRecall" +:
-      rows.toSeq.map { r =>
-        val p = r.getAs[Double]("precision")
-        val rc = r.getAs[Double]("recall")
-        f"${r.get(0)}\t\t${r.getAs[Long]("tp")}\t\t${r.getAs[Long]("fp")}\t\t$p%.4f\t\t$rc%.4f"
+  /** One actual label's row of [[perLabel]]. */
+  final case class LabelStats(label: Any, support: Long, tp: Long, predTotal: Long) {
+    val precision: Double = if (predTotal > 0) tp.toDouble / predTotal else 0.0
+    val recall: Double = tp.toDouble / support
+    val f1: Double =
+      if (tp > 0) 2.0 * precision * recall / (precision + recall) else 0.0
+  }
+
+  /** A frame's (label, prediction, n) counts, collected once and ordered
+    * by (label, prediction); every label statistic is derived from them
+    * on the driver. Label and prediction share one type. */
+  final case class ConfusionCounts(rows: Seq[(Any, Any, Long)]) {
+
+    /** Support, true positives and predicted total of every actual label,
+      * in label order; a predicted-only class has no row. */
+    lazy val byLabel: Seq[LabelStats] = {
+      val support = rows.groupMapReduce(_._1)(_._3)(_ + _)
+      val predTotal = rows.groupMapReduce(_._2)(_._3)(_ + _)
+      val tp = rows.collect { case (l, p, n) if l == p => l -> n }.toMap
+      rows.map(_._1).distinct.map { c =>
+        LabelStats(c, support(c), tp.getOrElse(c, 0L), predTotal.getOrElse(c, 0L))
       }
+    }
+
+    /** [[weightedSummary]]'s row: accuracy and the support-weighted
+      * precision, recall and F1. */
+    lazy val weighted: Row = {
+      val support = byLabel.map(_.support).sum.toDouble
+      def weightedBy(f: LabelStats => Double) =
+        byLabel.map(s => f(s) * s.support).foldLeft(0.0)(_ + _) / support
+      Row(byLabel.map(_.tp).sum / support, weightedBy(_.precision),
+        weightedBy(_.recall), weightedBy(_.f1))
+    }
+
+    /** The reference's confusion-matrix text block: a tab-separated
+      * Intent/TP/FP/Precision/Recall table, one line per actual label
+      * (ref: StandardMetricsEvaluator.scala:210-229, which builds exactly
+      * this header + rows and writes them via a 1-partition text write;
+      * its `.toInt` truncation of precision/recall discards the value, so
+      * they are emitted at 4 dp here). */
+    def text: Seq[String] =
+      "Intent\t\tTrue Positive\t\tFalse Positive\t\tPrecision\t\tRecall" +:
+        byLabel.map { s =>
+          f"${s.label}\t\t${s.tp}\t\t${s.predTotal - s.tp}\t\t${s.precision}%.4f\t\t${s.recall}%.4f"
+        }
   }
 
-  /** Single-row summary: accuracy + support-weighted precision/recall/F1. */
-  def weightedSummary(df: DataFrame, labelCol: String, predCol: String): DataFrame = {
-    val pl = perLabel(df, labelCol, predCol)
-    pl.agg(
-      (sum("tp") / sum("support")).as("accuracy"),
-      (sum(col("precision") * col("support")) / sum("support")).as("weightedPrecision"),
-      (sum(col("recall") * col("support")) / sum("support")).as("weightedRecall"),
-      (sum(col("f1") * col("support")) / sum("support")).as("weightedF1"))
-  }
+  /** The confusion counts of `df`, collected in one action. */
+  def confusionCounts(df: DataFrame, labelCol: String, predCol: String): ConfusionCounts =
+    ConfusionCounts(confusion(df, labelCol, predCol).orderBy(labelCol, predCol)
+      .collect().toSeq.map(r => (r.get(0), r.get(1), r.getLong(2))))
+
+  /** [[ConfusionCounts.text]] of `df`. */
+  def confusionText(df: DataFrame, labelCol: String, predCol: String): Seq[String] =
+    confusionCounts(df, labelCol, predCol).text
+
+  private val weightedSchema = StructType(
+    Seq("accuracy", "weightedPrecision", "weightedRecall", "weightedF1")
+      .map(StructField(_, DoubleType)))
+
+  /** Single-row summary: accuracy + support-weighted precision/recall/F1
+    * ([[ConfusionCounts.weighted]], as a local frame). */
+  def weightedSummary(df: DataFrame, labelCol: String, predCol: String): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.List.of(confusionCounts(df, labelCol, predCol).weighted), weightedSchema)
 
   /** Per-distinct-score counts with positives — shared base for the rank
     * statistics. `scoreCol` ascending. */
@@ -80,10 +127,93 @@ object StandardMetrics {
     df.groupBy(col(scoreCol).as("s"))
       .agg(count(lit(1)).as("c"), sum(col(labelCol).cast("double")).as("pos"))
 
+  /** The ranked pass: distinct scores ascending with inclusive running sums
+    * `cumC`/`cumPos`, the persisted sort to release once consumed, and the
+    * grand totals `n` (rows) and `npos` (positives). */
+  private final case class Ranked(frame: DataFrame, sorted: DataFrame, n: Double, npos: Double)
+
+  private def ranked(df: DataFrame, labelCol: String, scoreCol: String): Ranked = {
+    val (frame, sorted, tot) = GlobalRank.withRunningSumsPersisted(
+      byScore(df, labelCol, scoreCol), Seq(col("s")), Seq("c" -> "cumC", "pos" -> "cumPos"))
+    Ranked(frame, sorted, tot("c"), tot("pos"))
+  }
+
+  /** [[auroc]] as an aggregate over the ranked frame. */
+  private def aurocCol: Column = {
+    val avgrank = col("cumC") - col("c") + (col("c") + 1) / 2.0
+    val (np, n) = (sum("pos"), sum("c"))
+    ((sum(col("pos") * avgrank) - np * (np + 1) / 2.0) / (np * (n - np))).as("auroc")
+  }
+
+  /** The ranked frame plus precision / recall / F_β at every distinct
+    * score threshold (predict positive when score ≥ t): tp and cnt are the
+    * descending inclusive counts, total − ascending + own. */
+  private def withFMeasure(r: Ranked, beta: Double): DataFrame = {
+    val b2 = beta * beta
+    val tp = lit(r.npos) - col("cumPos") + col("pos")
+    val cnt = lit(r.n) - col("cumC") + col("c")
+    r.frame
+      .withColumn("thresh", col("s"))
+      .withColumn("precision", tp / cnt)
+      .withColumn("recall", tp / lit(r.npos))
+      .withColumn("fbeta",
+        when(col("precision") + col("recall") > 0,
+          (lit(1 + b2) * col("precision") * col("recall")) /
+            (lit(b2) * col("precision") + col("recall"))).otherwise(lit(0.0)))
+  }
+
+  private val curveCols = Seq("thresh", "precision", "recall", "fbeta")
+
+  /** The best-F_β row as a struct of [[curveCols]]: highest F_β, the lower
+    * threshold on a tie. */
+  private def bestCol: Column =
+    max_by(struct(curveCols.map(col): _*), struct(col("fbeta"), -col("thresh"))).as("best")
+
   /** AUROC via the rank-sum (Mann-Whitney U) identity with average ranks
     * for ties: AUROC = (Σ ranks₊ − n₊(n₊+1)/2) / (n₊ n₋). Exact — identical
-    * to the trapezoidal ROC integral mllib computes. One shuffle (groupBy
-    * score) + one ordered window over DISTINCT scores only. */
+    * to the trapezoidal ROC integral mllib computes. One aggregate over the
+    * ranked pass; the one-row result is collected and the sort released. */
+  def auroc(df: DataFrame, labelCol: String, scoreCol: String): DataFrame = {
+    val r = ranked(df, labelCol, scoreCol)
+    Eager.collected(r.frame.agg(aurocCol))(r.sorted.unpersist())
+  }
+
+  /** Precision / recall / F_β at every distinct score threshold (predict
+    * positive when score ≥ t). Ref: fMeasureByThreshold with β=2 feeding the
+    * best-threshold search (WebCustomMetricsEvaluator.scala:38-65). The
+    * curve is checkpointed and the sort released before it returns. */
+  def fMeasureByThreshold(df: DataFrame, labelCol: String, scoreCol: String,
+                          beta: Double): DataFrame = {
+    val r = ranked(df, labelCol, scoreCol)
+    Eager.checkpoint(withFMeasure(r, beta).select(curveCols.map(col): _*))(r.sorted.unpersist())
+  }
+
+  /** The best-F_β threshold row (deterministic tie-break: the lower
+    * threshold wins). */
+  def bestThreshold(df: DataFrame, labelCol: String, scoreCol: String,
+                    beta: Double): DataFrame = {
+    val r = ranked(df, labelCol, scoreCol)
+    Eager.collected(withFMeasure(r, beta).agg(bestCol)
+      .where(col("best").isNotNull).select("best.*"))(r.sorted.unpersist())
+  }
+
+  /** AUROC and the best-F_β row of a binary scorer. */
+  final case class BinarySummary(auroc: Double, thresh: Double, precision: Double,
+                                 recall: Double, fbeta: Double)
+
+  /** [[auroc]] and [[bestThreshold]] from ONE ranked pass and one
+    * aggregate over it. */
+  def binarySummary(df: DataFrame, labelCol: String, scoreCol: String,
+                    beta: Double): BinarySummary = {
+    val r = ranked(df, labelCol, scoreCol)
+    val row = try withFMeasure(r, beta).agg(aurocCol, bestCol).head()
+      finally r.sorted.unpersist()
+    val best = row.getStruct(1)
+    BinarySummary(row.getDouble(0), best.getAs[Number]("thresh").doubleValue(),
+      best.getAs[Double]("precision"), best.getAs[Double]("recall"),
+      best.getAs[Double]("fbeta"))
+  }
+
   /** Reliability-diagram data (model calibration): scores normalized to
     * [0, 1] by the max, cut into `bins` equal-width buckets, each with its
     * mean predicted value and observed positive rate — a calibrated model
@@ -207,42 +337,4 @@ object StandardMetrics {
       .select((col("__w") / col("__n")).as("ece"))
     brier.crossJoin(broadcast(ece)).select("n", "brier", "ece")
   }
-
-  def auroc(df: DataFrame, labelCol: String, scoreCol: String): DataFrame = {
-    val g = byScore(df, labelCol, scoreCol)
-    val ranked = GlobalRank.withRunningSums(g, Seq(col("s")), Seq("c" -> "__cum"))
-      .withColumn("avgrank", col("__cum") - col("c") + (col("c") + 1) / 2.0)
-    ranked.agg(
-      sum(col("pos") * col("avgrank")).as("sr"),
-      sum("pos").as("np"), sum("c").as("n"))
-      .select(((col("sr") - col("np") * (col("np") + 1) / 2.0) /
-        (col("np") * (col("n") - col("np")))).as("auroc"))
-  }
-
-  /** Precision / recall / F_β at every distinct score threshold (predict
-    * positive when score ≥ t). Ref: fMeasureByThreshold with β=2 feeding the
-    * best-threshold search (WebCustomMetricsEvaluator.scala:38-65). */
-  def fMeasureByThreshold(df: DataFrame, labelCol: String, scoreCol: String,
-                          beta: Double): DataFrame = {
-    val g = byScore(df, labelCol, scoreCol)
-    val b2 = beta * beta
-    val totals = g.agg(sum("pos").as("npos"))
-    GlobalRank.withRunningSums(g, Seq(col("s").desc),
-        Seq("pos" -> "tp", "c" -> "cnt"))
-      .crossJoin(broadcast(totals))
-      .select(
-        col("s").as("thresh"),
-        (col("tp") / col("cnt")).as("precision"),
-        (col("tp") / col("npos")).as("recall"))
-      .withColumn("fbeta",
-        when(col("precision") + col("recall") > 0,
-          (lit(1 + b2) * col("precision") * col("recall")) /
-            (lit(b2) * col("precision") + col("recall"))).otherwise(lit(0.0)))
-  }
-
-  /** The best-F_β threshold row (deterministic tie-break on the threshold). */
-  def bestThreshold(df: DataFrame, labelCol: String, scoreCol: String,
-                    beta: Double): DataFrame =
-    fMeasureByThreshold(df, labelCol, scoreCol, beta)
-      .orderBy(desc("fbeta"), asc("thresh")).limit(1)
 }

@@ -28,4 +28,12 @@ object Eager {
   def checkpoint(df: DataFrame)(release: => Unit): DataFrame =
     if (enabled) { val out = df.localCheckpoint(true); release; out }
     else df
+
+  /** [[checkpoint]] for a result of a few rows: collected into a local
+    * relation, so no cache entry outlives the call. */
+  def collected(df: DataFrame)(release: => Unit): DataFrame =
+    if (enabled) {
+      val rows = try df.collectAsList() finally release
+      df.sparkSession.createDataFrame(rows, df.schema)
+    } else df
 }

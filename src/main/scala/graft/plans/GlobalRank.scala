@@ -132,38 +132,50 @@ object GlobalRank {
     * sort, then one tiny job computes per-partition totals whose prefix
     * sums become per-partition offsets (O(partitions) driver state); the
     * within-partition running sum is an ordinary keyed window over the
-    * partition id — every stage partition-parallel. */
+    * partition id — every stage partition-parallel. The returned frame
+    * depends on an internally persisted sort; use
+    * [[withRunningSumsPersisted]] to release it. */
   def withRunningSums(df: DataFrame, sortCols: Seq[Column],
-                      sums: Seq[(String, String)]): DataFrame = {
+                      sums: Seq[(String, String)]): DataFrame =
+    withRunningSumsPersisted(df, sortCols, sums)._1
+
+  /** [[withRunningSums]] plus the EXACT persisted sort (see
+    * [[withRowNumberPersisted]] for the release contract) and the grand
+    * total of every summed input column, keyed by its name — already on
+    * the driver from the per-partition totals job, so consumers need no
+    * extra aggregate for them. */
+  def withRunningSumsPersisted(df: DataFrame, sortCols: Seq[Column],
+                               sums: Seq[(String, String)])
+      : (DataFrame, DataFrame, Map[String, Double]) = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val sorted = rangeSorted(df, sortCols).withColumn("__pid", pidCol)
+    val persisted = rangeSorted(df, sortCols)
+    val sorted = persisted.withColumn("__pid", pidCol)
     // one tiny job: per-partition totals of every summed column
     val totalAggs = sums.map { case (in, _) => sum(col(in)).as(in) }
     val totals = sorted.groupBy(col("__pid")).agg(totalAggs.head, totalAggs.tail: _*)
       .collect().map(r => r.getInt(0) -> r).toMap
-    // offset(p) = Σ totals over partitions < p, same map-literal form as
-    // offsetExprOf but over per-column double totals
-    def offsetExpr(in: String): Column = {
-      val perPart = (0 until parts).map { p =>
-        totals.get(p).map(_.getAs[Any](in)).getOrElse(null)
-      }
-      val offsets = perPart.scanLeft(0.0) { (acc, t) =>
-        acc + (t match {
-          case null => 0.0
-          case n: Number => n.doubleValue()
+    // offsets(p) = Σ totals over partitions < p; offsets(parts) = the
+    // grand total
+    val offsets = sums.map { case (in, _) =>
+      in -> (0 until parts).scanLeft(0.0) { (acc, p) =>
+        acc + (totals.get(p).map(_.getAs[Any](in)) match {
+          case Some(n: Number) => n.doubleValue()
+          case _ => 0.0
         })
       }
+    }.toMap
+    // same map-literal form as offsetExprOf, over per-column double totals
+    def offsetExpr(in: String): Column =
       element_at(
-        typedlit(offsets.take(parts).zipWithIndex.map { case (o, p) => p -> o }.toMap),
+        typedlit(offsets(in).take(parts).zipWithIndex.map { case (o, p) => p -> o }.toMap),
         col("__pid"))
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__pid").orderBy("__mid")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val withSums = sums.foldLeft(sorted) { case (acc, (in, out)) =>
       acc.withColumn(out, offsetExpr(in) + sum(col(in)).over(w))
     }
-    withSums.drop("__mid", "__pid")
+    (withSums.drop("__mid", "__pid"), persisted, offsets.map { case (in, o) => in -> o.last })
   }
 
   /** Adds `outCol` = SQL-standard NTILE(k) bucket (1-based) under

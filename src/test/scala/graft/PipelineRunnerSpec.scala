@@ -236,6 +236,9 @@ class PipelineRunnerSpec extends SparkSpec {
     lines.head should startWith ("Intent")
     lines should have length 3 // header + the two binary classes
     lines.tail.foreach(_.split("\t\t") should have length 5)
+    // the counts the metrics collected, line for line
+    txt.linesIterator.toSeq shouldBe graft.metrics.StandardMetrics.confusionText(
+      result.scoredUnion("test"), "label", "prediction")
   }
 
   it should "publish per-page pipelines and score new data in predict mode" in {

@@ -6,6 +6,10 @@ import org.apache.spark.sql.functions._
 class MetricsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Spark jobs of one binary dataset's evaluation, as measured on
+    * local[4]. */
+  private val JobBound = 15
+
   behavior of "StandardMetrics"
 
   private val preds = Seq(
@@ -53,6 +57,160 @@ class MetricsSpec extends SparkSpec {
     // t=0.6: P=3/4 R=1 F1=6/7 beats t=0.8 (P=1 R=2/3 F1=0.8) and t=0.9
     best.getAs[Double]("thresh") shouldBe 0.6
     best.getAs[Double]("fbeta") shouldBe 6.0 / 7 +- 1e-9
+  }
+
+  /** A binary scorer's frame: many distinct scores with heavy ties, over
+    * more rows than partitions, with a label/prediction pair per row. */
+  private def binaryScored = (1 to 2000).map { i =>
+    val y = if (i % 3 == 0 || i % 7 == 0) 1 else 0
+    val score = (i * 7919 % 101) / 100.0
+    (y, score, y.toDouble, if (score >= 0.5) 1.0 else 0.0)
+  }.toDF("y", "score", "label", "pred").repartition(8)
+
+  /** The curve's best row by the definition: highest F_β, lower threshold
+    * on a tie. */
+  private def bestByOrder(df: org.apache.spark.sql.DataFrame, beta: Double) =
+    StandardMetrics.fMeasureByThreshold(df, "y", "score", beta)
+      .orderBy(desc("fbeta"), asc("thresh")).head()
+
+  it should "give the one-pass binary summary exactly the separate metrics' values" in {
+    val df = binaryScored
+    val s = StandardMetrics.binarySummary(df, "y", "score", 2.0)
+    s.auroc shouldBe StandardMetrics.auroc(df, "y", "score").head().getDouble(0)
+    // the definition on the driver: P(score₊ > score₋) + P(tie)/2 over all
+    // positive-negative pairs
+    val ys = df.select("y", "score").as[(Int, Double)].collect()
+    val (pos, neg) = ys.partition(_._1 == 1)
+    val wins = pos.map { case (_, p) =>
+      neg.map { case (_, q) => if (p > q) 1.0 else if (p == q) 0.5 else 0.0 }.sum
+    }.sum
+    s.auroc shouldBe wins / (pos.length.toDouble * neg.length) +- 1e-12
+    val best = StandardMetrics.bestThreshold(df, "y", "score", 2.0).head()
+    Seq(s.thresh, s.precision, s.recall, s.fbeta) shouldBe
+      Seq("thresh", "precision", "recall", "fbeta").map(c => best.getAs[Double](c))
+    best shouldBe bestByOrder(df, 2.0)
+    val counts = StandardMetrics.confusionCounts(df, "label", "pred")
+    counts.weighted shouldBe
+      StandardMetrics.weightedSummary(df, "label", "pred").head()
+  }
+
+  it should "derive the descending threshold counts exactly from the ascending pass" in {
+    import org.apache.spark.sql.expressions.Window
+    val df = binaryScored
+    // the definition: inclusive running sums in descending score order
+    val w = Window.orderBy(desc("s")).rowsBetween(Window.unboundedPreceding, 0)
+    val npos = df.agg(sum(col("y").cast("double"))).head().getDouble(0)
+    val want = df.groupBy(col("score").as("s"))
+      .agg(count(lit(1)).as("c"), sum(col("y").cast("double")).as("pos"))
+      .withColumn("tp", sum("pos").over(w))
+      .withColumn("cnt", sum("c").over(w).cast("double"))
+      .select(col("s").as("thresh"), (col("tp") / col("cnt")).as("precision"),
+        (col("tp") / lit(npos)).as("recall"))
+    val got = StandardMetrics.fMeasureByThreshold(df, "y", "score", 2.0)
+      .select("thresh", "precision", "recall")
+    got.collect().toSet shouldBe want.collect().toSet
+  }
+
+  it should "break an F-beta tie toward the lower threshold in every path" in {
+    // beta = 1: t=0.9 gives P=1 R=1/2 and t=0.6 gives P=1/2 R=1, both
+    // F1 = 1/1.5 to the bit
+    val df = Seq((0.9, 1), (0.8, 0), (0.7, 0), (0.6, 1), (0.5, 0)).toDF("score", "y")
+    val curve = StandardMetrics.fMeasureByThreshold(df, "y", "score", 1.0)
+      .collect().map(r => r.getDouble(0) -> r.getDouble(3)).toMap
+    curve(0.9) shouldBe curve(0.6)
+    val s = StandardMetrics.binarySummary(df, "y", "score", 1.0)
+    s.thresh shouldBe 0.6
+    s.fbeta shouldBe 1.0 / 1.5
+    val best = StandardMetrics.bestThreshold(df, "y", "score", 1.0).head()
+    best.getAs[Double]("thresh") shouldBe 0.6
+    best shouldBe bestByOrder(df, 1.0)
+  }
+
+  it should "compute the multiclass label statistics once from the collected counts" in {
+    // a predicted-only class ("d") counts toward false positives only
+    val df = preds.union(Seq(("c", "d"), ("b", "c")).toDF("label", "pred"))
+    val counts = StandardMetrics.confusionCounts(df, "label", "pred")
+    counts.rows shouldBe Seq(("a", "a", 2L), ("a", "b", 1L), ("b", "a", 1L),
+      ("b", "b", 1L), ("b", "c", 1L), ("c", "c", 1L), ("c", "d", 1L))
+    // per label (support, tp, predTotal): a (3, 2, 3), b (3, 1, 2), c (2, 1, 2)
+    val byLabel = counts.byLabel.map(s => (s.label, s.support, s.tp, s.predTotal))
+    byLabel shouldBe Seq(("a", 3L, 2L, 3L), ("b", 3L, 1L, 2L), ("c", 2L, 1L, 2L))
+    val plan = StandardMetrics.perLabel(df, "label", "pred").collect()
+    plan.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq shouldBe byLabel
+    // F1: a 2/3, b 2·(1/2)(1/3)/(5/6) = 2/5, c 1/2
+    plan.map(_.getDouble(6)).toSeq.zip(Seq(2.0 / 3, 0.4, 0.5))
+      .foreach { case (got, want) => got shouldBe want +- 1e-12 }
+    // support-weighted over 8 rows: P (3·2/3 + 3·1/2 + 2·1/2)/8,
+    // R (2 + 1 + 1)/8, F1 (3·2/3 + 3·2/5 + 2·1/2)/8
+    val w = counts.weighted
+    w.getDouble(0) shouldBe 4.0 / 8
+    w.getDouble(1) shouldBe 4.5 / 8 +- 1e-12
+    w.getDouble(2) shouldBe 4.0 / 8 +- 1e-12
+    w.getDouble(3) shouldBe 4.2 / 8 +- 1e-12
+    StandardMetrics.weightedSummary(df, "label", "pred").head() shouldBe w
+    StandardMetrics.confusionText(df, "label", "pred") shouldBe Seq(
+      "Intent\t\tTrue Positive\t\tFalse Positive\t\tPrecision\t\tRecall",
+      "a\t\t2\t\t1\t\t0.6667\t\t0.6667",
+      "b\t\t1\t\t1\t\t0.5000\t\t0.3333",
+      "c\t\t1\t\t1\t\t0.5000\t\t0.5000")
+  }
+
+  it should "leave no cache entry behind on any call" in {
+    val sc = spark.sparkContext
+    val df = binaryScored
+    // ids, not sizes: the context cleaner may drop older entries meanwhile
+    def added(call: => Any): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      call
+      (sc.getPersistentRDDs.keySet -- before).toSet
+    }
+    added(StandardMetrics.auroc(df, "y", "score").collect()) shouldBe empty
+    added(StandardMetrics.bestThreshold(df, "y", "score", 2.0).collect()) shouldBe empty
+    added(StandardMetrics.binarySummary(df, "y", "score", 2.0)) shouldBe empty
+    added(StandardMetrics.perLabel(df, "label", "pred").collect()) shouldBe empty
+    added(StandardMetrics.weightedSummary(df, "label", "pred").collect()) shouldBe empty
+    added(StandardMetrics.confusionText(df, "label", "pred")) shouldBe empty
+    added(StandardMetrics.confusionCounts(df, "label", "pred")) shouldBe empty
+    // the curve is returned materialized: its own checkpoint is the one
+    // entry, the sort behind it is released
+    added(StandardMetrics.fMeasureByThreshold(df, "y", "score", 2.0).collect()) should have size 1
+  }
+
+  it should "bound the jobs one binary dataset's evaluation starts" in {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def marker(g: String): Unit = {
+      sc.setJobGroup(g, g)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    val df = binaryScored
+    sc.addSparkListener(l)
+    try {
+      marker("metrics-bound-start")
+      // what PipelineRunner's evaluation does per binary dataset
+      val proj = df.select(col("label"), col("pred"), col("y"), col("score")).cache()
+      StandardMetrics.binarySummary(proj, "y", "score", 2.0)
+      StandardMetrics.confusionCounts(proj, "label", "pred").text
+      proj.unpersist()
+      marker("metrics-bound-end")
+      // the bus delivers in order: once the end marker is seen, every job
+      // between the markers has been counted
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains("metrics-bound-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      val seq = groups.asScala.toSeq
+      val jobs = seq.indexOf("metrics-bound-end") - seq.indexOf("metrics-bound-start") - 1
+      info(s"$jobs jobs")
+      jobs should be > 0
+      jobs should be <= JobBound
+    } finally sc.removeSparkListener(l)
   }
 
   behavior of "ModelHealth"

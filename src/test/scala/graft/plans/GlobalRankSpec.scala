@@ -42,6 +42,21 @@ class GlobalRankSpec extends SparkSpec {
     want.except(got).count() shouldBe 0
   }
 
+  it should "hand back the persisted sort and the grand totals of its running sums" in {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (got, sorted, totals) = GlobalRank.withRunningSumsPersisted(
+      df, Seq(col("k"), col("id")), Seq("v" -> "cum_v", "id" -> "cum_id"))
+    val last = got.orderBy(desc("k"), desc("id")).head()
+    totals shouldBe Map(
+      "v" -> df.agg(sum("v")).head().getDouble(0),
+      "id" -> df.agg(sum("id")).head().getLong(0).toDouble)
+    last.getAs[Double]("cum_v") shouldBe totals("v")
+    last.getAs[Double]("cum_id") shouldBe totals("id")
+    sorted.unpersist()
+    (sc.getPersistentRDDs.keySet -- before) shouldBe empty
+  }
+
   it should "compute SQL-standard ntile buckets" in {
     val got = GlobalRank.withNtile(df, Seq(col("k"), col("id")), 7, "b")
       .select("id", "b")
