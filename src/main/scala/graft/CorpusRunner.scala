@@ -3,9 +3,11 @@ package graft
 import graft.config.{ConfigValidator, CorpusConf, CorpusStepConf, GraftConf}
 import graft.functions.GraftFunctions.textDedupKey
 import graft.io.{Savepoints, SourceReader}
+import graft.plans.{Eager, Held}
 import graft.text.{RegexReplacer, TextQuality}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The corpus-cleaning orchestrator — the training-data twin of
@@ -69,8 +71,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): gates and the scrub are row-local (codegen, no
   * shuffle); dedup shuffles on the uniform md5 hash; source_mix broadcasts
-  * one row per group. The per-step row counts are the only actions — each
-  * is a partial-aggregating count, the cost of the accounting contract.
+  * one row per group. Each step's output is materialized once, by its
+  * savepoint or by a local checkpoint whose filling job also counts its
+  * rows, so the row accounting costs no job of its own in memory (a
+  * savepoint's count reads the written parquet). Once a step's output
+  * exists, every cache and checkpoint the step made ([[Held]]) and the
+  * previous step's checkpoint are released; only the returned corpus
+  * stays persisted.
   */
 object CorpusRunner extends Logging {
 
@@ -114,20 +121,29 @@ object CorpusRunner extends Logging {
     val cleaned = cc.steps.zipWithIndex.drop(startIdx)
       .foldLeft(startDf) { case (df, (step, i)) =>
         val t0 = System.nanoTime()
-        val stepped = applyStep(df, step, cc)
+        val stepped = stepOf(df, step, cc)
         // truncate lineage between steps: several steps reference their
         // input TWICE (profile-and-join-back shapes — dedup, span gates,
         // decontam, ppl), so an unbroken chain grows the logical plan
         // EXPONENTIALLY in the number of such steps and OOMs the driver
         // on plan/codegen alone. Savepointing runs read the step back
         // from parquet (which also makes resume exact); in-memory runs
-        // cut the lineage with a local checkpoint.
-        val out =
+        // cut the lineage with a local checkpoint, filled and counted by
+        // one job.
+        val (out, n) =
           if (savepointing) {
-            sp.save(stepped, stepKey(i), 0, "clean")
-            sp.load(spark, stepKey(i), 0, "clean")
-          } else stepped.localCheckpoint(false)
-        val n = out.count()
+            sp.save(stepped.frame, stepKey(i), 0, "clean")
+            val back = sp.load(spark, stepKey(i), 0, "clean")
+            (back, back.count())
+          } else {
+            val cp = stepped.frame.localCheckpoint(false)
+            (cp, SQLExecution.withNewExecutionId(cp.queryExecution, Some("count"))(
+              cp.queryExecution.toRdd.count()))
+          }
+        // the output now exists on its own: nothing the step persisted,
+        // nor the previous step's checkpoint, is read again
+        stepped.release()
+        if (!savepointing && i > startIdx) Eager.release(df)
         m += s"rows_after_${i + 1}_${step.op}" -> n.toDouble
         m += s"secs_${i + 1}_${step.op}" ->
           math.round((System.nanoTime() - t0) / 1e7) / 100.0
@@ -149,8 +165,14 @@ object CorpusRunner extends Logging {
     if (df.columns.contains(cc.weightColumn)) col(cc.weightColumn)
     else lit(1.0)
 
-  /** One cleaning step as a pure DataFrame transform. */
-  def applyStep(df: DataFrame, step: CorpusStepConf, cc: CorpusConf): DataFrame = {
+  /** One cleaning step as a pure DataFrame transform. The caches the
+    * step's operators make stay alive for the session; [[run]] releases
+    * them once it has materialized the step. */
+  def applyStep(df: DataFrame, step: CorpusStepConf, cc: CorpusConf): DataFrame =
+    stepOf(df, step, cc).frame
+
+  /** [[applyStep]] plus the exact intermediates the step persisted. */
+  private def stepOf(df: DataFrame, step: CorpusStepConf, cc: CorpusConf): Held = {
     val text = cc.textColumn
     val id = cc.idColumn
     step.op match {
@@ -161,7 +183,7 @@ object CorpusRunner extends Logging {
           .groupBy(textDedupKey(col(text)).as("__h"))
           .agg(min(col(id)).as(id))
           .select(id)
-        df.join(keep, Seq(id), "left_semi")
+        Held(df.join(keep, Seq(id), "left_semi"))
       case "dedup_minhash" =>
         // MinHash-LSH candidates → exact-Jaccard verify → connected
         // components; drop every doc whose component label is a smaller id
@@ -169,18 +191,18 @@ object CorpusRunner extends Logging {
         // orders of magnitude smaller than the corpus — see
         // LlmData.minhashPairsOf / componentLabels for the scale notes.
         val pairs = queries.LlmData
-          .minhashPairsOf(df.select(col(id), col(text)), id, text,
+          .minhashPairsHeld(df.select(col(id), col(text)), id, text,
             threshold = step.threshold)
-          .select("da", "db")
-        val labels = queries.LlmData.componentLabels(df.sparkSession, pairs)
+        val labels = queries.LlmData.componentLabels(df.sparkSession,
+          pairs.frame.select("da", "db"))
         val dupes = labels.filter(col("lbl") < col("doc_id"))
           .select(col("doc_id").as(id))
-        df.join(dupes, Seq(id), "left_anti")
+        Held(df.join(dupes, Seq(id), "left_anti"), pairs.handles :+ labels)
       case "normalize" =>
         // canonicalize text BEFORE hashing/dedup: lowercase, collapse
         // whitespace runs, trim — row-local codegen'd expressions
-        df.withColumn(text,
-          trim(regexp_replace(lower(col(text)), "\\s+", " ")))
+        Held(df.withColumn(text,
+          trim(regexp_replace(lower(col(text)), "\\s+", " "))))
       case "soft_dedup" =>
         // SlimPajama-style SOFT dedup: KEEP every copy but attach
         // weight = 1/n_copies per exact-duplicate cluster, so duplicated
@@ -189,28 +211,28 @@ object CorpusRunner extends Logging {
         // trainer's sampler consumes it), and the mix steps below switch
         // to effective mass when they see it. Same single shuffle on the
         // uniform md5 key as dedup_exact — nothing beyond that cost.
-        df.withColumn("__h", textDedupKey(col(text)))
+        Held(df.withColumn("__h", textDedupKey(col(text)))
           .withColumn(cc.weightColumn,
             round(lit(1.0) / count(lit(1)).over(
               org.apache.spark.sql.expressions.Window.partitionBy("__h")), 6))
-          .drop("__h")
+          .drop("__h"))
       case "quality_gate" =>
-        df.filter(TextQuality.keep(text,
-          minTokens = step.minTokens, maxTokens = step.maxTokens))
+        Held(df.filter(TextQuality.keep(text,
+          minTokens = step.minTokens, maxTokens = step.maxTokens)))
       case "lang_filter" =>
-        df.filter(col(step.langColumn)
-          .isin(step.keepLangs.map(l => l: Any): _*))
+        Held(df.filter(col(step.langColumn)
+          .isin(step.keepLangs.map(l => l: Any): _*)))
       case "token_bounds" =>
-        df.filter(size(split(col(text), "\\s+"))
-          .between(step.minTokens, step.maxTokens))
+        Held(df.filter(size(split(col(text), "\\s+"))
+          .between(step.minTokens, step.maxTokens)))
       case "pii_scrub" =>
         val pairs =
           if (step.pairs.nonEmpty) step.pairs.map(p => p(0) -> p(1))
           else Seq("[0-9]{4,}" -> "_class_id", "[0-9]+" -> "_class_num")
-        new RegexReplacer().setInputCol(text).setOutputCol("__red")
+        Held(new RegexReplacer().setInputCol(text).setOutputCol("__red")
           .setPairs(pairs)
           .transform(df)
-          .withColumn(text, col("__red")).drop("__red")
+          .withColumn(text, col("__red")).drop("__red"))
       case "exif_scrub" =>
         // pii_scrub's media twin: strip EXIF/ICC/XMP/COM metadata
         // segments from every JPEG blob IN PLACE on the binary column
@@ -219,7 +241,7 @@ object CorpusRunner extends Logging {
         // through untouched. Row-local, no shuffle.
         require(df.columns.contains(step.mediaColumn),
           s"exif_scrub: no binary column '${step.mediaColumn}' in the frame")
-        graft.multimodal.Multimodal.scrubImageMetadata(df, step.mediaColumn)
+        Held(graft.multimodal.Multimodal.scrubImageMetadata(df, step.mediaColumn))
       case "decontam" =>
         // benchmark decontamination against an EXTERNAL eval set (read
         // through the same scheme dispatch as the main source): drop docs
@@ -233,7 +255,7 @@ object CorpusRunner extends Logging {
           .decontamOverlapOf(df.select(col(id), col(text)), eval, id, text)
           .filter(col("frac") > step.threshold)
           .select(col("doc_id").as(id))
-        df.join(over, Seq(id), "left_anti")
+        Held(df.join(over, Seq(id), "left_anti"))
       case "semantic_decontam" =>
         // PARAPHRASE decontamination: corpus docs whose embedding's max
         // cosine to any EXTERNAL eval embedding clears the threshold are
@@ -270,54 +292,53 @@ object CorpusRunner extends Logging {
             "NONE of the corpus ids — the gate would pass every document")
         if (nScored < nCorpus) logInfo(s"semantic_decontam: " +
           s"${nCorpus - nScored} docs have no embedding row; kept UNSCORED")
-        val flagged = queries.LlmData
-          .semanticDecontamOf(corpusVecs, eval, step.threshold)
-          .select(col("vec_id").as(id))
-        df.join(flagged, Seq(id), "left_anti")
+        queries.LlmData
+          .semanticDecontamHeld(corpusVecs, eval, step.threshold)
+          .map(f => df.join(f.select(col("vec_id").as(id)), Seq(id), "left_anti"))
       case "span_scrub" =>
         // C4-style duplicated-span REMOVAL (LlmData.spanScrubOf): globally
         // duplicated w-token blocks keep only their first occurrence and
         // every doc is rebuilt from its surviving blocks; docs scrubbed to
         // nothing are dropped. Rewrites text IN PLACE — the row count only
         // falls for fully-duplicated docs.
-        val reb = queries.LlmData
-          .spanScrubOf(df.select(col(id), col(text)), id, text, step.window)
-          .filter(col("n_kept") > 0)
-          .select(col("doc_id").as(id), col("rebuilt"))
-        df.drop(text).join(reb, Seq(id))
-          .withColumnRenamed("rebuilt", text)
+        queries.LlmData
+          .spanScrubHeld(df.select(col(id), col(text)), id, text, step.window)
+          .map { s =>
+            val reb = s.filter(col("n_kept") > 0)
+              .select(col("doc_id").as(id), col("rebuilt"))
+            df.drop(text).join(reb, Seq(id))
+              .withColumnRenamed("rebuilt", text)
+          }
       case "span_dedup" =>
         // corpus-wide duplicated-span profile (LlmData.dupSegmentsOf);
         // drop docs whose duplicated-window fraction exceeds the threshold
         // — the C4/CCNet boilerplate gate. Anti-join on the unique id.
-        val over = queries.LlmData
-          .dupSegmentsOf(df.select(col(id), col(text)), id, text, step.window)
-          .filter(col("dup_frac") > step.threshold)
-          .select(col("doc_id").as(id))
-        df.join(over, Seq(id), "left_anti")
+        queries.LlmData
+          .dupSegmentsHeld(df.select(col(id), col(text)), id, text, step.window)
+          .map(p => df.join(p.filter(col("dup_frac") > step.threshold)
+            .select(col("doc_id").as(id)), Seq(id), "left_anti"))
       case "dsir_sample" =>
         // DSIR importance gate (LlmData.dsirWeightsOf): the target LM is
         // fit on the keepLangs slice; docs scoring below the threshold
         // log-likelihood ratio are dropped. Semi-join on the unique id.
-        val keep = queries.LlmData
-          .dsirWeightsOf(df.select(col(id), col(text), col(step.langColumn)),
+        queries.LlmData
+          .dsirWeightsHeld(df.select(col(id), col(text), col(step.langColumn)),
             id, text,
             col(step.langColumn).isin(step.keepLangs.map(l => l: Any): _*))
-          .filter(col("dsir_w") >= step.threshold)
-          .select(col("doc_id").as(id))
-        df.join(keep, Seq(id), "left_semi")
+          .map(w => df.join(w.filter(col("dsir_w") >= step.threshold)
+            .select(col("doc_id").as(id)), Seq(id), "left_semi"))
       case "dedup_simhash" =>
         // SimHash Hamming dedup: banded pair join (maxHamming+1 bands →
         // pigeonhole-exact at ANY radius) → connected components → keep
         // the min-id representative per component, like dedup_minhash
         val pairs = queries.LlmData
-          .simhashNeardupOf(df.select(col(id), col(text)), id, text,
+          .simhashNeardupHeld(df.select(col(id), col(text)), id, text,
             step.maxHamming)
-          .select("da", "db")
-        val labels = queries.LlmData.componentLabels(df.sparkSession, pairs)
+        val labels = queries.LlmData.componentLabels(df.sparkSession,
+          pairs.frame.select("da", "db"))
         val dupes = labels.filter(col("lbl") < col("doc_id"))
           .select(col("doc_id").as(id))
-        df.join(dupes, Seq(id), "left_anti")
+        Held(df.join(dupes, Seq(id), "left_anti"), pairs.handles :+ labels)
       case "entropy_gate" =>
         // information-density gate (LlmData.docEntropyOf): drop docs whose
         // unigram entropy falls below `threshold` bits — the degenerate-
@@ -327,25 +348,21 @@ object CorpusRunner extends Logging {
           .docEntropyOf(df.select(col(id), col(text)), id, text)
           .filter(col("entropy_bits") >= step.threshold)
           .select(col("doc_id").as(id))
-        df.join(keep, Seq(id), "left_semi")
+        Held(df.join(keep, Seq(id), "left_semi"))
       case "ppl_gate" =>
         // CCNet-style head/middle/tail gate: rank every doc by perplexity
         // under the corpus-fit unigram LM and keep the lowest `threshold`
         // fraction (the "head"). Exact corpus-relative rank via the
         // two-pass range-sort ntile — no single-partition window.
         val ppl = queries.LlmData
-          .unigramPplOf(df.select(col(id), col(text)), id, text)
+          .unigramPplHeld(df.select(col(id), col(text)), id, text)
         val (pct, pctP) = graft.plans.GlobalRank
-          .withNtilePersisted(ppl, Seq(col("ppl"), col("doc_id")), 100, "pct")
-        // narrow id keep-set: checkpoint it eagerly so the ntile sort
-        // cache is released on its exact persisted handle
+          .withNtilePersisted(ppl.frame, Seq(col("ppl"), col("doc_id")), 100, "pct")
         val keep = pct
           .filter(col("pct") <=
             math.max(1, math.round(step.threshold * 100).toInt))
           .select(col("doc_id").as(id))
-          .localCheckpoint(true)
-        pctP.unpersist()
-        df.join(keep, Seq(id), "left_semi")
+        Held(df.join(keep, Seq(id), "left_semi"), ppl.handles :+ pctP)
       case "rank_gate" =>
         // per-GROUP fairness gate: keep the top ⌈threshold·n⌉ (min 1) of
         // EACH groupColumn slice by unigram entropy (the text-only
@@ -369,21 +386,17 @@ object CorpusRunner extends Logging {
           .filter(col("__rn") - col("__rn0") >=
             col("__n") - greatest(ceil(col("__n") * step.threshold), lit(1L)))
           .select(col(id))
-        // materialize the survivors eagerly (run() truncates lineage per
-        // step anyway), then free the range-sorted rank intermediate —
-        // on the exact persisted handle (unpersist on the derived frame
-        // is a sameResult-miss no-op)
-        val out = df.join(keep, Seq(id), "left_semi").localCheckpoint(true)
-        rankedP.unpersist()
-        out
+        // the range-sorted rank intermediate is the step's one handle
+        // (unpersist on the derived frame would be a sameResult-miss no-op)
+        Held(df.join(keep, Seq(id), "left_semi"), Seq(rankedP))
       case "model_gate" =>
         // CCNet/fastText-style CLASSIFIER gate (text.QualityModel): fit a
         // target-vs-rest linear model on the trusted slice (keepLangs
         // values of groupColumn), score the whole corpus row-locally
         // (sparse dot per doc — scan cost, no shuffle), keep look-alikes
         // with quality_p >= threshold plus the trusted slice itself
-        graft.text.QualityModel.gate(df, text, step.groupColumn,
-          step.keepLangs, step.threshold, id)
+        Held(graft.text.QualityModel.gate(df, text, step.groupColumn,
+          step.keepLangs, step.threshold, id))
       case "source_mix" =>
         // same md5-uniform membership as LlmData.sourceMixSample: a pure
         // function of the id — reproducible, stable under corpus growth.
@@ -393,9 +406,9 @@ object CorpusRunner extends Logging {
         val counts = df.groupBy(step.groupColumn)
           .agg(sum(w).as("__n"))
         val rv = graft.functions.GraftFunctions.md5CoinPct(col(id))
-        df.join(broadcast(counts), step.groupColumn)
+        Held(df.join(broadcast(counts), step.groupColumn)
           .filter(rv < lit(100.0) * lit(step.quota) / col("__n"))
-          .drop("__n")
+          .drop("__n"))
       case "temp_mix" =>
         // temperature-flattened mixing (LlmData.sourceTemperatureMix
         // semantics): keep probability min(1, quota·n^(α−1)/Σ n^α) per
@@ -409,8 +422,8 @@ object CorpusRunner extends Logging {
             lit(step.quota) * pow(col("__n"), step.alpha - 1) / col("__tot")), 6))
           .select(col(step.groupColumn), col("__p"))
         val rv = graft.functions.GraftFunctions.md5Coin(col(id))
-        df.join(broadcast(probs), step.groupColumn)
-          .filter(rv < col("__p")).drop("__p")
+        Held(df.join(broadcast(probs), step.groupColumn)
+          .filter(rv < col("__p")).drop("__p"))
       case "token_mix" =>
         // token-budget temperature mixing (LlmData.sourceTokenMix
         // semantics): quota is a TOKEN budget; each group's α-flattened
@@ -428,8 +441,8 @@ object CorpusRunner extends Logging {
             lit(step.quota) * pow(col("__t"), step.alpha - 1) / col("__tot")), 6))
           .select(col(step.groupColumn), col("__p"))
         val coin = graft.functions.GraftFunctions.md5Coin(col(id))
-        withTok.join(broadcast(probs), step.groupColumn)
-          .filter(coin < col("__p")).drop("__p", "__ntok")
+        Held(withTok.join(broadcast(probs), step.groupColumn)
+          .filter(coin < col("__p")).drop("__p", "__ntok"))
       case "chunk" =>
         // sliding-window context chunking (doc_chunk semantics): each doc
         // becomes its stride-advanced token windows, all other columns
@@ -449,9 +462,9 @@ object CorpusRunner extends Logging {
           .withColumn(text,
             array_join(expr(s"slice(__toks, __i * $st + 1, $w)"), " "))
         val cMax = chunked.agg((max("__i") + 2).cast("long").as("__c"))
-        chunked.crossJoin(broadcast(cMax))
+        Held(chunked.crossJoin(broadcast(cMax))
           .withColumn(id, col(id) * col("__c") + col("__i"))
-          .drop("__toks", "__i", "__c")
+          .drop("__toks", "__i", "__c"))
       case "curriculum" =>
         // curriculum-learning layout: tier by token count (easy = short),
         // shuffle within tiers with the deterministic coin, and lay the
@@ -465,9 +478,9 @@ object CorpusRunner extends Logging {
           step.salt)
           .select(col("doc_id").as(id), col("tier").as("cur_tier"),
             col("ord").as("cur_ord"))
-        scored.drop("__score").join(ord, id)
+        Held(scored.drop("__score").join(ord, id)
           .repartitionByRange(col("cur_ord"))
-          .sortWithinPartitions("cur_ord")
+          .sortWithinPartitions("cur_ord"))
       case other =>
         throw new IllegalArgumentException(s"unknown corpus op '$other'")
     }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -888,7 +889,15 @@ trait LlmAnnOps extends LlmCore {
     * partial-aggregating shuffle. */
   def semanticDecontamOf(corpus: DataFrame, evalVecs: DataFrame,
                          threshold: Double,
-                         maxEvalRows: Long = 4096): DataFrame = {
+                         maxEvalRows: Long = 4096): DataFrame =
+    semanticDecontamHeld(corpus, evalVecs, threshold, maxEvalRows).frame
+
+
+  /** [[semanticDecontamOf]] with its eval-set checkpoint as the handle to
+    * release once the flagged rows are materialized (see [[Held]]). */
+  def semanticDecontamHeld(corpus: DataFrame, evalVecs: DataFrame,
+                           threshold: Double,
+                           maxEvalRows: Long = 4096): Held = {
     val ev0 = evalVecs.select(col("vec_id").as("e_id"),
       vecNorm(col("embedding")).as("evn"))
     // ONE bounded materialization answers "empty?", "over the broadcast
@@ -911,10 +920,10 @@ trait LlmAnnOps extends LlmCore {
         struct((-round(vecDot(col("vn"), col("evn")), 4)).as("nc"),
           col("e_id")).as("s"))
       .groupBy("vec_id").agg(min("s").as("f"))
-    best.select(col("vec_id"), col("f.e_id").as("near_eval"),
+    Held(best.select(col("vec_id"), col("f.e_id").as("near_eval"),
         (-col("f.nc")).as("max_cos"))
       .filter(col("max_cos") >= threshold)
-      .orderBy("vec_id")
+      .orderBy("vec_id"), Seq(ev))
   }
 
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.{Eager, Held}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -201,9 +202,18 @@ trait LlmDedupOps extends LlmCore {
     * frame — what [[graft.CorpusRunner]]'s `dedup_minhash` step runs.
     * Output columns are `da`/`db` (the id pair, `da < db`) + `jac`. */
   def minhashPairsOf(docs: DataFrame, idCol: String, textCol: String,
-                     threshold: Double = 0.7): DataFrame = {
-    val sh = shinglesOf(docs, idCol, textCol).cache()
-    minhashPairsFrom(sh, minhashSigsFrom(sh), threshold)
+                     threshold: Double = 0.7): DataFrame =
+    minhashPairsHeld(docs, idCol, textCol, threshold).frame
+
+
+  /** [[minhashPairsOf]] with its three cached intermediates — the shingle
+    * stream, the candidate pairs and the re-clustered candidate shingles
+    * — as handles to release once the pairs are materialized. */
+  def minhashPairsHeld(docs: DataFrame, idCol: String, textCol: String,
+                       threshold: Double = 0.7): Held = {
+    val Held(sh, shH) = Held.cached(shinglesOf(docs, idCol, textCol))
+    val pairs = minhashPairsFrom(sh, minhashSigsFrom(sh), threshold)
+    Held(pairs.frame, shH ++ pairs.handles)
   }
 
 
@@ -278,13 +288,14 @@ trait LlmDedupOps extends LlmCore {
   }
 
   private[queries] def minhashPairsFrom(sh: DataFrame, mh: DataFrame,
-                                        threshold: Double): DataFrame = {
+                                        threshold: Double): Held = {
     val bands = minhashBandsFrom(mh)
-    val cand = bands.select(col("band"), col("sig"), col("doc_id").as("da"))
-      .join(bands.select(col("band"), col("sig"), col("doc_id").as("db")), Seq("band", "sig"))
-      .filter(col("da") < col("db"))
-      .select("da", "db").distinct()
-      .cache() // used twice: candidate-doc semi-join + pair-driven verify
+    // cached: used twice, by the candidate-doc semi-join and the verify
+    val Held(cand, candH) = Held.cached(
+      bands.select(col("band"), col("sig"), col("doc_id").as("da"))
+        .join(bands.select(col("band"), col("sig"), col("doc_id").as("db")), Seq("band", "sig"))
+        .filter(col("da") < col("db"))
+        .select("da", "db").distinct())
     // restrict the shingle stream to candidate docs, then intersect per PAIR:
     // cand ⋈ shingles(da) gives each pair its left shingle set; matching on
     // (db, s) counts the intersection — work scales with pairs, not df².
@@ -296,8 +307,8 @@ trait LlmDedupOps extends LlmCore {
     // LSH bounds the candidate set at any scale): the size aggregate and
     // BOTH pair-driven verify joins (keyed da, then (db, s) ⊇ db) then ride
     // this single exchange instead of re-shuffling the stream three times
-    val shC = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      .repartition(col("doc_id")).cache()
+    val Held(shC, shCH) = Held.cached(
+      sh.join(candDocs, Seq("doc_id"), "left_semi").repartition(col("doc_id")))
     val sizes = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // no broadcast hint on cand: small under the 64MB auto-threshold at
     // test scale; at 100 TB the pair set can be large — AQE decides.
@@ -305,12 +316,12 @@ trait LlmDedupOps extends LlmCore {
       .join(shC.select(col("doc_id").as("da"), col("s")), "da")
       .join(shC.select(col("doc_id").as("db"), col("s")), Seq("db", "s"))
       .groupBy("da", "db").agg(count(lit(1)).as("ni"))
-    inter
+    Held(inter
       .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
       .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
       .withColumn("jac", round(col("ni") / (col("na") + col("nb") - col("ni")), 6))
       .filter(col("jac") >= threshold)
-      .select("da", "db", "jac")
+      .select("da", "db", "jac"), candH ++ shCH)
   }
 
 
@@ -499,15 +510,27 @@ trait LlmDedupOps extends LlmCore {
     * graph (`da`/`db` columns), lbl = min id reachable. Driver union-find
     * while the edge list fits `maxDriverEdges`; distributed min-label
     * propagation with pointer jumping beyond it — identical output either
-    * way (see [[dedupClusters]]). Ids absent from any pair get no row. */
+    * way (see [[dedupClusters]]). Ids absent from any pair get no row.
+    *
+    * One bounded collect (at most `maxDriverEdges + 1` edges) both picks
+    * the path and hands the driver path its edges, so the pair plan runs
+    * once, not once to count and once more to collect. The distributed
+    * path fails loudly if labels still change after `maxRounds` rounds
+    * (pointer jumping needs O(log n), so the default covers any realistic
+    * component) instead of returning partial labels, and returns its
+    * labels as a local checkpoint with its edge and label caches
+    * released. */
   def componentLabels(s: SparkSession, pairs: DataFrame,
-                      maxDriverEdges: Long = 1L << 20): DataFrame = {
-    if (pairs.count() <= maxDriverEdges) {
+                      maxDriverEdges: Long = 1L << 20,
+                      maxRounds: Int = 25): DataFrame = {
+    val bound = math.min(maxDriverEdges, Int.MaxValue - 1L).toInt
+    val head = pairs.select("da", "db").limit(bound + 1).collect()
+    if (head.length <= maxDriverEdges) {
       // driver union-find with min-root tracking. `find` is ITERATIVE
       // (walk to root, then path-compress): a recursive version recurses
       // once per parent link, and an adversarial long-chain component near
       // maxDriverEdges would overflow the driver stack.
-      val es = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = head.map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var root = x
@@ -532,7 +555,13 @@ trait LlmDedupOps extends LlmCore {
         .cache()
       var changed = 1L
       var rounds = 0
-      while (changed > 0 && rounds < 25) {
+      while (changed > 0) {
+        if (rounds == maxRounds) {
+          edges.unpersist(); lbls.unpersist()
+          throw new IllegalStateException(s"componentLabels: labels still " +
+            s"changed ($changed docs) after $maxRounds rounds of " +
+            "min-label propagation with pointer jumping")
+        }
         val neighborMin = edges
           .join(lbls.select(col("doc_id").as("a"), col("lbl").as("la")), "a")
           .groupBy(col("b").as("doc_id")).agg(min("la").as("nl"))
@@ -551,7 +580,7 @@ trait LlmDedupOps extends LlmCore {
         lbls = next
         rounds += 1
       }
-      lbls
+      Eager.checkpoint(lbls) { edges.unpersist(); lbls.unpersist() }
     }
   }
 
@@ -601,25 +630,32 @@ trait LlmDedupOps extends LlmCore {
     * to [1, 60]); band i covers bits [i*60/nb, (i+1)*60/nb) of the 60-bit
     * signature, so uneven widths are spread evenly when 60 % nb != 0. */
   def simhashNeardupOf(docs: DataFrame, idCol: String, textCol: String,
-                       maxHamming: Int): DataFrame = {
+                       maxHamming: Int): DataFrame =
+    simhashNeardupHeld(docs, idCol, textCol, maxHamming).frame
+
+
+  /** [[simhashNeardupOf]] with its cached band rows as the handle to
+    * release once the pairs are materialized (see [[Held]]). */
+  def simhashNeardupHeld(docs: DataFrame, idCol: String, textCol: String,
+                         maxHamming: Int): Held = {
     val nb = math.min(60, math.max(1, maxHamming + 1))
-    val banded = simhashSigOf(docs, idCol, textCol)
+    // cached: both sides of the candidate join
+    val Held(banded, bandedH) = Held.cached(simhashSigOf(docs, idCol, textCol)
       .selectExpr("doc_id", "simhash", s"explode(sequence(0, ${nb - 1})) AS band")
       .selectExpr("doc_id", "simhash", "band",
         s"(simhash div shiftleft(CAST(1 AS BIGINT), CAST(band * 60 / $nb AS INT))) " +
           s"% shiftleft(CAST(1 AS BIGINT), " +
-          s"CAST((band + 1) * 60 / $nb AS INT) - CAST(band * 60 / $nb AS INT)) AS bsig")
-      .cache() // both sides of the candidate join
+          s"CAST((band + 1) * 60 / $nb AS INT) - CAST(band * 60 / $nb AS INT)) AS bsig"))
     val cand = banded.selectExpr("band", "bsig", "doc_id AS da", "simhash AS ha")
       .join(banded.selectExpr("band", "bsig", "doc_id AS db", "simhash AS hb"),
         Seq("band", "bsig"))
       .filter(col("da") < col("db"))
       .select("da", "db", "ha", "hb").distinct()
-    cand
+    Held(cand
       .withColumn("hamming", expr("bit_count(ha ^ hb)"))
       .filter(col("hamming") <= maxHamming)
       .select("da", "db", "hamming")
-      .orderBy("da", "db")
+      .orderBy("da", "db"), bandedH)
   }
 
 
@@ -686,22 +722,29 @@ trait LlmDedupOps extends LlmCore {
   /** The duplicated-span profile over ANY (id, text) frame — what
     * [[graft.CorpusRunner]]'s `span_dedup` step gates on. */
   def dupSegmentsOf(docs: DataFrame, idCol: String, textCol: String,
-                    w: Int): DataFrame = {
-    val segs = docs
+                    w: Int): DataFrame =
+    dupSegmentsHeld(docs, idCol, textCol, w).frame
+
+
+  /** [[dupSegmentsOf]] with its cached window rows as the handle to
+    * release once the profile is materialized (see [[Held]]). */
+  def dupSegmentsHeld(docs: DataFrame, idCol: String, textCol: String,
+                      w: Int): Held = {
+    // cached: feeds both the df-count and the join back
+    val Held(segs, segsH) = Held.cached(docs
       .selectExpr(s"$idCol AS doc_id", s"split($textCol, ' ') AS toks")
       .selectExpr("doc_id",
         s"""explode(CASE WHEN size(toks) >= $w
            |  THEN transform(sequence(0, size(toks) - $w),
            |                 i -> concat_ws(' ', slice(toks, i + 1, $w)))
-           |  ELSE array(concat_ws(' ', toks)) END) AS seg""".stripMargin)
-      .cache() // feeds both the df-count and the join back
+           |  ELSE array(concat_ws(' ', toks)) END) AS seg""".stripMargin))
     val segDf = segs.distinct().groupBy("seg").agg(count(lit(1)).as("ndocs"))
-    segs.join(segDf, "seg")
+    Held(segs.join(segDf, "seg")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_segs"),
         sum(when(col("ndocs") > 1, 1L).otherwise(0L)).as("n_dup"))
       .withColumn("dup_frac",
-        round(col("n_dup").cast("double") / col("n_segs"), 6))
+        round(col("n_dup").cast("double") / col("n_segs"), 6)), segsH)
   }
 
 
@@ -733,15 +776,22 @@ trait LlmDedupOps extends LlmCore {
     * past 10⁶ blocks or ~9.2·10¹² ids; struct min has no bounds to
     * guard). */
   def spanScrubOf(docs: DataFrame, idCol: String, textCol: String,
-                  w: Int): DataFrame = {
-    val blocks = docs
+                  w: Int): DataFrame =
+    spanScrubHeld(docs, idCol, textCol, w).frame
+
+
+  /** [[spanScrubOf]] with its cached block rows as the handle to release
+    * once the rebuilt docs are materialized (see [[Held]]). */
+  def spanScrubHeld(docs: DataFrame, idCol: String, textCol: String,
+                    w: Int): Held = {
+    // cached: totals + first-occurrence agg + survivor join
+    val Held(blocks, blocksH) = Held.cached(docs
       .selectExpr(s"$idCol AS doc_id", s"split($textCol, ' ') AS toks")
       .selectExpr("doc_id",
         s"explode(sequence(0, cast(ceil(size(toks) / ${w}.0) AS INT) - 1)) AS k",
         "toks")
       .selectExpr("doc_id", "k",
-        s"concat_ws(' ', slice(toks, k * $w + 1, $w)) AS block")
-      .cache() // totals + first-occurrence agg + survivor join
+        s"concat_ws(' ', slice(toks, k * $w + 1, $w)) AS block"))
     val first = blocks.groupBy("block")
       .agg(min(struct(col("doc_id"), col("k"))).as("first_key"))
     val kept = blocks.join(first, "block")
@@ -753,12 +803,12 @@ trait LlmDedupOps extends LlmCore {
         array_sort(collect_list(struct(col("k"), col("block")))),
         x => x.getField("block"))).as("rebuilt"))
     val totals = blocks.groupBy("doc_id").agg(count(lit(1)).as("n_blocks"))
-    totals.join(rebuilt, Seq("doc_id"), "left")
+    Held(totals.join(rebuilt, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_blocks"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("n_tokens_after"), lit(0L)).as("n_tokens_after"),
         coalesce(col("rebuilt"), lit("")).as("rebuilt"),
-        md5(coalesce(col("rebuilt"), lit(""))).as("text_md5"))
+        md5(coalesce(col("rebuilt"), lit(""))).as("text_md5")), blocksH)
   }
 
 
@@ -780,7 +830,7 @@ trait LlmDedupOps extends LlmCore {
       .mkString("(", " + ", s") / ${seeds.size}.0D"))
     val a = mh.toDF(mh.columns.map(c => if (c == "doc_id") "da" else s"a_$c").toIndexedSeq: _*)
     val b = mh.toDF(mh.columns.map(c => if (c == "doc_id") "db" else s"b_$c").toIndexedSeq: _*)
-    minhashPairsFrom(sh, mh, 0.7)
+    minhashPairsFrom(sh, mh, 0.7).frame
       .join(a, "da").join(b, "db")
       .withColumn("jac_est", round(est, 6))
       .withColumn("abs_err", round(abs(col("jac") - est), 6))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -522,12 +523,19 @@ trait LlmMixOps extends LlmCore {
     * indicator — what [[graft.CorpusRunner]]'s `dsir_sample` step gates
     * on. `isTarget` must be a row-local predicate over the frame. */
   def dsirWeightsOf(docs: DataFrame, idCol: String, textCol: String,
-                    isTarget: org.apache.spark.sql.Column): DataFrame = {
-    val toks = docs
+                    isTarget: org.apache.spark.sql.Column): DataFrame =
+    dsirWeightsHeld(docs, idCol, textCol, isTarget).frame
+
+
+  /** [[dsirWeightsOf]] with its cached token rows as the handle to release
+    * once the weights are materialized (see [[Held]]). */
+  def dsirWeightsHeld(docs: DataFrame, idCol: String, textCol: String,
+                      isTarget: org.apache.spark.sql.Column): Held = {
+    // cached: feeds both the LM build and the scoring join
+    val Held(toks, toksH) = Held.cached(docs
       .withColumn("__t", isTarget)
       .selectExpr(s"$idCol AS doc_id", "__t",
-        s"explode(split($textCol, ' ')) AS w")
-      .cache() // feeds both the LM build and the scoring join
+        s"explode(split($textCol, ' ')) AS w"))
     val counts = toks.groupBy("w").agg(
       sum(when(col("__t"), 1L).otherwise(0L)).as("ct"),
       sum(when(!col("__t"), 1L).otherwise(0L)).as("cc"))
@@ -537,9 +545,10 @@ trait LlmMixOps extends LlmCore {
       .select(col("w"),
         (log((col("ct") + 1).cast("double") / (col("nt") + col("vsz"))) -
          log((col("cc") + 1).cast("double") / (col("nc") + col("vsz")))).as("lw"))
-    toks.join(wts, "w")
+    Held(toks.join(wts, "w")
       .groupBy("doc_id")
-      .agg(round(sum("lw"), 6).as("dsir_w"), count(lit(1)).as("n_toks"))
+      .agg(round(sum("lw"), 6).as("dsir_w"), count(lit(1)).as("n_toks")),
+      toksH)
   }
 
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ trait LlmPplOps extends LlmCore {
       (round(beta, 4) + lit(0.0)).as("heaps_beta"),
       (round((m("sy") - beta * m("sx")) / m("n"), 4) + lit(0.0))
         .as("heaps_lnk"),
-      round(cov * cov / (varX * varY), 4).as("heaps_r2"))
+      (round(cov * cov / (varX * varY), 4) + lit(0.0)).as("heaps_r2"))
   }
 
 
@@ -91,7 +92,7 @@ trait LlmPplOps extends LlmCore {
     * `quality_tiers` ranks it. */
   private def unigramPplFrameOf(s: SparkSession, dir: String): DataFrame =
     pplShared.getOrElseUpdate(s, s"uni_ppl|$dir") {
-      unigramPplOfToks(tokenArraysOf(s, dir))
+      unigramPplOfToks(tokenArraysOf(s, dir)).frame
     }.cache()
 
 
@@ -99,22 +100,29 @@ trait LlmPplOps extends LlmCore {
     * [[graft.CorpusRunner]]'s `ppl_gate` step ranks on. */
   def unigramPplOf(docs: DataFrame, idCol: String,
                    textCol: String): DataFrame =
+    unigramPplHeld(docs, idCol, textCol).frame
+
+
+  /** [[unigramPplOf]] with its cached token rows as the handle to release
+    * once the scores are materialized (see [[Held]]). */
+  def unigramPplHeld(docs: DataFrame, idCol: String,
+                     textCol: String): Held =
     unigramPplOfToks(docs.selectExpr(s"$idCol AS doc_id",
       s"transform(split($textCol, ' '), t -> xxhash64(t)) AS toks"))
 
-  private def unigramPplOfToks(tokArr: DataFrame): DataFrame = {
-    val toks = tokArr
-      .selectExpr("doc_id", "explode(toks) AS w")
-      .cache() // feeds both the LM build and the scoring join
+  private def unigramPplOfToks(tokArr: DataFrame): Held = {
+    // cached: feeds both the LM build and the scoring join
+    val Held(toks, toksH) = Held.cached(tokArr
+      .selectExpr("doc_id", "explode(toks) AS w"))
     val cnt = toks.groupBy("w").agg(count(lit(1)).as("c"))
     val tot = cnt.agg(sum("c").as("n"), count(lit(1)).as("v"))
     val lp = cnt.crossJoin(broadcast(tot))
       .select(col("w"),
         log((col("c") + 1).cast("double") / (col("n") + col("v"))).as("lp"))
-    toks.join(lp, "w")
+    Held(toks.join(lp, "w")
       .groupBy("doc_id")
       .agg(round(exp(-sum("lp") / count(lit(1))), 4).as("ppl"),
-        count(lit(1)).as("n_toks"))
+        count(lit(1)).as("n_toks")), toksH)
   }
 
 
@@ -950,6 +958,7 @@ trait LlmPplOps extends LlmCore {
         | round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n, 4)
         |   + 0.0 AS heaps_lnk,
         | round((n * sxy - sx * sy) * (n * sxy - sx * sy)
-        |       / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 4) AS heaps_r2
+        |       / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 4) + 0.0
+        |   AS heaps_r2
         |FROM m""".stripMargin)
 }

@@ -503,4 +503,83 @@ class CorpusRunnerSpec extends SparkSpec {
     a should not be empty
     b shouldBe a
   }
+
+  it should "release what each step persisted, keeping only the returned corpus" in {
+    // every step that caches or checkpoints inside its operators, chained
+    // in memory: after the run only the last step's checkpoint (the
+    // returned corpus) is persisted, and the accounting and corpus equal
+    // the step-by-step loop that keeps every intermediate alive
+    import org.apache.spark.sql.execution.LogicalRDD
+    val evalPath = "/tmp/graft-corpus-release-eval"
+    Tables.embeddings(spark, dir).filter(col("vec_id") % 50 === 7L)
+      .select("vec_id", "embedding").write.mode("overwrite").parquet(evalPath)
+    val c = conf(
+      s"""{"op": "dedup_minhash", "threshold": 0.7},
+        |{"op": "span_scrub", "window": 8},
+        |{"op": "span_dedup", "window": 8, "threshold": 0.5},
+        |{"op": "ppl_gate", "threshold": 0.9},
+        |{"op": "semantic_decontam", "evalSource": "parquet://$evalPath",
+        | "vectorSource": "parquet://$dir/embeddings.parquet", "threshold": 0.3},
+        |{"op": "dsir_sample", "keepLangs": ["en"], "threshold": 0.0},
+        |{"op": "rank_gate", "threshold": 0.8},
+        |{"op": "dedup_simhash", "maxHamming": 0}""".stripMargin)
+    val sc = spark.sparkContext
+    // the entry count is package-private in Spark; it is a public method
+    // in the bytecode
+    val cacheManager = spark.sharedState.cacheManager
+    def entries = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    val before = sc.getPersistentRDDs.keySet
+    val entries0 = entries
+    val result = CorpusRunner.run(spark, c)
+    val corpusRdd = result.corpus.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+    }
+    // the counting job filled the checkpoint: its lineage is cut
+    corpusRdd.isCheckpointed shouldBe true
+    (sc.getPersistentRDDs.keySet -- before) shouldBe Set(corpusRdd.id)
+    entries shouldBe entries0
+
+    val cc = c.corpus.get
+    val input = io.SourceReader.read(spark, c.data, c.columns)
+    val m = Map.newBuilder[String, Double]
+    m += "rows_input" -> input.count().toDouble
+    val expected = cc.steps.zipWithIndex.foldLeft(input) { case (df, (step, i)) =>
+      val out = CorpusRunner.applyStep(df, step, cc).localCheckpoint(false)
+      m += s"rows_after_${i + 1}_${step.op}" -> out.count().toDouble
+      out
+    }
+    result.metrics.filter(_._1.startsWith("rows_")) shouldBe m.result()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
+    rows(result.corpus) shouldBe rows(expected)
+    result.metrics("rows_after_8_dedup_simhash") should be > 0.0
+    result.metrics("rows_after_8_dedup_simhash") should be <
+      result.metrics("rows_input")
+  }
+
+  it should "label components identically on the distributed and driver paths" in {
+    import spark.implicits._
+    // a 10-node chain listed out of order, a pair, and a triangle
+    val pairs = (Seq((5L, 6L), (1L, 2L), (9L, 10L), (3L, 4L), (7L, 8L),
+      (2L, 3L), (6L, 7L), (4L, 5L), (8L, 9L), (20L, 21L),
+      (30L, 31L), (31L, 32L), (30L, 32L))).toDF("da", "db")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    val driver = labels(queries.LlmData.componentLabels(spark, pairs))
+    driver.map(_._2).distinct shouldBe Seq(1L, 20L, 30L)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val distributed = queries.LlmData.componentLabels(spark, pairs,
+      maxDriverEdges = 0)
+    labels(distributed) shouldBe driver
+    // edges and every round's labels released: at most the returned
+    // checkpoint is left
+    (sc.getPersistentRDDs.keySet -- before).size should be <= 1
+    // a round budget the chain cannot converge in fails loudly
+    intercept[IllegalStateException] {
+      queries.LlmData.componentLabels(spark, pairs, maxDriverEdges = 0,
+        maxRounds = 1)
+    }.getMessage should include("after 1 rounds")
+  }
 }
