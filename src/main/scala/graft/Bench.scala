@@ -46,7 +46,7 @@ object Bench {
       r.withColumn("rn",
         row_number().over(Window.partitionBy("r_regionkey").orderBy("r_regionkey"))).count()
       // range-partitioner + two-pass rank machinery (plans.GlobalRank)
-      graft.plans.GlobalRank.withNtile(r, Seq(col("r_regionkey")), 2, "b").count()
+      graft.plans.GlobalRank.withNtile(r, Seq(col("r_regionkey")), 2, "b").frame.count()
       spark.catalog.clearCache()
     }
     var errors = Map.empty[String, String]

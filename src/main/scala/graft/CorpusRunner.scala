@@ -3,7 +3,7 @@ package graft
 import graft.config.{ConfigValidator, CorpusConf, CorpusStepConf, GraftConf}
 import graft.functions.GraftFunctions.textDedupKey
 import graft.io.{Savepoints, SourceReader}
-import graft.plans.{Eager, Held}
+import graft.plans.Held
 import graft.text.{RegexReplacer, TextQuality}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -74,10 +74,12 @@ import org.apache.spark.sql.functions._
   * one row per group. Each step's output is materialized once, by its
   * savepoint or by a local checkpoint whose filling job also counts its
   * rows, so the row accounting costs no job of its own in memory (a
-  * savepoint's count reads the written parquet). Once a step's output
-  * exists, every cache and checkpoint the step made ([[Held]]) and the
-  * previous step's checkpoint are released; only the returned corpus
-  * stays persisted.
+  * savepoint's count reads the written parquet). Every operator hands the
+  * step the caches and checkpoints it made as a [[Held]] (the rank gates
+  * and the curriculum layout their range sorts, the dedup steps their
+  * pair caches and component labels); once the step's output exists,
+  * those and the previous step's checkpoint are released, and only the
+  * returned corpus stays persisted.
   */
 object CorpusRunner extends Logging {
 
@@ -143,7 +145,7 @@ object CorpusRunner extends Logging {
         // the output now exists on its own: nothing the step persisted,
         // nor the previous step's checkpoint, is read again
         stepped.release()
-        if (!savepointing && i > startIdx) Eager.release(df)
+        if (!savepointing && i > startIdx) Held.release(df)
         m += s"rows_after_${i + 1}_${step.op}" -> n.toDouble
         m += s"secs_${i + 1}_${step.op}" ->
           math.round((System.nanoTime() - t0) / 1e7) / 100.0
@@ -356,13 +358,13 @@ object CorpusRunner extends Logging {
         // two-pass range-sort ntile — no single-partition window.
         val ppl = queries.LlmData
           .unigramPplHeld(df.select(col(id), col(text)), id, text)
-        val (pct, pctP) = graft.plans.GlobalRank
-          .withNtilePersisted(ppl.frame, Seq(col("ppl"), col("doc_id")), 100, "pct")
-        val keep = pct
+        val pct = graft.plans.GlobalRank
+          .withNtile(ppl.frame, Seq(col("ppl"), col("doc_id")), 100, "pct")
+        val keep = pct.frame
           .filter(col("pct") <=
             math.max(1, math.round(step.threshold * 100).toInt))
           .select(col("doc_id").as(id))
-        Held(df.join(keep, Seq(id), "left_semi"), ppl.handles :+ pctP)
+        Held(df.join(keep, Seq(id), "left_semi"), ppl.handles ++ pct.handles)
       case "rank_gate" =>
         // per-GROUP fairness gate: keep the top ⌈threshold·n⌉ (min 1) of
         // EACH groupColumn slice by unigram entropy (the text-only
@@ -376,19 +378,18 @@ object CorpusRunner extends Logging {
           .docEntropyOf(df.select(col(id), col(text)), id, text)
           .select(col("doc_id").as(id), col("entropy_bits"))
         val scored = df.select(col(id), col(step.groupColumn)).join(ent, id)
-        val (ranked, rankedP) = graft.plans.GlobalRank.withRowNumberPersisted(
-          scored,
+        graft.plans.GlobalRank.withRowNumber(scored,
           Seq(col(step.groupColumn), col("entropy_bits"), col(id)), "__rn")
-        val stats = ranked.groupBy(step.groupColumn)
-          .agg(min("__rn").as("__rn0"), count(lit(1)).as("__n"))
-        val keep = ranked.join(broadcast(stats), step.groupColumn)
-          // ascending rank ⇒ the top-entropy docs are the LAST k ranks
-          .filter(col("__rn") - col("__rn0") >=
-            col("__n") - greatest(ceil(col("__n") * step.threshold), lit(1L)))
-          .select(col(id))
-        // the range-sorted rank intermediate is the step's one handle
-        // (unpersist on the derived frame would be a sameResult-miss no-op)
-        Held(df.join(keep, Seq(id), "left_semi"), Seq(rankedP))
+          .map { ranked =>
+            val stats = ranked.groupBy(step.groupColumn)
+              .agg(min("__rn").as("__rn0"), count(lit(1)).as("__n"))
+            val keep = ranked.join(broadcast(stats), step.groupColumn)
+              // ascending rank ⇒ the top-entropy docs are the LAST k ranks
+              .filter(col("__rn") - col("__rn0") >=
+                col("__n") - greatest(ceil(col("__n") * step.threshold), lit(1L)))
+              .select(col(id))
+            df.join(keep, Seq(id), "left_semi")
+          }
       case "model_gate" =>
         // CCNet/fastText-style CLASSIFIER gate (text.QualityModel): fit a
         // target-vs-rest linear model on the trusted slice (keepLangs
@@ -473,14 +474,14 @@ object CorpusRunner extends Logging {
         // two-pass rank machinery as rank_gate — no global window.
         val scored = df.withColumn("__score",
           size(split(col(text), " ")).cast("double"))
-        val ord = queries.LlmData.curriculumOrderOf(
+        queries.LlmData.curriculumOrderOf(
           scored.select(col(id), col("__score")), id, "__score", step.tiers,
-          step.salt)
-          .select(col("doc_id").as(id), col("tier").as("cur_tier"),
-            col("ord").as("cur_ord"))
-        Held(scored.drop("__score").join(ord, id)
-          .repartitionByRange(col("cur_ord"))
-          .sortWithinPartitions("cur_ord"))
+          step.salt).map { ord =>
+          scored.drop("__score").join(ord.select(col("doc_id").as(id),
+            col("tier").as("cur_tier"), col("ord").as("cur_ord")), id)
+            .repartitionByRange(col("cur_ord"))
+            .sortWithinPartitions("cur_ord")
+        }
       case other =>
         throw new IllegalArgumentException(s"unknown corpus op '$other'")
     }

@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * reviewable as a committed artifact and diffable between rounds — a
   * silently-acquired exchange or a lost PushedFilters shows up in the
   * diff before it shows up in the bench. Named queries instead print
-  * their plans to stdout, for a before/after diff of one change.
+  * their plans to stdout, for a before/after diff of one change. A query
+  * that persists an intermediate while it is built prints its lazy form
+  * ([[SparkEntry.lazyQuery]]): the plan its final checkpoint runs, not a
+  * scan of that checkpoint.
   *
   * Run: sbt "runMain graft.PlanDump [sfDir] [query ...]"
   */
@@ -77,20 +80,17 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val named = args.drop(1)
-    // keep plans LAZY: the rank/LM family eagerly localCheckpoints its
-    // small outputs (graft.plans.Eager) to release internal caches, which
-    // would collapse the dumped plan to a checkpoint scan — the whole
-    // point of this artifact is the FULL operator plan
-    System.setProperty("graft.plans.lazy", "true")
     val spark = GraftSession.local(8, "graft-plan-dump")
     if (named.nonEmpty) named.foreach(name => println(plan(spark, sfDir, name)))
     else writeHeadline(spark, sfDir)
     spark.stop()
   }
 
-  private def plan(spark: SparkSession, sfDir: String, name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
+  private def plan(spark: SparkSession, sfDir: String, name: String): String = {
+    val q = SparkEntry.lazyQuery(name, spark, sfDir)
+    try q.frame.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    finally q.release()
+  }
 
   private def writeHeadline(spark: SparkSession, sfDir: String): Unit = {
     val sb = new StringBuilder

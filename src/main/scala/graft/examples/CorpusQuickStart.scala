@@ -102,7 +102,7 @@ object CorpusQuickStart {
         org.apache.spark.sql.functions.lit(1)).as("raw")).collect().head
     println(s"[corpus] soft-dedup effective doc mass: ${wAgg.getDouble(0)} " +
       s"of ${wAgg.getLong(1)} surviving rows")
-    val sharded = LlmData.corpusShuffleOf(cleaned, "doc_id", shards = 8)
+    val sharded = LlmData.corpusShuffleOf(cleaned, "doc_id", shards = 8).checkpointed()
     println(s"[corpus] cleaned corpus: $n docs across " +
       s"${sharded.select("shard").distinct().count()} shards")
 

@@ -108,13 +108,10 @@ object ModelHealth {
     val step = 1.0 / k
     val targetRanks = (1 until k)
       .map(i => math.max(1L, math.ceil(i * step * n).toLong)).distinct
-    val (rn, rnP) = graft.plans.GlobalRank
-      .withRowNumberPersisted(b, Seq(col("__v")), "__rn")
-    val innerSplits = rn
-      .filter(col("__rn").isin(targetRanks: _*))
-      .select("__v").distinct()
-      .collect().map(_.getDouble(0)).sorted
-    rnP.unpersist() // collect above consumed the rank; free its sort cache
+    val innerSplits = graft.plans.GlobalRank
+      .withRowNumber(b, Seq(col("__v")), "__rn")
+      .map(_.filter(col("__rn").isin(targetRanks: _*)).select("__v").distinct())
+      .collected().collect().map(_.getDouble(0)).sorted
     // Bucketizer semantics on [-inf, s1..sm, +inf]: bucket = #{s_j <= x}
     def bucketExpr(c: org.apache.spark.sql.Column) =
       innerSplits.zipWithIndex.foldLeft(lit(0)) {

@@ -1,6 +1,6 @@
 package graft.metrics
 
-import graft.plans.{Eager, GlobalRank}
+import graft.plans.{GlobalRank, Held}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -19,7 +19,7 @@ import scala.jdk.CollectionConverters._
   *    practice; bucket scores first if not) — never over the full fact
   *    table. Those are range-sorted ascending with running sums of the
   *    count `c` and the positives `pos`
-  *    ([[graft.plans.GlobalRank.withRunningSumsPersisted]]: partition-
+  *    ([[graft.plans.GlobalRank.withRunningSums]]: partition-
   *    parallel prefix sums, not an unpartitioned `Window.orderBy` that
   *    serializes into one task). A threshold's descending counts are
   *    total − ascending + own, exact because every count is an
@@ -128,14 +128,32 @@ object StandardMetrics {
       .agg(count(lit(1)).as("c"), sum(col(labelCol).cast("double")).as("pos"))
 
   /** The ranked pass: distinct scores ascending with inclusive running sums
-    * `cumC`/`cumPos`, the persisted sort to release once consumed, and the
+    * `cumC`/`cumPos`, held with the sort to release once consumed, and the
     * grand totals `n` (rows) and `npos` (positives). */
-  private final case class Ranked(frame: DataFrame, sorted: DataFrame, n: Double, npos: Double)
+  private final case class Ranked(held: Held, n: Double, npos: Double) {
+
+    /** The ranked frame plus precision / recall / F_β at every distinct
+      * score threshold (predict positive when score ≥ t): tp and cnt are
+      * the descending inclusive counts, total − ascending + own. */
+    def withFMeasure(beta: Double): Held = held.map { frame =>
+      val b2 = beta * beta
+      val tp = lit(npos) - col("cumPos") + col("pos")
+      val cnt = lit(n) - col("cumC") + col("c")
+      frame
+        .withColumn("thresh", col("s"))
+        .withColumn("precision", tp / cnt)
+        .withColumn("recall", tp / lit(npos))
+        .withColumn("fbeta",
+          when(col("precision") + col("recall") > 0,
+            (lit(1 + b2) * col("precision") * col("recall")) /
+              (lit(b2) * col("precision") + col("recall"))).otherwise(lit(0.0)))
+    }
+  }
 
   private def ranked(df: DataFrame, labelCol: String, scoreCol: String): Ranked = {
-    val (frame, sorted, tot) = GlobalRank.withRunningSumsPersisted(
+    val (held, tot) = GlobalRank.withRunningSums(
       byScore(df, labelCol, scoreCol), Seq(col("s")), Seq("c" -> "cumC", "pos" -> "cumPos"))
-    Ranked(frame, sorted, tot("c"), tot("pos"))
+    Ranked(held, tot("c"), tot("pos"))
   }
 
   /** [[auroc]] as an aggregate over the ranked frame. */
@@ -143,23 +161,6 @@ object StandardMetrics {
     val avgrank = col("cumC") - col("c") + (col("c") + 1) / 2.0
     val (np, n) = (sum("pos"), sum("c"))
     ((sum(col("pos") * avgrank) - np * (np + 1) / 2.0) / (np * (n - np))).as("auroc")
-  }
-
-  /** The ranked frame plus precision / recall / F_β at every distinct
-    * score threshold (predict positive when score ≥ t): tp and cnt are the
-    * descending inclusive counts, total − ascending + own. */
-  private def withFMeasure(r: Ranked, beta: Double): DataFrame = {
-    val b2 = beta * beta
-    val tp = lit(r.npos) - col("cumPos") + col("pos")
-    val cnt = lit(r.n) - col("cumC") + col("c")
-    r.frame
-      .withColumn("thresh", col("s"))
-      .withColumn("precision", tp / cnt)
-      .withColumn("recall", tp / lit(r.npos))
-      .withColumn("fbeta",
-        when(col("precision") + col("recall") > 0,
-          (lit(1 + b2) * col("precision") * col("recall")) /
-            (lit(b2) * col("precision") + col("recall"))).otherwise(lit(0.0)))
   }
 
   private val curveCols = Seq("thresh", "precision", "recall", "fbeta")
@@ -173,29 +174,24 @@ object StandardMetrics {
     * for ties: AUROC = (Σ ranks₊ − n₊(n₊+1)/2) / (n₊ n₋). Exact — identical
     * to the trapezoidal ROC integral mllib computes. One aggregate over the
     * ranked pass; the one-row result is collected and the sort released. */
-  def auroc(df: DataFrame, labelCol: String, scoreCol: String): DataFrame = {
-    val r = ranked(df, labelCol, scoreCol)
-    Eager.collected(r.frame.agg(aurocCol))(r.sorted.unpersist())
-  }
+  def auroc(df: DataFrame, labelCol: String, scoreCol: String): DataFrame =
+    ranked(df, labelCol, scoreCol).held.map(_.agg(aurocCol)).collected()
 
   /** Precision / recall / F_β at every distinct score threshold (predict
     * positive when score ≥ t). Ref: fMeasureByThreshold with β=2 feeding the
     * best-threshold search (WebCustomMetricsEvaluator.scala:38-65). The
     * curve is checkpointed and the sort released before it returns. */
   def fMeasureByThreshold(df: DataFrame, labelCol: String, scoreCol: String,
-                          beta: Double): DataFrame = {
-    val r = ranked(df, labelCol, scoreCol)
-    Eager.checkpoint(withFMeasure(r, beta).select(curveCols.map(col): _*))(r.sorted.unpersist())
-  }
+                          beta: Double): DataFrame =
+    ranked(df, labelCol, scoreCol).withFMeasure(beta)
+      .map(_.select(curveCols.map(col): _*)).checkpointed()
 
   /** The best-F_β threshold row (deterministic tie-break: the lower
     * threshold wins). */
   def bestThreshold(df: DataFrame, labelCol: String, scoreCol: String,
-                    beta: Double): DataFrame = {
-    val r = ranked(df, labelCol, scoreCol)
-    Eager.collected(withFMeasure(r, beta).agg(bestCol)
-      .where(col("best").isNotNull).select("best.*"))(r.sorted.unpersist())
-  }
+                    beta: Double): DataFrame =
+    ranked(df, labelCol, scoreCol).withFMeasure(beta)
+      .map(_.agg(bestCol).where(col("best").isNotNull).select("best.*")).collected()
 
   /** AUROC and the best-F_β row of a binary scorer. */
   final case class BinarySummary(auroc: Double, thresh: Double, precision: Double,
@@ -205,9 +201,8 @@ object StandardMetrics {
     * aggregate over it. */
   def binarySummary(df: DataFrame, labelCol: String, scoreCol: String,
                     beta: Double): BinarySummary = {
-    val r = ranked(df, labelCol, scoreCol)
-    val row = try withFMeasure(r, beta).agg(aurocCol, bestCol).head()
-      finally r.sorted.unpersist()
+    val fm = ranked(df, labelCol, scoreCol).withFMeasure(beta)
+    val row = try fm.frame.agg(aurocCol, bestCol).head() finally fm.release()
     val best = row.getStruct(1)
     BinarySummary(row.getDouble(0), best.getAs[Number]("thresh").doubleValue(),
       best.getAs[Double]("precision"), best.getAs[Double]("recall"),
@@ -296,26 +291,21 @@ object StandardMetrics {
     * targeting read of a binary scorer. The cumulative step is a
     * decile≤decile self-join on the 10-row summary, not a global window. */
   def gainsDeciles(df: DataFrame, labelCol: String, scoreCol: String,
-                   tieCol: String): DataFrame = {
-    val (ranked, rankedP) = graft.plans.GlobalRank.withNtilePersisted(
-      df, Seq(col(scoreCol).desc, col(tieCol)), 10, "decile")
-    // tiny (10 rows): eagerly materialized for both sides of the
-    // cumulative self-join, which also lets the ntile sort cache be
-    // released HERE (unpersist on the exact persisted handle — on the
-    // derived frame it would be a sameResult-miss no-op)
-    val per = graft.plans.Eager.checkpoint(
-      ranked.groupBy("decile")
-        .agg(count(lit(1)).as("n"),
-          sum(col(labelCol).cast("long")).as("n_pos"))) { rankedP.unpersist() }
-    val tot = per.agg(sum("n_pos").as("__tot"))
-    per.as("a")
-      .join(per.select(col("decile").as("__d"), col("n_pos").as("__p")),
+                   tieCol: String): Held = {
+    val ranked = GlobalRank.withNtile(df, Seq(col(scoreCol).desc, col(tieCol)), 10, "decile")
+    // 10 rows, read three times below: cached once, held with the sort
+    val per = Held.cached(ranked.frame.groupBy("decile")
+      .agg(count(lit(1)).as("n"), sum(col(labelCol).cast("long")).as("n_pos")))
+    val tot = per.frame.agg(sum("n_pos").as("__tot"))
+    Held(per.frame.as("a")
+      .join(per.frame.select(col("decile").as("__d"), col("n_pos").as("__p")),
         col("__d") <= col("decile"))
       .groupBy("decile", "n", "n_pos")
       .agg(sum("__p").as("cum_pos"))
       .crossJoin(broadcast(tot))
       .withColumn("cum_capture", col("cum_pos") / col("__tot"))
-      .select("decile", "n", "n_pos", "cum_pos", "cum_capture")
+      .select("decile", "n", "n_pos", "cum_pos", "cum_capture"),
+      ranked.handles ++ per.handles)
   }
 
   /** Scalar calibration summary: ECE (expected calibration error — the

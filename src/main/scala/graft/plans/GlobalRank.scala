@@ -26,14 +26,14 @@ import org.apache.spark.storage.StorageLevel
   * sorted frame is persisted (memory-and-disk) so both passes see one
   * materialization — also what you'd do on a cluster to avoid re-sorting.
   *
-  * CACHE LIFECYCLE. The persisted frame is an INTERNAL intermediate, and
-  * `Dataset.unpersist` on the RETURNED frame does NOT release it (the
-  * extra Project nodes defeat the sameResult cache lookup). Callers that
-  * want deterministic release must either use [[withRowNumberPersisted]]
-  * (which exposes the exact persisted handle) or the [[rowNumbered]]
-  * consume-and-release wrapper; plain [[withRowNumber]] leaves the cache
-  * entry alive for the session — acceptable for one-shot jobs, not for a
-  * long-lived service.
+  * CACHE LIFECYCLE. The persisted sort is an INTERNAL intermediate, and
+  * `Dataset.unpersist` on a derived frame does NOT release it (the extra
+  * Project nodes defeat the sameResult cache lookup). The row-number,
+  * ntile, running-sum and exact-percentile ops therefore return a
+  * [[Held]]: the lazy result plus the exact persisted sort. The caller
+  * materializes the result (`checkpointed()`, `collected()`, a savepoint)
+  * and releases the sort; reading `.frame` alone, as the weighted-
+  * percentile ops do, leaves the sort cached for the session.
   */
 object GlobalRank {
 
@@ -79,48 +79,14 @@ object GlobalRank {
       pidCol)
   }
 
-  /** Adds `outCol` = exact 1-based global row number under `sortCols`.
-    * The returned frame depends on an internally persisted sort; use
-    * [[withRowNumberPersisted]] or [[rowNumbered]] when the caller needs
-    * to release that cache entry deterministically. */
-  def withRowNumber(df: DataFrame, sortCols: Seq[Column], outCol: String): DataFrame =
-    withRowNumberPersisted(df, sortCols, outCol)._1
-
-  /** [[withRowNumber]] plus the EXACT persisted intermediate as a handle:
-    * `unpersist()` THAT (after the result is materialized — a local
-    * checkpoint, a parquet write, a collect) to release the cache entry.
-    * Unpersisting on the returned RESULT frame is a silent no-op. */
-  def withRowNumberPersisted(df: DataFrame, sortCols: Seq[Column],
-                             outCol: String): (DataFrame, DataFrame) = {
+  /** Adds `outCol` = exact 1-based global row number under `sortCols`,
+    * holding the persisted sort the frame reads. */
+  def withRowNumber(df: DataFrame, sortCols: Seq[Column], outCol: String): Held = {
     val sorted = rangeSorted(df, sortCols)
     val offsets = countedOffsets(sorted)
-    val out = sorted
+    Held(sorted
       .withColumn(outCol, offsetExprOf(offsets) + col("__mid").bitwiseAND(RowMask) + 1)
-      .drop("__mid")
-    (out, sorted)
-  }
-
-  /** Consume-and-release wrapper: row-number `df`, apply `consume`, EAGERLY
-    * materialize its result as a local checkpoint, and unpersist the
-    * internal sorted frame before returning. The right shape whenever the
-    * consumer's output is much smaller than its input (a final aggregate,
-    * a quantile row, a keep-set) — the checkpoint is cheap and the
-    * range-sorted cache entry is provably released. */
-  def rowNumbered(df: DataFrame, sortCols: Seq[Column], outCol: String)
-                 (consume: DataFrame => DataFrame): DataFrame =
-    rowNumberedN(df, sortCols, outCol)((ranked, _) => consume(ranked))
-
-  /** [[rowNumbered]] whose consumer also receives the TOTAL row count —
-    * already on the driver from the offsets job, so rank-target consumers
-    * (quantile-by-rank, top-fraction cuts) need no extra `count()` job. */
-  def rowNumberedN(df: DataFrame, sortCols: Seq[Column], outCol: String)
-                  (consume: (DataFrame, Long) => DataFrame): DataFrame = {
-    val sorted = rangeSorted(df, sortCols)
-    val offsets = countedOffsets(sorted)
-    val ranked = sorted
-      .withColumn(outCol, offsetExprOf(offsets) + col("__mid").bitwiseAND(RowMask) + 1)
-      .drop("__mid")
-    Eager.checkpoint(consume(ranked, offsets.last)) { sorted.unpersist() }
+      .drop("__mid"), Seq(sorted))
   }
 
   /** Adds, for each `(inCol, outCol)` in `sums`, the inclusive running sum
@@ -132,21 +98,12 @@ object GlobalRank {
     * sort, then one tiny job computes per-partition totals whose prefix
     * sums become per-partition offsets (O(partitions) driver state); the
     * within-partition running sum is an ordinary keyed window over the
-    * partition id — every stage partition-parallel. The returned frame
-    * depends on an internally persisted sort; use
-    * [[withRunningSumsPersisted]] to release it. */
-  def withRunningSums(df: DataFrame, sortCols: Seq[Column],
-                      sums: Seq[(String, String)]): DataFrame =
-    withRunningSumsPersisted(df, sortCols, sums)._1
-
-  /** [[withRunningSums]] plus the EXACT persisted sort (see
-    * [[withRowNumberPersisted]] for the release contract) and the grand
-    * total of every summed input column, keyed by its name — already on
-    * the driver from the per-partition totals job, so consumers need no
+    * partition id — every stage partition-parallel. Also returns the
+    * grand total of every summed input column, keyed by its name — already
+    * on the driver from the per-partition totals job, so consumers need no
     * extra aggregate for them. */
-  def withRunningSumsPersisted(df: DataFrame, sortCols: Seq[Column],
-                               sums: Seq[(String, String)])
-      : (DataFrame, DataFrame, Map[String, Double]) = {
+  def withRunningSums(df: DataFrame, sortCols: Seq[Column],
+                      sums: Seq[(String, String)]): (Held, Map[String, Double]) = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val persisted = rangeSorted(df, sortCols)
     val sorted = persisted.withColumn("__pid", pidCol)
@@ -175,7 +132,8 @@ object GlobalRank {
     val withSums = sums.foldLeft(sorted) { case (acc, (in, out)) =>
       acc.withColumn(out, offsetExpr(in) + sum(col(in)).over(w))
     }
-    (withSums.drop("__mid", "__pid"), persisted, offsets.map { case (in, o) => in -> o.last })
+    (Held(withSums.drop("__mid", "__pid"), Seq(persisted)),
+      offsets.map { case (in, o) => in -> o.last })
   }
 
   /** Adds `outCol` = SQL-standard NTILE(k) bucket (1-based) under
@@ -183,13 +141,7 @@ object GlobalRank {
     * twin of `ntile(k).over(Window.orderBy(...))`. The total row count
     * rides the SAME tiny per-partition-counts job the row number already
     * runs — no separate `count()` pass over the sorted frame. */
-  def withNtile(df: DataFrame, sortCols: Seq[Column], k: Int, outCol: String): DataFrame =
-    withNtilePersisted(df, sortCols, k, outCol)._1
-
-  /** [[withNtile]] plus the exact persisted intermediate (see
-    * [[withRowNumberPersisted]] for the release contract). */
-  def withNtilePersisted(df: DataFrame, sortCols: Seq[Column], k: Int,
-                         outCol: String): (DataFrame, DataFrame) = {
+  def withNtile(df: DataFrame, sortCols: Seq[Column], k: Int, outCol: String): Held = {
     val sorted = rangeSorted(df, sortCols)
     val offsets = countedOffsets(sorted)
     val n = offsets.last
@@ -202,42 +154,9 @@ object GlobalRank {
       if (size == 0) r0 + 1 // fewer rows than buckets: row i → bucket i+1
       else when(r0 < cut, floor(r0 / (size + 1)) + 1)
         .otherwise(lit(rem) + floor((r0 - cut) / size) + 1)
-    (sorted.withColumn(outCol, bucket.cast("long")).drop("__mid"), sorted)
+    Held(sorted.withColumn(outCol, bucket.cast("long")).drop("__mid"), Seq(sorted))
   }
 
-  /** Exact interpolated per-group percentiles (PERCENTILE_CONT /
-    * `percentile()` semantics) WITHOUT the per-group value buffer the
-    * exact aggregate carries: `percentile(v, p)` over a low-cardinality
-    * group key buffers EVERY group value in one aggregation buffer — at
-    * 100 TB, billions of values per group → executor OOM. Here the exact
-    * values come from the two-pass range-sort rank instead, in exactly
-    * TWO jobs over one materialization of the sorted frame:
-    *
-    *   1. one tiny per-(partition, group) aggregate — row count, first
-    *      row id, and (when `withAvg`) the value sum — materializes the
-    *      persisted sort AND gives the driver everything else it needs:
-    *      per-partition rank offsets, each group's minimum global rank,
-    *      size and mean (O(partitions × groups) driver rows, small by
-    *      this helper's low-cardinality-group premise);
-    *   2. the two rows flanking index p·(n−1) are filtered out of the
-    *      sorted frame (rank and per-group offset are row-local
-    *      expressions against an O(groups) broadcast-joined stats frame)
-    *      and the standard interpolation v_lo + (h−⌊h⌋)·(v_hi−v_lo)
-    *      lands as an |groups|-row final select.
-    *
-    * NULL values are ignored, exactly as `percentile()` ignores them —
-    * ranking them would inflate n and shift (or null out) the flanks.
-    *
-    * Returns one row per group: (groupCol, n, [avg,] p0, p1, … — one
-    * double column per requested percentile, in `ps` order; `avg` only
-    * when `withAvg`, computed from the SAME tiny-aggregate pass so
-    * callers don't re-scan the input for it). Values are NOT rounded —
-    * callers round for their oracle contract. The output is EAGERLY
-    * materialized as a local checkpoint (it is O(groups) rows by this
-    * helper's very premise) and the range-sorted intermediate is
-    * unpersisted here — on the exact persisted reference, so the release
-    * is real, not the sameResult-miss no-op the naive
-    * `result.unpersist()` would be. */
   /** Exact WEIGHTED per-group percentiles — the weighted lower quantile:
     * the smallest value whose in-group cumulative weight reaches p·W.
     * (The unweighted op interpolates ranks; with weights the standard
@@ -263,7 +182,7 @@ object GlobalRank {
     val in = df.select(col(groupCol), col(valueCol), col(weightCol))
       .filter(col(valueCol).isNotNull && col(weightCol) > 0)
     val run = withRunningSums(in, Seq(col(groupCol), col(valueCol)),
-      Seq(weightCol -> "__cumw"))
+      Seq(weightCol -> "__cumw"))._1.frame
     val tot = in.groupBy(groupCol)
       .agg(sum(col(weightCol)).as("__tot"), count(lit(1)).as("__n"))
     // per-group offset = total weight of groups sorted before it (the
@@ -322,7 +241,7 @@ object GlobalRank {
       .groupBy(col(groupCol), col(valueCol))
       .agg(sum(col(weightCol)).as("__w"))
     val run = withRunningSums(in, Seq(col(groupCol), col(valueCol)),
-      Seq("__w" -> "__cumw"))
+      Seq("__w" -> "__cumw"))._1.frame
     val tot = in.groupBy(groupCol)
       .agg(sum(col("__w")).as("__tot"), count(lit(1)).as("__nv"))
     val off = tot.select(col(groupCol), col("__tot"), col("__nv"))
@@ -357,9 +276,40 @@ object GlobalRank {
     agged.select(outCols: _*)
   }
 
+  /** Exact interpolated per-group percentiles (PERCENTILE_CONT /
+    * `percentile()` semantics) WITHOUT the per-group value buffer the
+    * exact aggregate carries: `percentile(v, p)` over a low-cardinality
+    * group key buffers EVERY group value in one aggregation buffer — at
+    * 100 TB, billions of values per group → executor OOM. Here the exact
+    * values come from the two-pass range-sort rank instead, in exactly
+    * TWO jobs over one materialization of the sorted frame:
+    *
+    *   1. one tiny per-(partition, group) aggregate — row count, first
+    *      row id, and (when `withAvg`) the value sum — materializes the
+    *      persisted sort AND gives the driver everything else it needs:
+    *      per-partition rank offsets, each group's minimum global rank,
+    *      size and mean (O(partitions × groups) driver rows, small by
+    *      this helper's low-cardinality-group premise);
+    *   2. the two rows flanking index p·(n−1) are filtered out of the
+    *      sorted frame (rank and per-group offset are row-local
+    *      expressions against an O(groups) broadcast-joined stats frame)
+    *      and the standard interpolation v_lo + (h−⌊h⌋)·(v_hi−v_lo)
+    *      lands as an |groups|-row final select.
+    *
+    * NULL values are ignored, exactly as `percentile()` ignores them —
+    * ranking them would inflate n and shift (or null out) the flanks.
+    *
+    * Returns one row per group: (groupCol, n, [avg,] p0, p1, … — one
+    * double column per requested percentile, in `ps` order; `avg` only
+    * when `withAvg`, computed from the SAME tiny-aggregate pass so
+    * callers don't re-scan the input for it). Values are NOT rounded —
+    * callers round for their oracle contract. The result is O(groups)
+    * rows by this helper's very premise, held with the range-sorted
+    * intermediate it reads: `checkpointed()` materializes it and releases
+    * the sort. */
   def groupPercentilesExact(df: DataFrame, groupCol: String,
                             valueCol: String, ps: Seq[Double],
-                            withAvg: Boolean = false): DataFrame = {
+                            withAvg: Boolean = false): Held = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       s"percentiles must be in [0,1], got ${ps.mkString(",")}")
     val spark = df.sparkSession
@@ -402,7 +352,7 @@ object GlobalRank {
       StructField("__avg", DoubleType, nullable = false)))
     val stats = spark.createDataFrame(
       new java.util.ArrayList[Row](statRows.asJava), statsSchema)
-    // job 2: flank filter + interpolation agg, eagerly checkpointed
+    // job 2, when the caller materializes it: flank filter + interpolation agg
     val j = sorted
       .withColumn("__rank", offsetExprOf(offsets) + col("__mid").bitwiseAND(RowMask) + 1)
       .join(broadcast(stats), groupCol)
@@ -426,6 +376,6 @@ object GlobalRank {
     }
     val keepCols = Seq(col(groupCol), col("n")) ++
       (if (withAvg) Seq(col("avg")) else Nil) ++ outs
-    Eager.checkpoint(agged.select(keepCols: _*)) { sorted.unpersist() }
+    Held(agged.select(keepCols: _*), Seq(sorted))
   }
 }

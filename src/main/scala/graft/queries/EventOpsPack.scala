@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -339,7 +340,7 @@ object EventOpsPack extends QueryPack {
     * filtered out, and quantile_cont's interpolation is a 5-row final
     * select. Every stage is partition-parallel; no per-group buffer
     * anywhere. */
-  def intereventGaps(s: SparkSession, dir: String): DataFrame = {
+  def intereventGaps(s: SparkSession, dir: String): Held = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
     val gaps = Tables.events(s, dir)
@@ -350,11 +351,11 @@ object EventOpsPack extends QueryPack {
     graft.plans.GlobalRank
       .groupPercentilesExact(gaps, "event_type", "gap_us", Seq(0.5, 0.95),
         withAvg = true) // avg rides the same stats pass — no second scan
-      .select(col("event_type"), col("n").as("n_gaps"),
+      .map(_.select(col("event_type"), col("n").as("n_gaps"),
         round(col("avg") / 1e6, 4).as("avg_gap_s"),
         round(col("p0") / 1e6, 4).as("p50_gap_s"),
         round(col("p1") / 1e6, 4).as("p95_gap_s"))
-      .orderBy("event_type")
+      .orderBy("event_type"))
   }
 
   def cohortRetention(s: SparkSession, dir: String): DataFrame = {
@@ -482,7 +483,7 @@ object EventOpsPack extends QueryPack {
       .groupBy("user_id").agg(min("day").as("day"))
       .groupBy("day").agg(count(lit(1)).as("n_new"))
     graft.plans.GlobalRank
-      .withRunningSums(newPerDay, Seq(col("day")), Seq(("n_new", "cum")))
+      .withRunningSums(newPerDay, Seq(col("day")), Seq(("n_new", "cum")))._1.frame
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("n_new"), col("cum").cast("long").as("cum_users"))
       .orderBy("day")
@@ -621,7 +622,7 @@ object EventOpsPack extends QueryPack {
         round(avg("value"), 6).as("avg_value"))
       .orderBy("dow", "hour")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "seasonality_profile" -> seasonalityProfile,
     "rolling_zscore" -> rollingZscore,
     "gap_fill_locf" -> gapFillLocf,
@@ -643,7 +644,9 @@ object EventOpsPack extends QueryPack {
     "funnel_windowed" -> funnelWindowed,
     "first_touch" -> firstTouchAttribution,
     "multi_touch" -> multiTouchAttribution,
-    "decay_touch" -> decayTouchAttribution,
+    "decay_touch" -> decayTouchAttribution)
+
+  override val held: Map[String, (SparkSession, String) => Held] = Map(
     "interevent_gaps" -> intereventGaps)
 
   val oracle: Map[String, String] = Map(

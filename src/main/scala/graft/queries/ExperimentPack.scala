@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -253,7 +254,7 @@ object ExperimentPack extends QueryPack {
     val v = u.groupBy("m").agg(count(lit(1)).as("c"),
       sum(col("variant")).as("cb"))
     val run = graft.plans.GlobalRank.withRunningSums(
-      v, Seq(col("m")), Seq("c" -> "cum"))
+      v, Seq(col("m")), Seq("c" -> "cum"))._1.frame
     run
       .select(((col("cum") - (col("c") - 1) / 2.0) * col("cb")).as("rbp"),
         col("c"), col("cb"))
@@ -279,19 +280,19 @@ object ExperimentPack extends QueryPack {
     * [p05, p95] (PERCENTILE_CONT semantics through the two-pass rank
     * machinery — no per-group value buffer), then average. Metric rounded
     * to 6 dp first so the percentile inputs are engine-identical. */
-  def winsorizedMean(s: SparkSession, dir: String): DataFrame = {
+  def winsorizedMean(s: SparkSession, dir: String): Held = {
     val u = perUser(s, dir).withColumn("m", round(col("m"), 6))
-    val pct = graft.plans.GlobalRank
+    graft.plans.GlobalRank
       .groupPercentilesExact(u, "variant", "m", Seq(0.05, 0.95))
-      .select(col("variant"), col("p0").as("lo"), col("p1").as("hi"))
-    u.join(broadcast(pct), "variant")
-      .withColumn("w", least(greatest(col("m"), col("lo")), col("hi")))
-      .groupBy("variant")
-      .agg(count(lit(1)).as("n"),
-        round(max("lo"), 6).as("lo"), round(max("hi"), 6).as("hi"),
-        round(avg("m"), 6).as("raw_mean"),
-        round(avg("w"), 6).as("winsor_mean"))
-      .orderBy("variant")
+      .map(p => u.join(broadcast(
+          p.select(col("variant"), col("p0").as("lo"), col("p1").as("hi"))), "variant")
+        .withColumn("w", least(greatest(col("m"), col("lo")), col("hi")))
+        .groupBy("variant")
+        .agg(count(lit(1)).as("n"),
+          round(max("lo"), 6).as("lo"), round(max("hi"), 6).as("hi"),
+          round(avg("m"), 6).as("raw_mean"),
+          round(avg("w"), 6).as("winsor_mean"))
+        .orderBy("variant"))
   }
 
   // --------------------------------------------- quantile treatment effects
@@ -302,21 +303,23 @@ object ExperimentPack extends QueryPack {
     * differences. A treatment that moves the tail but not the median
     * shows up here and nowhere in [[abWelch]]. Metric rounded to 6 dp
     * first so the percentile inputs are engine-identical. */
-  def quantileTreatment(s: SparkSession, dir: String): DataFrame = {
+  def quantileTreatment(s: SparkSession, dir: String): Held = {
     val u = perUser(s, dir).withColumn("m", round(col("m"), 6))
-    val p = graft.plans.GlobalRank
+    val pct = graft.plans.GlobalRank
       .groupPercentilesExact(u, "variant", "m", Seq(0.1, 0.5, 0.9))
+    // two rows, read twice below: cached once, held with the sort
+    val Held(p, pH) = Held.cached(pct.frame)
     val c = p.filter(col("variant") === 0)
       .select(col("p0").as("c10"), col("p1").as("c50"), col("p2").as("c90"))
     val t = p.filter(col("variant") === 1)
       .select(col("p0").as("t10"), col("p1").as("t50"), col("p2").as("t90"))
-    t.crossJoin(broadcast(c)).select(
+    Held(t.crossJoin(broadcast(c)).select(
       round(col("c10"), 6).as("ctrl_p10"), round(col("t10"), 6).as("trt_p10"),
       (round(col("t10") - col("c10"), 6) + lit(0.0)).as("qte_p10"),
       round(col("c50"), 6).as("ctrl_p50"), round(col("t50"), 6).as("trt_p50"),
       (round(col("t50") - col("c50"), 6) + lit(0.0)).as("qte_p50"),
       round(col("c90"), 6).as("ctrl_p90"), round(col("t90"), 6).as("trt_p90"),
-      (round(col("t90") - col("c90"), 6) + lit(0.0)).as("qte_p90"))
+      (round(col("t90") - col("c90"), 6) + lit(0.0)).as("qte_p90")), pct.handles ++ pH)
   }
 
   // ------------------------------------------------ Nelson-Aalen hazard
@@ -356,16 +359,18 @@ object ExperimentPack extends QueryPack {
 
   // ---------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected def direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ab_welch" -> abWelch,
     "msprt_peek" -> msprtPeek,
     "cuped_adjust" -> cupedAdjust,
     "diff_in_diff" -> diffInDiff,
     "mann_whitney" -> mannWhitney,
-    "winsorized_mean" -> winsorizedMean,
-    "quantile_treatment" -> quantileTreatment,
     "nelson_aalen" -> nelsonAalen,
     "kaplan_meier" -> kaplanMeier)
+
+  override def held: Map[String, (SparkSession, String) => Held] = Map(
+    "winsorized_mean" -> winsorizedMean,
+    "quantile_treatment" -> quantileTreatment)
 
   def oracle: Map[String, String] = Map(
     "diff_in_diff" ->

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,12 +30,11 @@ import org.apache.spark.sql.functions._
 object LlmData extends QueryPack with LlmDedupOps with LlmQuantOps
     with LlmTextOps with LlmPplOps with LlmMixOps {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact" -> dedupExact,
     "soft_dedup_weights" -> softDedupWeights,
     "label_agreement" -> labelAgreement,
     "embed_corr" -> embedCorr,
-    "novelty_curve" -> noveltyCurve,
     "source_kl" -> sourceKl,
     "dedup_normalized" -> dedupNormalized,
     "fuzzy_pairs" -> ((s, d) => fuzzyPairs(s, d)),
@@ -57,7 +57,6 @@ object LlmData extends QueryPack with LlmDedupOps with LlmQuantOps
     "quality_filter" -> qualityFilter,
     "embed_stats" -> embedStats,
     "embed_rp" -> embedRp,
-    "curriculum_order" -> curriculumOrder,
     "text_stats" -> textStats,
     "token_bpe" -> tokenBpe,
     "bpe_train" -> bpeTrain,
@@ -93,25 +92,18 @@ object LlmData extends QueryPack with LlmDedupOps with LlmQuantOps
     "span_scrub" -> spanScrub,
     "dsir_weights" -> dsirWeights,
     "semdedup" -> ((s, d) => semDedup(s, d)),
-    "corpus_shuffle" -> ((s, d) => corpusShuffle(s, d)),
     "unigram_ppl" -> unigramPpl,
     "bigram_ppl" -> bigramPpl,
-    "trigram_ppl" -> trigramPpl,
-    "fourgram_ppl" -> fourgramPpl,
-    "fivegram_ppl" -> fivegramPpl,
     "bm25_topk" -> bm25TopK,
     "pmi_bigrams" -> pmiBigrams,
-    "score_rank_norm" -> scoreRankNorm,
     "weighted_sample" -> ((s, d) => weightedSample(s, d)),
     "semantic_decontam" -> ((s, d) => semanticDecontam(s, d)),
     "semantic_decontam_ann" -> ((s, d) => semanticDecontamAnn(s, d)),
-    "quality_tiers" -> qualityTiers,
     "corpus_diff" -> corpusDiff,
     "ann_sq8" -> ((s, d) => annSq8(s, d)),
     "minhash_est_err" -> minhashEstErr,
     "source_overlap" -> sourceOverlap,
     "doc_entropy" -> docEntropy,
-    "vocab_zipf" -> vocabZipf,
     "vocab_heaps" -> vocabHeaps,
     "source_report" -> sourceReport,
     "embed_outliers" -> embedOutliers,
@@ -119,6 +111,17 @@ object LlmData extends QueryPack with LlmDedupOps with LlmQuantOps
     "pack_stats" -> ((s, d) => packStats(s, d)),
     "dedup_minhash_incr" -> ((s, d) => dedupMinhashIncr(s, d)),
     "simhash_neardup" -> simhashNeardupProfile)
+
+  override val held: Map[String, (SparkSession, String) => Held] = Map(
+    "novelty_curve" -> noveltyCurve,
+    "curriculum_order" -> curriculumOrder,
+    "corpus_shuffle" -> ((s, d) => corpusShuffle(s, d)),
+    "trigram_ppl" -> trigramPpl,
+    "fourgram_ppl" -> fourgramPpl,
+    "fivegram_ppl" -> fivegramPpl,
+    "score_rank_norm" -> scoreRankNorm,
+    "quality_tiers" -> qualityTiers,
+    "vocab_zipf" -> vocabZipf)
 
   /** Per-family oracle maps live beside their implementations —
     * [[LlmDedupOps]], [[LlmAnnOps]], [[LlmQuantOps]], [[LlmTextOps]], [[LlmPplOps]],

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.plans.{Eager, Held}
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -580,7 +580,7 @@ trait LlmDedupOps extends LlmCore {
         lbls = next
         rounds += 1
       }
-      Eager.checkpoint(lbls) { edges.unpersist(); lbls.unpersist() }
+      Held(lbls, Seq(edges, lbls)).checkpointed()
     }
   }
 

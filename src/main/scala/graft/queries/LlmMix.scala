@@ -72,7 +72,7 @@ trait LlmMixOps extends LlmCore {
       .selectExpr(s"$idCol AS doc_id",
         s"size(split($textCol, ' ')) AS n_tokens")
     graft.plans.GlobalRank
-      .withRunningSums(toks, Seq(col("doc_id")), Seq("n_tokens" -> "cum"))
+      .withRunningSums(toks, Seq(col("doc_id")), Seq("n_tokens" -> "cum"))._1.frame
       .withColumn("bin_id",
         ((col("cum") - col("n_tokens")) / budget).cast("long") + 1)
   }
@@ -332,23 +332,22 @@ trait LlmMixOps extends LlmCore {
     * NTILE from the two-pass rank machinery, and a final partial
     * aggregate. Integer counts everywhere; only the final fractions
     * divide, rounded at 6 dp. */
-  def noveltyCurve(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir).cache()
+  def noveltyCurve(s: SparkSession, dir: String): Held = {
+    val Held(sh, shH) = Held.cached(shingles(s, dir))
     val first = sh.groupBy("s").agg(min("doc_id").as("first_doc"))
     val perDoc = sh.join(first, "s")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_sh"),
         sum((col("doc_id") === col("first_doc")).cast("long")).as("n_new"))
-    val (tiered, tieredP) = graft.plans.GlobalRank.withNtilePersisted(
+    val tiered = graft.plans.GlobalRank.withNtile(
       perDoc, Seq(col("doc_id")), 10, "decile")
-    graft.plans.Eager.checkpoint(
-      tiered.groupBy("decile")
+    Held(tiered.frame.groupBy("decile")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_sh").as("n_shingles"),
           sum("n_new").as("n_first_seen"),
           round(sum("n_new") / sum("n_sh").cast("double"), 6)
             .as("novelty_frac"))
-        .orderBy("decile")) { tieredP.unpersist() }
+        .orderBy("decile"), shH ++ tiered.handles)
   }
 
 
@@ -595,36 +594,31 @@ trait LlmMixOps extends LlmCore {
     * gap percentiles — one global two-pass range-sort rank over
     * (source, score, id), per-source offsets from an O(sources)
     * broadcast agg; NO per-source window sort, no per-group state. */
-  def scoreRankNorm(s: SparkSession, dir: String): DataFrame =
+  def scoreRankNorm(s: SparkSession, dir: String): Held =
     scoreRankNormOf(
       Tables.documents(s, dir).select("doc_id", "source", "n_chars"),
       "doc_id", "source", "n_chars")
-      .select(col("doc_id"), col("source"), col("n_chars"),
+      .map(_.select(col("doc_id"), col("source"), col("n_chars"),
         round(col("pct_rank"), 6).as("pct_rank"))
-      .orderBy("doc_id")
+      .orderBy("doc_id"))
 
 
   /** The per-group rank normalization over ANY (id, group, score) frame —
     * also what the `rank_gate` corpus step thresholds on. Deterministic
     * total order (score, id); pct_rank ∈ [0,1], 0 for singleton groups. */
   def scoreRankNormOf(d: DataFrame, idCol: String, groupCol: String,
-                      scoreCol: String): DataFrame = {
-    val (ranked, rankedP) = graft.plans.GlobalRank.withRowNumberPersisted(
+                      scoreCol: String): Held =
+    graft.plans.GlobalRank.withRowNumber(
       d.select(col(idCol), col(groupCol), col(scoreCol)),
-      Seq(col(groupCol), col(scoreCol), col(idCol)), "rn")
-    val stats = ranked.groupBy(groupCol)
-      .agg(min("rn").as("rn0"), count(lit(1)).as("n"))
-    // the output is corpus-sized, so the eager checkpoint IS a full
-    // materialization — but it replaces (not adds to) the range-sort
-    // persist it releases: same write volume, and the cache entry is
-    // freed on the exact persisted handle instead of leaking all session
-    graft.plans.Eager.checkpoint(
+      Seq(col(groupCol), col(scoreCol), col(idCol)), "rn").map { ranked =>
+      val stats = ranked.groupBy(groupCol)
+        .agg(min("rn").as("rn0"), count(lit(1)).as("n"))
       ranked.join(broadcast(stats), groupCol)
         .select(col(idCol), col(groupCol), col(scoreCol),
           when(col("n") > 1,
             (col("rn") - col("rn0")).cast("double") / (col("n") - 1))
-            .otherwise(lit(0.0)).as("pct_rank"))) { rankedP.unpersist() }
-  }
+            .otherwise(lit(0.0)).as("pct_rank"))
+    }
 
 
   /** Weighted sampling without replacement (Efraimidis–Spirakis A-ES,
@@ -660,26 +654,21 @@ trait LlmMixOps extends LlmCore {
     * global row number (plans.GlobalRank), so the sort is
     * partition-parallel at any scale and the shard layout is a pure
     * function of the corpus — rerunnable on any cluster size. */
-  def corpusShuffle(s: SparkSession, dir: String, shards: Int = 16): DataFrame =
+  def corpusShuffle(s: SparkSession, dir: String, shards: Int = 16): Held =
     corpusShuffleOf(Tables.documents(s, dir), "doc_id", shards)
-      .orderBy("pos")
+      .map(_.orderBy("pos"))
 
 
   /** The shuffle/shard assignment over ANY id-keyed frame — run it on the
     * CLEANED corpus (positions dense, shards balanced), not on a superset
     * that later gets filtered. */
   def corpusShuffleOf(docs: DataFrame, idCol: String,
-                      shards: Int): DataFrame = {
+                      shards: Int): Held = {
     val key = md5(concat(lit("shuf|"), col(idCol).cast("string")))
-    val (ranked, rankedP) = graft.plans.GlobalRank.withRowNumberPersisted(
+    graft.plans.GlobalRank.withRowNumber(
       docs.selectExpr(s"$idCol AS doc_id"), Seq(key, col("doc_id")), "pos")
-    // corpus-sized output: the eager checkpoint replaces the range-sort
-    // persist it releases (narrow id/pos/shard rows — smaller than the
-    // sorted md5-keyed frame it frees)
-    graft.plans.Eager.checkpoint(
-      ranked
-        .withColumn("shard", (col("pos") - 1) % shards)
-        .select("doc_id", "pos", "shard")) { rankedP.unpersist() }
+      .map(_.withColumn("shard", (col("pos") - 1) % shards)
+        .select("doc_id", "pos", "shard"))
   }
 
 
@@ -697,28 +686,26 @@ trait LlmMixOps extends LlmCore {
     * bands in a fresh within-band order — the curriculum-learning epoch
     * contract. The default (empty) salt keeps the original coin. */
   def curriculumOrderOf(docs: DataFrame, idCol: String, scoreCol: String,
-                        tiers: Int, salt: String = ""): DataFrame = {
-    val (tiered, tieredP) = graft.plans.GlobalRank.withNtilePersisted(
+                        tiers: Int, salt: String = ""): Held = {
+    val tiered = graft.plans.GlobalRank.withNtile(
       docs.select(col(idCol).as("doc_id"),
         col(scoreCol).cast("double").as("__s")),
       Seq(col("__s"), col("doc_id")), tiers, "tier")
     val coinPrefix = if (salt.isEmpty) "curr|" else s"curr|$salt|"
-    val keyed = tiered.select(col("doc_id"), col("tier").cast("long").as("tier"),
+    val keyed = tiered.frame.select(col("doc_id"), col("tier").cast("long").as("tier"),
       md5(concat(lit(coinPrefix), col("doc_id").cast("string"))).as("__c"))
-    val (ordered, orderedP) = graft.plans.GlobalRank.withRowNumberPersisted(
+    val ordered = graft.plans.GlobalRank.withRowNumber(
       keyed, Seq(col("tier"), col("__c"), col("doc_id")), "ord")
-    graft.plans.Eager.checkpoint(
-      ordered.select("doc_id", "tier", "ord")) {
-      tieredP.unpersist(); orderedP.unpersist()
-    }
+    Held(ordered.frame.select("doc_id", "tier", "ord"),
+      tiered.handles ++ ordered.handles)
   }
 
 
   /** Driver query: curriculum order over documents with char count as the
     * difficulty proxy (short first), 10 tiers. */
-  def curriculumOrder(s: SparkSession, dir: String): DataFrame =
+  def curriculumOrder(s: SparkSession, dir: String): Held =
     curriculumOrderOf(Tables.documents(s, dir), "doc_id", "n_chars", 10)
-      .orderBy("ord")
+      .map(_.orderBy("ord"))
 
 
   /** Packing-efficiency report over the [[docPack]] token-budget bins:

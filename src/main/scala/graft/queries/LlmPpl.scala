@@ -191,18 +191,18 @@ trait LlmPplOps extends LlmCore {
     * is joined exactly twice; the corpus-side scoring join shuffles only
     * (doc_id, 128-bit gram key). The only driver/broadcast state is the
     * 1-row N1+(··) scalar. */
-  def trigramPpl(s: SparkSession, dir: String): DataFrame =
-    trigramPplOfToks(tokenArraysOf(s, dir)).orderBy("doc_id")
+  def trigramPpl(s: SparkSession, dir: String): Held =
+    trigramPplOfToks(tokenArraysOf(s, dir)).map(_.orderBy("doc_id"))
 
 
   /** The KN trigram perplexity over ANY (id, text) frame. Docs shorter
     * than 3 tokens have no trigrams and get no row. */
   def trigramPplOf(docs: DataFrame, idCol: String,
-                   textCol: String): DataFrame =
+                   textCol: String): Held =
     trigramPplOfToks(docs.selectExpr(s"$idCol AS doc_id",
       s"transform(split($textCol, ' '), t -> xxhash64(t)) AS toks"))
 
-  private def trigramPplOfToks(tokArr: DataFrame): DataFrame = {
+  private def trigramPplOfToks(tokArr: DataFrame): Held = {
     val D = 0.75
     val t3 = tokArr.filter("size(toks) >= 3")
     // corpus-side gram stream: ONLY (doc_id, 128-bit gram key) ever flows
@@ -254,13 +254,11 @@ trait LlmPplOps extends LlmCore {
         xxhash64(col("w3"), col("w2"), col("w1")).as("g2"),
         log(greatest(col("c3") - D, lit(0.0)) / col("c12") +
           lit(D) * col("nt12") / col("c12") * col("p2")).as("lp"))
-    graft.plans.Eager.checkpoint( // per-doc rows: tiny; frees LM caches
-      tg.join(sc, Seq("g1", "g2"))
+    // per-doc rows: tiny next to the LM caches it holds
+    Held(tg.join(sc, Seq("g1", "g2"))
         .groupBy("doc_id")
         .agg(round(exp(-sum("lp") / count(lit(1))), 4).as("ppl"),
-          count(lit(1)).as("n_trigrams"))) {
-      c3.unpersist(); m23.unpersist()
-    }
+          count(lit(1)).as("n_trigrams")), Seq(c3, m23))
   }
 
 
@@ -300,9 +298,9 @@ trait LlmPplOps extends LlmCore {
     * level joins two frames at its own size; the corpus-side scoring join
     * shuffles only (doc_id, 128-bit gram key); the only broadcast is the
     * 1-row N1+(···) scalar. */
-  def fourgramPpl(s: SparkSession, dir: String): DataFrame =
+  def fourgramPpl(s: SparkSession, dir: String): Held =
     fourgramPplOfToks(tokenArraysOf(s, dir), FourgramMinCount)
-      .orderBy("doc_id")
+      .map(_.orderBy("doc_id"))
 
 
   /** Min-count prune threshold for [[fourgramPplOf]] — shared with the
@@ -313,12 +311,12 @@ trait LlmPplOps extends LlmCore {
   /** The pruned KN 4-gram perplexity over ANY (id, text) frame. Docs
     * shorter than 4 tokens have no 4-grams and get no row. */
   def fourgramPplOf(docs: DataFrame, idCol: String, textCol: String,
-                    minCount: Int = FourgramMinCount): DataFrame =
+                    minCount: Int = FourgramMinCount): Held =
     fourgramPplOfToks(docs.selectExpr(s"$idCol AS doc_id",
       s"transform(split($textCol, ' '), t -> xxhash64(t)) AS toks"),
       minCount)
 
-  private def fourgramPplOfToks(tokArr: DataFrame, minCount: Int): DataFrame = {
+  private def fourgramPplOfToks(tokArr: DataFrame, minCount: Int): Held = {
     require(minCount >= 1, s"fourgram: minCount must be >= 1, got $minCount")
     val D = 0.75
     val t4 = tokArr.filter("size(toks) >= 4")
@@ -384,13 +382,11 @@ trait LlmPplOps extends LlmCore {
           greatest(col("c4") - D, lit(0.0)) / col("c123") +
             lit(D) * col("nt123") / col("c123") * col("p3"))
           .otherwise(col("p3"))).as("lp"))
-    graft.plans.Eager.checkpoint( // per-doc rows: tiny; frees LM caches
-      qg.join(sc, Seq("g1", "g2"))
+    // per-doc rows: tiny next to the LM caches it holds
+    Held(qg.join(sc, Seq("g1", "g2"))
         .groupBy("doc_id")
         .agg(round(exp(-sum("lp") / count(lit(1))), 4).as("ppl"),
-          count(lit(1)).as("n_fourgrams"))) {
-      c4.unpersist(); m234.unpersist(); m34.unpersist()
-    }
+          count(lit(1)).as("n_fourgrams")), Seq(c4, m234, m34))
   }
 
   /** Interpolated Kneser-Ney 5-gram perplexity with min-count pruning —
@@ -425,9 +421,9 @@ trait LlmPplOps extends LlmCore {
     * backoff evaluation (p2→p3→p4 each at its own granularity, pruned top
     * level inline), a corpus-side scoring join on the 128-bit gram key,
     * and the only broadcast is the 1-row N1+(····) scalar. */
-  def fivegramPpl(s: SparkSession, dir: String): DataFrame =
+  def fivegramPpl(s: SparkSession, dir: String): Held =
     fivegramPplOfToks(tokenArraysOf(s, dir), FivegramMinCount)
-      .orderBy("doc_id")
+      .map(_.orderBy("doc_id"))
 
   /** Min-count prune threshold for [[fivegramPplOf]] — shared with the
     * `fivegram_ppl` oracle string so the two sides cannot drift. */
@@ -436,12 +432,12 @@ trait LlmPplOps extends LlmCore {
   /** The pruned KN 5-gram perplexity over ANY (id, text) frame. Docs
     * shorter than 5 tokens have no 5-grams and get no row. */
   def fivegramPplOf(docs: DataFrame, idCol: String, textCol: String,
-                    minCount: Int = FivegramMinCount): DataFrame =
+                    minCount: Int = FivegramMinCount): Held =
     fivegramPplOfToks(docs.selectExpr(s"$idCol AS doc_id",
       s"transform(split($textCol, ' '), t -> xxhash64(t)) AS toks"),
       minCount)
 
-  private def fivegramPplOfToks(tokArr: DataFrame, minCount: Int): DataFrame = {
+  private def fivegramPplOfToks(tokArr: DataFrame, minCount: Int): Held = {
     require(minCount >= 1, s"fivegram: minCount must be >= 1, got $minCount")
     val D = 0.75
     val t5 = tokArr.filter("size(toks) >= 5")
@@ -517,13 +513,11 @@ trait LlmPplOps extends LlmCore {
           greatest(col("c5") - D, lit(0.0)) / col("c1234") +
             lit(D) * col("nt1234") / col("c1234") * col("p4"))
           .otherwise(col("p4"))).as("lp"))
-    graft.plans.Eager.checkpoint( // per-doc rows: tiny; frees LM caches
-      pg.join(sc, Seq("g1", "g2"))
+    // per-doc rows: tiny next to the LM caches it holds
+    Held(pg.join(sc, Seq("g1", "g2"))
         .groupBy("doc_id")
         .agg(round(exp(-sum("lp") / count(lit(1))), 4).as("ppl"),
-          count(lit(1)).as("n_fivegrams"))) {
-      c5.unpersist(); m2345.unpersist(); m345.unpersist(); m45.unpersist()
-    }
+          count(lit(1)).as("n_fivegrams")), Seq(c5, m2345, m345, m45))
   }
 
 
@@ -623,18 +617,16 @@ trait LlmPplOps extends LlmCore {
     * "tail" dropped or down-weighted). Exact tiering via the two-pass
     * range-sort ntile (plans.GlobalRank) — no single-partition window at
     * any scale. */
-  def qualityTiers(s: SparkSession, dir: String): DataFrame = {
+  def qualityTiers(s: SparkSession, dir: String): Held = {
     // rides the SAME cached per-doc unigram ppl frame as `unigram_ppl`
     val ppl = unigramPplFrameOf(s, dir).select("doc_id", "ppl")
-    val (tiered, tieredP) = graft.plans.GlobalRank
-      .withNtilePersisted(ppl, Seq(col("ppl"), col("doc_id")), 3, "tier")
-    graft.plans.Eager.checkpoint( // 3 rows; frees the ntile sort cache
-      tiered
-        .groupBy("tier")
+    graft.plans.GlobalRank
+      .withNtile(ppl, Seq(col("ppl"), col("doc_id")), 3, "tier")
+      .map(_.groupBy("tier")
         .agg(count(lit(1)).as("n_docs"),
           round(min("ppl"), 4).as("min_ppl"),
           round(max("ppl"), 4).as("max_ppl"))
-        .orderBy("tier")) { tieredP.unpersist() }
+        .orderBy("tier"))
   }
 
 
@@ -670,12 +662,12 @@ trait LlmPplOps extends LlmCore {
     * ([[graft.plans.GlobalRank]] — no single-partition window even with a
     * 100 B-token vocabulary), then a single algebraic agg of the five OLS
     * moments. Nothing driver-side beyond O(partitions) offsets. */
-  def vocabZipf(s: SparkSession, dir: String): DataFrame = {
+  def vocabZipf(s: SparkSession, dir: String): Held = {
     val freq = Tables.documents(s, dir)
       .selectExpr("explode(split(text, ' ')) AS w")
       .groupBy("w").agg(count(lit(1)).as("f"))
     graft.plans.GlobalRank
-      .rowNumbered(freq, Seq(col("f").desc, col("w")), "r") { ranked =>
+      .withRowNumber(freq, Seq(col("f").desc, col("w")), "r").map { ranked =>
         val x = log(col("r").cast("double"))
         val y = log(col("f").cast("double"))
         val m = ranked.agg(

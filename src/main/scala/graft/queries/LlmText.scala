@@ -38,8 +38,8 @@ trait LlmTextOps extends LlmCore {
     *     leftmost non-overlapping, provably equal to the sequential BPE
     *     merge pass because a merged token can never equal its own left
     *     constituent.
-    * Per-iteration frames are checkpointed (graft.plans.lazy opt-out) so
-    * the fold chain never re-executes. The oracle replays all k
+    * Per-iteration frames are checkpointed so the fold chain never
+    * re-executes. The oracle replays all k
     * iterations as unrolled CTEs with a `list_reduce` fold.
     * Ties are broken (count desc, lhs, rhs) — fully deterministic. */
   /** One leftmost-non-overlapping merge pass of pair (a, b) over a symbol
@@ -59,9 +59,7 @@ trait LlmTextOps extends LlmCore {
       .filter(col("word").rlike("^[a-z]+$"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .withColumn("syms", split(col("word"), ""))
-    var syms =
-      if (graft.plans.Eager.enabled) words.localCheckpoint(true)
-      else words.cache()
+    var syms = words.localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     for (k <- 1 to BpeMerges) {
       val pairs = syms.select(col("freq"),
@@ -77,7 +75,7 @@ trait LlmTextOps extends LlmCore {
       val (a, b) = (top(0).getString(0), top(0).getString(1))
       merges += ((k, a, b, top(0).getLong(2)))
       syms = syms.withColumn("syms", bpeMergeFold(col("syms"), a, b))
-      if (graft.plans.Eager.enabled) syms = syms.localCheckpoint(true)
+        .localCheckpoint(true)
     }
     merges.toSeq
   }
@@ -292,9 +290,7 @@ trait LlmTextOps extends LlmCore {
       .filter(col("word").rlike("^[a-z]+$"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .withColumn("syms", split(col("word"), ""))
-    val wordsP =
-      if (graft.plans.Eager.enabled) words.localCheckpoint(true)
-      else words.cache()
+    val wordsP = words.localCheckpoint(true)
     // iteration-0 statistics: char unigrams + adjacent-pair candidates
     val c0 = wordsP.select(col("freq"), explode(col("syms")).as("piece"))
       .groupBy("piece").agg(sum("freq").as("n"))
@@ -325,9 +321,7 @@ trait LlmTextOps extends LlmCore {
         .select("word", "freq", "pieces")
       counts = seg.select(col("freq"), explode(col("pieces")).as("piece"))
         .groupBy("piece").agg(sum("freq").as("n"))
-      counts =
-        if (graft.plans.Eager.enabled) counts.localCheckpoint(true)
-        else counts.cache()
+        .localCheckpoint(true)
       if (t < UnigramLmIters)
         // re-qualify the SURVIVING pairs against the new piece model;
         // single-char counts now exclude chars hidden inside pieces (the

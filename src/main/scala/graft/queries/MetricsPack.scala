@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import graft.metrics.{ModelHealth, StandardMetrics, WebCustomMetrics}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -116,15 +117,15 @@ object MetricsPack extends QueryPack {
         round(col("iso_fit"), 6).as("iso_fit"))
       .orderBy("bin")
 
-  def gainsDeciles(s: SparkSession, dir: String): DataFrame = {
+  def gainsDeciles(s: SparkSession, dir: String): Held = {
     val t = Tables.orders(s, dir).select(
       (col("o_orderstatus") === "F").cast("int").as("y"),
       round(col("o_totalprice") / 1000.0, 0).as("score"),
       col("o_orderkey"))
     StandardMetrics.gainsDeciles(t, "y", "score", "o_orderkey")
-      .select(col("decile"), col("n"), col("n_pos"), col("cum_pos"),
+      .map(_.select(col("decile"), col("n"), col("n_pos"), col("cum_pos"),
         round(col("cum_capture"), 6).as("cum_capture"))
-      .orderBy("decile")
+      .orderBy("decile"))
   }
 
   def calibrationSummary(s: SparkSession, dir: String): DataFrame =
@@ -136,7 +137,7 @@ object MetricsPack extends QueryPack {
     Tables.documents(s, dir).groupBy("lang").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("lang"))
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected def direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "confusion_matrix" -> (confusionMatrix(_, _)),
     "multiclass_metrics" -> (multiclassMetrics(_, _)),
     "auroc_rank" -> (aurocRank(_, _)),
@@ -149,8 +150,10 @@ object MetricsPack extends QueryPack {
     "calibration_bins" -> (calibrationBins(_, _)),
     "calibration_summary" -> (calibrationSummary(_, _)),
     "isotonic_calibration" -> (isotonicCalibration(_, _)),
-    "gains_deciles" -> (gainsDeciles(_, _)),
     "label_freq" -> (labelFreq(_, _)))
+
+  override def held: Map[String, (SparkSession, String) => Held] = Map(
+    "gains_deciles" -> (gainsDeciles(_, _)))
 
   private val labeledSql =
     """SELECT o_orderstatus AS label,

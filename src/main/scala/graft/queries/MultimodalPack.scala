@@ -446,7 +446,7 @@ object MultimodalPack extends QueryPack {
       .orderBy("media_id", "win")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ppm_codec" -> ppmCodec,
     "png_codec" -> pngCodec,
     "jpeg_codec" -> jpegCodec,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -193,16 +194,19 @@ object Relational extends QueryPack {
     * the exactness does NOT cost a single-partition sort. The approximate
     * scale path stays `approxQuantile` (features.Binning equiarea); this is
     * the exact path for when quantiles feed a contract (bin edges, SLAs). */
-  def exactQuantiles(s: SparkSession, dir: String): DataFrame =
-    graft.plans.GlobalRank.rowNumberedN(
+  def exactQuantiles(s: SparkSession, dir: String): Held =
+    graft.plans.GlobalRank.withRowNumber(
       Tables.orders(s, dir).select(col("o_totalprice"), col("o_orderkey")),
-      Seq(col("o_totalprice"), col("o_orderkey")), "rn") { (ranked, n) =>
-      // n rides the offsets job the rank already ran — no count() pass
-      val targets = Seq(0.25, 0.5, 0.75).map(p => p -> math.ceil(p * n).toLong)
-      val pExpr = targets.foldLeft(lit(null).cast("double")) {
-        case (acc, (p, t)) => when(col("rn") === t, lit(p)).otherwise(acc)
+      Seq(col("o_totalprice"), col("o_orderkey")), "rn").map { ranked =>
+      // n: a one-row count over the persisted sort, broadcast in-plan
+      val n = broadcast(ranked.agg(count(lit(1)).as("__n")))
+      val ps = Seq(0.25, 0.5, 0.75)
+      def target(p: Double) = ceil(lit(p) * col("__n"))
+      val pExpr = ps.foldLeft(lit(null).cast("double")) {
+        case (acc, p) => when(col("rn") === target(p), lit(p)).otherwise(acc)
       }
-      ranked.filter(col("rn").isin(targets.map(_._2): _*))
+      ranked.crossJoin(n)
+        .filter(ps.map(p => col("rn") === target(p)).reduce(_ || _))
         .select(pExpr.as("p"), round(col("o_totalprice"), 2).as("v"))
         .orderBy("p")
     }
@@ -305,18 +309,15 @@ object Relational extends QueryPack {
     * approximate 100 TB path stays approxQuantile → Bucketizer
     * (feature-generation binning); this is the exact path, and it also
     * scales (every stage partition-parallel). */
-  def ntileBins(s: SparkSession, dir: String): DataFrame = {
-    val (binned, binnedP) = graft.plans.GlobalRank.withNtilePersisted(
+  def ntileBins(s: SparkSession, dir: String): Held =
+    graft.plans.GlobalRank.withNtile(
       Tables.orders(s, dir).select(col("o_totalprice"), col("o_orderkey")),
       Seq(col("o_totalprice"), col("o_orderkey")), 10, "bucket")
-    graft.plans.Eager.checkpoint( // 10 rows; frees the ntile sort cache
-      binned
-        .groupBy("bucket")
+      .map(_.groupBy("bucket")
         .agg(count(lit(1)).as("n"),
           round(min("o_totalprice"), 2).as("lo"),
           round(max("o_totalprice"), 2).as("hi"))
-        .orderBy("bucket")) { binnedP.unpersist() }
-  }
+        .orderBy("bucket"))
 
   /** Random-variable derivation through the real reader code
     * (io.SourceReader.deriveColumns — ref: dal/DataReader.scala:34-78):
@@ -388,7 +389,7 @@ object Relational extends QueryPack {
     * plans.GlobalRank (no single-partition window); the base aggregate is
     * one keyed shuffle over orders with map-side partials. At 100 TB the
     * three rankings each shuffle only the |customers|-sized RFM frame. */
-  def rfmTiers(s: SparkSession, dir: String): DataFrame = {
+  def rfmTiers(s: SparkSession, dir: String): Held = {
     import graft.plans.GlobalRank
     // monetary in integer cents: double sums land within ~1e-4 cents of
     // the true integer, so the rounded value is engine-independent (a raw
@@ -398,24 +399,16 @@ object Relational extends QueryPack {
       .agg(max("o_orderdate").as("recency"),
         count(lit(1)).as("freq"),
         round(sum("o_totalprice") * 100).cast("long").as("cents"))
-    val handles = Seq.newBuilder[DataFrame]
-    val tiered = Seq(
-      ("recency", "r_tier"), ("freq", "f_tier"), ("cents", "m_tier"))
-      .foldLeft(rfm) { case (df, (c, out)) =>
-        val (t, h) = GlobalRank.withNtilePersisted(
-          df, Seq(col(c), col("o_custkey")), 4, out)
-        handles += h
-        t
+    // three chained ntile sorts, each held for the ≤64-row final agg
+    Seq(("recency", "r_tier"), ("freq", "f_tier"), ("cents", "m_tier"))
+      .foldLeft(Held(rfm)) { case (h, (c, out)) =>
+        val t = GlobalRank.withNtile(h.frame, Seq(col(c), col("o_custkey")), 4, out)
+        Held(t.frame, h.handles ++ t.handles)
       }
-    // ≤64-row final agg: eagerly checkpoint it so all three chained ntile
-    // sort caches can be released on their exact persisted handles
-    graft.plans.Eager.checkpoint(
-      tiered.groupBy("r_tier", "f_tier", "m_tier")
+      .map(_.groupBy("r_tier", "f_tier", "m_tier")
         .agg(count(lit(1)).as("n_cust"),
           round(avg("cents")).cast("long").as("avg_cents"))
-        .orderBy("r_tier", "f_tier", "m_tier")) {
-      handles.result().foreach(_.unpersist())
-    }
+        .orderBy("r_tier", "f_tier", "m_tier"))
   }
 
   /** Exact per-group percentiles (p50/p95) with PERCENTILE_CONT /
@@ -426,13 +419,13 @@ object Relational extends QueryPack {
     * buffer would hold billions of prices at 100 TB. percentile_approx
     * remains the documented sketch path when rank-exactness isn't
     * required. */
-  def groupPercentiles(s: SparkSession, dir: String): DataFrame =
+  def groupPercentiles(s: SparkSession, dir: String): Held =
     graft.plans.GlobalRank.groupPercentilesExact(
       Tables.orders(s, dir), "o_orderpriority", "o_totalprice",
       Seq(0.5, 0.95))
-      .select(col("o_orderpriority"), col("n"),
+      .map(_.select(col("o_orderpriority"), col("n"),
         round(col("p0"), 4).as("p50"), round(col("p1"), 4).as("p95"))
-      .orderBy("o_orderpriority")
+      .orderBy("o_orderpriority"))
 
   /** Quantity-weighted price percentiles per return flag — the weighted
     * lower quantile (smallest value whose in-group weight CDF reaches
@@ -501,7 +494,7 @@ object Relational extends QueryPack {
         |      + (shiftright(y, i) % 2) * shiftleft(1L, 2 * i + 1))"""
         .stripMargin))
     graft.plans.GlobalRank
-      .withNtile(z, Seq(col("z"), col("o_orderkey")), 16, "bucket")
+      .withNtile(z, Seq(col("z"), col("o_orderkey")), 16, "bucket").frame
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
         min("x").as("x_min"), max("x").as("x_max"),
@@ -628,37 +621,35 @@ object Relational extends QueryPack {
     * aggregate's per-group buffer would be corpus-sized at 100 TB. Two
     * rank passes + broadcast joins back; never a per-group value buffer,
     * never a global sort. */
-  def robustOutliers(s: SparkSession, dir: String): DataFrame = {
+  def robustOutliers(s: SparkSession, dir: String): Held = {
     // one narrow materialization feeds all THREE passes (median rank,
     // MAD rank, outlier count): each rank pass otherwise re-reads the
     // source twice (range-boundary sampling + the shuffle itself), so
     // without this the source is scanned ~5x per call
-    val base = Tables.events(s, dir).select(col("event_type"), col("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Held.cached(
+      Tables.events(s, dir).select(col("event_type"), col("value")))
     val med = graft.plans.GlobalRank
-      .groupPercentilesExact(base, "event_type", "value", Seq(0.5))
-      .select(col("event_type"), col("p0").as("med"))
-    val dev = base.join(broadcast(med), Seq("event_type"))
+      .groupPercentilesExact(base.frame, "event_type", "value", Seq(0.5))
+      .map(_.select(col("event_type"), col("p0").as("med")))
+    val dev = base.frame.join(broadcast(med.frame), Seq("event_type"))
       .withColumn("adev", abs(col("value") - col("med")))
     val mad = graft.plans.GlobalRank
       .groupPercentilesExact(dev, "event_type", "adev", Seq(0.5))
-      .select(col("event_type"), col("p0").as("mad"))
-    graft.plans.Eager.checkpoint( // O(groups) rows; frees the base cache
-      dev.join(broadcast(mad), Seq("event_type"))
+      .map(_.select(col("event_type"), col("p0").as("mad")))
+    // O(groups) rows, holding the base cache and both rank sorts
+    Held(dev.join(broadcast(mad.frame), Seq("event_type"))
         .groupBy("event_type")
         .agg(round(first("med"), 4).as("med"),
           round(first("mad"), 4).as("mad"),
           count(lit(1)).as("n"),
           sum(when(col("adev") > lit(3 * 1.4826) * col("mad"), 1L)
             .otherwise(0L)).as("n_outliers"))
-        .orderBy("event_type")) { base.unpersist() }
+        .orderBy("event_type"),
+      base.handles ++ med.handles ++ mad.handles)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "numeric_corr" -> numericCorr,
-    "robust_outliers" -> robustOutliers,
-    "rfm_tiers" -> rfmTiers,
-    "group_percentiles" -> groupPercentiles,
     "weighted_percentiles" -> weightedPercentiles,
     "weighted_percentiles_interp" -> weightedPercentilesInterp,
     "zorder_layout" -> zorderLayout,
@@ -685,11 +676,16 @@ object Relational extends QueryPack {
     "page_split" -> pageSplit,
     "asof_join" -> asofJoin,
     "range_join" -> rangeJoin,
-    "ntile_bins" -> ntileBins,
     "cube_agg" -> cubeAgg,
     "pivot_agg" -> pivotAgg,
     "unpivot_metrics" -> unpivotMetrics,
-    "rolling_avg" -> rollingAvg,
+    "rolling_avg" -> rollingAvg)
+
+  override val held: Map[String, (SparkSession, String) => Held] = Map(
+    "robust_outliers" -> robustOutliers,
+    "rfm_tiers" -> rfmTiers,
+    "group_percentiles" -> groupPercentiles,
+    "ntile_bins" -> ntileBins,
     "exact_quantiles" -> exactQuantiles)
 
   val oracle: Map[String, String] = Map(

@@ -211,7 +211,7 @@ object TextOpsPack extends QueryPack {
       .orderBy("src")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "preprocess_chain" -> preprocessChain,
     "skipgram_stats" -> skipgramStats,
     "ngram_stats" -> ngramStats,

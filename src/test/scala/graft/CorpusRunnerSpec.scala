@@ -152,7 +152,7 @@ class CorpusRunnerSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     def epoch(salt: String) = queries.LlmData
       .curriculumOrderOf(docs, "doc_id", "n_chars", 5, salt)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      .checkpointed().collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val e0 = epoch("")       // the default coin
     val e1 = epoch("epoch1")
     val e2 = epoch("epoch2")

@@ -21,7 +21,7 @@ class GlobalRankSpec extends SparkSpec {
 
   it should "compute exact global row numbers equal to an ordered window" in {
     val got = GlobalRank.withRowNumber(df, Seq(col("k"), col("id")), "rn")
-      .select("id", "rn")
+      .frame.select("id", "rn")
     val want = df.withColumn("rn",
       row_number().over(Window.orderBy("k", "id")).cast("long"))
       .select("id", "rn")
@@ -31,8 +31,8 @@ class GlobalRankSpec extends SparkSpec {
 
   it should "compute running sums equal to a cumulative window" in {
     val got = GlobalRank.withRunningSums(df, Seq(col("k"), col("id")),
-        Seq("v" -> "cum_v", "id" -> "cum_id"))
-      .select(col("id"), col("cum_v"), col("cum_id"))
+        Seq("v" -> "cum_v", "id" -> "cum_id"))._1
+      .frame.select(col("id"), col("cum_v"), col("cum_id"))
     val w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, 0)
     val want = df
       .withColumn("cum_v", sum("v").over(w))
@@ -45,21 +45,21 @@ class GlobalRankSpec extends SparkSpec {
   it should "hand back the persisted sort and the grand totals of its running sums" in {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val (got, sorted, totals) = GlobalRank.withRunningSumsPersisted(
+    val (got, totals) = GlobalRank.withRunningSums(
       df, Seq(col("k"), col("id")), Seq("v" -> "cum_v", "id" -> "cum_id"))
-    val last = got.orderBy(desc("k"), desc("id")).head()
+    val last = got.frame.orderBy(desc("k"), desc("id")).head()
     totals shouldBe Map(
       "v" -> df.agg(sum("v")).head().getDouble(0),
       "id" -> df.agg(sum("id")).head().getLong(0).toDouble)
     last.getAs[Double]("cum_v") shouldBe totals("v")
     last.getAs[Double]("cum_id") shouldBe totals("id")
-    sorted.unpersist()
+    got.release()
     (sc.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 
   it should "compute SQL-standard ntile buckets" in {
     val got = GlobalRank.withNtile(df, Seq(col("k"), col("id")), 7, "b")
-      .select("id", "b")
+      .frame.select("id", "b")
     val want = df.withColumn("b",
       ntile(7).over(Window.orderBy("k", "id")).cast("long"))
       .select("id", "b")
@@ -80,7 +80,7 @@ class GlobalRankSpec extends SparkSpec {
       .toDF("g", "v")
     val ps = Seq(0.0, 0.25, 0.5, 0.95, 1.0)
     val got = GlobalRank.groupPercentilesExact(vals, "g", "v", ps)
-      .collect().map(r => r.getString(0) ->
+      .checkpointed().collect().map(r => r.getString(0) ->
         ps.indices.map(i => r.getDouble(2 + i))).toMap
     val want = vals.groupBy("g")
       .agg(expr(s"percentile(v, array(${ps.mkString(",")}))").as("p"))

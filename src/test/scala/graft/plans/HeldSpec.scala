@@ -29,6 +29,24 @@ class HeldSpec extends SparkSpec {
     expected should have size 143
   }
 
+  it should "materialize, then release, through checkpointed and collected" in {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def held = Held.cached(frame.filter(col("y") === 2)).map(_.groupBy("y").count())
+    val cp = held.checkpointed()
+    val cpRdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    (sc.getPersistentRDDs.keySet -- before) shouldBe Set(cpRdd.id)
+    val local = held.collected()
+    local.queryExecution.logical shouldBe a[LocalRelation]
+    (sc.getPersistentRDDs.keySet -- before) shouldBe Set(cpRdd.id)
+    local.collect().toSeq shouldBe cp.collect().toSeq
+    local.collect().map(_.getLong(1)).toSeq shouldBe Seq(143L)
+    Held.release(cp)
+    (sc.getPersistentRDDs.keySet -- before) shouldBe empty
+  }
+
   it should "leave a cache entry another caller created to that caller" in {
     val theirs = frame.filter(col("y") === 5).cache()
     theirs.count()

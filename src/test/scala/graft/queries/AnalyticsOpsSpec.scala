@@ -256,5 +256,5 @@ class AnalyticsOpsSpec extends SparkSpec {
 
 private object EventOpsPackSpecHelper {
   def rfmPerTier(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Relational.rfmTiers(s, dir)
+    Relational.rfmTiers(s, dir).checkpointed()
 }

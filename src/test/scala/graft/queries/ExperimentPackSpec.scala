@@ -288,7 +288,7 @@ class ExperimentPackSpec extends SparkSpec {
   behavior of "winsorizedMean"
 
   it should "pull the mean toward the clamp window on both variants" in {
-    ExperimentPack.winsorizedMean(spark, dir).collect().foreach { r =>
+    ExperimentPack.winsorizedMean(spark, dir).checkpointed().collect().foreach { r =>
       val (lo, hi) = (r.getAs[Double]("lo"), r.getAs[Double]("hi"))
       lo should be <= hi
       val w = r.getAs[Double]("winsor_mean")
@@ -299,7 +299,7 @@ class ExperimentPackSpec extends SparkSpec {
   behavior of "quantileTreatment"
 
   it should "keep per-variant percentiles monotone in p" in {
-    val r = ExperimentPack.quantileTreatment(spark, dir).head()
+    val r = ExperimentPack.quantileTreatment(spark, dir).checkpointed().head()
     r.getAs[Double]("ctrl_p10") should be <= r.getAs[Double]("ctrl_p50")
     r.getAs[Double]("ctrl_p50") should be <= r.getAs[Double]("ctrl_p90")
     r.getAs[Double]("trt_p10") should be <= r.getAs[Double]("trt_p50")

@@ -186,7 +186,7 @@ class LlmQualitySpec extends SparkSpec {
     // a cleaned (filtered) corpus — the assignment must be computed over
     // the survivors, not inherited from the full corpus
     val sub = graft.Tables.documents(spark, dir).filter(col("doc_id") % 3 === 0)
-    val out = LlmData.corpusShuffleOf(sub, "doc_id", shards = 4).collect()
+    val out = LlmData.corpusShuffleOf(sub, "doc_id", shards = 4).checkpointed().collect()
     out.length.toLong shouldBe sub.count()
     // dense 1..n positions, no gaps
     out.map(_.getLong(1)).sorted shouldBe (1L to out.length).toArray
@@ -194,7 +194,7 @@ class LlmQualitySpec extends SparkSpec {
     val sizes = out.groupBy(_.getLong(2)).values.map(_.size)
     sizes.max - sizes.min should be <= 1
     // reproducible: same frame, same assignment
-    val again = LlmData.corpusShuffleOf(sub, "doc_id", shards = 4).collect()
+    val again = LlmData.corpusShuffleOf(sub, "doc_id", shards = 4).checkpointed().collect()
     again.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet shouldBe
       out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
   }
@@ -366,7 +366,7 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "fit a negative-slope rank-frequency line with a sane R²" in {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val r = LlmData.vocabZipf(spark, dir).collect().head
+    val r = LlmData.vocabZipf(spark, dir).checkpointed().collect().head
     val (nVocab, nTokens) = (r.getLong(0), r.getLong(1))
     nVocab should be > 0L
     nTokens should be >= nVocab // every distinct word occurs ≥ once
@@ -422,7 +422,7 @@ class LlmQualitySpec extends SparkSpec {
     val fluent = (100L, "the cat ran to the house and the dog sat on the mat")
     val shuffled = (101L, "house the to cat the ran and mat the dog on sat the")
     val docs = (corpus :+ fluent :+ shuffled).toDF("doc_id", "text")
-    val tri = LlmData.trigramPplOf(docs, "doc_id", "text").collect()
+    val tri = LlmData.trigramPplOf(docs, "doc_id", "text").checkpointed().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val uni = LlmData.unigramPplOf(docs, "doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -449,9 +449,9 @@ class LlmQualitySpec extends SparkSpec {
     val inTpl = (500L, "a x y b")
     val cross = (501L, "a x y d")
     val docs = (a ++ c :+ inTpl :+ cross).toDF("doc_id", "text")
-    val tri = LlmData.trigramPplOf(docs, "doc_id", "text").collect()
+    val tri = LlmData.trigramPplOf(docs, "doc_id", "text").checkpointed().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val four = LlmData.fourgramPplOf(docs, "doc_id", "text").collect()
+    val four = LlmData.fourgramPplOf(docs, "doc_id", "text").checkpointed().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     tri(500L) shouldBe tri(501L) // the trigram model cannot tell them apart
     four(500L) should be < four(501L) // the pruned 4-gram model can
@@ -467,9 +467,9 @@ class LlmQualitySpec extends SparkSpec {
     val rare = (200L, "p q r s u")
     val docs = (freq :+ rare).toDF("doc_id", "text")
     val at1 = LlmData.fourgramPplOf(docs, "doc_id", "text", minCount = 1)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .checkpointed().collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val at2 = LlmData.fourgramPplOf(docs, "doc_id", "text", minCount = 2)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .checkpointed().collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     at1(0L) shouldBe at2(0L) // kept path untouched by the prune
     at1(200L) should not be at2(200L) // rare mass rerouted to backoff
     at2(200L) should be > at2(0L) // and still ranked worse than fluent
@@ -494,9 +494,9 @@ class LlmQualitySpec extends SparkSpec {
     val inTpl = (500L, "a x y z b")
     val cross = (501L, "a x y z d")
     val docs = (a ++ c :+ inTpl :+ cross).toDF("doc_id", "text")
-    val four = LlmData.fourgramPplOf(docs, "doc_id", "text").collect()
+    val four = LlmData.fourgramPplOf(docs, "doc_id", "text").checkpointed().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val five = LlmData.fivegramPplOf(docs, "doc_id", "text").collect()
+    val five = LlmData.fivegramPplOf(docs, "doc_id", "text").checkpointed().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     four(500L) shouldBe four(501L) // the 4-gram model cannot tell them apart
     five(500L) should be < five(501L) // the pruned 5-gram model can
@@ -508,9 +508,9 @@ class LlmQualitySpec extends SparkSpec {
     val rare = (200L, "p q r s t v")
     val docs = (freq :+ rare).toDF("doc_id", "text")
     val at1 = LlmData.fivegramPplOf(docs, "doc_id", "text", minCount = 1)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .checkpointed().collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val at2 = LlmData.fivegramPplOf(docs, "doc_id", "text", minCount = 2)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .checkpointed().collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     at1(0L) shouldBe at2(0L) // kept path untouched by the prune
     at1(200L) should not be at2(200L) // rare mass rerouted to backoff
     at2(200L) should be > at2(0L) // and still ranked worse than fluent
@@ -521,7 +521,7 @@ class LlmQualitySpec extends SparkSpec {
   it should "normalize ranks per source to [0,1] and bias the sample toward heavy docs" in {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
     import org.apache.spark.sql.functions.col
-    val norm = LlmData.scoreRankNorm(spark, dir).collect()
+    val norm = LlmData.scoreRankNorm(spark, dir).checkpointed().collect()
     norm.length.toLong shouldBe graft.Tables.documents(spark, dir).count()
     // every source spans the full [0,1] band (min 0, max 1) and each
     // source's ranks are distinct — a total order, no tie plateaus
@@ -754,7 +754,7 @@ class LlmQualitySpec extends SparkSpec {
   behavior of "noveltyCurve"
 
   it should "hold a full-novelty first decile and consistent counts" in {
-    val rows = LlmData.noveltyCurve(spark, dir).collect()
+    val rows = LlmData.noveltyCurve(spark, dir).checkpointed().collect()
     rows.map(_.getAs[Long]("decile")).sorted.toSeq shouldBe (1L to rows.length)
     rows.foreach { r =>
       r.getAs[Long]("n_first_seen") should be <= r.getAs[Long]("n_shingles")

@@ -39,7 +39,7 @@ class SketchSpec extends SparkSpec {
     // exact rank interval per p: the approx value must sit between the
     // values at ranks ⌈(p ± 1/acc)·n⌉ under the total order
     val ranked = graft.plans.GlobalRank.withRowNumber(
-      o, Seq(col("o_totalprice")), "rn").cache()
+      o, Seq(col("o_totalprice")), "rn").frame.cache()
     Seq(0.25, 0.5, 0.75).zip(approx).foreach { case (p, v) =>
       val lo = math.max(1L, math.ceil((p - 1.0 / acc) * n).toLong)
       val hi = math.min(n, math.ceil((p + 1.0 / acc) * n).toLong)
