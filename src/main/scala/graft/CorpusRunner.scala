@@ -7,7 +7,6 @@ import graft.plans.Held
 import graft.text.{RegexReplacer, TextQuality}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The corpus-cleaning orchestrator — the training-data twin of
@@ -79,7 +78,12 @@ import org.apache.spark.sql.functions._
   * and the curriculum layout their range sorts, the dedup steps their
   * pair caches and component labels); once the step's output exists,
   * those and the previous step's checkpoint are released, and only the
-  * returned corpus stays persisted.
+  * returned corpus stays persisted. An in-memory step also destroys the
+  * broadcast relations its checkpoint's job built ([[Held.counted]]), so
+  * no executor keeps a copy of them until the driver's next GC. A
+  * savepointing step leaves its broadcasts to the ContextCleaner: the
+  * parquet writer plans and runs the step under a query execution of its
+  * own, which the step's frame does not reach.
   */
 object CorpusRunner extends Logging {
 
@@ -131,21 +135,19 @@ object CorpusRunner extends Logging {
         // on plan/codegen alone. Savepointing runs read the step back
         // from parquet (which also makes resume exact); in-memory runs
         // cut the lineage with a local checkpoint, filled and counted by
-        // one job.
+        // one job. Once the output exists on its own, nothing the step
+        // persisted, nor the previous step's checkpoint, is read again.
         val (out, n) =
           if (savepointing) {
             sp.save(stepped.frame, stepKey(i), 0, "clean")
+            stepped.release()
             val back = sp.load(spark, stepKey(i), 0, "clean")
             (back, back.count())
           } else {
-            val cp = stepped.frame.localCheckpoint(false)
-            (cp, SQLExecution.withNewExecutionId(cp.queryExecution, Some("count"))(
-              cp.queryExecution.toRdd.count()))
+            val counted = stepped.counted()
+            if (i > startIdx) Held.release(df)
+            counted
           }
-        // the output now exists on its own: nothing the step persisted,
-        // nor the previous step's checkpoint, is read again
-        stepped.release()
-        if (!savepointing && i > startIdx) Held.release(df)
         m += s"rows_after_${i + 1}_${step.op}" -> n.toDouble
         m += s"secs_${i + 1}_${step.op}" ->
           math.round((System.nanoTime() - t0) / 1e7) / 100.0

@@ -37,13 +37,13 @@ object ExperimentQuickStart {
     println(f"[experiment] cuped: var(adj)/var(post)=$vr%.4f " +
       s"(${math.round((1 - vr) * 100)}% variance removed)")
 
-    ExperimentPack.winsorizedMean(spark, dir).collected().collect().foreach { r =>
+    ExperimentPack.winsorizedMean(spark, dir).rows().foreach { r =>
       println(f"[experiment] winsorized v${r.getAs[Int]("variant")}: raw " +
         f"${r.getAs[Double]("raw_mean")}%.2f -> ${r.getAs[Double]("winsor_mean")}%.2f " +
         f"(clamped to [${r.getAs[Double]("lo")}%.1f, ${r.getAs[Double]("hi")}%.1f])")
     }
 
-    val q = ExperimentPack.quantileTreatment(spark, dir).collected().head()
+    val q = ExperimentPack.quantileTreatment(spark, dir).rows().head
     println(f"[experiment] qte: p10=${q.getAs[Double]("qte_p10")}%.3f " +
       f"p50=${q.getAs[Double]("qte_p50")}%.3f p90=${q.getAs[Double]("qte_p90")}%.3f")
 

@@ -111,7 +111,7 @@ object ModelHealth {
     val innerSplits = graft.plans.GlobalRank
       .withRowNumber(b, Seq(col("__v")), "__rn")
       .map(_.filter(col("__rn").isin(targetRanks: _*)).select("__v").distinct())
-      .collected().collect().map(_.getDouble(0)).sorted
+      .rows().map(_.getDouble(0)).sorted
     // Bucketizer semantics on [-inf, s1..sm, +inf]: bucket = #{s_j <= x}
     def bucketExpr(c: org.apache.spark.sql.Column) =
       innerSplits.zipWithIndex.foldLeft(lit(0)) {

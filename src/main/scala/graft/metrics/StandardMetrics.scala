@@ -202,7 +202,7 @@ object StandardMetrics {
   def binarySummary(df: DataFrame, labelCol: String, scoreCol: String,
                     beta: Double): BinarySummary = {
     val fm = ranked(df, labelCol, scoreCol).withFMeasure(beta)
-    val row = try fm.frame.agg(aurocCol, bestCol).head() finally fm.release()
+    val row = fm.map(_.agg(aurocCol, bestCol)).rows().head
     val best = row.getStruct(1)
     BinarySummary(row.getDouble(0), best.getAs[Number]("thresh").doubleValue(),
       best.getAs[Double]("precision"), best.getAs[Double]("recall"),

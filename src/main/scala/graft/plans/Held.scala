@@ -1,46 +1,71 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
 import org.apache.spark.storage.StorageLevel
 
 /** A lazily defined frame plus the exact persisted intermediates it reads
   * — the one way an operator hands out a cache or eager local checkpoint
   * it made. The caller decides how `frame` is materialized:
   *
-  *  - [[checkpointed]] / [[collected]]: materialize now, then release;
+  *  - [[checkpointed]] / [[counted]] / [[collected]] / [[rows]]:
+  *    materialize now through `frame`'s own query execution, then
+  *    release, and destroy the broadcast relations built by that
+  *    execution and by the caches the release frees;
   *  - a savepoint, a collect or a checkpoint of its own, then [[release]];
+  *    broadcasts built under another query execution (a `DataFrameWriter`
+  *    plans the write afresh) are not reachable from `frame`, and stay
+  *    with the ContextCleaner until the driver's next GC;
   *  - `frame` alone: the intermediates then live for the session, which a
   *    one-shot query can afford; plan tools read `frame` this way, so they
   *    see the full operator plan that [[checkpointed]] would run.
   *
   * Reading `frame` after the release recomputes released caches from
-  * source, but fails on a released checkpoint: release only once the
-  * result exists elsewhere. */
+  * source, but fails on a released checkpoint, and an action on `frame`
+  * itself after one of the materializing ends fails on its destroyed
+  * broadcasts: release only once the result exists elsewhere. */
 final case class Held(frame: DataFrame, handles: Seq[DataFrame] = Nil) {
 
   /** Derive a new frame from this one, keeping the same intermediates. */
   def map(f: DataFrame => DataFrame): Held = Held(f(frame), handles)
 
   /** Free every intermediate, the most derived first (an unloaded cache
-    * that depends on a released one would otherwise be re-planned). */
+    * that depends on a released one would otherwise be re-planned). Runs
+    * nothing: a frame that never ran built no broadcast to destroy. */
   def release(): Unit = handles.reverseIterator.foreach(Held.release)
+
+  /** Run `materialize` on `frame`, then [[release]] (also when it fails),
+    * and destroy the broadcasts that the run built and those built by the
+    * caches it frees: once the result exists elsewhere, nothing reads
+    * either again. */
+  private def retiring[T](materialize: => T): T = {
+    val caches = handles.flatMap(Held.cachedPlan)
+    val out = try materialize finally release()
+    Held.dropBroadcasts(frame.queryExecution.executedPlan +: caches)
+    out
+  }
 
   /** Materialize `frame` as an eager local checkpoint, then [[release]]:
     * the right end for a result much smaller than the intermediates it
     * frees, or one that replaces them. */
-  def checkpointed(): DataFrame = {
-    val out = frame.localCheckpoint(true)
-    release()
-    out
+  def checkpointed(): DataFrame = retiring(frame.localCheckpoint(true))
+
+  /** [[checkpointed]] plus the result's row count, both from one job: a
+    * lazy local checkpoint that its counting job fills. */
+  def counted(): (DataFrame, Long) = retiring {
+    val cp = frame.localCheckpoint(false)
+    (cp, SQLExecution.withNewExecutionId(cp.queryExecution, Some("count"))(
+      cp.queryExecution.toRdd.count()))
   }
 
   /** [[checkpointed]] for a result of a few rows: collected into a local
     * relation, so no persisted block outlives the call. */
-  def collected(): DataFrame = {
-    val rows = try frame.collectAsList() finally release()
-    frame.sparkSession.createDataFrame(rows, frame.schema)
-  }
+  def collected(): DataFrame =
+    frame.sparkSession.createDataFrame(java.util.Arrays.asList(rows(): _*), frame.schema)
+
+  /** [[collected]] for a caller that reads the rows on the driver. */
+  def rows(): Array[Row] = retiring(frame.collect())
 }
 
 object Held {
@@ -64,4 +89,30 @@ object Held {
     case r: LogicalRDD => r.rdd.unpersist(); ()
     case _ => handle.unpersist(); ()
   }
+
+  /** The physical plan that fills `handle`'s cache entry, if it has one. */
+  private def cachedPlan(handle: DataFrame): Option[SparkPlan] = {
+    val qe = handle.queryExecution
+    qe.sparkSession.sharedState.cacheManager.lookupCachedData(qe.sparkSession, qe.analyzed)
+      .map(_.cachedRepresentation.cacheBuilder.cachedPlan)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Destroy the broadcast relations built by running `plans`: what the
+    * ContextCleaner would do once a driver GC finds them unreachable, only
+    * now. Until then the driver's block store, and every executor that
+    * read one, keeps a copy; a read-back `UnsafeHashedRelation` holds a
+    * whole Tungsten page however few rows it has. The walk covers the
+    * adaptive plans' query stages and subqueries but not the cached plans
+    * they scan (those may serve other readers), and reads only stages
+    * already materialized, so it never starts a broadcast job. A reused
+    * exchange yields the same broadcast twice; each is destroyed once.
+    * Pass only plans that have run: planning an unexecuted frame to walk
+    * it would cost a planning pass for nothing. */
+  private def dropBroadcasts(plans: Seq[SparkPlan]): Unit =
+    plans.flatMap(Plans.collectWithSubqueries(_) {
+      case s: BroadcastQueryStageExec if s.isMaterialized =>
+        s.broadcast.relationFuture.get()
+    }).distinctBy(_.id).foreach(_.destroy())
 }

@@ -524,7 +524,7 @@ trait LlmDedupOps extends LlmCore {
                       maxDriverEdges: Long = 1L << 20,
                       maxRounds: Int = 25): DataFrame = {
     val bound = math.min(maxDriverEdges, Int.MaxValue - 1L).toInt
-    val head = pairs.select("da", "db").limit(bound + 1).collect()
+    val head = Held(pairs.select("da", "db").limit(bound + 1)).rows()
     if (head.length <= maxDriverEdges) {
       // driver union-find with min-root tracking. `find` is ITERATIVE
       // (walk to root, then path-compress): a recursive version recurses

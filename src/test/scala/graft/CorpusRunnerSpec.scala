@@ -522,8 +522,11 @@ class CorpusRunnerSpec extends SparkSpec {
         | "vectorSource": "parquet://$dir/embeddings.parquet", "threshold": 0.3},
         |{"op": "dsir_sample", "keepLangs": ["en"], "threshold": 0.0},
         |{"op": "rank_gate", "threshold": 0.8},
+        |{"op": "source_mix", "quota": 15, "groupColumn": "source"},
         |{"op": "dedup_simhash", "maxHamming": 0}""".stripMargin)
     val sc = spark.sparkContext
+    def relations = org.apache.spark.DriverBlocks.broadcastRelations(sc)
+    val relations0 = relations
     // the entry count is package-private in Spark; it is a public method
     // in the bytecode
     val cacheManager = spark.sharedState.cacheManager
@@ -539,6 +542,12 @@ class CorpusRunnerSpec extends SparkSpec {
     corpusRdd.isCheckpointed shouldBe true
     (sc.getPersistentRDDs.keySet -- before) shouldBe Set(corpusRdd.id)
     entries shouldBe entries0
+    // every step's hash-join broadcasts (source_mix keys its quota table
+    // on a string) are destroyed once the step is materialized
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // destroy() removes the blocks asynchronously
+    eventually(timeout(10.seconds)) { (relations -- relations0) shouldBe empty }
 
     val cc = c.corpus.get
     val input = io.SourceReader.read(spark, c.data, c.columns)
@@ -553,8 +562,8 @@ class CorpusRunnerSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
     rows(result.corpus) shouldBe rows(expected)
-    result.metrics("rows_after_8_dedup_simhash") should be > 0.0
-    result.metrics("rows_after_8_dedup_simhash") should be <
+    result.metrics("rows_after_9_dedup_simhash") should be > 0.0
+    result.metrics("rows_after_9_dedup_simhash") should be <
       result.metrics("rows_input")
   }
 

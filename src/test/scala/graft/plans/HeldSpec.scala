@@ -1,14 +1,28 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.DriverBlocks
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The release contract behind [[Held]]: a release frees exactly the
-  * caches and checkpoints the holder made, on their own handles. */
+  * caches and checkpoints the holder made, on their own handles, and a
+  * materializing end destroys the broadcasts its own execution built. */
 class HeldSpec extends SparkSpec {
 
   private def frame = spark.range(1000).toDF("x").withColumn("y", col("x") % 7)
+
+  /** Two broadcast hash joins on the same build side: the second reuses
+    * the first one's exchange, so one broadcast serves two stages. */
+  private def selfJoined = {
+    val side = spark.range(20).select(col("id").as("k"), (col("id") * 3).as("v"))
+    frame.join(broadcast(side).as("a"), col("y") === col("a.k"))
+      .join(broadcast(side).as("b"), col("x") % 20 === col("b.k"))
+      .select(col("x"), col("a.v").as("va"), col("b.v").as("vb"))
+  }
+
+  private object Plans
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   behavior of "Held"
 
@@ -55,5 +69,52 @@ class HeldSpec extends SparkSpec {
     held.release()
     theirs.storageLevel should not be StorageLevel.NONE
     theirs.unpersist()
+  }
+
+  it should "destroy each broadcast its materialization built, once, through checkpointed and collected" in {
+    import org.apache.spark.sql.execution.adaptive.BroadcastQueryStageExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val expected = selfJoined.collect().toSet
+    expected should have size 1000
+    Seq[Held => Set[org.apache.spark.sql.Row]](
+      _.checkpointed().collect().toSet,
+      _.collected().collect().toSet
+    ).foreach { materialize =>
+      val held = Held(selfJoined)
+      materialize(held) shouldBe expected
+      val plan = held.frame.queryExecution.executedPlan
+      Plans.collectWithSubqueries(plan) { case r: ReusedExchangeExec => r } should not be empty
+      val built = Plans.collectWithSubqueries(plan) {
+        case s: BroadcastQueryStageExec => s.broadcast.relationFuture.get()
+      }
+      built.size should be >= 2
+      built.map(_.id).distinct should have size 1
+      built.foreach(b => DriverBlocks.isValid(b) shouldBe false)
+      // destroy() drops the blocks asynchronously
+      eventually(timeout(10.seconds)) {
+        DriverBlocks.broadcastRelations(sc) should not contain built.head.id
+      }
+    }
+  }
+
+  it should "start no job when releasing a frame that never ran" in {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val held = Held.cached(frame.filter(col("y") === 4)).map(_.join(selfJoined, "x"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    DriverBlocks.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      held.release()
+      DriverBlocks.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get shouldBe 0
+    held.handles.head.storageLevel shouldBe StorageLevel.NONE
   }
 }

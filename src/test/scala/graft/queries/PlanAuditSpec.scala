@@ -386,8 +386,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   it should "leave only a held query's returned checkpoint persisted" in {
-    // every query with a lazy Held form releases what it persisted: run
-    // twice, the second run meets every shared input already cached
+    // every query with a lazy Held form releases what it persisted and
+    // destroys the broadcast relations it built: run twice, the second run
+    // meets every shared input already cached
     import org.apache.spark.sql.execution.LogicalRDD
     val sc = spark.sparkContext
     // the entry count is package-private in Spark; it is a public method
@@ -395,6 +396,13 @@ class PlanAuditSpec extends SparkSpec {
     val cacheManager = spark.sharedState.cacheManager
     def entries = cacheManager.getClass.getMethod("numCachedEntries")
       .invoke(cacheManager).asInstanceOf[Int]
+    def relations = org.apache.spark.DriverBlocks.broadcastRelations(sc)
+    // destroy() drops the blocks asynchronously
+    def settled(left: => Set[Long]): Set[Long] = {
+      val until = System.nanoTime() + 10000000000L
+      while (left.nonEmpty && System.nanoTime() < until) Thread.sleep(50)
+      left
+    }
     // inputs that queries share through SessionCache stay cached for the
     // session: the first run may add these, and no other entry
     val shared = Map("fivegram_ppl" -> 1, "fourgram_ppl" -> 1,
@@ -406,6 +414,7 @@ class PlanAuditSpec extends SparkSpec {
       val warmEntries = entries - warmEntries0
       val rdds0 = sc.getPersistentRDDs.keySet
       val entries0 = entries
+      val relations0 = relations
       val out = run(spark, dir)
       val kept = out.queryExecution.logical match {
         case r: LogicalRDD => Set(r.rdd.id)
@@ -413,11 +422,13 @@ class PlanAuditSpec extends SparkSpec {
       }
       val extra = sc.getPersistentRDDs.keySet -- rdds0 -- kept
       val newEntries = entries - entries0
+      val broadcasts = settled(relations -- relations0).size
       graft.plans.Held.release(out)
       if (kept.size == 1 && extra.isEmpty && newEntries == 0 &&
-          warmEntries <= shared.getOrElse(name, 0)) None
+          warmEntries <= shared.getOrElse(name, 0) && broadcasts == 0) None
       else Some(s"$name: checkpoint ${kept.size}, other RDDs ${extra.size}, " +
-        s"cache entries $newEntries (first run $warmEntries)")
+        s"cache entries $newEntries (first run $warmEntries), " +
+        s"broadcast relations $broadcasts")
     }
     graft.SparkEntry.held.size should be >= 18
     leaks shouldBe empty
