@@ -1,7 +1,17 @@
 package graft
+
+import graft.plans.Held
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failed query reports duration -1 AND lands in an
   * "errors" object — failures must be visible, never silently fast.
+  *
+  * Every attempt goes through [[Bench.attempt]], the step the other timing
+  * tools share: the query's returned frame is released after it is timed,
+  * and anything else the call left persisted (an RDD or a cache-manager
+  * entry) is recorded in "errors" too. Nothing is swept between attempts,
+  * so a leaked cache would show up as a later attempt's free reuse.
   *
   * Noise resistance: each query is warmed once (unmeasured — codegen, JIT,
   * parquet footers) and then timed `SPARK_GRAFT_RUNS` times (default 3;
@@ -39,6 +49,45 @@ object Bench {
   private val ServingOnly = Set(
     "ann_probe_persisted", "bpe_apply_persisted", "unigram_lm_apply_persisted")
 
+  /** One attempt at a query: build it and count it (the timed part), then,
+    * uncharged, release the returned frame (a held query's checkpoint),
+    * check that nothing else the call persisted is left, and collect
+    * garbage so this attempt's heap pressure does not surface as a GC
+    * pause inside the next one. Returns the build and total seconds of a
+    * run that succeeded, and why the attempt failed or what it left. */
+  def attempt(spark: SparkSession, sfDir: String,
+              run: (SparkSession, String) => DataFrame): (Option[(Double, Double)], Option[String]) = {
+    val sc = spark.sparkContext
+    val cacheManager = spark.sharedState.cacheManager
+    val rdds0 = sc.getPersistentRDDs.keySet
+    val uncached0 = cacheManager.isEmpty
+    val t0 = System.nanoTime()
+    val out = try {
+      val df = run(spark, sfDir)
+      val built = (System.nanoTime() - t0) / 1e9
+      df.count()
+      Right((df, built, (System.nanoTime() - t0) / 1e9))
+    } catch { case e: Throwable => Left(e.toString.take(200)) }
+    out.foreach { case (df, _, _) => Held.release(df) }
+    val rdds = (sc.getPersistentRDDs.keySet -- rdds0).size
+    val entries = uncached0 && !cacheManager.isEmpty
+    System.gc()
+    val left =
+      if (rdds == 0 && !entries) None
+      else Some(s"left persisted: $rdds RDDs" + (if (entries) " and cache entries" else ""))
+    (out.toOption.map { case (_, built, secs) => (built, secs) },
+      out.left.toOption.orElse(left))
+  }
+
+  /** [[attempt]] for a tool that stops at the first attempt that fails or
+    * leaves something persisted; `what` names the attempt in the error. */
+  def attemptOrThrow(spark: SparkSession, sfDir: String,
+                     run: (SparkSession, String) => DataFrame, what: String): (Double, Double) =
+    attempt(spark, sfDir, run) match {
+      case (Some(timed), None) => timed
+      case (_, problem) => throw new IllegalStateException(s"$what: ${problem.mkString}")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(3))
@@ -56,8 +105,7 @@ object Bench {
       r.withColumn("rn",
         row_number().over(Window.partitionBy("r_regionkey").orderBy("r_regionkey"))).count()
       // range-partitioner + two-pass rank machinery (plans.GlobalRank)
-      graft.plans.GlobalRank.withNtile(r, Seq(col("r_regionkey")), 2, "b").frame.count()
-      spark.catalog.clearCache()
+      graft.plans.GlobalRank.withNtile(r, Seq(col("r_regionkey")), 2, "b").rows()
     }
     var errors = Map.empty[String, String]
     // local-iteration filter (unset for driver runs → full sweep)
@@ -94,34 +142,25 @@ object Bench {
       }
     }
 
-    // One attempt, measured in isolation: time the action, then drop cached
-    // plans (so a later attempt neither reuses nor evicts them) and collect
-    // garbage (so this attempt's heap pressure doesn't surface as a GC
-    // pause inside the next one's wall-clock) — both UNCHARGED.
-    def attempt(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Long, Long)] = {
+    // One attempt plus its task-metric deltas; a failure or a leak lands
+    // in `errors`.
+    def measured(name: String, fn: (SparkSession, String) => DataFrame): Option[(Double, Long, Long)] = {
       drainListenerBus() // settle the PREVIOUS attempt's task events
       val (sh0, sp0) = (shuffleBytes.sum(), spillBytes.sum())
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          errors += name -> e.toString.take(200); false
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      System.gc()
+      val (timed, problem) = attempt(spark, sfDir, fn)
+      problem.foreach(p => errors += name -> p)
       drainListenerBus() // settle THIS attempt's task events before snapshot
-      if (ok) Some((secs, shuffleBytes.sum() - sh0, spillBytes.sum() - sp0))
-      else None
+      timed.map { case (_, secs) => (secs, shuffleBytes.sum() - sh0, spillBytes.sum() - sp0) }
     }
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_ .contains(name)) }
       .map { case (name, fn) =>
-        attempt(name, fn) match { // warmup; a failure here skips the runs
+        measured(name, fn) match { // warmup; a failure here skips the runs
           case None => name -> (Seq(-1.0), 0L, 0L)
           case Some(_) =>
             val nRuns = if (NoisyRankQueries(name)) math.max(runs, 5) else runs
-            val triples = (1 to nRuns).flatMap(_ => attempt(name, fn))
+            val triples = (1 to nRuns).flatMap(_ => measured(name, fn))
             if (triples.isEmpty) name -> (Seq(-1.0), 0L, 0L)
             else name -> (triples.map(_._1).sorted,
               triples.last._2, triples.last._3)

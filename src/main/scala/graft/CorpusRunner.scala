@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *  - `dedup_exact`     keep the lowest-id copy per normalized-text hash
   *                      (LlmData.dedupExact semantics)
   *  - `dedup_minhash`   MinHash-LSH near-dup clusters → keep one
-  *                      representative per cluster (LlmData.minhashPairsOf
+  *                      representative per cluster (LlmData.minhashPairsHeld
   *                      + componentLabels)
   *  - `quality_gate`    TextQuality heuristics gate (quality_filter)
   *  - `lang_filter`     keep the configured languages
@@ -193,7 +193,7 @@ object CorpusRunner extends Logging {
         // components; drop every doc whose component label is a smaller id
         // (keep one representative per near-dup cluster). The pair graph is
         // orders of magnitude smaller than the corpus — see
-        // LlmData.minhashPairsOf / componentLabels for the scale notes.
+        // LlmData.minhashPairsHeld / componentLabels for the scale notes.
         val pairs = queries.LlmData
           .minhashPairsHeld(df.select(col(id), col(text)), id, text,
             threshold = step.threshold)
@@ -265,7 +265,7 @@ object CorpusRunner extends Logging {
         // cosine to any EXTERNAL eval embedding clears the threshold are
         // dropped. Both vector frames arrive through the same scheme
         // dispatch as the main source; the eval side is validated against
-        // the broadcast bound inside semanticDecontamOf (loud failure —
+        // the broadcast bound inside semanticDecontamHeld (loud failure —
         // an oversized eval suite belongs on the persisted-ANN path).
         val vecs = SourceReader
           .readSource(df.sparkSession, step.vectorSource)
@@ -300,7 +300,7 @@ object CorpusRunner extends Logging {
           .semanticDecontamHeld(corpusVecs, eval, step.threshold)
           .map(f => df.join(f.select(col("vec_id").as(id)), Seq(id), "left_anti"))
       case "span_scrub" =>
-        // C4-style duplicated-span REMOVAL (LlmData.spanScrubOf): globally
+        // C4-style duplicated-span REMOVAL (LlmData.spanScrubHeld): globally
         // duplicated w-token blocks keep only their first occurrence and
         // every doc is rebuilt from its surviving blocks; docs scrubbed to
         // nothing are dropped. Rewrites text IN PLACE — the row count only
@@ -314,7 +314,7 @@ object CorpusRunner extends Logging {
               .withColumnRenamed("rebuilt", text)
           }
       case "span_dedup" =>
-        // corpus-wide duplicated-span profile (LlmData.dupSegmentsOf);
+        // corpus-wide duplicated-span profile (LlmData.dupSegmentsHeld);
         // drop docs whose duplicated-window fraction exceeds the threshold
         // — the C4/CCNet boilerplate gate. Anti-join on the unique id.
         queries.LlmData
@@ -322,7 +322,7 @@ object CorpusRunner extends Logging {
           .map(p => df.join(p.filter(col("dup_frac") > step.threshold)
             .select(col("doc_id").as(id)), Seq(id), "left_anti"))
       case "dsir_sample" =>
-        // DSIR importance gate (LlmData.dsirWeightsOf): the target LM is
+        // DSIR importance gate (LlmData.dsirWeightsHeld): the target LM is
         // fit on the keepLangs slice; docs scoring below the threshold
         // log-likelihood ratio are dropped. Semi-join on the unique id.
         queries.LlmData

@@ -128,19 +128,19 @@ object PipelineRunner extends Logging {
           .select((keepCols :+ "features").distinct.map(col): _*)
       }
       val trainVec = vectorized.head._2.persist()
+      val (chain, scored) = try {
+        // 5. model chain
+        val chain = ModelTrainingEngine.fit(
+          trainVec, conf.training, conf.tuning, conf.columns.response)
 
-      // 5. model chain
-      val chain = ModelTrainingEngine.fit(
-        trainVec, conf.training, conf.tuning, conf.columns.response)
-
-      // 6. scoring + post-predict filter (ref: core/Predict.scala:43-107)
-      val scored = vectorized.map { case (name, df) =>
-        val out = chain.transform(df)
-        val filtered = conf.postPredictFilter.map(out.filter).getOrElse(out)
-        if (savepointing) sp.save(filtered.drop("features"), "scored", k, name)
-        name -> filtered
-      }.toMap
-      trainVec.unpersist()
+        // 6. scoring + post-predict filter (ref: core/Predict.scala:43-107)
+        (chain, vectorized.map { case (name, df) =>
+          val out = chain.transform(df)
+          val filtered = conf.postPredictFilter.map(out.filter).getOrElse(out)
+          if (savepointing) sp.save(filtered.drop("features"), "scored", k, name)
+          name -> filtered
+        }.toMap)
+      } finally trainVec.unpersist()
       logInfo(s"page $k: trained ${conf.training.algorithm} " +
         s"(${conf.training.buildType}), scored ${scored.keys.mkString(",")}")
       PageResult(k, prep, chain, scored)

@@ -35,31 +35,24 @@ object ProfileQuery {
       }
     })
 
-    // warmup (codegen, JIT, parquet footers)
-    fn(spark, sfDir).count()
-    spark.catalog.clearCache()
-    System.gc()
+    // one attempt through Bench's step; a failure or a leak stops the run
+    def attempt(): (Double, Double) = Bench.attemptOrThrow(spark, sfDir, fn, name)
+    attempt() // warmup (codegen, JIT, parquet footers)
     Thread.sleep(300)
 
     for (r <- 1 to runs) {
       stages.synchronized(stages.clear()); jobs.set(0)
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.count()
-      val t2 = System.nanoTime()
+      val (built, total) = attempt()
       Thread.sleep(400) // let listener drain
       val ss = stages.synchronized(stages.toVector).sortBy(-_.wallMs)
       val stageWall = ss.map(_.wallMs).sum
-      println(f"== run $r: total ${(t2 - t0) / 1e9}%.3fs  build ${(t1 - t0) / 1e9}%.3fs  " +
-        f"exec ${(t2 - t1) / 1e9}%.3fs  jobs ${jobs.get}  stages ${ss.size}  " +
+      println(f"== run $r: total $total%.3fs  build $built%.3fs  " +
+        f"exec ${total - built}%.3fs  jobs ${jobs.get}  stages ${ss.size}  " +
         f"sum(stage wall) ${stageWall / 1e3}%.3fs")
       if (r == runs)
         ss.take(20).foreach(s => println(
           f"   stage ${s.id}%4d tasks ${s.nTasks}%3d wall ${s.wallMs}%6dms taskSum ${s.taskMs}%6dms " +
           f"shW ${s.shuffleWrite / 1024}%8dKB  ${s.name}"))
-      spark.catalog.clearCache()
-      System.gc()
     }
     spark.stop()
   }

@@ -6,8 +6,10 @@ package graft
   * a plan that is secretly quadratic (all-pairs, single-partition window,
   * corpus-sized broadcast) shows a ratio far above the data growth; a
   * healthy shuffle-on-key plan tracks it or stays below (fixed overhead
-  * amortizes). Same noise discipline as [[Bench]]: warm once, median of
-  * `SPARK_GRAFT_RUNS` (default 3) per (query, sf).
+  * amortizes). Same noise discipline as [[Bench]], through its one
+  * attempt step ([[Bench.attempt]]): warm once, median of
+  * `SPARK_GRAFT_RUNS` (default 3) per (query, sf); a failed or leaking
+  * attempt stops the run.
   *
   * Run: sbt "runMain graft.ScalingBench"
   * Writes bench/SCALING_LOCAL.json (override: SPARK_GRAFT_SCALING_OUT).
@@ -77,13 +79,8 @@ object ScalingBench {
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(3))
     val spark = GraftSession.local(GraftSession.envCores, "graft-scaling-bench")
 
-    def timeOnce(name: String, sfDir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); System.gc()
-      secs
-    }
+    def timeOnce(name: String, sfDir: String): Double =
+      Bench.attemptOrThrow(spark, sfDir, SparkEntry.queries(name), s"$name at $sfDir")._2
     def median(name: String, sfDir: String): Double = {
       timeOnce(name, sfDir) // warmup, uncharged
       val ts = (1 to runs).map(_ => timeOnce(name, sfDir)).sorted

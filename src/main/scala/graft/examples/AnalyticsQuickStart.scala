@@ -19,7 +19,7 @@ object AnalyticsQuickStart {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.local(8, "graft-analytics-quickstart")
 
-    val pr = AnalyticsPack.pagerank(spark, dir).cache()
+    val pr = AnalyticsPack.pagerank(spark, dir).checkpointed()
     val topPart = pr.filter(col("node").startsWith("p:"))
       .orderBy(desc("rank")).head()
     println(s"[analytics] pagerank: ${pr.count()} nodes, " +

@@ -108,7 +108,7 @@ object CorpusQuickStart {
 
     // token-budget sequence packing of the survivors: global running token
     // sums (two-pass range prefix sums, partition-parallel) -> budget bins
-    val packed = LlmData.docPackOf(cleaned, "doc_id", "text", budget = 256)
+    val packed = LlmData.docPackOf(cleaned, "doc_id", "text", budget = 256).checkpointed()
     println(s"[corpus] packed ${packed.count()} context-window chunks into " +
       s"${packed.select("bin_id").distinct().count()} token-budget bins")
     spark.stop()

@@ -24,7 +24,7 @@ object ExperimentQuickStart {
       f"${w.getAs[Long]("n_b")}) t=${w.getAs[Double]("t_stat")}%.4f " +
       f"df=${w.getAs[Double]("df")}%.1f")
 
-    val mw = ExperimentPack.mannWhitney(spark, dir).head()
+    val mw = ExperimentPack.mannWhitney(spark, dir).rows().head
     println(f"[experiment] mann-whitney: U=${mw.getAs[Double]("u_stat")}%.0f " +
       f"z=${mw.getAs[Double]("z_stat")}%.4f (rank-based twin of the t-test)")
 

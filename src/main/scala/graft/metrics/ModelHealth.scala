@@ -103,7 +103,9 @@ object ModelHealth {
     * size (only the k−1 split VALUES are collected). */
   def psiExact(base: DataFrame, current: DataFrame, column: String,
                k: Int): DataFrame = {
-    val b = base.select(col(column).cast("double").as("__v")).cache()
+    // read by the count and the rank pass, not by the returned frame
+    val held = graft.plans.Held.cached(base.select(col(column).cast("double").as("__v")))
+    val b = held.frame
     val n = b.count()
     val step = 1.0 / k
     val targetRanks = (1 until k)
@@ -112,6 +114,7 @@ object ModelHealth {
       .withRowNumber(b, Seq(col("__v")), "__rn")
       .map(_.filter(col("__rn").isin(targetRanks: _*)).select("__v").distinct())
       .rows().map(_.getDouble(0)).sorted
+    held.release()
     // Bucketizer semantics on [-inf, s1..sm, +inf]: bucket = #{s_j <= x}
     def bucketExpr(c: org.apache.spark.sql.Column) =
       innerSplits.zipWithIndex.foldLeft(lit(0)) {

@@ -259,8 +259,8 @@ object StandardMetrics {
       .groupBy("bin")
       .agg(count(lit(1)).as("n"), avg("__p").as("mean_pred"),
         sum(col(labelCol).cast("long")).as("sy"))
-      .cache()
-    // inclusive prefix sums over the tiny bin frame (self-join, no window)
+    // inclusive prefix sums over the tiny bin frame (self-join, no window;
+    // every read of `b` shares its one exchange)
     val cum = b.as("x")
       .join(broadcast(b.select(col("bin").as("b2"), col("n").as("n2"),
         col("sy").as("sy2"))), col("b2") <= col("bin"))

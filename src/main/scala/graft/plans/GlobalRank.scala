@@ -30,10 +30,10 @@ import org.apache.spark.storage.StorageLevel
   * `Dataset.unpersist` on a derived frame does NOT release it (the extra
   * Project nodes defeat the sameResult cache lookup). The row-number,
   * ntile, running-sum and exact-percentile ops therefore return a
-  * [[Held]]: the lazy result plus the exact persisted sort. The caller
-  * materializes the result (`checkpointed()`, `collected()`, a savepoint)
-  * and releases the sort; reading `.frame` alone, as the weighted-
-  * percentile ops do, leaves the sort cached for the session.
+  * [[Held]]: the lazy result plus the exact persisted sort, and so do the
+  * weighted-percentile ops built on them. The caller materializes the
+  * result (`checkpointed()`, `collected()`, a savepoint) and releases the
+  * sort.
   */
 object GlobalRank {
 
@@ -176,13 +176,13 @@ object GlobalRank {
     * engines only up to weight ties at the boundary value. */
   def groupWeightedPercentiles(df: DataFrame, groupCol: String,
                                valueCol: String, weightCol: String,
-                               ps: Seq[Double]): DataFrame = {
+                               ps: Seq[Double]): Held = {
     require(ps.nonEmpty && ps.forall(p => p > 0 && p <= 1),
       s"percentiles must be in (0,1], got ${ps.mkString(",")}")
     val in = df.select(col(groupCol), col(valueCol), col(weightCol))
       .filter(col(valueCol).isNotNull && col(weightCol) > 0)
-    val run = withRunningSums(in, Seq(col(groupCol), col(valueCol)),
-      Seq(weightCol -> "__cumw"))._1.frame
+    val Held(run, runH) = withRunningSums(in, Seq(col(groupCol), col(valueCol)),
+      Seq(weightCol -> "__cumw"))._1
     val tot = in.groupBy(groupCol)
       .agg(sum(col(weightCol)).as("__tot"), count(lit(1)).as("__n"))
     // per-group offset = total weight of groups sorted before it (the
@@ -199,7 +199,7 @@ object GlobalRank {
         min(when(col("__gw") >= lit(p) * col("__tot"), col(valueCol)))
           .as(s"wp$i")
       }
-    cdf.groupBy(groupCol).agg(aggs.head, aggs.tail: _*)
+    Held(cdf.groupBy(groupCol).agg(aggs.head, aggs.tail: _*), runH)
   }
 
   /** INTERPOLATED weighted per-group percentiles — the fractional-weight-
@@ -233,15 +233,15 @@ object GlobalRank {
     * a group (w > 0), so max(s ≤ p) and min(s ≥ p) ARE adjacent. */
   def groupWeightedPercentilesInterp(df: DataFrame, groupCol: String,
                                      valueCol: String, weightCol: String,
-                                     ps: Seq[Double]): DataFrame = {
+                                     ps: Seq[Double]): Held = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       s"percentiles must be in [0,1], got ${ps.mkString(",")}")
     val in = df.select(col(groupCol), col(valueCol), col(weightCol))
       .filter(col(valueCol).isNotNull && col(weightCol) > 0)
       .groupBy(col(groupCol), col(valueCol))
       .agg(sum(col(weightCol)).as("__w"))
-    val run = withRunningSums(in, Seq(col(groupCol), col(valueCol)),
-      Seq("__w" -> "__cumw"))._1.frame
+    val Held(run, runH) = withRunningSums(in, Seq(col(groupCol), col(valueCol)),
+      Seq("__w" -> "__cumw"))._1
     val tot = in.groupBy(groupCol)
       .agg(sum(col("__w")).as("__tot"), count(lit(1)).as("__nv"))
     val off = tot.select(col(groupCol), col("__tot"), col("__nv"))
@@ -273,7 +273,7 @@ object GlobalRank {
               (hi.getField("v") - lo.getField("v")))
           .as(s"wp$i")
       }
-    agged.select(outCols: _*)
+    Held(agged.select(outCols: _*), runH)
   }
 
   /** Exact interpolated per-group percentiles (PERCENTILE_CONT /

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -68,7 +69,7 @@ object AnalyticsPack extends QueryPack {
     * ordering differences (~1e-15) are quantized away long before they
     * could compound, making the fixed-point bit-reproducible across
     * engines. */
-  def pagerank(s: SparkSession, dir: String): DataFrame = {
+  def pagerank(s: SparkSession, dir: String): Held = {
     val li = Tables.lineitem(s, dir)
     // partition AND sort the edge list on src ONCE: InMemoryRelation
     // propagates both outputPartitioning and outputOrdering, so each
@@ -79,12 +80,11 @@ object AnalyticsPack extends QueryPack {
     // parts — collision-free by parity): every per-iteration join, agg
     // and shuffle keys on a fixed-width 8-byte long instead of a "c:…"
     // string, and the output strings are reconstructed once at the end.
-    val edges = Tables.orders(s, dir)
+    val Held(edges, edgesH) = Held.cached(Tables.orders(s, dir)
       .join(li, col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey").cast("long") * 2).as("src"),
         (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-      .distinct().repartition(col("src")).sortWithinPartitions("src")
-      .cache()
+      .distinct().repartition(col("src")).sortWithinPartitions("src"))
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
     val deg = edges.groupBy(col("src").as("node"))
@@ -95,8 +95,8 @@ object AnalyticsPack extends QueryPack {
     // and the dangling mass become row-local projections of the previous
     // iteration's frame. nodeMeta is partitioned + sorted on node once so
     // each iteration's update join reuses the layout.
-    val nodeMeta = nodes.join(deg, Seq("node"), "left")
-      .repartition(col("node")).sortWithinPartitions("node").cache()
+    val Held(nodeMeta, nodeMetaH) = Held.cached(nodes.join(deg, Seq("node"), "left")
+      .repartition(col("node")).sortWithinPartitions("node"))
     // AQE materializes every query stage as its own job; across K
     // iterations of small fixed-shape stages that is ~10 driver
     // round-trips per iteration of pure scheduling latency. The loop's
@@ -111,15 +111,18 @@ object AnalyticsPack extends QueryPack {
       val nCol = lit(nodeMeta.agg(count(lit(1)).cast("double")).head.getDouble(0))
       var ranks = nodeMeta
         .select(col("node"), round(lit(1.0) / nCol, 8).as("r"), col("deg"))
+      var last: Option[DataFrame] = None // the checkpoint `ranks` reads
       for (_ <- 1 to PrIters) {
         // the fused pass: one shuffle carries both the per-dst
         // contributions and the dangling-mass sentinel row
-        val agg = ranks.join(edges, col("node") === col("src"), "left")
+        val agg = Held(ranks.join(edges, col("node") === col("src"), "left")
           .select(coalesce(col("dst"), lit(PrDangKey)).as("__n"),
             when(col("dst").isNotNull, col("r") / col("deg"))
               .otherwise(col("r")).as("__w"))
-          .groupBy("__n").agg(sum("__w").as("__sum"))
-          .localCheckpoint(true)
+          .groupBy("__n").agg(sum("__w").as("__sum")))
+          .checkpointed()
+        last.foreach(Held.release)
+        last = Some(agg)
         val contrib = agg.filter(col("__n") =!= PrDangKey)
           .select(col("__n").as("node"), col("__sum").as("contrib"))
         // dangling mass: O(1) rows off the checkpointed aggregate
@@ -132,10 +135,10 @@ object AnalyticsPack extends QueryPack {
               (coalesce(col("contrib"), lit(0.0)) + dmCol / nCol),
             8).as("r"), col("deg"))
       }
-      ranks.select(
+      Held(ranks.select(
         concat(when(col("node") % 2 === 0, lit("c:")).otherwise(lit("p:")),
           shiftright(col("node"), 1)).as("node"),
-        col("r").as("rank")).orderBy("node")
+        col("r").as("rank")).orderBy("node"), edgesH ++ nodeMetaH ++ last)
     } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
 
@@ -179,30 +182,23 @@ object AnalyticsPack extends QueryPack {
 
   // Three graph queries (item_cooccur, triangle_count, label_prop) mine
   // the SAME co-purchase structure: the distinct (order, part) incidence
-  // list and the ≥2-shared-orders pair frame. Build them once per
-  // (session, sf-dir) and share the cached handles — the common-
-  // subexpression materialization a production engine applies to a query
-  // family with a shared dimension build ([[graft.plans.SessionCache]]:
-  // weak on both the session key and the handle map, so a closed
-  // session's cached frames stay collectable). Both frames are
+  // list and the ≥2-shared-orders pair frame. Both end in a shuffle that
+  // every reader in one plan shares through exchange reuse; both are
   // O(rows·basket)-bounded, tiny next to the corpus at any SF.
-  private val coPurchase = new graft.plans.SessionCache[(DataFrame, DataFrame)]
 
   /** (incidence, pairs): inc = distinct (ok, pk); pairs = (a, b, n_ab)
-    * with a < b and n_ab ≥ [[CooccurMinSupport]]. Both cached. */
-  private def coPurchaseOf(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    coPurchase.getOrElseUpdate(s, dir) {
-      val inc = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct().cache()
-      val pairs = inc.select(col("ok"), col("pk").as("a"))
-        .join(inc.select(col("ok"), col("pk").as("b")), "ok")
-        .filter(col("a") < col("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-        .filter(col("n_ab") >= CooccurMinSupport)
-        .cache()
-      (inc, pairs)
-    }
+    * with a < b and n_ab ≥ [[CooccurMinSupport]]. */
+  private def coPurchaseOf(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val inc = Tables.lineitem(s, dir)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct()
+    val pairs = inc.select(col("ok"), col("pk").as("a"))
+      .join(inc.select(col("ok"), col("pk").as("b")), "ok")
+      .filter(col("a") < col("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
+      .filter(col("n_ab") >= CooccurMinSupport)
+    (inc, pairs)
+  }
 
   /** Market-basket lift: part pairs that co-occur in the same order far
     * more often than chance — lift(a,b) = P(a,b)/(P(a)·P(b)) over orders.
@@ -254,7 +250,6 @@ object AnalyticsPack extends QueryPack {
           col("a")).otherwise(col("b")).as("u"),
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
           col("b")).otherwise(col("a")).as("v"))
-      .cache()
     val w = o.select(col("u"), col("v").as("x"))
       .join(o.select(col("u"), col("v").as("y")), "u")
       .filter(col("x") < col("y"))
@@ -281,34 +276,36 @@ object AnalyticsPack extends QueryPack {
     * partitioned + sorted on src ONCE and cached; each round is one keyed
     * join against it + one (node, label) count + one argmax-by-min-struct
     * agg — no windows, no driver state, integer counts only (nothing to
-    * round). Per-round `localCheckpoint` kills the 2^K lazy-tree blowup;
+    * round). A per-round checkpoint kills the 2^K lazy-tree blowup;
     * AQE pauses inside the loop like the PageRank body. */
-  def labelProp(s: SparkSession, dir: String): DataFrame = {
+  def labelProp(s: SparkSession, dir: String): Held = {
     val e = coPurchaseOf(s, dir)._2
-    val ed = e.select(col("a").as("s"), col("b").as("d"))
+    val Held(ed, edH) = Held.cached(e.select(col("a").as("s"), col("b").as("d"))
       .unionAll(e.select(col("b").as("s"), col("a").as("d")))
-      .repartition(col("s")).sortWithinPartitions("s").cache()
+      .repartition(col("s")).sortWithinPartitions("s"))
     var lab = ed.select(col("s").as("node")).distinct()
       .withColumn("lbl", col("node"))
     val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    try for (_ <- 1 to LpaIters) {
+    try for (t <- 1 to LpaIters) {
+      val last = lab
       // ONE exchange per round: repartition by d once — HashPartitioning(d)
       // satisfies the clustering of BOTH the (d, lbl) count and the argmax
       // agg (rows equal on (d,lbl) are equal on d), so the two aggregates
       // ride the same exchange instead of shuffling twice
-      lab = lab.join(ed, col("node") === col("s"))
+      lab = Held(lab.join(ed, col("node") === col("s"))
         .select("d", "lbl") // project before the exchange (guide §2.3)
         .repartition(col("d"))
         .groupBy(col("d"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("d").as("node"))
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l")))
-          .getField("l").as("lbl"))
-        .localCheckpoint(true)
+          .getField("l").as("lbl")))
+        .checkpointed()
+      if (t > 1) Held.release(last)
     } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    lab.groupBy(col("lbl").as("community"))
+    Held(lab.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("size"), min("node").as("min_member"))
-      .orderBy(desc("size"), asc("community")).limit(20)
+      .orderBy(desc("size"), asc("community")).limit(20), edH :+ lab)
   }
 
   private def labelPropSql: String = {
@@ -408,7 +405,6 @@ object AnalyticsPack extends QueryPack {
     val seq = events
       .withColumn("rn", row_number().over(w))
       .select(col("user_id"), col("rn"), col("event_id"), col("value"))
-      .cache()
     val cur = seq.select(col("user_id"), col("rn"), col("event_id"))
       .withColumn("bucket", explode(array(
         (col("rn") / bkt).cast("int") - 1, (col("rn") / bkt).cast("int"))))
@@ -602,8 +598,8 @@ object AnalyticsPack extends QueryPack {
   def kmvEstErr(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
       .select(col("event_type").as("t"), col("user_id").as("k"))
-      .distinct().cache() // one member row per (group, user): both the
-                          // sketch and the exact audit read it
+      .distinct() // one member row per (group, user): both the sketch
+                  // and the exact audit read its exchange
     val topk = e
       .withColumn("h", graft.functions.GraftFunctions.md5Coin(col("k")))
       .withColumn("rnk", row_number().over(
@@ -693,7 +689,7 @@ object AnalyticsPack extends QueryPack {
     * every stage partition-parallel. Ties are ordered starts-first
     * (d DESC) so back-to-back sessions count as overlapping at the
     * boundary instant, deterministically in any engine. */
-  def peakConcurrency(s: SparkSession, dir: String): DataFrame = {
+  def peakConcurrency(s: SparkSession, dir: String): Held = {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val sess = withUs(s, dir)
       .withColumn("prev_us", lag(col("us"), 1).over(w))
@@ -706,15 +702,14 @@ object AnalyticsPack extends QueryPack {
     val deltas = sess.select(col("start_us").as("us"), lit(1).as("d"))
       .unionAll(sess.select(col("end_us").as("us"), lit(-1).as("d")))
     graft.plans.GlobalRank
-      .withRunningSums(deltas, Seq(col("us"), col("d").desc), Seq("d" -> "conc"))._1.frame
-      .orderBy(desc("conc"), asc("us"), desc("d")).limit(1)
-      .select(col("conc").cast("bigint").as("peak"), col("us").as("at_us"))
+      .withRunningSums(deltas, Seq(col("us"), col("d").desc), Seq("d" -> "conc"))._1
+      .map(_.orderBy(desc("conc"), asc("us"), desc("d")).limit(1)
+        .select(col("conc").cast("bigint").as("peak"), col("us").as("at_us")))
   }
 
   // ---------------------------------------------------------- registry
 
   protected def direct: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pagerank" -> pagerank,
     "triangle_count" -> triangleCount,
     "item_cooccur" -> itemCooccur,
     "seq_mining" -> seqMining,
@@ -724,7 +719,10 @@ object AnalyticsPack extends QueryPack {
     "cms_est_err" -> cmsEstErr,
     "hll_est_err" -> hllEstErr,
     "kmv_est_err" -> kmvEstErr,
-    "bloom_filter" -> bloomFilter,
+    "bloom_filter" -> bloomFilter)
+
+  override val held: Map[String, (SparkSession, String) => Held] = Map(
+    "pagerank" -> pagerank,
     "peak_concurrency" -> peakConcurrency,
     "label_prop" -> labelProp)
 

@@ -477,16 +477,16 @@ object EventOpsPack extends QueryPack {
     * one row per day; the prefix sum over |days| rows then runs through
     * the two-pass partition-parallel scheme in plans.GlobalRank (no
     * single-partition window, per the global plan sweep). */
-  def cumulativeDistinct(s: SparkSession, dir: String): DataFrame = {
+  def cumulativeDistinct(s: SparkSession, dir: String): Held = {
     val newPerDay = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .groupBy("user_id").agg(min("day").as("day"))
       .groupBy("day").agg(count(lit(1)).as("n_new"))
     graft.plans.GlobalRank
-      .withRunningSums(newPerDay, Seq(col("day")), Seq(("n_new", "cum")))._1.frame
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+      .withRunningSums(newPerDay, Seq(col("day")), Seq(("n_new", "cum")))._1
+      .map(_.select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("n_new"), col("cum").cast("long").as("cum_users"))
-      .orderBy("day")
+        .orderBy("day"))
   }
 
   /** Skew-salted fact⋈dim join on the contract surface: events (big,
@@ -630,7 +630,6 @@ object EventOpsPack extends QueryPack {
     "heavy_hitters" -> heavyHitters,
     "salted_join_agg" -> saltedJoinAgg,
     "date_spine" -> dateSpine,
-    "cumulative_distinct" -> cumulativeDistinct,
     "markov_transitions" -> markovTransitions,
     "session_stats" -> sessionStats,
     "intersect_op" -> intersectOp,
@@ -647,6 +646,7 @@ object EventOpsPack extends QueryPack {
     "decay_touch" -> decayTouchAttribution)
 
   override val held: Map[String, (SparkSession, String) => Held] = Map(
+    "cumulative_distinct" -> cumulativeDistinct,
     "interevent_gaps" -> intereventGaps)
 
   val oracle: Map[String, String] = Map(

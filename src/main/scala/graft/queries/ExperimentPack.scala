@@ -184,8 +184,9 @@ object ExperimentPack extends QueryPack {
       .agg(
         floor((max("us") - min("us")) / lit(86400000000L)).as("dur"),
         max((col("event_type") === "purchase").cast("int")).as("died"))
+    // read three times in one plan, through one reused exchange
     val atRisk = life.groupBy("dur").agg(count(lit(1)).as("n_enter"),
-      sum("died").as("e")).cache()
+      sum("died").as("e"))
     // n_risk(d) = Σ_{d' ≥ d} n_enter(d'); tiny frame — self-join suffices
     val risk = atRisk.select(col("dur"))
       .join(atRisk.select(col("dur").as("d2"), col("n_enter")),
@@ -249,13 +250,12 @@ object ExperimentPack extends QueryPack {
     * frame whose cumulative counts come from the two-pass running-sum
     * machinery — avg tie rank = cum − (c−1)/2 is row-local, R_b is one
     * conditional sum. No global window, no per-group buffer. */
-  def mannWhitney(s: SparkSession, dir: String): DataFrame = {
+  def mannWhitney(s: SparkSession, dir: String): Held = {
     val u = perUser(s, dir).withColumn("m", round(col("m"), 6))
     val v = u.groupBy("m").agg(count(lit(1)).as("c"),
       sum(col("variant")).as("cb"))
-    val run = graft.plans.GlobalRank.withRunningSums(
-      v, Seq(col("m")), Seq("c" -> "cum"))._1.frame
-    run
+    graft.plans.GlobalRank.withRunningSums(
+      v, Seq(col("m")), Seq("c" -> "cum"))._1.map(_
       .select(((col("cum") - (col("c") - 1) / 2.0) * col("cb")).as("rbp"),
         col("c"), col("cb"))
       .agg(sum("rbp").as("rb"),
@@ -269,7 +269,7 @@ object ExperimentPack extends QueryPack {
             - (col("nn") - col("nb")) * col("nb") / 2.0) /
             sqrt((col("nn") - col("nb")) * col("nb") / 12.0 *
               ((col("nn") + 1) - col("ties") /
-                (col("nn") * (col("nn") - 1)))), 6) + lit(0.0)).as("z_stat"))
+                (col("nn") * (col("nn") - 1)))), 6) + lit(0.0)).as("z_stat")))
   }
 
   // ---------------------------------------------------- winsorized means
@@ -338,7 +338,7 @@ object ExperimentPack extends QueryPack {
         floor((max("us") - min("us")) / lit(86400000000L)).as("dur"),
         max((col("event_type") === "purchase").cast("int")).as("died"))
     val atRisk = life.groupBy("dur").agg(count(lit(1)).as("n_enter"),
-      sum("died").as("e")).cache()
+      sum("died").as("e"))
     val risk = atRisk.select(col("dur"))
       .join(atRisk.select(col("dur").as("d2"), col("n_enter")),
         col("d2") >= col("dur"))
@@ -364,11 +364,11 @@ object ExperimentPack extends QueryPack {
     "msprt_peek" -> msprtPeek,
     "cuped_adjust" -> cupedAdjust,
     "diff_in_diff" -> diffInDiff,
-    "mann_whitney" -> mannWhitney,
     "nelson_aalen" -> nelsonAalen,
     "kaplan_meier" -> kaplanMeier)
 
   override def held: Map[String, (SparkSession, String) => Held] = Map(
+    "mann_whitney" -> mannWhitney,
     "winsorized_mean" -> winsorizedMean,
     "quantile_treatment" -> quantileTreatment)
 

@@ -88,7 +88,7 @@ trait LlmAnnOps extends LlmCore {
     * λ·relevance − (1−λ)·max-similarity-to-already-picked, so near-
     * duplicate hits don't crowd the result list the plain cosine top-k
     * ([[annTopK]]) returns. */
-  def annMmr(s: SparkSession, dir: String): DataFrame =
+  def annMmr(s: SparkSession, dir: String): Held =
     annMmrOf(Tables.embeddings(s, dir), col("vec_id") < 8)
 
 
@@ -105,7 +105,7 @@ trait LlmAnnOps extends LlmCore {
     * ever enters through the one scored scan. */
   def annMmrOf(emb: DataFrame, queryPred: org.apache.spark.sql.Column,
                k: Int = 5, lam: Double = 0.7, nCand: Int = 12,
-               maxQueries: Long = 4096): DataFrame = {
+               maxQueries: Long = 4096): Held = {
     val e = emb.select(col("vec_id"), vecNorm(col("embedding")).as("vn"))
     val q0 = e.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("vn").as("qv"))
@@ -116,20 +116,19 @@ trait LlmAnnOps extends LlmCore {
         "bound) — generate candidates via the persisted ANN index instead")
     val q = q0.localCheckpoint(true)
     val c = e.select(col("vec_id").as("c_id"), col("vn").as("cv"))
-    val cand = broadcast(q).crossJoin(c).filter(col("q_id") =!= col("c_id"))
+    // O(nq·nCand) rows — everything below is bounded
+    val cand = Held(broadcast(q).crossJoin(c).filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         round(vecDot(col("qv"), col("cv")), 4).as("rel"), col("cv"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(desc("rel"), asc("c_id"))))
       .filter(col("rnk") <= nCand)
-      .drop("rnk")
-      .localCheckpoint(true) // O(nq·nCand) rows — everything below is bounded
-    val ps = cand.select(col("q_id"), col("c_id").as("a"), col("cv").as("av"))
+      .drop("rnk")).checkpointed()
+    val ps = Held(cand.select(col("q_id"), col("c_id").as("a"), col("cv").as("av"))
       .join(cand.select(col("q_id"), col("c_id").as("b"), col("cv").as("bv")), "q_id")
       .filter(col("a") =!= col("b"))
       .select(col("q_id"), col("a"), col("b"),
-        round(vecDot(col("av"), col("bv")), 4).as("sim"))
-      .localCheckpoint(true)
+        round(vecDot(col("av"), col("bv")), 4).as("sim"))).checkpointed()
     val candLite = cand.select("q_id", "c_id", "rel")
     var selected: DataFrame = null
     for (r <- 1 to k) {
@@ -156,10 +155,14 @@ trait LlmAnnOps extends LlmCore {
           // exactly on the half-way tie, where Spark (HALF_UP) and
           // DuckDB (float round) disagree
           round(col("score"), 5).as("score"))
-      selected = (if (r == 1) pick else selected.unionAll(pick))
-        .localCheckpoint(true) // keep round r+1's plan flat
+      val last = selected
+      // keep round r+1's plan flat
+      selected = Held(if (r == 1) pick else selected.unionAll(pick)).checkpointed()
+      if (last != null) Held.release(last)
     }
-    selected.orderBy("q_id", "rnk")
+    // the last round's checkpoint holds every pick: release the rest
+    Seq(q, cand, ps).foreach(Held.release)
+    Held(selected.orderBy("q_id", "rnk"), Seq(selected))
   }
 
 
@@ -173,7 +176,7 @@ trait LlmAnnOps extends LlmCore {
     * query set, stream the corpus partition-parallel; at 100 TB the
     * candidate generation swaps to the ANN index ([[annLsh]]/[[annIvf]])
     * without changing the ranking or the output contract. */
-  def hardNegatives(s: SparkSession, dir: String): DataFrame =
+  def hardNegatives(s: SparkSession, dir: String): Held =
     hardNegativesOf(Tables.embeddings(s, dir), col("vec_id") < 8)
 
 
@@ -186,7 +189,7 @@ trait LlmAnnOps extends LlmCore {
     * or the output contract. */
   def hardNegativesOf(emb: DataFrame,
                       queryPred: org.apache.spark.sql.Column,
-                      maxQueries: Long = 4096): DataFrame = {
+                      maxQueries: Long = 4096): Held = {
     val e = emb
       .select(col("vec_id"), col("label"), vecNorm(col("embedding")).as("vn"))
     val q0 = e.filter(queryPred)
@@ -200,14 +203,13 @@ trait LlmAnnOps extends LlmCore {
         "broadcast bound) — use the persisted ANN index path for large " +
         "query sets")
     // the VALIDATED query set is <= maxQueries narrow rows: materialize it
-    // once (local checkpoint — no catalog-cache entry to leak) so the
-    // probe side doesn't re-run the predicate scan
+    // once (a held local checkpoint) so the probe side doesn't re-run the
+    // predicate scan
     val q = q0.localCheckpoint(true)
     val c = e.select(col("vec_id").as("c_id"), col("label").as("cl"), col("vn").as("cv"))
     val scored = broadcast(q).crossJoin(c).filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("ql"), col("c_id"), col("cl"),
         round(vecDot(col("qv"), col("cv")), 4).as("cos_sim"))
-      .cache() // feeds both the positive and the negative ranking
     def top1(cond: org.apache.spark.sql.Column, pfx: String) = scored
       .filter(cond)
       .withColumn("rnk", row_number().over(
@@ -215,9 +217,9 @@ trait LlmAnnOps extends LlmCore {
       .filter(col("rnk") === 1)
       .select(col("q_id"), col("c_id").as(s"${pfx}_id"),
         col("cos_sim").as(s"${pfx}_cos"))
-    top1(col("ql") === col("cl"), "pos")
+    Held(top1(col("ql") === col("cl"), "pos")
       .join(top1(col("ql") =!= col("cl"), "neg"), "q_id")
-      .orderBy("q_id")
+      .orderBy("q_id"), Seq(q))
   }
 
 
@@ -244,7 +246,6 @@ trait LlmAnnOps extends LlmCore {
             vecSig(col("embedding"), 4, 64, b * 4).as("sig"))): _*)).as("bs"))
       .select(col("vec_id"), col("vn"),
         col("bs.band").as("band"), col("bs.sig").as("sig"))
-      .cache() // both join sides read the banded index
     val q = e.filter(col("vec_id") < 8)
       .selectExpr("vec_id AS q_id", "vn AS qv", "band", "sig")
     val c = e.selectExpr("vec_id AS c_id", "vn AS cv", "band", "sig")
@@ -280,10 +281,11 @@ trait LlmAnnOps extends LlmCore {
     * round(dot, 6) with a centroid-id tie-break — deterministic across
     * engines. */
   def annIvf(s: SparkSession, dir: String,
-             k: Int = -1, nprobe: Int = -1): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), vecNorm(col("embedding")).as("vn"))
-      .cache() // normalized corpus, read by assignment + both join sides
+             k: Int = -1, nprobe: Int = -1): Held = {
+    // normalized corpus, read by the count, the seed sample, assignment
+    // and both join sides
+    val Held(e, eH) = Held.cached(Tables.embeddings(s, dir)
+      .select(col("vec_id"), vecNorm(col("embedding")).as("vn")))
     val kk = if (k > 0) k else adaptiveCoarseK(e.count())
     val np = if (nprobe > 0) nprobe else adaptiveNprobe(kk)
     val cents = coarseSeeds(e, kk)
@@ -300,19 +302,18 @@ trait LlmAnnOps extends LlmCore {
       Window.partitionBy("vec_id").orderBy(desc("d"), asc("cent_id")))
     val assigned = scored.withColumn("rn", byCell)
       .filter(col("rn") <= np).select("vec_id", "cent_id", "rn")
-      .cache()
     val lists = assigned.filter(col("rn") === 1).join(e, "vec_id")
       .select(col("vec_id").as("c_id"), col("vn").as("cvn"), col("cent_id"))
     val probes = assigned.filter(col("vec_id") < 8).join(e, "vec_id")
       .select(col("vec_id").as("q_id"), col("vn").as("qv"), col("cent_id"))
-    probes.join(lists, "cent_id").filter(col("q_id") =!= col("c_id"))
+    Held(probes.join(lists, "cent_id").filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         round(vecDot(col("qv"), col("cvn")), 4).as("cos_sim"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("c_id"))))
       .filter(col("rnk") <= 3)
       .select("q_id", "rnk", "c_id", "cos_sim")
-      .orderBy("q_id", "rnk")
+      .orderBy("q_id", "rnk"), eH)
   }
 
 
@@ -330,7 +331,6 @@ trait LlmAnnOps extends LlmCore {
     val sigs = Tables.embeddings(s, dir)
       .select(col("vec_id"), vecNorm(col("embedding")).as("vn"),
         vecSig(col("embedding"), 4, 64).as("sig"))
-      .cache()
     sigs.selectExpr("sig", "vec_id AS da", "vn AS va")
       .join(sigs.selectExpr("sig", "vec_id AS db", "vn AS vb"), "sig")
       .filter(col("da") < col("db"))
@@ -357,12 +357,12 @@ trait LlmAnnOps extends LlmCore {
     * into the next round's distances — that makes the whole iteration
     * bit-reproducible cross-engine (distances use the left-to-right
     * vec_dot kernel = DuckDB's list_dot_product order). */
-  def embedKmeans(s: SparkSession, dir: String): DataFrame =
-    kmeansAssign(s, dir)
+  def embedKmeans(s: SparkSession, dir: String): Held =
+    kmeansAssign(s, dir).map(_
       .groupBy(col("cid").as("cluster_id"))
       .agg(count(lit(1)).as("n"),
         round(avg(sqrt(greatest(col("d2"), lit(0.0)))), 4).as("avg_dist"))
-      .orderBy("cluster_id")
+      .orderBy("cluster_id"))
 
 
 
@@ -371,14 +371,14 @@ trait LlmAnnOps extends LlmCore {
     * (deterministic order: rounded distance, then vec_id). A keyed window
     * per cluster — partition-parallel, no global sort. */
   def kmeansBalance(s: SparkSession, dir: String,
-                    perCluster: Int = 3): DataFrame =
-    kmeansAssign(s, dir)
+                    perCluster: Int = 3): Held =
+    kmeansAssign(s, dir).map(_
       .withColumn("rnk", row_number().over(
         Window.partitionBy("cid").orderBy(round(col("d2"), 6), col("vec_id"))))
       .filter(col("rnk") <= perCluster)
       .select(col("cid").as("cluster_id"), col("rnk"), col("vec_id"),
         round(sqrt(greatest(col("d2"), lit(0.0))), 4).as("dist"))
-      .orderBy("cluster_id", "rnk")
+      .orderBy("cluster_id", "rnk"))
 
 
 
@@ -411,19 +411,19 @@ trait LlmAnnOps extends LlmCore {
 
 
 
-  /** Deterministic 2-round Lloyd fit: returns the cached (vec_id, v, x2)
-    * frame and the refined centroids. Seeds come from [[coarseSeeds]]
+  /** Deterministic 2-round Lloyd fit: returns the held, cached
+    * (vec_id, v, x2) frame and the refined centroids. Seeds come from [[coarseSeeds]]
     * (O(k) driver state at any SF); each update is one hash aggregate on
     * narrow (cluster, dim, partial-sum) rows; per-round components are
     * rounded to 6 dp so aggregate summation order can never leak into the
     * next round — bit-reproducible cross-engine. */
   protected def kmeansFit(s: SparkSession, dir: String,
-                        k: Int = KmeansK): (DataFrame, Seq[(Long, Array[Double])]) = {
-    val e = Tables.embeddings(s, dir)
+                        k: Int = KmeansK): (Held, Seq[(Long, Array[Double])]) = {
+    // read once per round; narrow (id, vec, norm) rows
+    val e = Held.cached(Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("x2", vecDot(col("v"), col("v")))
-      .cache() // read once per round; narrow (id, vec, norm) rows
-    (e, lloydFit(e, k))
+      .withColumn("x2", vecDot(col("v"), col("v"))))
+    (e, lloydFit(e.frame, k))
   }
 
 
@@ -456,9 +456,9 @@ trait LlmAnnOps extends LlmCore {
 
   /** Final-round (vec_id, cid, d2) assignment shared by the k-means
     * profile and the balanced sampler. */
-  protected def kmeansAssign(s: SparkSession, dir: String): DataFrame = {
+  protected def kmeansAssign(s: SparkSession, dir: String): Held = {
     val (e, cents) = kmeansFit(s, dir)
-    assignBest(e, cents)
+    e.map(assignBest(_, cents))
   }
 
 
@@ -473,11 +473,11 @@ trait LlmAnnOps extends LlmCore {
     * both keep O(k) broadcast state and O(N·k) assignment at any SF, with
     * the same corpus-adaptive k/nprobe defaults. */
   def annIvfTrained(s: SparkSession, dir: String,
-                    k: Int = -1, nprobe: Int = -1): DataFrame = {
+                    k: Int = -1, nprobe: Int = -1): Held = {
     val n = Tables.embeddings(s, dir).count()
     val kk = if (k > 0) k else adaptiveCoarseK(n)
     val np = if (nprobe > 0) nprobe else adaptiveNprobe(kk)
-    val (e, cents) = kmeansFit(s, dir, kk)
+    val (Held(e, eH), cents) = kmeansFit(s, dir, kk)
     val lists = assignBest(e, cents)
       .select(col("vec_id").as("c_id"), col("cid").as("cent_id"))
     // nprobe nearest refined centroids per query: sort the k-struct literal
@@ -489,8 +489,7 @@ trait LlmAnnOps extends LlmCore {
       .select(col("q_id"), col("p.cid").as("cent_id"))
     val vn = Tables.embeddings(s, dir)
       .select(col("vec_id"), vecNorm(col("embedding")).as("vn"))
-      .cache() // read by both sides of the re-rank join
-    probes.join(lists, "cent_id").filter(col("q_id") =!= col("c_id"))
+    Held(probes.join(lists, "cent_id").filter(col("q_id") =!= col("c_id"))
       .join(vn.select(col("vec_id").as("q_id"), col("vn").as("qv")), "q_id")
       .join(vn.select(col("vec_id").as("c_id"), col("vn").as("cv")), "c_id")
       .select(col("q_id"), col("c_id"),
@@ -499,7 +498,7 @@ trait LlmAnnOps extends LlmCore {
         Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("c_id"))))
       .filter(col("rnk") <= 3)
       .select("q_id", "rnk", "c_id", "cos_sim")
-      .orderBy("q_id", "rnk")
+      .orderBy("q_id", "rnk"), eH)
   }
 
 
@@ -549,7 +548,8 @@ trait LlmAnnOps extends LlmCore {
           graft.plans.SnapshotStore.latestVersion(s"$root/$t").isDefined)
       if (!committed) {
         val n = Tables.embeddings(s, dir).count()
-        val (e, cents) = kmeansFit(s, dir, adaptiveCoarseK(n))
+        val (fit, cents) = kmeansFit(s, dir, adaptiveCoarseK(n))
+        val e = fit.frame
         import s.implicits._
         val centDf = cents.map { case (cid, cv) => (cid, cv.toSeq) }
           .toDF("cid", "cv")
@@ -578,6 +578,7 @@ trait LlmAnnOps extends LlmCore {
             (0 until PqM).map(j => col(s"c$j")): _*)
         graft.plans.SnapshotStore.publish(cbDf, s"$root/codebook", 1L)
         graft.plans.SnapshotStore.publish(codes, s"$root/codes", 1L)
+        fit.release()
       }
       root
     })
@@ -805,19 +806,18 @@ trait LlmAnnOps extends LlmCore {
     * share one signature, so the size bound — the thing the cap exists
     * for — would be lost. At 100 TB prefer the guarantee. */
   def semDedup(s: SparkSession, dir: String, tau: Double = 0.3,
-               maxCluster: Int = 40): DataFrame = {
-    val e = semDedupKeyed(s, dir, maxCluster)
-      .cache() // both sides of the within-group pair join
-    e.select(col("cid"), col("sub"), col("vec_id").as("da"), col("vn").as("va"))
-      .join(e.select(col("cid"), col("sub"), col("vec_id").as("db"),
-        col("vn").as("vb")), Seq("cid", "sub"))
-      .filter(col("da") < col("db"))
-      .withColumn("cos_sim", round(vecDot(col("va"), col("vb")), 4))
-      .filter(col("cos_sim") >= tau)
-      .groupBy(col("db").as("pruned_id"))
-      .agg(min("da").as("keeper_id"), max("cos_sim").as("max_cos"))
-      .orderBy("pruned_id")
-  }
+               maxCluster: Int = 40): Held =
+    semDedupKeyed(s, dir, maxCluster).map { e =>
+      e.select(col("cid"), col("sub"), col("vec_id").as("da"), col("vn").as("va"))
+        .join(e.select(col("cid"), col("sub"), col("vec_id").as("db"),
+          col("vn").as("vb")), Seq("cid", "sub"))
+        .filter(col("da") < col("db"))
+        .withColumn("cos_sim", round(vecDot(col("va"), col("vb")), 4))
+        .filter(col("cos_sim") >= tau)
+        .groupBy(col("db").as("pruned_id"))
+        .agg(min("da").as("keeper_id"), max("cos_sim").as("max_cos"))
+        .orderBy("pruned_id")
+    }
 
 
 
@@ -827,18 +827,19 @@ trait LlmAnnOps extends LlmCore {
     * broadcast join; everything else is the id-keyed joins the assignment
     * already does. */
   private def semDedupKeyed(s: SparkSession, dir: String,
-                            maxCluster: Int): DataFrame = {
-    val cid = kmeansAssign(s, dir).select("vec_id", "cid")
-    val sizes = cid.groupBy("cid").agg(count(lit(1)).as("__n"))
-    val nGroups = ceil(col("__n") / lit(maxCluster.toDouble)).cast("long")
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), vecNorm(col("embedding")).as("vn"))
-      .join(cid, "vec_id")
-      .join(broadcast(sizes), "cid")
-      .withColumn("sub", when(col("__n") <= maxCluster, lit(0L))
-        .otherwise(pmod(col("vec_id"), nGroups)))
-      .drop("__n")
-  }
+                            maxCluster: Int): Held =
+    kmeansAssign(s, dir).map { assigned =>
+      val cid = assigned.select("vec_id", "cid")
+      val sizes = cid.groupBy("cid").agg(count(lit(1)).as("__n"))
+      val nGroups = ceil(col("__n") / lit(maxCluster.toDouble)).cast("long")
+      Tables.embeddings(s, dir)
+        .select(col("vec_id"), vecNorm(col("embedding")).as("vn"))
+        .join(cid, "vec_id")
+        .join(broadcast(sizes), "cid")
+        .withColumn("sub", when(col("__n") <= maxCluster, lit(0L))
+          .otherwise(pmod(col("vec_id"), nGroups)))
+        .drop("__n")
+    }
 
 
 
@@ -846,9 +847,9 @@ trait LlmAnnOps extends LlmCore {
     * The spec asserts every group stays near `maxCluster`, bounding the
     * within-group quadratic term at any corpus size. */
   def semDedupGroups(s: SparkSession, dir: String,
-                     maxCluster: Int = 40): DataFrame =
-    semDedupKeyed(s, dir, maxCluster)
-      .groupBy("cid", "sub").agg(count(lit(1)).as("n_members"))
+                     maxCluster: Int = 40): Held =
+    semDedupKeyed(s, dir, maxCluster).map(_
+      .groupBy("cid", "sub").agg(count(lit(1)).as("n_members")))
 
 
 
@@ -862,11 +863,11 @@ trait LlmAnnOps extends LlmCore {
     * shingle decontam (what the oracle replays); the production shape —
     * an EXTERNAL eval set read through scheme dispatch — is the
     * `semantic_decontam` corpus step, which routes the same
-    * [[semanticDecontamOf]]. */
+    * [[semanticDecontamHeld]]. */
   def semanticDecontam(s: SparkSession, dir: String,
-                       threshold: Double = 0.3): DataFrame = {
+                       threshold: Double = 0.3): Held = {
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    semanticDecontamOf(
+    semanticDecontamHeld(
       e.filter(col("vec_id") % 97 =!= 0),
       e.filter(col("vec_id") % 97 === 0), threshold)
   }
@@ -886,15 +887,8 @@ trait LlmAnnOps extends LlmCore {
     * partition-parallel with one codegen vec_dot per (corpus, eval)
     * pair, folded by min(struct(-cos, e_id)) — max cosine with a
     * deterministic min-id tie-break, no value buffer, one
-    * partial-aggregating shuffle. */
-  def semanticDecontamOf(corpus: DataFrame, evalVecs: DataFrame,
-                         threshold: Double,
-                         maxEvalRows: Long = 4096): DataFrame =
-    semanticDecontamHeld(corpus, evalVecs, threshold, maxEvalRows).frame
-
-
-  /** [[semanticDecontamOf]] with its eval-set checkpoint as the handle to
-    * release once the flagged rows are materialized (see [[Held]]). */
+    * partial-aggregating shuffle. Its eval-set checkpoint is the handle
+    * to release once the flagged rows are materialized (see [[Held]]). */
   def semanticDecontamHeld(corpus: DataFrame, evalVecs: DataFrame,
                            threshold: Double,
                            maxEvalRows: Long = 4096): Held = {

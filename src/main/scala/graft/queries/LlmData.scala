@@ -40,19 +40,13 @@ object LlmData extends QueryPack with LlmDedupOps with LlmQuantOps
     "fuzzy_pairs" -> ((s, d) => fuzzyPairs(s, d)),
     "doc_chunk" -> docChunk,
     "dedup_canonical" -> dedupCanonical,
-    "cluster_safe_split" -> ((s, d) => clusterSafeSplit(s, d)),
-    "hard_negatives" -> hardNegatives,
     "neardup_pairs" -> neardupPairs,
     "neardup_capped" -> neardupCapped,
-    "containment_pairs" -> ((s, d) => containmentPairs(s, d)),
-    "dedup_minhash" -> dedupMinhash,
     "dedup_clusters" -> dedupClusters,
     "simhash_sig" -> simhashSig,
     "ann_topk" -> annTopK,
     "ann_ndcg" -> annNdcg,
-    "ann_mmr" -> ((s, d) => annMmr(s, d)),
     "ann_lsh" -> annLsh,
-    "ann_ivf" -> ((s, d) => annIvf(s, d)),
     "neardup_cosine" -> neardupCosine,
     "quality_filter" -> qualityFilter,
     "embed_stats" -> embedStats,
@@ -60,8 +54,6 @@ object LlmData extends QueryPack with LlmDedupOps with LlmQuantOps
     "text_stats" -> textStats,
     "token_bpe" -> tokenBpe,
     "bpe_train" -> bpeTrain,
-    "unigram_lm_train" -> unigramLmTrain,
-    "unigram_lm_apply" -> unigramLmApply,
     "unigram_lm_apply_persisted" -> unigramLmApplyPersisted,
     "bpe_apply" -> bpeApply,
     "bpe_apply_persisted" -> bpeApplyPersisted,
@@ -72,50 +64,58 @@ object LlmData extends QueryPack with LlmDedupOps with LlmQuantOps
     "decontam_overlap" -> decontamOverlap,
     "decontam_bloom" -> decontamBloom,
     "gopher_repetition" -> gopherRepetition,
-    "embed_kmeans" -> embedKmeans,
     "embed_pq" -> ((s, d) => embedPq(s, d)),
-    "embed_pq_trained" -> ((s, d) => embedPqTrained(s, d)),
-    "ann_ivfpq" -> ((s, d) => annIvfPq(s, d)),
-    "ann_ivf_trained" -> ((s, d) => annIvfTrained(s, d)),
     "ann_probe_persisted" -> annIvfProbePersisted,
     "ann_probe_pq" -> ((s, d) => annIvfPqProbePersisted(s, d)),
     "merge_upsert" -> mergeUpsert,
     "text_normalize" -> textNormalize,
-    "kmeans_balance" -> ((s, d) => kmeansBalance(s, d)),
-    "doc_pack" -> ((s, d) => docPack(s, d)),
     "dedup_incremental" -> dedupIncremental,
     "topk_per_source" -> topkPerSource,
     "source_mix_sample" -> ((s, d) => sourceMixSample(s, d)),
     "source_temp_mix" -> ((s, d) => sourceTemperatureMix(s, d)),
     "source_token_mix" -> ((s, d) => sourceTokenMix(s, d)),
-    "dup_segments" -> ((s, d) => dupSegments(s, d)),
-    "span_scrub" -> spanScrub,
-    "dsir_weights" -> dsirWeights,
-    "semdedup" -> ((s, d) => semDedup(s, d)),
-    "unigram_ppl" -> unigramPpl,
     "bigram_ppl" -> bigramPpl,
     "bm25_topk" -> bm25TopK,
     "pmi_bigrams" -> pmiBigrams,
     "weighted_sample" -> ((s, d) => weightedSample(s, d)),
-    "semantic_decontam" -> ((s, d) => semanticDecontam(s, d)),
     "semantic_decontam_ann" -> ((s, d) => semanticDecontamAnn(s, d)),
     "corpus_diff" -> corpusDiff,
-    "ann_sq8" -> ((s, d) => annSq8(s, d)),
-    "minhash_est_err" -> minhashEstErr,
-    "source_overlap" -> sourceOverlap,
     "doc_entropy" -> docEntropy,
     "vocab_heaps" -> vocabHeaps,
     "source_report" -> sourceReport,
     "embed_outliers" -> embedOutliers,
     "neardup_sweep" -> neardupSweep,
-    "pack_stats" -> ((s, d) => packStats(s, d)),
-    "dedup_minhash_incr" -> ((s, d) => dedupMinhashIncr(s, d)),
-    "simhash_neardup" -> simhashNeardupProfile)
+    "dedup_minhash_incr" -> ((s, d) => dedupMinhashIncr(s, d)))
 
   override val held: Map[String, (SparkSession, String) => Held] = Map(
+    "containment_pairs" -> ((s, d) => containmentPairs(s, d)),
+    "unigram_lm_train" -> unigramLmTrain,
+    "unigram_lm_apply" -> unigramLmApply,
+    "embed_pq_trained" -> ((s, d) => embedPqTrained(s, d)),
+    "ann_ivfpq" -> ((s, d) => annIvfPq(s, d)),
+    "ann_sq8" -> ((s, d) => annSq8(s, d)),
+    "ann_mmr" -> ((s, d) => annMmr(s, d)),
+    "hard_negatives" -> hardNegatives,
+    "ann_ivf" -> ((s, d) => annIvf(s, d)),
+    "ann_ivf_trained" -> ((s, d) => annIvfTrained(s, d)),
+    "embed_kmeans" -> embedKmeans,
+    "kmeans_balance" -> ((s, d) => kmeansBalance(s, d)),
+    "semdedup" -> ((s, d) => semDedup(s, d)),
+    "semantic_decontam" -> ((s, d) => semanticDecontam(s, d)),
+    "doc_pack" -> ((s, d) => docPack(s, d)),
+    "pack_stats" -> ((s, d) => packStats(s, d)),
+    "dsir_weights" -> dsirWeights,
+    "dedup_minhash" -> dedupMinhash,
+    "cluster_safe_split" -> ((s, d) => clusterSafeSplit(s, d)),
+    "minhash_est_err" -> minhashEstErr,
+    "source_overlap" -> sourceOverlap,
+    "dup_segments" -> ((s, d) => dupSegments(s, d)),
+    "span_scrub" -> spanScrub,
+    "simhash_neardup" -> simhashNeardupProfile,
     "novelty_curve" -> noveltyCurve,
     "curriculum_order" -> curriculumOrder,
     "corpus_shuffle" -> ((s, d) => corpusShuffle(s, d)),
+    "unigram_ppl" -> unigramPpl,
     "trigram_ppl" -> trigramPpl,
     "fourgram_ppl" -> fourgramPpl,
     "fivegram_ppl" -> fivegramPpl,

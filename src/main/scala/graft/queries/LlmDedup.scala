@@ -95,7 +95,7 @@ trait LlmDedupOps extends LlmCore {
           .filter(col("df") <= k).select("s")
         shAll.join(rare.hint("merge"), Seq("s"), "left_semi")
       case None => shAll
-    }).cache()
+    })
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter =
       if (!prefixFilter)
@@ -144,13 +144,13 @@ trait LlmDedupOps extends LlmCore {
     * (fan-out ≤ maxDf² per shingle), and the cap is part of the operator's
     * exact semantics — the oracle applies the identical cap. */
   def containmentPairs(s: SparkSession, dir: String,
-                       maxDf: Int = 50, minC: Double = 0.5): DataFrame = {
+                       maxDf: Int = 50, minC: Double = 0.5): Held = {
     val shAll = shingles(s, dir)
     val rare = shAll.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("s")
     // merge-hinted for the same reason as neardupPairsImpl: the cache comes
     // out s-partitioned and the intersection self-join rides it shuffle-free
-    val sh = shAll.join(rare.hint("merge"), Seq("s"), "left_semi").cache()
+    val Held(sh, shH) = Held.cached(shAll.join(rare.hint("merge"), Seq("s"), "left_semi"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // intersection counted ONCE per unordered pair (da < db halves the
     // heavy aggregate); both directions are then emitted from the tiny
@@ -161,7 +161,7 @@ trait LlmDedupOps extends LlmCore {
       .groupBy("da", "db").agg(count(lit(1)).as("ni"))
       .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
       .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-    inter
+    Held(inter
       .select(explode(array(
         struct(col("da").as("da"), col("db").as("db"), col("ni"),
           col("na").as("n_src")),
@@ -170,7 +170,7 @@ trait LlmDedupOps extends LlmCore {
       .select(col("p.da").as("da"), col("p.db").as("db"), col("p.ni").as("ni"),
         round(col("p.ni") / col("p.n_src"), 6).as("cont"))
       .filter(col("cont") >= minC)
-      .orderBy("da", "db")
+      .orderBy("da", "db"), shH)
   }
 
 
@@ -188,27 +188,22 @@ trait LlmDedupOps extends LlmCore {
     * the (semi-joined) shingle stream, so the cost is Σ_pairs |shingles|
     * — bounded by the LSH output, never quadratic in a hot shingle's
     * document frequency the way an inverted-index self-join is. */
-  def dedupMinhash(s: SparkSession, dir: String): DataFrame =
-    minhashPairs(s, dir).orderBy("da", "db")
+  def dedupMinhash(s: SparkSession, dir: String): Held =
+    minhashPairs(s, dir).map(_.orderBy("da", "db"))
 
 
   /** Verified near-dup pairs (unordered) — shared by [[dedupMinhash]] and
     * [[dedupClusters]]. */
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    minhashPairsOf(Tables.documents(s, dir), "doc_id", "text")
+  private def minhashPairs(s: SparkSession, dir: String): Held =
+    minhashPairsHeld(Tables.documents(s, dir), "doc_id", "text")
 
 
   /** The full MinHash-LSH + exact-verify pipeline over ANY (id, text)
     * frame — what [[graft.CorpusRunner]]'s `dedup_minhash` step runs.
-    * Output columns are `da`/`db` (the id pair, `da < db`) + `jac`. */
-  def minhashPairsOf(docs: DataFrame, idCol: String, textCol: String,
-                     threshold: Double = 0.7): DataFrame =
-    minhashPairsHeld(docs, idCol, textCol, threshold).frame
-
-
-  /** [[minhashPairsOf]] with its three cached intermediates — the shingle
-    * stream, the candidate pairs and the re-clustered candidate shingles
-    * — as handles to release once the pairs are materialized. */
+    * Output columns are `da`/`db` (the id pair, `da < db`) + `jac`. Its
+    * three cached intermediates — the shingle stream, the candidate pairs
+    * and the re-clustered candidate shingles — are the handles to release
+    * once the pairs are materialized. */
   def minhashPairsHeld(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double = 0.7): Held = {
     val Held(sh, shH) = Held.cached(shinglesOf(docs, idCol, textCol))
@@ -234,7 +229,7 @@ trait LlmDedupOps extends LlmCore {
 
 
   /** LSH banding + pair-driven exact verify over precomputed shingles and
-    * signatures (see [[minhashPairsOf]] for the fused entry point). */
+    * signatures (see [[minhashPairsHeld]] for the fused entry point). */
   /** 4-band LSH index rows (doc_id, band, sig) from the 12-slot signature
     * frame: band b hashes seeds {b, b+4, b+8}; the signature string matches
     * the oracle's string_agg(seed||':'||mh, '|' ORDER BY seed). */
@@ -341,14 +336,11 @@ trait LlmDedupOps extends LlmCore {
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     dedupClusters(s, dir, 1L << 20)
 
-  def dedupClusters(s: SparkSession, dir: String, maxDriverEdges: Long): DataFrame = {
-    val pairs = minhashPairs(s, dir).select("da", "db").cache()
-    val labels = componentLabels(s, pairs, maxDriverEdges)
-    labels
+  def dedupClusters(s: SparkSession, dir: String, maxDriverEdges: Long): DataFrame =
+    pairLabels(s, dir, maxDriverEdges)
       .groupBy(col("lbl").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), max("doc_id").as("max_doc"))
       .orderBy("cluster_id")
-  }
 
 
   /** Canonical-document selection — "keep the BEST doc per duplicate
@@ -361,8 +353,7 @@ trait LlmDedupOps extends LlmCore {
     * sort). Output per cluster: the kept doc, its length, and how many
     * copies it displaced. */
   def dedupCanonical(s: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashPairs(s, dir).select("da", "db").cache()
-    val labels = componentLabels(s, pairs)
+    val labels = pairLabels(s, dir, 1L << 20)
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lbl").orderBy(col("n_chars").desc, col("doc_id").asc)
@@ -485,16 +476,17 @@ trait LlmDedupOps extends LlmCore {
     * Cost beyond the pair graph: one left join + row-local coin + two
     * bounded aggs. */
   def clusterSafeSplit(s: SparkSession, dir: String,
-                       trainFrac: Double = 0.8): DataFrame = {
-    val pairs = minhashPairs(s, dir).select("da", "db").cache()
+                       trainFrac: Double = 0.8): Held = {
+    // the pairs feed the labels' collect and the cross-pair count
+    val held = minhashPairs(s, dir)
+    val Held(pairs, pairsH) = Held.cached(held.frame.select("da", "db"))
     val labels = componentLabels(s, pairs)
     val docs = Tables.documents(s, dir).select("doc_id")
     val lbl = docs.join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
     val coin = graft.functions.GraftFunctions.md5Coin(col("lbl"))
-    val sided = lbl
-      .withColumn("side", when(coin < trainFrac, "train").otherwise("eval"))
-      .cache()
+    val Held(sided, sidedH) = Held.cached(lbl
+      .withColumn("side", when(coin < trainFrac, "train").otherwise("eval")))
     val sides = sided.groupBy("side").agg(count(lit(1)).as("n_docs"),
       countDistinct("lbl").as("n_clusters"))
     val cross = pairs
@@ -502,7 +494,17 @@ trait LlmDedupOps extends LlmCore {
       .join(sided.select(col("doc_id").as("db"), col("side").as("sb")), "db")
       .agg(coalesce(sum(when(col("sa") =!= col("sb"), 1L).otherwise(0L)),
         lit(0L)).as("cross_pairs"))
-    sides.crossJoin(broadcast(cross)).orderBy("side")
+    Held(sides.crossJoin(broadcast(cross)).orderBy("side"),
+      held.handles ++ pairsH ++ sidedH)
+  }
+
+
+  /** [[componentLabels]] of the verified MinHash pairs, whose caches are
+    * released once the labels exist: driver rows or a checkpoint. */
+  private def pairLabels(s: SparkSession, dir: String,
+                         maxDriverEdges: Long): DataFrame = {
+    val pairs = minhashPairs(s, dir)
+    try componentLabels(s, pairs.frame, maxDriverEdges) finally pairs.release()
   }
 
 
@@ -621,21 +623,16 @@ trait LlmDedupOps extends LlmCore {
     * coarsen the key space, the inherent LSH recall/cost trade. Verify is
     * a row-local `bit_count(xor)`. */
   def simhashNeardup(s: SparkSession, dir: String,
-                     maxHamming: Int = 3): DataFrame =
-    simhashNeardupOf(Tables.documents(s, dir), "doc_id", "text", maxHamming)
+                     maxHamming: Int = 3): Held =
+    simhashNeardupHeld(Tables.documents(s, dir), "doc_id", "text", maxHamming)
 
 
   /** The banded Hamming pair join over ANY (id, text) frame — what the
     * `dedup_simhash` corpus step gates on. Bands = maxHamming + 1 (clamped
     * to [1, 60]); band i covers bits [i*60/nb, (i+1)*60/nb) of the 60-bit
-    * signature, so uneven widths are spread evenly when 60 % nb != 0. */
-  def simhashNeardupOf(docs: DataFrame, idCol: String, textCol: String,
-                       maxHamming: Int): DataFrame =
-    simhashNeardupHeld(docs, idCol, textCol, maxHamming).frame
-
-
-  /** [[simhashNeardupOf]] with its cached band rows as the handle to
-    * release once the pairs are materialized (see [[Held]]). */
+    * signature, so uneven widths are spread evenly when 60 % nb != 0. Its
+    * cached band rows are the handle to release once the pairs are
+    * materialized (see [[Held]]). */
   def simhashNeardupHeld(docs: DataFrame, idCol: String, textCol: String,
                          maxHamming: Int): Held = {
     val nb = math.min(60, math.max(1, maxHamming + 1))
@@ -666,14 +663,14 @@ trait LlmDedupOps extends LlmCore {
     * data, not the operator), so the checked artifact is the compact
     * distance histogram; the pair-level output is exercised by the
     * brute-force recall spec instead. */
-  def simhashNeardupProfile(s: SparkSession, dir: String): DataFrame = {
-    val pairs = simhashNeardup(s, dir).cache()
-    val np = pairs.groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
-    val nd = pairs
-      .select(col("hamming"), explode(array(col("da"), col("db"))).as("d"))
-      .groupBy("hamming").agg(countDistinct("d").as("n_docs"))
-    np.join(nd, "hamming").orderBy("hamming")
-  }
+  def simhashNeardupProfile(s: SparkSession, dir: String): Held =
+    simhashNeardup(s, dir).map { pairs =>
+      val np = pairs.groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
+      val nd = pairs
+        .select(col("hamming"), explode(array(col("da"), col("db"))).as("d"))
+        .groupBy("hamming").agg(countDistinct("d").as("n_docs"))
+      np.join(nd, "hamming").orderBy("hamming")
+    }
 
   // ----------------------------------------------------- similarity search
   //
@@ -714,20 +711,15 @@ trait LlmDedupOps extends LlmCore {
     * or whole near-copied docs. Two shuffles at any scale: distinct
     * (doc, window) pairs → window-keyed doc-frequency agg → join back on
     * the window key (uniform md5-sized keys, no skew). */
-  def dupSegments(s: SparkSession, dir: String, w: Int = 8): DataFrame =
-    dupSegmentsOf(Tables.documents(s, dir), "doc_id", "text", w)
-      .orderBy("doc_id")
+  def dupSegments(s: SparkSession, dir: String, w: Int = 8): Held =
+    dupSegmentsHeld(Tables.documents(s, dir), "doc_id", "text", w)
+      .map(_.orderBy("doc_id"))
 
 
   /** The duplicated-span profile over ANY (id, text) frame — what
-    * [[graft.CorpusRunner]]'s `span_dedup` step gates on. */
-  def dupSegmentsOf(docs: DataFrame, idCol: String, textCol: String,
-                    w: Int): DataFrame =
-    dupSegmentsHeld(docs, idCol, textCol, w).frame
-
-
-  /** [[dupSegmentsOf]] with its cached window rows as the handle to
-    * release once the profile is materialized (see [[Held]]). */
+    * [[graft.CorpusRunner]]'s `span_dedup` step gates on — with its cached
+    * window rows as the handle to release once the profile is
+    * materialized (see [[Held]]). */
   def dupSegmentsHeld(docs: DataFrame, idCol: String, textCol: String,
                       w: Int): Held = {
     // cached: feeds both the df-count and the join back
@@ -760,10 +752,10 @@ trait LlmDedupOps extends LlmCore {
     * global first occurrence, one join back marks survivors, and the
     * rebuild is a doc-keyed collect bounded by the document's own length
     * — the same two-shuffle shape as exact dedup, never a pair join. */
-  def spanScrub(s: SparkSession, dir: String): DataFrame =
-    spanScrubOf(Tables.documents(s, dir), "doc_id", "text", 8)
-      .select("doc_id", "n_blocks", "n_kept", "n_tokens_after", "text_md5")
-      .orderBy("doc_id")
+  def spanScrub(s: SparkSession, dir: String): Held =
+    spanScrubHeld(Tables.documents(s, dir), "doc_id", "text", 8)
+      .map(_.select("doc_id", "n_blocks", "n_kept", "n_tokens_after", "text_md5")
+        .orderBy("doc_id"))
 
 
   /** The block-grain scrub over ANY (id, text) frame — returns per doc
@@ -774,14 +766,8 @@ trait LlmDedupOps extends LlmCore {
     * — lexicographic struct ordering, valid for ANY id range and block
     * count (an earlier doc_id·10⁶+idx BIGINT packing silently collided
     * past 10⁶ blocks or ~9.2·10¹² ids; struct min has no bounds to
-    * guard). */
-  def spanScrubOf(docs: DataFrame, idCol: String, textCol: String,
-                  w: Int): DataFrame =
-    spanScrubHeld(docs, idCol, textCol, w).frame
-
-
-  /** [[spanScrubOf]] with its cached block rows as the handle to release
-    * once the rebuilt docs are materialized (see [[Held]]). */
+    * guard). Its cached block rows are the handle to release once the
+    * rebuilt docs are materialized (see [[Held]]). */
   def spanScrubHeld(docs: DataFrame, idCol: String, textCol: String,
                     w: Int): Held = {
     // cached: totals + first-occurrence agg + survivor join
@@ -820,22 +806,25 @@ trait LlmDedupOps extends LlmCore {
     * exact verify is the expensive step: estimator cost is O(perms) per
     * pair on the already-aggregated signatures (one doc-keyed join), no
     * shingle re-scan. */
-  def minhashEstErr(s: SparkSession, dir: String): DataFrame = {
+  def minhashEstErr(s: SparkSession, dir: String): Held = {
     val seeds = 0 until 12
-    val sh = shingles(s, dir).cache()
-    val mh = minhashSigsFrom(sh).cache() // read by banding + both join sides
+    val sh = Held.cached(shingles(s, dir))
+    // read by banding + both join sides
+    val mh = Held.cached(minhashSigsFrom(sh.frame))
     // the `D` suffix keeps the division DOUBLE (a bare 12.0 parses as
     // DECIMAL(3,1) in Spark SQL — DuckDB's /12.0 is already double)
     val est = expr(seeds.map(k => s"CASE WHEN a_mh$k = b_mh$k THEN 1 ELSE 0 END")
       .mkString("(", " + ", s") / ${seeds.size}.0D"))
-    val a = mh.toDF(mh.columns.map(c => if (c == "doc_id") "da" else s"a_$c").toIndexedSeq: _*)
-    val b = mh.toDF(mh.columns.map(c => if (c == "doc_id") "db" else s"b_$c").toIndexedSeq: _*)
-    minhashPairsFrom(sh, mh, 0.7).frame
+    val mhf = mh.frame
+    val a = mhf.toDF(mhf.columns.map(c => if (c == "doc_id") "da" else s"a_$c").toIndexedSeq: _*)
+    val b = mhf.toDF(mhf.columns.map(c => if (c == "doc_id") "db" else s"b_$c").toIndexedSeq: _*)
+    val pairs = minhashPairsFrom(sh.frame, mhf, 0.7)
+    Held(pairs.frame
       .join(a, "da").join(b, "db")
       .withColumn("jac_est", round(est, 6))
       .withColumn("abs_err", round(abs(col("jac") - est), 6))
       .select("da", "db", "jac", "jac_est", "abs_err")
-      .orderBy("da", "db")
+      .orderBy("da", "db"), sh.handles ++ mh.handles ++ pairs.handles)
   }
 
 
@@ -846,16 +835,16 @@ trait LlmDedupOps extends LlmCore {
     * id-keyed joins on the ALREADY-BOUNDED pair graph (orders of magnitude
     * smaller than the corpus — the same observation that lets
     * [[dedupClusters]] solve components), then an O(sources²)-row agg. */
-  def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
+  def sourceOverlap(s: SparkSession, dir: String): Held = {
     val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-    minhashPairs(s, dir)
+    minhashPairs(s, dir).map(_
       .join(src.select(col("doc_id").as("da"), col("source").as("sa")), "da")
       .join(src.select(col("doc_id").as("db"), col("source").as("sb")), "db")
       .select(least(col("sa"), col("sb")).as("src_a"),
         greatest(col("sa"), col("sb")).as("src_b"))
       .groupBy("src_a", "src_b")
       .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("src_a", "src_b")
+      .orderBy("src_a", "src_b"))
   }
 
 
@@ -870,7 +859,6 @@ trait LlmDedupOps extends LlmCore {
     val sigs = Tables.embeddings(s, dir)
       .select(col("vec_id"), vecNorm(col("embedding")).as("vn"),
         vecSig(col("embedding"), 4, 64).as("sig"))
-      .cache()
     val scored = sigs.selectExpr("sig", "vec_id AS da", "vn AS va")
       .join(sigs.selectExpr("sig", "vec_id AS db", "vn AS vb"), "sig")
       .filter(col("da") < col("db"))
@@ -898,21 +886,20 @@ trait LlmDedupOps extends LlmCore {
     * existing doc, with the matched old doc and verified Jaccard. */
   def dedupMinhashIncr(s: SparkSession, dir: String,
                        split: Long = 400, threshold: Double = 0.7): DataFrame = {
-    val sh = shingles(s, dir).cache()
-    val bands = minhashBandsFrom(minhashSigsFrom(sh)).cache()
+    val sh = shingles(s, dir)
+    val bands = minhashBandsFrom(minhashSigsFrom(sh))
     val cand = bands.filter(col("doc_id") >= split)
       .select(col("band"), col("sig"), col("doc_id").as("new_id"))
       .join(bands.filter(col("doc_id") < split)
         .select(col("band"), col("sig"), col("doc_id").as("old_id")),
         Seq("band", "sig"))
       .select("new_id", "old_id").distinct()
-      .cache() // candidate-doc semi-join + pair-driven verify
     val candDocs = cand
       .select(explode(array(col("new_id"), col("old_id"))).as("doc_id")).distinct()
     // re-clustered by doc_id once for the same reason as minhashPairsFrom:
     // the size agg and both verify joins ride this one small exchange
     val shC = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      .repartition(col("doc_id")).cache()
+      .repartition(col("doc_id"))
     val sizes = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = cand
       .join(shC.select(col("doc_id").as("new_id"), col("s")), "new_id")

@@ -54,27 +54,27 @@ trait LlmMixOps extends LlmCore {
     * running sum is plans.GlobalRank.withRunningSums (two-pass
     * range-partitioned prefix sums — partition-parallel, never the
     * single-task `Window.orderBy` cumsum). */
-  def docPack(s: SparkSession, dir: String, budget: Int = 256): DataFrame =
-    docPackOf(Tables.documents(s, dir), "doc_id", "text", budget)
+  def docPack(s: SparkSession, dir: String, budget: Int = 256): Held =
+    docPackOf(Tables.documents(s, dir), "doc_id", "text", budget).map(_
       .groupBy("bin_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
-      .orderBy("bin_id")
+      .orderBy("bin_id"))
 
 
   /** Per-doc token-budget bin assignment over ANY (id, text) frame —
     * global running token sums (two-pass range prefix sums) cut into
     * `budget`-sized bins in id order. Returns one row per doc:
-    * (doc_id, n_tokens, cum, bin_id). */
+    * (doc_id, n_tokens, cum, bin_id), holding the running sums' sort. */
   def docPackOf(docs: DataFrame, idCol: String, textCol: String,
-                budget: Int): DataFrame = {
+                budget: Int): Held = {
     val toks = docs
       .selectExpr(s"$idCol AS doc_id",
         s"size(split($textCol, ' ')) AS n_tokens")
     graft.plans.GlobalRank
-      .withRunningSums(toks, Seq(col("doc_id")), Seq("n_tokens" -> "cum"))._1.frame
-      .withColumn("bin_id",
-        ((col("cum") - col("n_tokens")) / budget).cast("long") + 1)
+      .withRunningSums(toks, Seq(col("doc_id")), Seq("n_tokens" -> "cum"))._1
+      .map(_.withColumn("bin_id",
+        ((col("cum") - col("n_tokens")) / budget).cast("long") + 1))
   }
 
 
@@ -154,12 +154,11 @@ trait LlmMixOps extends LlmCore {
     * broadcast-able semi-join (AQE picks broadcast under the threshold;
     * no hint so a pathological eval set degrades to shuffle, not OOM).
     * The corpus side streams through one hash aggregate keyed by doc_id.
-    * The local cache of the shingle stream is test-scale convenience
-    * only — the three consumers (eval set, sizes, hits) each prune to
-    * different columns, so at 100 TB you drop the cache and let the
-    * scan run twice rather than materialize corpus-scale shingles. */
+    * The shingle stream is not cached: its three consumers (eval set,
+    * sizes, hits) each prune to different columns, so the scan runs again
+    * rather than materialize corpus-scale shingles. */
   def decontamOverlap(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir).cache()
+    val sh = shingles(s, dir)
     val evalSh = sh.filter(col("doc_id") % 97 === 0).select("s").distinct()
     val corpus = sh.filter(col("doc_id") % 97 =!= 0)
     val sizes = corpus.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -224,7 +223,6 @@ trait LlmMixOps extends LlmCore {
     val sh = shingles(s, dir)
       .withColumn("k",
         conv(substring(md5(col("s")), 1, 8), 16, 10).cast("long"))
-      .cache()
     def bitCols(kc: org.apache.spark.sql.Column) = DecontamBloomHashes.map {
       case (a, b) =>
         (((lit(a) * (kc % DecontamBloomPrime)) % DecontamBloomPrime + lit(b))
@@ -512,22 +510,17 @@ trait LlmMixOps extends LlmCore {
     * LMs in a single pass, one scalar-row cross join carries the totals,
     * and the per-doc score is a token-keyed join + sum — every shuffle is
     * keyed on the token (vocab-sized, uniform); nothing is collected. */
-  def dsirWeights(s: SparkSession, dir: String): DataFrame =
-    dsirWeightsOf(Tables.documents(s, dir), "doc_id", "text",
+  def dsirWeights(s: SparkSession, dir: String): Held =
+    dsirWeightsHeld(Tables.documents(s, dir), "doc_id", "text",
       col("lang") === "en")
-      .orderBy("doc_id")
+      .map(_.orderBy("doc_id"))
 
 
   /** DSIR weights over ANY (id, text) frame with a caller-chosen target
     * indicator — what [[graft.CorpusRunner]]'s `dsir_sample` step gates
-    * on. `isTarget` must be a row-local predicate over the frame. */
-  def dsirWeightsOf(docs: DataFrame, idCol: String, textCol: String,
-                    isTarget: org.apache.spark.sql.Column): DataFrame =
-    dsirWeightsHeld(docs, idCol, textCol, isTarget).frame
-
-
-  /** [[dsirWeightsOf]] with its cached token rows as the handle to release
-    * once the weights are materialized (see [[Held]]). */
+    * on. `isTarget` must be a row-local predicate over the frame. Its
+    * cached token rows are the handle to release once the weights are
+    * materialized (see [[Held]]). */
   def dsirWeightsHeld(docs: DataFrame, idCol: String, textCol: String,
                       isTarget: org.apache.spark.sql.Column): Held = {
     // cached: feeds both the LM build and the scoring join
@@ -713,18 +706,17 @@ trait LlmMixOps extends LlmCore {
     * share ≥ 90% full) — the number that tells a user whether the packing
     * budget wastes context-window tokens. The ≥90% test is computed in
     * integers (10·fill ≥ 9·budget) so it is exact in any engine. */
-  def packStats(s: SparkSession, dir: String, budget: Int = 256): DataFrame = {
-    val bins = docPackOf(Tables.documents(s, dir), "doc_id", "text", budget)
+  def packStats(s: SparkSession, dir: String, budget: Int = 256): Held =
+    docPackOf(Tables.documents(s, dir), "doc_id", "text", budget).map(_
       .groupBy("bin_id").agg(sum("n_tokens").as("fill"))
-    bins.agg(
-      count(lit(1)).as("n_bins"),
-      sum("fill").as("n_tokens"),
-      round(avg(col("fill") / budget.toDouble), 6).as("avg_fill"),
-      round(min(col("fill") / budget.toDouble), 6).as("min_fill"),
-      round(max(col("fill") / budget.toDouble), 6).as("max_fill"),
-      sum(when(col("fill") * 10 >= lit(9L * budget), 1L).otherwise(0L))
-        .as("n_full90"))
-  }
+      .agg(
+        count(lit(1)).as("n_bins"),
+        sum("fill").as("n_tokens"),
+        round(avg(col("fill") / budget.toDouble), 6).as("avg_fill"),
+        round(min(col("fill") / budget.toDouble), 6).as("min_fill"),
+        round(max(col("fill") / budget.toDouble), 6).as("max_fill"),
+        sum(when(col("fill") * 10 >= lit(9L * budget), 1L).otherwise(0L))
+          .as("n_full90")))
 
 
   /** DuckDB oracle SQL for this family's contract queries. */

@@ -51,18 +51,13 @@ trait LlmPplOps extends LlmCore {
     * build, one scalar-total broadcast, token-keyed score join. Swap the
     * `lp` table for an external n-gram LM's scores to get the full CCNet
     * pipeline. */
-  def unigramPpl(s: SparkSession, dir: String): DataFrame =
-    unigramPplFrameOf(s, dir).orderBy("doc_id")
+  def unigramPpl(s: SparkSession, dir: String): Held =
+    unigramPplOfToks(tokenArraysOf(s, dir)).map(_.orderBy("doc_id"))
 
 
   // The unigram→bigram→trigram→4-gram perplexity ladder (and
-  // quality_tiers, which ranks on unigram ppl) all start from the SAME
-  // tokenized corpus — five queries re-reading the parquet and
-  // re-splitting every document is pure waste. Shared per-(session, dir)
-  // builds via [[graft.plans.SessionCache]] (the co-purchase-family
-  // pattern): the hashed (doc_id, toks) array frame feeds every n-gram
-  // explode, and the unigram ppl frame is itself shared with
-  // quality_tiers.
+  // quality_tiers, which ranks on unigram ppl) all start from the same
+  // hashed (doc_id, toks) array frame, which feeds every n-gram explode.
   //
   // Tokens are HASHED to 64-bit inside the row-local split (xxhash64) —
   // the KenLM representation (Heafield 2011: n-gram keys live as 64-bit
@@ -74,37 +69,16 @@ trait LlmPplOps extends LlmCore {
   // preserves absent collisions — and a 64-bit hash over a realistic
   // vocab is collision-free in expectation far past 1e8 types (p ≈
   // v²/2⁶⁵; the cross-engine oracle hashes would catch one instantly).
-  private val pplShared = new graft.plans.SessionCache[DataFrame]
-
-
-  /** Cached (doc_id, toks) token-HASH arrays of the documents corpus.
-    * `.cache()` is re-asserted per access: a `catalog.clearCache()`
-    * between bench attempts drops the registration, and re-caching an
-    * already-cached plan is a no-op. */
+  /** (doc_id, toks) token-HASH arrays of the documents corpus. */
   private def tokenArraysOf(s: SparkSession, dir: String): DataFrame =
-    pplShared.getOrElseUpdate(s, s"toks|$dir") {
-      Tables.documents(s, dir).selectExpr("doc_id",
-        "transform(split(text, ' '), t -> xxhash64(t)) AS toks")
-    }.cache()
-
-
-  /** Cached per-doc unigram ppl frame — `unigram_ppl` orders it,
-    * `quality_tiers` ranks it. */
-  private def unigramPplFrameOf(s: SparkSession, dir: String): DataFrame =
-    pplShared.getOrElseUpdate(s, s"uni_ppl|$dir") {
-      unigramPplOfToks(tokenArraysOf(s, dir)).frame
-    }.cache()
+    Tables.documents(s, dir).selectExpr("doc_id",
+      "transform(split(text, ' '), t -> xxhash64(t)) AS toks")
 
 
   /** The perplexity score over ANY (id, text) frame — what
-    * [[graft.CorpusRunner]]'s `ppl_gate` step ranks on. */
-  def unigramPplOf(docs: DataFrame, idCol: String,
-                   textCol: String): DataFrame =
-    unigramPplHeld(docs, idCol, textCol).frame
-
-
-  /** [[unigramPplOf]] with its cached token rows as the handle to release
-    * once the scores are materialized (see [[Held]]). */
+    * [[graft.CorpusRunner]]'s `ppl_gate` step ranks on — with its cached
+    * token rows as the handle to release once the scores are
+    * materialized (see [[Held]]). */
   def unigramPplHeld(docs: DataFrame, idCol: String,
                      textCol: String): Held =
     unigramPplOfToks(docs.selectExpr(s"$idCol AS doc_id",
@@ -153,7 +127,6 @@ trait LlmPplOps extends LlmCore {
         """explode(transform(sequence(1, size(toks) - 1),
           |  i -> struct(toks[i - 1] AS w1, toks[i] AS w2))) AS b""".stripMargin)
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .cache() // feeds the LM build and the scoring join
     val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
     val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     val v = bg.select("w2").union(bg.select("w1")).distinct()
@@ -547,7 +520,7 @@ trait LlmPplOps extends LlmCore {
       s"bm25: term set must be 1..64 terms, got ${terms.size}")
     require(terms.distinct.size == terms.size, "bm25: terms must be distinct")
     val d = docs.selectExpr(s"$idCol AS doc_id",
-      s"size(split($textCol, ' ')) AS dl").cache()
+      s"size(split($textCol, ' ')) AS dl")
     val st = d.agg(count(lit(1)).as("n"), avg("dl").as("avgdl"))
     val tf = docs
       .selectExpr(s"$idCol AS doc_id", s"explode(split($textCol, ' ')) AS w")
@@ -590,7 +563,7 @@ trait LlmPplOps extends LlmCore {
     val toks = docs
       .selectExpr(s"$idCol AS doc_id", s"split($textCol, ' ') AS toks")
     val uni = toks.selectExpr("explode(toks) AS w")
-      .groupBy("w").agg(count(lit(1)).as("c1")).cache()
+      .groupBy("w").agg(count(lit(1)).as("c1"))
     val bg = toks.filter("size(toks) >= 2")
       .selectExpr(
         """explode(transform(sequence(1, size(toks) - 1),
@@ -618,15 +591,14 @@ trait LlmPplOps extends LlmCore {
     * range-sort ntile (plans.GlobalRank) — no single-partition window at
     * any scale. */
   def qualityTiers(s: SparkSession, dir: String): Held = {
-    // rides the SAME cached per-doc unigram ppl frame as `unigram_ppl`
-    val ppl = unigramPplFrameOf(s, dir).select("doc_id", "ppl")
-    graft.plans.GlobalRank
-      .withNtile(ppl, Seq(col("ppl"), col("doc_id")), 3, "tier")
-      .map(_.groupBy("tier")
-        .agg(count(lit(1)).as("n_docs"),
-          round(min("ppl"), 4).as("min_ppl"),
-          round(max("ppl"), 4).as("max_ppl"))
-        .orderBy("tier"))
+    val ppl = unigramPplOfToks(tokenArraysOf(s, dir))
+    val tiered = graft.plans.GlobalRank.withNtile(ppl.frame.select("doc_id", "ppl"),
+      Seq(col("ppl"), col("doc_id")), 3, "tier")
+    Held(tiered.frame.groupBy("tier")
+      .agg(count(lit(1)).as("n_docs"),
+        round(min("ppl"), 4).as("min_ppl"),
+        round(max("ppl"), 4).as("max_ppl"))
+      .orderBy("tier"), ppl.handles ++ tiered.handles)
   }
 
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -97,29 +98,12 @@ trait LlmQuantOps extends LlmAnnOps {
     * quantization error) drop into `cbVecs` unchanged — both quantizer
     * training paths are independently oracle-verified. */
   def annIvfPq(s: SparkSession, dir: String, k: Int = -1, nprobe: Int = -1,
-               shortlistN: Int = 50, topK: Int = 3): DataFrame =
-    annIvfPqImpl(s, dir, k, nprobe, shortlistN, topK, trainedCb = false)
-
-
-
-
-  /** [[annIvfPq]] with TRAINED per-subspace PQ codebooks — the full
-    * production composition: adaptive IVF cells + Lloyd-fit quantizer
-    * ([[lloydFit]] per subspace over the normalized vectors, exactly as
-    * [[embedPqTrained]] over the raw ones). Same plan shape and state
-    * bounds; only the codeword literals change. */
-  def annIvfPqTrained(s: SparkSession, dir: String, k: Int = -1,
-                      nprobe: Int = -1, shortlistN: Int = 50,
-                      topK: Int = 3): DataFrame =
-    annIvfPqImpl(s, dir, k, nprobe, shortlistN, topK, trainedCb = true)
-
-  private def annIvfPqImpl(s: SparkSession, dir: String, k: Int, nprobe: Int,
-                           shortlistN: Int, topK: Int,
-                           trainedCb: Boolean): DataFrame = {
+               shortlistN: Int = 50, topK: Int = 3): Held = {
     val m = 4; val sub = 16; val kcb = 8
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), vecNorm(col("embedding")).as("vn"))
-      .cache() // id + unit vector: read by assignment, codes, and re-rank
+    // id + unit vector: read by the count, the seed sample, the codebook
+    // collect, assignment, codes, and re-rank
+    val Held(e, eH) = Held.cached(Tables.embeddings(s, dir)
+      .select(col("vec_id"), vecNorm(col("embedding")).as("vn")))
     val kAdapt = if (k > 0) k else adaptiveCoarseK(e.count())
     val np = if (nprobe > 0) nprobe else adaptiveNprobe(kAdapt)
     val cents = coarseSeeds(e, kAdapt)
@@ -131,25 +115,13 @@ trait LlmQuantOps extends LlmAnnOps {
         Window.partitionBy("vec_id").orderBy(desc("d"), asc("cent_id"))))
       .filter(col("rn") <= np)
       .select("vec_id", "cent_id", "rn")
-      .cache()
-    // PQ codebooks, per subspace: either the normalized subvectors of the
-    // first kcb vectors (compact oracle), or the 2-round-Lloyd-trained
-    // codewords (production training) — both O(m·kcb·sub) driver literals
-    val cbSub: Seq[Seq[(Long, Array[Double])]] =
-      if (trainedCb) (0 until m).map { j =>
-        val ej = e.select(col("vec_id"),
-            slice(col("vn"), j * sub + 1, sub).as("v"))
-          .withColumn("x2", vecDot(col("v"), col("v")))
-          .cache()
-        lloydFit(ej, kcb)
-      }
-      else {
-        val cbVecs = e.filter(col("vec_id") < kcb)
-          .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1).toSeq
-        (0 until m).map(j => cbVecs.map { case (cid, v) =>
-          (cid, v.slice(j * sub, (j + 1) * sub)) })
-      }
+    // PQ codebooks, per subspace: the normalized subvectors of the first
+    // kcb vectors — O(m·kcb·sub) driver literals
+    val cbVecs = e.filter(col("vec_id") < kcb)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1).toSeq
+    val cbSub: Seq[Seq[(Long, Array[Double])]] = (0 until m).map(j =>
+      cbVecs.map { case (cid, v) => (cid, v.slice(j * sub, (j + 1) * sub)) })
     // per-subspace lookup maps: code -> codeword subvector / squared norm
     val cwMap = (0 until m).map(j => typedlit(cbSub(j).map { case (cid, cv) =>
       cid -> cv.toSeq }.toMap))
@@ -183,7 +155,7 @@ trait LlmQuantOps extends LlmAnnOps {
       .withColumn("srn", row_number().over(
         Window.partitionBy("q_id").orderBy(round(col("adc"), 6), col("c_id"))))
       .filter(col("srn") <= shortlistN)
-    short
+    Held(short
       .join(e.select(col("vec_id").as("c_id"), col("vn").as("cvn")), "c_id")
       .select(col("q_id"), col("c_id"),
         round(vecDot(col("qv"), col("cvn")), 4).as("cos_sim"))
@@ -191,7 +163,7 @@ trait LlmQuantOps extends LlmAnnOps {
         Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("c_id"))))
       .filter(col("rnk") <= topK)
       .select("q_id", "rnk", "c_id", "cos_sim")
-      .orderBy("q_id", "rnk")
+      .orderBy("q_id", "rnk"), eH)
   }
 
 
@@ -259,25 +231,24 @@ trait LlmQuantOps extends LlmAnnOps {
     * literal-argmin. The spec asserts the trained codebook strictly
     * reduces mean quantization error vs the raw seeds. */
   def embedPqTrained(s: SparkSession, dir: String,
-                     m: Int = 4, k: Int = 8): DataFrame = {
+                     m: Int = 4, k: Int = 8): Held = {
     val dim = 64
     val sub = dim / m
-    val base = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .cache()
+    val base = Held.cached(Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
     val subAssigns = (0 until m).map { j =>
-      val ej = base.select(col("vec_id"),
+      // read once per Lloyd round + final encode
+      val ej = Held.cached(base.frame.select(col("vec_id"),
           slice(col("v"), j * sub + 1, sub).as("v"))
-        .withColumn("x2", vecDot(col("v"), col("v")))
-        .cache() // read once per Lloyd round + final encode
-      assignBest(ej, lloydFit(ej, k))
-        .select(col("vec_id"), col("cid").as(s"c$j"), col("d2").as(s"d$j"))
+        .withColumn("x2", vecDot(col("v"), col("v"))))
+      ej.map(assignBest(_, lloydFit(ej.frame, k))
+        .select(col("vec_id"), col("cid").as(s"c$j"), col("d2").as(s"d$j")))
     }
-    subAssigns.reduce(_.join(_, "vec_id"))
+    Held(subAssigns.map(_.frame).reduce(_.join(_, "vec_id"))
       .select(col("vec_id") +:
         (0 until m).map(j => col(s"c$j")) :+
         round((0 until m).map(j => col(s"d$j")).reduce(_ + _), 4).as("err"): _*)
-      .orderBy("vec_id")
+      .orderBy("vec_id"), base.handles ++ subAssigns.flatMap(_.handles))
   }
 
 
@@ -298,11 +269,11 @@ trait LlmQuantOps extends LlmAnnOps {
     * inputs, so min/max/codes match bit-for-bit), and the shortlist ranks
     * on round(approx, 4) with a c_id tie-break. */
   def annSq8(s: SparkSession, dir: String,
-             topk: Int = 3, shortlist: Int = 12): DataFrame = {
-    val e = Tables.embeddings(s, dir)
+             topk: Int = 3, shortlist: Int = 12): Held = {
+    // read by the min/max collect + both sides of the score join
+    val Held(e, eH) = Held.cached(Tables.embeddings(s, dir)
       .select(col("vec_id"), vecNorm(col("embedding")).as("vn"))
-      .withColumn("vq", expr("transform(vn, x -> round(x, 6))"))
-      .cache() // read by the min/max agg + both sides of the score join
+      .withColumn("vq", expr("transform(vn, x -> round(x, 6))")))
     // per-dimension [min,max]: one narrow agg to O(dim) rows — the SQ
     // "codebook", collected and re-broadcast as literals (like an IVF
     // centroid set, it is O(dim), never O(N))
@@ -332,13 +303,13 @@ trait LlmQuantOps extends LlmAnnOps {
       .withColumn("srnk", row_number().over(
         Window.partitionBy("q_id").orderBy(desc("approx"), asc("c_id"))))
       .filter(col("srnk") <= shortlist)
-    short
+    Held(short
       .withColumn("cos_sim", round(vecDot(col("qv"), col("cv")), 4))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("c_id"))))
       .filter(col("rnk") <= topk)
       .select("q_id", "rnk", "c_id", "cos_sim")
-      .orderBy("q_id", "rnk")
+      .orderBy("q_id", "rnk"), eH)
   }
 
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -74,9 +75,12 @@ trait LlmTextOps extends LlmCore {
         "— corpus vocabulary is single-character words")
       val (a, b) = (top(0).getString(0), top(0).getString(1))
       merges += ((k, a, b, top(0).getLong(2)))
-      syms = syms.withColumn("syms", bpeMergeFold(col("syms"), a, b))
+      val next = syms.withColumn("syms", bpeMergeFold(col("syms"), a, b))
         .localCheckpoint(true)
+      Held.release(syms)
+      syms = next
     }
+    Held.release(syms)
     merges.toSeq
   }
 
@@ -284,7 +288,7 @@ trait LlmTextOps extends LlmCore {
     * words; counts are one shuffle over O(alphabet²) piece keys; the
     * qualifying set is an in-plan 1-row broadcast — ZERO driver-side
     * loop state, unlike BPE's per-merge argmax collect. */
-  private def unigramLmFit(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def unigramLmFit(s: SparkSession, dir: String): (Held, DataFrame) = {
     val words = Tables.documents(s, dir)
       .select(explode(split(lower(col("text")), " ")).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
@@ -315,30 +319,33 @@ trait LlmTextOps extends LlmCore {
     var ok = qualify(p0, c0, c0) // seg0 = chars, so N0 = total chars
     var seg: DataFrame = null
     var counts: DataFrame = null
+    var prev: Option[DataFrame] = None // the counts `ok` was qualified on
     for (t <- 1 to UnigramLmIters) {
       seg = wordsP.crossJoin(broadcast(ok))
         .withColumn("pieces", greedyPairFold(col("syms"), col("ok_pieces")))
         .select("word", "freq", "pieces")
-      counts = seg.select(col("freq"), explode(col("pieces")).as("piece"))
-        .groupBy("piece").agg(sum("freq").as("n"))
-        .localCheckpoint(true)
-      if (t < UnigramLmIters)
+      counts = Held(seg.select(col("freq"), explode(col("pieces")).as("piece"))
+        .groupBy("piece").agg(sum("freq").as("n"))).checkpointed()
+      if (t < UnigramLmIters) {
+        prev.foreach(Held.release)
+        prev = Some(counts)
         // re-qualify the SURVIVING pairs against the new piece model;
         // single-char counts now exclude chars hidden inside pieces (the
         // unigram-LM view: pieces are opaque) — the vocab only prunes
         ok = qualify(counts.filter(length(col("piece")) === 2),
           counts.filter(length(col("piece")) === 1), counts)
+      }
     }
-    (seg, counts)
+    (Held(seg, (wordsP +: prev.toSeq) :+ counts), counts)
   }
 
 
   /** The trained tokenizer's vocabulary: the [[UnigramLmTopK]] most
     * frequent pieces under the final EM segmentation. */
-  def unigramLmTrain(s: SparkSession, dir: String): DataFrame = {
-    val (_, counts) = unigramLmFit(s, dir)
-    counts.orderBy(desc("n"), asc("piece")).limit(UnigramLmTopK)
-      .select("piece", "n")
+  def unigramLmTrain(s: SparkSession, dir: String): Held = {
+    val (seg, counts) = unigramLmFit(s, dir)
+    Held(counts.orderBy(desc("n"), asc("piece")).limit(UnigramLmTopK)
+      .select("piece", "n"), seg.handles)
   }
 
 
@@ -349,8 +356,8 @@ trait LlmTextOps extends LlmCore {
     * picking one; LlmQualitySpec asserts the comparison). Same
     * broadcast-the-vocab shape as BPE apply: the corpus-sized frame pays
     * one broadcast join, the folds run on the Heaps-bounded vocab. */
-  def unigramLmApply(s: SparkSession, dir: String): DataFrame =
-    unigramLmApplyWith(s, dir, unigramLmFit(s, dir)._1)
+  def unigramLmApply(s: SparkSession, dir: String): Held =
+    unigramLmFit(s, dir)._1.map(unigramLmApplyWith(s, dir, _))
 
 
   /** Tokenize with an explicit per-word segmentation table — shared by
@@ -392,8 +399,10 @@ trait LlmTextOps extends LlmCore {
           java.nio.file.Files
             .createTempDirectory("graft-unigram-tokenizer").toString)
         if (graft.plans.SnapshotStore.latestVersion(s"$root/pieces").isEmpty) {
-          val seg = unigramLmFit(s, dir)._1.select("word", "pieces")
-          graft.plans.SnapshotStore.publish(seg, s"$root/pieces", 1L)
+          val seg = unigramLmFit(s, dir)._1
+          try graft.plans.SnapshotStore.publish(seg.frame.select("word", "pieces"),
+            s"$root/pieces", 1L)
+          finally seg.release()
         }
         root
       })

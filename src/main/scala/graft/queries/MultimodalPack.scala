@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.Held
 import graft.multimodal.{MediaFile, Multimodal}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -75,9 +76,10 @@ object MultimodalPack extends QueryPack {
     * bounded similarity histogram, not an O(pairs) dump. At 100 TB the
     * within-kind pair join becomes LSH/banding over the same features —
     * the plan shape of `neardup_cosine`. */
-  def mediaNeardup(s: SparkSession, dir: String): DataFrame = {
+  def mediaNeardup(s: SparkSession, dir: String): Held = {
     import graft.functions.GraftFunctions.{byteFold, vecDot}
-    val feats = mediaFrom(s, dir).toDF()
+    // both sides of the within-kind pair join
+    val Held(feats, featsH) = Held.cached(mediaFrom(s, dir).toDF()
       .select(col("media_id"), col("kind"), col("content"))
       // ONE codegen pass over the raw blob bytes (ByteFold) — the
       // interpreted HOF form this replaces materialized a boxed
@@ -88,8 +90,7 @@ object MultimodalPack extends QueryPack {
       .withColumn("fv", byteFold(col("content"), 16).cast("array<double>"))
       .drop("content")
       .withColumn("nrm", sqrt(vecDot(col("fv"), col("fv"))))
-      .select("media_id", "kind", "fv", "nrm")
-      .cache() // both sides of the within-kind pair join
+      .select("media_id", "kind", "fv", "nrm"))
     // `kind` has ~3 distinct values, but the build side is narrow
     // feature rows → Spark broadcasts it and the probe streams at full
     // partition parallelism, so the tiny key space never serializes the
@@ -100,13 +101,13 @@ object MultimodalPack extends QueryPack {
     // distance distribution, not just the near neighbors.
     val a = feats.selectExpr("kind", "media_id AS da", "fv AS fa", "nrm AS na")
     val b = feats.selectExpr("kind", "media_id AS db", "fv AS fb", "nrm AS nb")
-    a.join(b, Seq("kind")).filter(col("da") < col("db"))
+    Held(a.join(b, Seq("kind")).filter(col("da") < col("db"))
       .withColumn("cos", round(vecDot(col("fa"), col("fb")) / (col("na") * col("nb")), 4))
       .select(col("kind"),
         floor(col("cos") * 100).cast("int").as("bucket_pct"))
       .groupBy("kind", "bucket_pct")
       .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("kind", "bucket_pct")
+      .orderBy("kind", "bucket_pct"), featsH)
   }
 
   /** Cross-media duplicate FRAMES — the media lake's segment-level dedup
@@ -316,7 +317,7 @@ object MultimodalPack extends QueryPack {
     * estimate whose cost is bounded by the PAIR BUDGET, not the corpus
     * size. The exact twin stays the correctness baseline; this is the
     * plan a 1000-executor run ships. */
-  def mediaNeardupSampled(s: SparkSession, dir: String): DataFrame = {
+  def mediaNeardupSampled(s: SparkSession, dir: String): Held = {
     import graft.functions.GraftFunctions.{byteFold, vecDot}
     val media = mediaFrom(s, dir).toDF()
     // p derived IN-PLAN from the corpus count (single-row broadcast) —
@@ -326,7 +327,8 @@ object MultimodalPack extends QueryPack {
       .select(when(col("__n") < 2, lit(1.0)).otherwise(
         least(lit(1.0), sqrt(lit(2.0) * lit(NeardupPairBudget) /
           (col("__n") * (col("__n") - lit(1.0)))))).as("__p"))
-    val feats = media
+    // both sides of the within-kind pair join
+    val Held(feats, featsH) = Held.cached(media
       .crossJoin(broadcast(pRow))
       .filter(graft.functions.GraftFunctions.md5Coin(col("media_id")) <
         col("__p"))
@@ -336,17 +338,16 @@ object MultimodalPack extends QueryPack {
       .withColumn("fv", byteFold(col("content"), 16).cast("array<double>"))
       .drop("content")
       .withColumn("nrm", sqrt(vecDot(col("fv"), col("fv"))))
-      .select("media_id", "kind", "fv", "nrm")
-      .cache()
+      .select("media_id", "kind", "fv", "nrm"))
     val a = feats.selectExpr("kind", "media_id AS da", "fv AS fa", "nrm AS na")
     val b = feats.selectExpr("kind", "media_id AS db", "fv AS fb", "nrm AS nb")
-    a.join(b, Seq("kind")).filter(col("da") < col("db"))
+    Held(a.join(b, Seq("kind")).filter(col("da") < col("db"))
       .withColumn("cos", round(vecDot(col("fa"), col("fb")) / (col("na") * col("nb")), 4))
       .select(col("kind"),
         floor(col("cos") * 100).cast("int").as("bucket_pct"))
       .groupBy("kind", "bucket_pct")
       .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("kind", "bucket_pct")
+      .orderBy("kind", "bucket_pct"), featsH)
   }
 
   /** PPM codec ROUNDTRIP proof, cross-engine: stage 16x16 RGB images with
@@ -466,9 +467,11 @@ object MultimodalPack extends QueryPack {
     "audio_dedup_robust" -> audioDedupRobust,
     "audio_dedup_cross" -> audioDedupCross,
     "video_dedup_content" -> videoDedupContent,
-    "media_neardup" -> mediaNeardup,
-    "media_neardup_sampled" -> mediaNeardupSampled,
     "frame_dedup" -> frameDedup)
+
+  override val held: Map[String, (SparkSession, String) => Held] = Map(
+    "media_neardup" -> mediaNeardup,
+    "media_neardup_sampled" -> mediaNeardupSampled)
 
   /** Blob-level exact dedup: hash-groupBy on the binary content (the same
     * shuffle-on-uniform-hash shape as LlmData.dedupExact) — how a media

@@ -434,16 +434,16 @@ object Relational extends QueryPack {
     * per-group buffer or window sort. l_quantity is integral, so every
     * cumulative sum is exact in doubles and selection is engine-identical
     * (the machinery's documented exactness contract). */
-  def weightedPercentiles(s: SparkSession, dir: String): DataFrame =
+  def weightedPercentiles(s: SparkSession, dir: String): Held =
     graft.plans.GlobalRank.groupWeightedPercentiles(
       Tables.lineitem(s, dir), "l_returnflag", "l_extendedprice",
       "l_quantity", Seq(0.25, 0.5, 0.75))
-      .select(col("l_returnflag"), col("n"),
+      .map(_.select(col("l_returnflag"), col("n"),
         round(col("w_total"), 2).as("w_total"),
         round(col("wp0"), 2).as("p25"),
         round(col("wp1"), 2).as("p50"),
         round(col("wp2"), 2).as("p75"))
-      .orderBy("l_returnflag")
+        .orderBy("l_returnflag"))
 
   /** INTERPOLATED weighted percentiles with FRACTIONAL weights — the
     * cross-engine check of
@@ -455,17 +455,17 @@ object Relational extends QueryPack {
     * bit-identical CDFs, and the interpolation arithmetic is the same
     * IEEE expression tree on both sides. Equal prices collapse first, so
     * knot placement is a pure function of the data. */
-  def weightedPercentilesInterp(s: SparkSession, dir: String): DataFrame =
+  def weightedPercentilesInterp(s: SparkSession, dir: String): Held =
     graft.plans.GlobalRank.groupWeightedPercentilesInterp(
       Tables.lineitem(s, dir)
         .withColumn("__w", col("l_quantity") + lit(0.5)),
       "l_returnflag", "l_extendedprice", "__w", Seq(0.25, 0.5, 0.75))
-      .select(col("l_returnflag"), col("n_values"),
+      .map(_.select(col("l_returnflag"), col("n_values"),
         round(col("w_total"), 1).as("w_total"),
         round(col("wp0"), 6).as("p25"),
         round(col("wp1"), 6).as("p50"),
         round(col("wp2"), 6).as("p75"))
-      .orderBy("l_returnflag")
+        .orderBy("l_returnflag"))
 
   /** Z-order (Morton-curve) layout audit — the multi-column data-skipping
     * layout (Delta/Iceberg `OPTIMIZE ZORDER BY`): interleave the low 16
@@ -483,7 +483,7 @@ object Relational extends QueryPack {
     * two-pass global NTILE (never a single-task window); the write path
     * at 100 TB is `repartitionByRange(z)` + per-file stats — this audit
     * IS those stats, integer-exact in any engine. */
-  def zorderLayout(s: SparkSession, dir: String): DataFrame = {
+  def zorderLayout(s: SparkSession, dir: String): Held = {
     val base = Tables.orders(s, dir).select(
       (col("o_custkey") % 65536).as("x"),
       least(lit(65535L), floor(col("o_totalprice") / 10).cast("long")).as("y"),
@@ -494,12 +494,12 @@ object Relational extends QueryPack {
         |      + (shiftright(y, i) % 2) * shiftleft(1L, 2 * i + 1))"""
         .stripMargin))
     graft.plans.GlobalRank
-      .withNtile(z, Seq(col("z"), col("o_orderkey")), 16, "bucket").frame
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        min("x").as("x_min"), max("x").as("x_max"),
-        min("y").as("y_min"), max("y").as("y_max"))
-      .orderBy("bucket")
+      .withNtile(z, Seq(col("z"), col("o_orderkey")), 16, "bucket")
+      .map(_.groupBy("bucket")
+        .agg(count(lit(1)).as("n"),
+          min("x").as("x_min"), max("x").as("x_max"),
+          min("y").as("y_min"), max("y").as("y_max"))
+        .orderBy("bucket"))
   }
 
   /** Data-quality expectation report (Great-Expectations-style): each rule
@@ -650,9 +650,6 @@ object Relational extends QueryPack {
 
   protected val direct: Map[String, (SparkSession, String) => DataFrame] = Map(
     "numeric_corr" -> numericCorr,
-    "weighted_percentiles" -> weightedPercentiles,
-    "weighted_percentiles_interp" -> weightedPercentilesInterp,
-    "zorder_layout" -> zorderLayout,
     "dq_checks" -> dqChecks,
     "rank_functions" -> rankFunctions,
     "numeric_profile" -> numericProfile,
@@ -682,6 +679,9 @@ object Relational extends QueryPack {
     "rolling_avg" -> rollingAvg)
 
   override val held: Map[String, (SparkSession, String) => Held] = Map(
+    "weighted_percentiles" -> weightedPercentiles,
+    "weighted_percentiles_interp" -> weightedPercentilesInterp,
+    "zorder_layout" -> zorderLayout,
     "robust_outliers" -> robustOutliers,
     "rfm_tiers" -> rfmTiers,
     "group_percentiles" -> groupPercentiles,

@@ -44,7 +44,7 @@ object CrossValidatorCustom extends Logging {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, tuning.parallelism))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val futures = grids.map { pm =>
+    val avg = try grids.map { pm =>
       pm -> (0 until k).map { f =>
         Future {
           val train = folded.filter(col("__fold") =!= f)
@@ -55,18 +55,15 @@ object CrossValidatorCustom extends Logging {
           m
         }
       }
-    }
-    val avg = futures.map { case (pm, fs) =>
+    }.map { case (pm, fs) =>
       val foldMetrics = fs.map(Await.result(_, Duration.Inf))
       val mean = foldMetrics.sum / k
       logInfo(s"cv params=$pm mean=$mean folds=${foldMetrics.mkString(",")}")
       (pm, mean)
-    }
-    pool.shutdown()
+    } finally { pool.shutdown(); folded.unpersist() }
     val (bestParams, bestMetric) =
       avg.maxBy(x => if (eval.isLargerBetter) x._2 else -x._2)
     logInfo(s"cv best=$bestParams metric=$bestMetric — refitting on full data")
-    folded.unpersist()
     est.copy(bestParams).fit(df).asInstanceOf[Transformer]
   }
 }

@@ -68,42 +68,41 @@ object HyperBand extends Logging {
 
     val Array(train, valid) = df.randomSplit(Array(trainSize, 1 - trainSize), seed)
     train.cache(); valid.cache()
-
-    var best: Option[(ParamMap, Double)] = None
-    for (s <- sMax to 0 by -1) {
-      val n = math.ceil(b / maxR * math.pow(eta, s) / (s + 1)).toInt
-      val r = maxR * math.pow(eta, -s)
-      var configs = Array.fill(n)(randomConfig(est, tuning.grid, rnd))
-      for (i <- 0 to s if configs.nonEmpty) {
-        val ri = r * math.pow(eta, i)
-        val scored = configs.map { pm =>
-          val e = est.copy(pm)
-          if (hasMaxIter)
-            setMaxIter(e, math.max(1, (ri * iterationMultiplier / maxR).toInt))
-          val fitted =
-            (if (hasMaxIter) e.fit(train)
-             else e.fit(train.sample(withReplacement = false, (ri / maxR).min(1.0), seed)))
-              .asInstanceOf[Transformer]
-          val m = eval.evaluate(fitted.transform(valid))
-          (pm, m)
+    try {
+      var best: Option[(ParamMap, Double)] = None
+      for (s <- sMax to 0 by -1) {
+        val n = math.ceil(b / maxR * math.pow(eta, s) / (s + 1)).toInt
+        val r = maxR * math.pow(eta, -s)
+        var configs = Array.fill(n)(randomConfig(est, tuning.grid, rnd))
+        for (i <- 0 to s if configs.nonEmpty) {
+          val ri = r * math.pow(eta, i)
+          val scored = configs.map { pm =>
+            val e = est.copy(pm)
+            if (hasMaxIter)
+              setMaxIter(e, math.max(1, (ri * iterationMultiplier / maxR).toInt))
+            val fitted =
+              (if (hasMaxIter) e.fit(train)
+               else e.fit(train.sample(withReplacement = false, (ri / maxR).min(1.0), seed)))
+                .asInstanceOf[Transformer]
+            val m = eval.evaluate(fitted.transform(valid))
+            (pm, m)
+          }
+          val keep = math.max(1, (configs.length / eta).toInt)
+          val ranked = scored.sortBy(x => if (eval.isLargerBetter) -x._2 else x._2)
+          logInfo(s"hyperband bracket=$s round=$i r=$ri " +
+            s"best=${ranked.head._2} kept=$keep/${configs.length}")
+          ranked.headOption.foreach { h =>
+            if (best.forall(bb => if (eval.isLargerBetter) h._2 > bb._2 else h._2 < bb._2))
+              best = Some(h)
+          }
+          configs = ranked.take(keep).map(_._1)
         }
-        val keep = math.max(1, (configs.length / eta).toInt)
-        val ranked = scored.sortBy(x => if (eval.isLargerBetter) -x._2 else x._2)
-        logInfo(s"hyperband bracket=$s round=$i r=$ri " +
-          s"best=${ranked.head._2} kept=$keep/${configs.length}")
-        ranked.headOption.foreach { h =>
-          if (best.forall(bb => if (eval.isLargerBetter) h._2 > bb._2 else h._2 < bb._2))
-            best = Some(h)
-        }
-        configs = ranked.take(keep).map(_._1)
       }
-    }
-    val (bestPm, bestMetric) = best.get
-    logInfo(s"hyperband best=$bestPm metric=$bestMetric — final fit")
-    val e = est.copy(bestPm)
-    if (hasMaxIter) setMaxIter(e, finalMaxIter)
-    val result = e.fit(df).asInstanceOf[Transformer]
-    train.unpersist(); valid.unpersist()
-    result
+      val (bestPm, bestMetric) = best.get
+      logInfo(s"hyperband best=$bestPm metric=$bestMetric — final fit")
+      val e = est.copy(bestPm)
+      if (hasMaxIter) setMaxIter(e, finalMaxIter)
+      e.fit(df).asInstanceOf[Transformer]
+    } finally { train.unpersist(); valid.unpersist() }
   }
 }

@@ -53,66 +53,66 @@ object ModelTrainingEngine {
       .fit(cleaned)
     val labels = indexer.labelsArray.head
     val indexed = indexer.transform(cleaned).cache()
+    try {
+      val mlpHidden =
+        if (conf.hiddenLayers.nonEmpty) conf.hiddenLayers
+        else conf.params.get("hiddenLayer").map(h => Seq(h.toInt)).getOrElse(Seq(10))
+      val baseEst: Estimator[_] = ModelFactory.build(conf) match {
+        case mlp: MultilayerPerceptronClassifier =>
+          mlp.setLayers(mlpLayers(
+            indexed.withColumn("features", col(featuresCol)), "features", "label", mlpHidden))
+        case ovr: OneVsRestScored
+            if ovr.getClassifier.isInstanceOf[MultilayerPerceptronClassifier] =>
+          // each OVR submodel is binary → output width 2, input from the data
+          val nFeatures = indexed.select(featuresCol).head().getAs[Vector](0).size
+          ovr.getClassifier.asInstanceOf[MultilayerPerceptronClassifier]
+            .setLayers((nFeatures +: mlpHidden :+ 2).toArray)
+          ovr
+        case e => e
+      }
+      baseEst.set(baseEst.getParam("labelCol"), "label")
+      baseEst.set(baseEst.getParam("featuresCol"), featuresCol)
 
-    val mlpHidden =
-      if (conf.hiddenLayers.nonEmpty) conf.hiddenLayers
-      else conf.params.get("hiddenLayer").map(h => Seq(h.toInt)).getOrElse(Seq(10))
-    val baseEst: Estimator[_] = ModelFactory.build(conf) match {
-      case mlp: MultilayerPerceptronClassifier =>
-        mlp.setLayers(mlpLayers(
-          indexed.withColumn("features", col(featuresCol)), "features", "label", mlpHidden))
-      case ovr: OneVsRestScored
-          if ovr.getClassifier.isInstanceOf[MultilayerPerceptronClassifier] =>
-        // each OVR submodel is binary → output width 2, input from the data
-        val nFeatures = indexed.select(featuresCol).head().getAs[Vector](0).size
-        ovr.getClassifier.asInstanceOf[MultilayerPerceptronClassifier]
-          .setLayers((nFeatures +: mlpHidden :+ 2).toArray)
-        ovr
-      case e => e
-    }
-    baseEst.set(baseEst.getParam("labelCol"), "label")
-    baseEst.set(baseEst.getParam("featuresCol"), featuresCol)
+      val tuned: Transformer = tuning.method match {
+        case "none" =>
+          baseEst.fit(indexed).asInstanceOf[Transformer]
+        case "cv" =>
+          CrossValidatorCustom.fit(indexed, baseEst, ModelFactory.grid(baseEst, tuning),
+            tuning, conf.buildType)
+        case "hyperband" =>
+          HyperBand.fit(indexed, baseEst, tuning, conf.seed)
+        case other => throw new IllegalArgumentException(s"unknown tuning method '$other'")
+      }
 
-    val tuned: Transformer = tuning.method match {
-      case "none" =>
-        baseEst.fit(indexed).asInstanceOf[Transformer]
-      case "cv" =>
-        CrossValidatorCustom.fit(indexed, baseEst, ModelFactory.grid(baseEst, tuning),
-          tuning, conf.buildType)
-      case "hyperband" =>
-        HyperBand.fit(indexed, baseEst, tuning, conf.seed)
-      case other => throw new IllegalArgumentException(s"unknown tuning method '$other'")
-    }
+      val stages = Seq.newBuilder[Transformer]
+      stages += tuned
 
-    val stages = Seq.newBuilder[Transformer]
-    stages += tuned
+      val plattModel =
+        if (conf.plattScaling) {
+          val scored = tuned.transform(indexed)
+          val m = new PlattScalar()
+            .setLabelCol("label")
+            .setIsMultiIntent(conf.buildType != "binary")
+            .fit(scored)
+          stages += m
+          Some(m)
+        } else None
+      // uplift scoring replaces the probability with p(treated) − p(control)
+      // (ref: ModelTrainingEngine.scala:186-208 — SVM flows calibrate each
+      // pass through the fitted PlattScalar)
+      conf.uplift.foreach { _ =>
+        val u = new UpliftTransformer().setFeaturesCol(featuresCol)
+          .setBaseModel(tuned.asInstanceOf[ClassificationModel[Vector, _]])
+        plattModel.foreach(u.setPlattModel)
+        stages += u
+      }
+      if (conf.topK > 0)
+        stages += new TopKIntents().setLabels(labels).setK(conf.topK)
+      if (conf.buildType != "binary")
+        stages += new IndexToString().setInputCol("prediction")
+          .setOutputCol("predictedResponse").setLabels(labels)
 
-    val plattModel =
-      if (conf.plattScaling) {
-        val scored = tuned.transform(indexed)
-        val m = new PlattScalar()
-          .setLabelCol("label")
-          .setIsMultiIntent(conf.buildType != "binary")
-          .fit(scored)
-        stages += m
-        Some(m)
-      } else None
-    // uplift scoring replaces the probability with p(treated) − p(control)
-    // (ref: ModelTrainingEngine.scala:186-208 — SVM flows calibrate each
-    // pass through the fitted PlattScalar)
-    conf.uplift.foreach { _ =>
-      val u = new UpliftTransformer().setFeaturesCol(featuresCol)
-        .setBaseModel(tuned.asInstanceOf[ClassificationModel[Vector, _]])
-      plattModel.foreach(u.setPlattModel)
-      stages += u
-    }
-    if (conf.topK > 0)
-      stages += new TopKIntents().setLabels(labels).setK(conf.topK)
-    if (conf.buildType != "binary")
-      stages += new IndexToString().setInputCol("prediction")
-        .setOutputCol("predictedResponse").setLabels(labels)
-
-    indexed.unpersist()
-    FittedChain(indexer, stages.result(), labels)
+      FittedChain(indexer, stages.result(), labels)
+    } finally indexed.unpersist()
   }
 }

@@ -49,9 +49,9 @@ class OneVsRestScored(override val uid: String)
     val numClasses =
       dataset.select(max(col($(labelCol)).cast("double"))).head().getDouble(0).toInt + 1
     val df = dataset.select(col($(featuresCol)), col($(labelCol)).cast("double")).cache()
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool($(parallelism)))
-    val futures = (0 until numClasses).map { k =>
+    val pool = java.util.concurrent.Executors.newFixedThreadPool($(parallelism))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val models = try (0 until numClasses).map { k =>
       Future {
         val bin = df.withColumn("__ovr_label",
           when(col($(labelCol)) === k, 1.0).otherwise(0.0))
@@ -60,9 +60,8 @@ class OneVsRestScored(override val uid: String)
         est.set(est.getParam("featuresCol"), $(featuresCol))
         est.fit(bin).asInstanceOf[ClassificationModel[Vector, _]]
       }
-    }
-    val models = futures.map(Await.result(_, Duration.Inf)).toArray
-    df.unpersist()
+    }.map(Await.result(_, Duration.Inf)).toArray
+    finally { pool.shutdown(); df.unpersist() }
     val m = new OneVsRestScoredModel(uid, models)
     copyValues(m).setParent(this)
   }

@@ -184,8 +184,8 @@ class CorpusRunnerSpec extends SparkSpec {
       config.CorpusStepConf(op = "dedup_minhash")))
     val docs = Tables.documents(spark, dir)
     val kept = CorpusRunner.applyStep(docs, cc.steps.head, cc).cache()
-    val pairs = queries.LlmData.minhashPairsOf(docs, "doc_id", "text")
-      .select("da", "db").cache()
+    val pairs = queries.LlmData.minhashPairsHeld(docs, "doc_id", "text")
+      .checkpointed().select("da", "db")
     pairs.count() should be > 0L // the fixture does contain near-dups
     kept.count() should be < docs.count()
     // no two kept docs are still near-duplicates of each other
@@ -205,7 +205,7 @@ class CorpusRunnerSpec extends SparkSpec {
       config.CorpusStepConf(op = "span_dedup", threshold = 0.2)))
     val docs = Tables.documents(spark, dir)
     val kept = CorpusRunner.applyStep(docs, cc.steps.head, cc)
-    val profile = queries.LlmData.dupSegmentsOf(docs, "doc_id", "text", 8)
+    val profile = queries.LlmData.dupSegmentsHeld(docs, "doc_id", "text", 8).checkpointed()
     val over = profile.filter(col("dup_frac") > 0.2)
     over.count() should be > 0L // the near-dup fixture trips the gate
     kept.count() shouldBe docs.count() - over.count()
@@ -239,8 +239,8 @@ class CorpusRunnerSpec extends SparkSpec {
     // equi-depth percentiles: 40% within one bucket's rounding
     kept.count().toDouble shouldBe (0.4 * n) +- (n / 100.0 + 1)
     // the kept docs are exactly the lowest-perplexity ranks
-    val ppl = queries.LlmData.unigramPplOf(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val ppl = queries.LlmData.unigramPplHeld(docs, "doc_id", "text")
+      .rows().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val keptMax = kept.collect().map(r => ppl(r.getLong(0))).max
     val droppedMin = docs.join(kept.select("doc_id"), Seq("doc_id"), "left_anti")
       .collect().map(r => ppl(r.getLong(0))).min
@@ -429,9 +429,9 @@ class CorpusRunnerSpec extends SparkSpec {
     val kept = CorpusRunner.applyStep(docs, cc.steps.head, cc)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     kept should not contain 7L
-    val flagged = queries.LlmData.semanticDecontamOf(
+    val flagged = queries.LlmData.semanticDecontamHeld(
         Tables.embeddings(spark, dir), spark.read.parquet(evalPath), 0.9)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
+      .map(_.select("vec_id")).rows().map(_.getLong(0)).toSet
     docs.select("doc_id").collect().map(_.getLong(0)).foreach { d =>
       kept.contains(d) shouldBe !flagged.contains(d)
     }
@@ -440,11 +440,11 @@ class CorpusRunnerSpec extends SparkSpec {
   it should "fail loudly when the semantic eval set exceeds the broadcast bound" in {
     val e = Tables.embeddings(spark, dir)
     val ex = intercept[IllegalArgumentException] {
-      queries.LlmData.semanticDecontamOf(e, e, 0.3, maxEvalRows = 10)
+      queries.LlmData.semanticDecontamHeld(e, e, 0.3, maxEvalRows = 10)
     }
     ex.getMessage should include("broadcast bound")
     intercept[IllegalArgumentException] {
-      queries.LlmData.semanticDecontamOf(e, e.filter(lit(false)), 0.3)
+      queries.LlmData.semanticDecontamHeld(e, e.filter(lit(false)), 0.3)
     }.getMessage should include("empty")
   }
 

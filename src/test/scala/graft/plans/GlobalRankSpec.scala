@@ -104,7 +104,7 @@ class GlobalRankSpec extends SparkSpec {
     val df = rows.toDF("g", "v", "w")
     val ps = Seq(0.25, 0.5, 0.75)
     val got = GlobalRank.groupWeightedPercentiles(df, "g", "v", "w", ps)
-      .collect().map(r => r.getString(0) ->
+      .rows().map(r => r.getString(0) ->
         (r.getAs[Long]("n"), ps.indices.map(i => r.getDouble(3 + i))))
       .toMap
     def brute(g: String): Seq[Double] = {
@@ -135,7 +135,7 @@ class GlobalRankSpec extends SparkSpec {
     val df = rows.toDF("g", "v", "w")
     val ps = Seq(0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0)
     val out = GlobalRank.groupWeightedPercentilesInterp(df, "g", "v", "w", ps)
-      .collect().map(r => r.getString(0) ->
+      .rows().map(r => r.getString(0) ->
         (r.getAs[Long]("n_values"), ps.indices.map(i => r.getDouble(3 + i))))
       .toMap
     def brute(g: String): Seq[Double] = {

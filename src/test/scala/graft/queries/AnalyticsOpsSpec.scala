@@ -237,7 +237,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, dirEmb)
     val rows = LlmData
       .hardNegativesOf(emb, col("vec_id") % 100 === 17)
-      .collect()
+      .rows()
     rows should not be empty
     val labels = emb.select("vec_id", "label").collect()
       .map(r => r.getLong(0) -> r.get(1)).toMap

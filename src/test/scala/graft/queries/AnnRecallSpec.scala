@@ -48,7 +48,7 @@ class AnnRecallSpec extends SparkSpec {
   it should "keep high recall of the exact top-k in the IVF path" in {
     val exact = resultSet(
       LlmData.annTopK(spark, dir).filter(org.apache.spark.sql.functions.col("rnk") <= 3))
-    val ivf = resultSet(LlmData.annIvf(spark, dir))
+    val ivf = resultSet(LlmData.annIvf(spark, dir).checkpointed())
     val recall = (exact intersect ivf).size.toDouble / exact.size
     info(f"IVF recall@3 (adaptive k/nprobe) = $recall%.3f " +
       f"(${(exact intersect ivf).size}/${exact.size})")
@@ -64,7 +64,7 @@ class AnnRecallSpec extends SparkSpec {
     val exact = resultSet(
       LlmData.annTopK(spark, dir).filter(org.apache.spark.sql.functions.col("rnk") <= 3))
     Seq((8, 3), (-1, -1)).foreach { case (k, np) =>
-      val ivf = resultSet(LlmData.annIvf(spark, dir, k = k, nprobe = np))
+      val ivf = resultSet(LlmData.annIvf(spark, dir, k = k, nprobe = np).checkpointed())
       val recall = (exact intersect ivf).size.toDouble / exact.size
       info(f"IVF recall@3 (k=$k%d, nprobe=$np%d) = $recall%.3f")
       recall should be >= 0.5
@@ -74,7 +74,7 @@ class AnnRecallSpec extends SparkSpec {
   it should "keep high recall with the Lloyd-trained IVF quantizer" in {
     val exact = resultSet(
       LlmData.annTopK(spark, dir).filter(org.apache.spark.sql.functions.col("rnk") <= 3))
-    val ivf = resultSet(LlmData.annIvfTrained(spark, dir))
+    val ivf = resultSet(LlmData.annIvfTrained(spark, dir).checkpointed())
     val recall = (exact intersect ivf).size.toDouble / exact.size
     info(f"trained-IVF recall@3 (adaptive k/nprobe) = $recall%.3f " +
       f"(${(exact intersect ivf).size}/${exact.size})")
@@ -103,7 +103,7 @@ class AnnRecallSpec extends SparkSpec {
     // re-ranks — recall loss comes from cell misses + shortlist misses.
     val exact = resultSet(
       LlmData.annTopK(spark, dir).filter(org.apache.spark.sql.functions.col("rnk") <= 3))
-    val ivfpq = resultSet(LlmData.annIvfPq(spark, dir))
+    val ivfpq = resultSet(LlmData.annIvfPq(spark, dir).checkpointed())
     val recall = (exact intersect ivfpq).size.toDouble / exact.size
     info(f"IVF-PQ recall@3 (adaptive k/nprobe, shortlist=50) = $recall%.3f " +
       f"(${(exact intersect ivfpq).size}/${exact.size})")
@@ -162,7 +162,7 @@ class AnnRecallSpec extends SparkSpec {
       errs.sum / errs.length
     }
     val raw = meanErr(LlmData.embedPq(spark, dir))
-    val trained = meanErr(LlmData.embedPqTrained(spark, dir))
+    val trained = meanErr(LlmData.embedPqTrained(spark, dir).checkpointed())
     info(f"mean quantization err: raw=$raw%.4f trained=$trained%.4f")
     trained should be < raw
   }
@@ -174,7 +174,7 @@ class AnnRecallSpec extends SparkSpec {
     // bucketed paths whose loss comes from candidate misses.
     val exact = resultSet(
       LlmData.annTopK(spark, dir).filter(org.apache.spark.sql.functions.col("rnk") <= 3))
-    val sq8 = resultSet(LlmData.annSq8(spark, dir))
+    val sq8 = resultSet(LlmData.annSq8(spark, dir).checkpointed())
     val recall = (exact intersect sq8).size.toDouble / exact.size
     info(f"SQ8 recall@3 (shortlist=12) = $recall%.3f " +
       f"(${(exact intersect sq8).size}/${exact.size})")
@@ -188,7 +188,7 @@ class AnnRecallSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val inline = rows(LlmData.annIvfTrained(spark, dir))
+    val inline = rows(LlmData.annIvfTrained(spark, dir).checkpointed())
     val root = LlmData.ivfIndexPublish(spark, dir)
     rows(LlmData.annIvfProbeFrom(spark, dir, root)) shouldBe inline
     // the registry caches the build: same root, no second publish
@@ -296,7 +296,7 @@ class AnnRecallSpec extends SparkSpec {
       (13L, Array(0f, 0f, 0f, 1f))      // irrelevant — cut by nCand=3
     ).toDF("vec_id", "embedding")
     val rows = LlmData
-      .annMmrOf(emb, col("vec_id") === 0, k = 3, lam = 0.3, nCand = 3)
+      .annMmrOf(emb, col("vec_id") === 0, k = 3, lam = 0.3, nCand = 3).checkpointed()
       .orderBy("rnk").collect()
     rows.map(_.getLong(2)).toSeq shouldBe Seq(10L, 12L, 11L)
     // sanity: plain relevance really does rank the near-dup above the

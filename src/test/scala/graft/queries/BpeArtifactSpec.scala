@@ -42,7 +42,7 @@ class BpeArtifactSpec extends SparkSpec {
   }
 
   it should "serve unigram-LM tokenization from its committed artifact byte-identically" in {
-    val inline = rows(LlmData.unigramLmApply(spark, dir))
+    val inline = rows(LlmData.unigramLmApply(spark, dir).checkpointed())
     rows(LlmData.unigramLmApplyPersisted(spark, dir)) shouldBe inline
     val root = LlmData.unigramLmPublish(spark, dir)
     LlmData.unigramLmPublish(spark, dir) shouldBe root

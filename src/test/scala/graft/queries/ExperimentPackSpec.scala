@@ -250,7 +250,7 @@ class ExperimentPackSpec extends SparkSpec {
       conc += d
       if (conc > peak) { peak = conc; at = us }
     }
-    val row = AnalyticsPack.peakConcurrency(spark, dir).head()
+    val row = AnalyticsPack.peakConcurrency(spark, dir).rows().head
     row.getAs[Long]("peak") shouldBe peak.toLong
     row.getAs[Long]("at_us") shouldBe at
   }
@@ -277,7 +277,7 @@ class ExperimentPackSpec extends SparkSpec {
   behavior of "mannWhitney"
 
   it should "produce a U inside [0, n_a*n_b] with a finite z" in {
-    val r = ExperimentPack.mannWhitney(spark, dir).head()
+    val r = ExperimentPack.mannWhitney(spark, dir).rows().head
     val (na, nb) = (r.getAs[Long]("n_a"), r.getAs[Long]("n_b"))
     na should be > 0L; nb should be > 0L
     val u = r.getAs[Double]("u_stat")

@@ -15,7 +15,7 @@ class GraphSeqSpec extends SparkSpec {
   behavior of "pagerank"
 
   it should "conserve probability mass (ranks sum to 1) and cover every node" in {
-    val pr = AnalyticsPack.pagerank(spark, dir).cache()
+    val pr = AnalyticsPack.pagerank(spark, dir).checkpointed()
     val mass = pr.agg(sum("rank")).head.getDouble(0)
     // per-iteration 8-dp rounding perturbs mass by at most |nodes|·5e-9
     mass shouldBe 1.0 +- 1e-4
@@ -29,7 +29,7 @@ class GraphSeqSpec extends SparkSpec {
   }
 
   it should "rank a part above another with strictly more distinct endorsing customers" in {
-    val pr = AnalyticsPack.pagerank(spark, dir)
+    val pr = AnalyticsPack.pagerank(spark, dir).checkpointed()
     val parts = pr.filter(col("node").startsWith("p:"))
       .withColumn("pk", regexp_replace(col("node"), "^p:", "").cast("long"))
     val indeg = graft.Tables.orders(spark, dir)
@@ -77,7 +77,7 @@ class GraphSeqSpec extends SparkSpec {
       .map { case (c, m) => (c, m.size.toLong, m.keys.min) }
       .toSeq.sortBy { case (c, sz, _) => (-sz, c) }.take(20)
     val got = AnalyticsPack.labelProp(spark, dir)
-      .collect().map(r => (r.getAs[Long]("community"), r.getAs[Long]("size"),
+      .rows().map(r => (r.getAs[Long]("community"), r.getAs[Long]("size"),
         r.getAs[Long]("min_member"))).toSeq
     got shouldBe want
   }
@@ -210,7 +210,7 @@ class GraphSeqSpec extends SparkSpec {
   behavior of "containmentPairs"
 
   it should "bound cont ≤ 1 and match a brute-force recount on its top pair" in {
-    val pairs = LlmData.containmentPairs(spark, dir).cache()
+    val pairs = LlmData.containmentPairs(spark, dir).checkpointed()
     assert(pairs.count() > 0, "corpus should contain contained near-dups")
     pairs.filter(col("cont") > 1.000001).count() shouldBe 0
     // brute-force the highest-containment pair over the SAME capped
@@ -234,7 +234,7 @@ class GraphSeqSpec extends SparkSpec {
   it should "dominate symmetric Jaccard: every capped near-dup pair is contained" in {
     // jac(A,B) ≥ t ⟹ cont(A→B) ≥ t (intersection over a superset of |A∩B|)
     val jac = LlmData.neardupCapped(spark, dir).select("da", "db")
-    val cont = LlmData.containmentPairs(spark, dir, maxDf = 50, minC = 0.5)
+    val cont = LlmData.containmentPairs(spark, dir, maxDf = 50, minC = 0.5).checkpointed()
       .select("da", "db")
     jac.join(cont, Seq("da", "db"), "left_anti").count() shouldBe 0
   }

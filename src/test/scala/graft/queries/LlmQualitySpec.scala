@@ -55,7 +55,7 @@ class LlmQualitySpec extends SparkSpec {
     // the fixed-k seed set: 8 smallest under the multiplicative-hash order
     val seeds = ids.sortBy(id => ((id % 1000003L) * 2654435761L % 1000003L, id))
       .take(8).toSet
-    val rows = LlmData.embedKmeans(spark, dir).collect()
+    val rows = LlmData.embedKmeans(spark, dir).rows()
     rows should not be empty
     rows.length should be <= 8 // cluster count is the CONSTANT k, never O(N)
     rows.map(_.getLong(1)).sum shouldBe ids.length.toLong // every vector assigned once
@@ -67,7 +67,7 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "sample the nearest members per cluster in rank order" in {
     assume(new java.io.File(s"$dir/embeddings.parquet").exists())
-    val rows = LlmData.kmeansBalance(spark, dir, perCluster = 3).collect()
+    val rows = LlmData.kmeansBalance(spark, dir, perCluster = 3).rows()
     rows should not be empty
     rows.groupBy(_.getLong(0)).foreach { case (_, members) =>
       members.map(_.getInt(1)).sorted shouldBe (1 to members.length).toArray
@@ -103,7 +103,7 @@ class LlmQualitySpec extends SparkSpec {
   it should "pack every doc into contiguous non-overlapping token bins" in {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
     val total = graft.Tables.documents(spark, dir).count()
-    val rows = LlmData.docPack(spark, dir).collect().sortBy(_.getLong(0))
+    val rows = LlmData.docPack(spark, dir).rows().sortBy(_.getLong(0))
     rows.map(_.getLong(1)).sum shouldBe total // every doc in exactly one bin
     // bins cover disjoint contiguous doc-id ranges in order
     rows.sliding(2).foreach {
@@ -119,7 +119,7 @@ class LlmQualitySpec extends SparkSpec {
     val toks = graft.Tables.documents(spark, dir)
       .selectExpr("doc_id", "size(split(text, ' ')) AS n").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val rows = LlmData.dupSegments(spark, dir).collect()
+    val rows = LlmData.dupSegments(spark, dir).rows()
     rows.length shouldBe toks.size // one profile row per document
     rows.foreach { r =>
       val (id, nSegs, nDup) = (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -138,7 +138,7 @@ class LlmQualitySpec extends SparkSpec {
     val lang = graft.Tables.documents(spark, dir)
       .select("doc_id", "lang").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val rows = LlmData.dsirWeights(spark, dir).collect()
+    val rows = LlmData.dsirWeights(spark, dir).rows()
     rows.length shouldBe lang.size
     val (en, rest) = rows.partition(r => lang(r.getLong(0)) == "en")
     en should not be empty
@@ -153,7 +153,7 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "prune only toward lower-id keepers within the cosine threshold" in {
     assume(new java.io.File(s"$dir/embeddings.parquet").exists())
-    val rows = LlmData.semDedup(spark, dir).collect()
+    val rows = LlmData.semDedup(spark, dir).rows()
     rows should not be empty // the synthetic near-dup pairs cluster together
     rows.foreach { r =>
       r.getLong(1) should be < r.getLong(0) // keeper_id < pruned_id
@@ -167,7 +167,7 @@ class LlmQualitySpec extends SparkSpec {
   it should "bound every pair-join group near the cluster-size cap" in {
     assume(new java.io.File(s"$dir/embeddings.parquet").exists())
     val cap = 40
-    val groups = LlmData.semDedupGroups(spark, dir, maxCluster = cap).collect()
+    val groups = LlmData.semDedupGroups(spark, dir, maxCluster = cap).rows()
     val total = graft.Tables.embeddings(spark, dir).count()
     groups.map(_.getLong(2)).sum shouldBe total // every vector in one group
     // the quadratic term is bounded: no group far above the cap (the modulo
@@ -272,13 +272,13 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "account for every verified near-dup pair in the source matrix" in {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val rows = LlmData.sourceOverlap(spark, dir).collect()
+    val rows = LlmData.sourceOverlap(spark, dir).rows()
     rows should not be empty // the planted near-dups cross sources
     // independent driver-side recount from the verified pair graph
     val srcs = graft.Tables.documents(spark, dir)
       .select("doc_id", "source")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val expected = LlmData.dedupMinhash(spark, dir)
+    val expected = LlmData.dedupMinhash(spark, dir).checkpointed()
       .select("da", "db").collect()
       .map { r =>
         val (a, b) = (srcs(r.getLong(0)), srcs(r.getLong(1)))
@@ -295,7 +295,7 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "keep the 12-permutation estimate near the exact Jaccard on verified pairs" in {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val rows = LlmData.minhashEstErr(spark, dir).collect()
+    val rows = LlmData.minhashEstErr(spark, dir).rows()
     rows should not be empty // the synthetic corpus plants near-dups
     rows.foreach { r =>
       val (jac, est, err) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
@@ -317,7 +317,7 @@ class LlmQualitySpec extends SparkSpec {
     // probing the new batch against the old index must find EXACTLY the
     // full self-join's pairs that straddle the version split — no extra
     // collisions, none lost to the one-sided banding
-    val full = LlmData.dedupMinhash(spark, dir).collect()
+    val full = LlmData.dedupMinhash(spark, dir).rows()
       .filter(r => r.getLong(0) < 400 && r.getLong(1) >= 400)
       .map(r => (r.getLong(1), r.getLong(0), r.getDouble(2))).sorted
     val incr = LlmData.dedupMinhashIncr(spark, dir).collect()
@@ -341,7 +341,7 @@ class LlmQualitySpec extends SparkSpec {
         (da, ha) <- sigs; (db, hb) <- sigs if da < db
         h = java.lang.Long.bitCount(ha ^ hb) if h <= radius
       } yield (da, db, h)).sorted
-      val banded = LlmData.simhashNeardup(spark, dir, radius).collect()
+      val banded = LlmData.simhashNeardup(spark, dir, radius).rows()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
       withClue(s"radius $radius: ") { banded shouldBe expected }
     }
@@ -396,7 +396,7 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "conserve token mass and bound the fill fractions" in {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val r = LlmData.packStats(spark, dir).collect().head
+    val r = LlmData.packStats(spark, dir).rows().head
     val (nBins, nTokens) = (r.getLong(0), r.getLong(1))
     nBins should be > 0L
     // mass conservation: bins hold exactly the corpus token count
@@ -424,7 +424,7 @@ class LlmQualitySpec extends SparkSpec {
     val docs = (corpus :+ fluent :+ shuffled).toDF("doc_id", "text")
     val tri = LlmData.trigramPplOf(docs, "doc_id", "text").checkpointed().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val uni = LlmData.unigramPplOf(docs, "doc_id", "text").collect()
+    val uni = LlmData.unigramPplHeld(docs, "doc_id", "text").rows()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     uni(100L) shouldBe uni(101L) // unigram ppl is blind to word order
     tri(100L) should be < tri(101L) // the KN trigram model is not
@@ -682,7 +682,7 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "train a vocab whose pieces all pass the likelihood-ratio test and conserve char mass" in {
     val d = "/root/testdata/sf0.001"
-    val vocab = LlmData.unigramLmTrain(spark, d).collect()
+    val vocab = LlmData.unigramLmTrain(spark, d).rows()
     vocab.length should be <= 30
     vocab.length should be > 0
     all(vocab.map(_.getAs[String]("piece").length)) should be <= 2
@@ -690,7 +690,7 @@ class LlmQualitySpec extends SparkSpec {
     all(vocab.map(_.getAs[String]("piece"))) should fullyMatch regex "[a-z]{1,2}"
     // char-mass conservation: applying the tokenizer never loses chars —
     // per doc, n_chars of its [a-z]+ words == Σ piece lengths
-    val applied = LlmData.unigramLmApply(spark, d).collect()
+    val applied = LlmData.unigramLmApply(spark, d).rows()
     applied should not be empty
     applied.foreach { r =>
       val nWords = r.getAs[Long]("n_words")
@@ -705,7 +705,7 @@ class LlmQualitySpec extends SparkSpec {
 
   it should "compress the corpus vs char-level and compare sanely with BPE fertility" in {
     val d = "/root/testdata/sf0.001"
-    val uni = LlmData.unigramLmApply(spark, d).collect()
+    val uni = LlmData.unigramLmApply(spark, d).rows()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("fertility")).toMap
     val bpe = LlmData.bpeApply(spark, d).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("fertility")).toMap
@@ -727,7 +727,7 @@ class LlmQualitySpec extends SparkSpec {
     // vocab's 2-char pieces must each beat the independence baseline
     // UNDER THE FINAL MODEL (they survived every re-qualification)
     val d = "/root/testdata/sf0.001"
-    val vocab = LlmData.unigramLmTrain(spark, d).collect()
+    val vocab = LlmData.unigramLmTrain(spark, d).rows()
       .map(r => r.getAs[String]("piece") -> r.getAs[Long]("n")).toMap
     val pairs = vocab.keys.filter(_.length == 2)
     pairs should not be empty // the corpus has positively-associated pairs

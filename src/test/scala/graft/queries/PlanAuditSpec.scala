@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.plans.Held
 
 /** Physical-plan audits: the properties that make these plans survive a
   * 100× scale-up are asserted, not assumed — filter/column pushdown to the
@@ -15,6 +16,10 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** The plan a held query's checkpoint runs; what it persisted while it
+    * was built is released. */
+  private def plan(h: Held): String = try plan(h.frame) finally h.release()
 
   behavior of "query plans"
 
@@ -81,11 +86,11 @@ class PlanAuditSpec extends SparkSpec {
 
   it should "run the vector kernels as native expressions, not UDFs" in {
     // ScalaUDF in the pair loop would mean per-row boxing at 100 TB scale
-    Seq(LlmData.annLsh(spark, dir), LlmData.annIvf(spark, dir),
-      LlmData.neardupCosine(spark, dir), LlmData.embedStats(spark, dir),
+    Seq(Held(LlmData.annLsh(spark, dir)), LlmData.annIvf(spark, dir),
+      Held(LlmData.neardupCosine(spark, dir)), Held(LlmData.embedStats(spark, dir)),
       LlmData.annSq8(spark, dir))
       .foreach { q =>
-        val p = q.queryExecution.optimizedPlan.toString
+        val p = try q.frame.queryExecution.optimizedPlan.toString finally q.release()
         p should not include "UDF"
         p.toLowerCase should include ("vec_") // vec_norm / vec_dot / vec_sig
       }
@@ -96,8 +101,8 @@ class PlanAuditSpec extends SparkSpec {
     // stats tie and Spark may broadcast the corpus side — fine at test SF,
     // impossible at 100 TB. The explicit hint pins the q (vec_id < 8)
     // side; this asserts the BroadcastExchange actually carries it.
-    Seq(LlmData.annTopK(spark, dir), LlmData.annSq8(spark, dir)).foreach { df =>
-      val p = plan(df)
+    Seq(Held(LlmData.annTopK(spark, dir)), LlmData.annSq8(spark, dir)).foreach { q =>
+      val p = plan(q)
       val bcastBlock = p.split("\\n\\(\\d+\\) ")
         .filter(b => b.startsWith("BroadcastExchange"))
       bcastBlock should not be empty
@@ -383,54 +388,5 @@ class PlanAuditSpec extends SparkSpec {
     "HashAggregate".r.findAllIn(p).size should be >= 2
     p should not include "CartesianProduct"
     p should not include "SinglePartition"
-  }
-
-  it should "leave only a held query's returned checkpoint persisted" in {
-    // every query with a lazy Held form releases what it persisted and
-    // destroys the broadcast relations it built: run twice, the second run
-    // meets every shared input already cached
-    import org.apache.spark.sql.execution.LogicalRDD
-    val sc = spark.sparkContext
-    // the entry count is package-private in Spark; it is a public method
-    // in the bytecode
-    val cacheManager = spark.sharedState.cacheManager
-    def entries = cacheManager.getClass.getMethod("numCachedEntries")
-      .invoke(cacheManager).asInstanceOf[Int]
-    def relations = org.apache.spark.DriverBlocks.broadcastRelations(sc)
-    // destroy() drops the blocks asynchronously
-    def settled(left: => Set[Long]): Set[Long] = {
-      val until = System.nanoTime() + 10000000000L
-      while (left.nonEmpty && System.nanoTime() < until) Thread.sleep(50)
-      left
-    }
-    // inputs that queries share through SessionCache stay cached for the
-    // session: the first run may add these, and no other entry
-    val shared = Map("fivegram_ppl" -> 1, "fourgram_ppl" -> 1,
-      "trigram_ppl" -> 1, "quality_tiers" -> 2)
-    val leaks = graft.SparkEntry.held.keys.toSeq.sorted.flatMap { name =>
-      val run = graft.SparkEntry.queries(name)
-      val warmEntries0 = entries
-      graft.plans.Held.release(run(spark, dir))
-      val warmEntries = entries - warmEntries0
-      val rdds0 = sc.getPersistentRDDs.keySet
-      val entries0 = entries
-      val relations0 = relations
-      val out = run(spark, dir)
-      val kept = out.queryExecution.logical match {
-        case r: LogicalRDD => Set(r.rdd.id)
-        case _ => Set.empty[Int]
-      }
-      val extra = sc.getPersistentRDDs.keySet -- rdds0 -- kept
-      val newEntries = entries - entries0
-      val broadcasts = settled(relations -- relations0).size
-      graft.plans.Held.release(out)
-      if (kept.size == 1 && extra.isEmpty && newEntries == 0 &&
-          warmEntries <= shared.getOrElse(name, 0) && broadcasts == 0) None
-      else Some(s"$name: checkpoint ${kept.size}, other RDDs ${extra.size}, " +
-        s"cache entries $newEntries (first run $warmEntries), " +
-        s"broadcast relations $broadcasts")
-    }
-    graft.SparkEntry.held.size should be >= 18
-    leaks shouldBe empty
   }
 }

@@ -93,6 +93,35 @@ class TrainSpec extends SparkSpec {
     acc should be > 0.95
   }
 
+  it should "leave no persisted data and no pool thread after a fit, also one that throws" in {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    // the entry count is package-private in Spark; it is a public method
+    // in the bytecode
+    val cacheManager = spark.sharedState.cacheManager
+    def entries = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.matches("pool-\\d+-thread-\\d+"))
+      .map(_.getId).toSet
+    val df = blobs()
+    val indexed = new org.apache.spark.ml.feature.StringIndexer()
+      .setInputCol("y").setOutputCol("label").setStringOrderType("alphabetAsc")
+      .fit(df).transform(df)
+    val (rdds0, entries0, threads0) = (sc.getPersistentRDDs.keySet, entries, poolThreads)
+    new OneVsRestScored().setClassifier(new LogisticRegression().setMaxIter(5))
+      .fit(indexed).models.length shouldBe 3
+    // a string features column: every sub-model fit throws
+    intercept[IllegalArgumentException](new OneVsRestScored()
+      .setClassifier(new LogisticRegression()).setFeaturesCol("y").fit(indexed))
+    (sc.getPersistentRDDs.keySet -- rdds0) shouldBe empty
+    entries shouldBe entries0
+    // a shut-down pool's idle workers exit on their own
+    val until = System.nanoTime() + 10000000000L
+    while ((poolThreads -- threads0).nonEmpty && System.nanoTime() < until) Thread.sleep(50)
+    (poolThreads -- threads0) shouldBe empty
+  }
+
   behavior of "PlattScalar"
 
   it should "calibrate SVM margins into well-ordered probabilities" in {
